@@ -47,6 +47,7 @@ asks of the engine (VERDICT r13 "what's missing" item 3).
 
 from __future__ import annotations
 
+import functools
 import io
 import json
 import posixpath
@@ -58,9 +59,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gofeed_spark.fs import FileSystem, get_filesystem
-from gofeed_spark.sources.cluster import cluster_layout
+from gofeed_spark.sources import tablecore as core
 from gofeed_spark.sources.parsecache import ParseCache
-from gofeed_spark.sources.statbounds import stat_string_bounds
 
 #: process-wide checkpoint parse cache (see _checkpoint_rows)
 _CHECKPOINT_CACHE = ParseCache(capacity=64)
@@ -86,11 +86,7 @@ class DeltaSchemaMismatch(DeltaError):
 
 
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
-#: DVs whose TOTAL cardinality (known from the descriptors, no decode)
-#: fits this bound broadcast as driver-built position rows; above it the
-#: payloads explode on executors and the join may shuffle
-_DV_BROADCAST_MAX = 5_000_000
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_ENGINE = "gofeed_spark-delta/0.1"
 
 
 # --- log primitives ---------------------------------------------------------
@@ -570,7 +566,6 @@ def read_delta(
     schema = snap.schema
     pcols = snap.partition_columns
     adds = list(snap.adds.items())
-    mapping = snap.column_mapping
     data_w: dict[str, str] = {}
     if where:
         part_w = {k: v for k, v in where.items() if k in pcols}
@@ -580,8 +575,9 @@ def read_delta(
             raise DeltaError(
                 f"where keys {sorted(unknown)} are not table columns"
             )
-        # partitionValues key by PHYSICAL name under column mapping
-        P = (mapping or {})
+        # partitionValues and stats key by PHYSICAL name under column
+        # mapping (they describe the file)
+        P = snap.column_mapping or {}
         adds = [
             (rel, add)
             for rel, add in adds
@@ -590,302 +586,89 @@ def read_delta(
                 for k, v in part_w.items()
             )
         ]
-        if data_w:
-            typed = _typed_where_values(schema, data_w)
-            # stats key by PHYSICAL column name (they describe the file)
-            adds = _prune_adds_by_key_range(
-                adds,
-                [P.get(k, k) for k in typed],
-                {P.get(k, k): v for k, v in typed.items()},
-                {P.get(k, k): v for k, v in typed.items()},
-            )
+        typed = {
+            P.get(k, k): v
+            for k, v in core.typed_where(schema, data_w, DeltaError).items()
+        }
+        if typed:
+            adds = core.prune_by_range(adds, typed, typed, _add_bounds)
 
-    df = _assemble(
-        spark, fs, path, schema, pcols, adds, mapping=mapping,
-        lineage=row_lineage,
-        lineage_cols=snap.row_materialized_cols if row_lineage else None,
-    )
+    df = _scan(spark, fs, path, snap, adds, lineage=row_lineage)
     for k, v in data_w.items():
         df = df.filter(F.col(k) == F.lit(v).cast(schema[k].dataType))
     return df
 
 
-def _typed_where_values(schema: T.StructType, data_w: dict) -> dict:
-    """Parse ``where`` string values into the stat-comparable python type
-    of each column (long→int, double→float, string as-is); columns whose
-    types the skipping layer can't compare stay out of the prune (the
-    row filter still applies them)."""
-    import struct
+def _dv(fs: FileSystem, path: str, add: dict) -> core.DeletionVector | None:
+    """An add action's deletion vector as a core descriptor (payload
+    fetched lazily, roaring-decoded)."""
+    dv = add.get("deletionVector")
+    if not dv:
+        return None
+    from gofeed_spark.sources.roaring import dv_decode_payload
 
-    typed: dict = {}
-    for k, v in data_w.items():
-        dt = schema[k].dataType.simpleString()
-        try:
-            if dt in ("tinyint", "smallint", "int", "bigint"):
-                typed[k] = int(v)
-            elif dt == "float":
-                # the row filter casts the probe to float32; the file
-                # stats are exact float32 values — an un-rounded double
-                # probe (0.1) misses the float32 stat (0.10000000149)
-                # and prunes the only matching file
-                typed[k] = struct.unpack("<f", struct.pack("<f", float(v)))[0]
-            elif dt == "double":
-                typed[k] = float(v)
-            elif dt == "string":
-                typed[k] = v
-        except (TypeError, ValueError) as exc:
-            raise DeltaError(f"where value {v!r} does not parse as {dt}") from exc
-    return typed
+    return core.DeletionVector(
+        functools.partial(_dv_payload_bytes, fs, path, dv),
+        dv_decode_payload,
+        dv.get("cardinality"),
+    )
 
 
-def _assemble(
+def _scan(
     spark: SparkSession,
     fs: FileSystem,
     path: str,
-    schema: T.StructType,
-    pcols: list[str],
-    adds: list[tuple[str, dict]],
-    extra: dict[str, int] | None = None,
-    mapping: dict[str, str] | None = None,
-    keep_file: bool = False,
-    keep_pos: bool = False,
+    snap: _Snapshot,
+    items: list[tuple[str, dict]],
+    schema: T.StructType | None = None,
+    extra: tuple[str, list] | None = None,
+    keep: tuple = (),
     lineage: bool = False,
-    lineage_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Live add actions → ONE parquet relation with partition columns
-    restored from the log's authoritative partitionValues by a single
-    broadcast join keyed on file basename.  ``extra`` optionally maps
-    relative path → commit version; when given, the output carries it as
-    ``_commit_version`` through the same broadcast map (the CDF column).
-    ``mapping`` (logical → physical name) makes column-mapped tables
-    read: data files are scanned under their PHYSICAL column names and
-    aliased back, and partitionValues are looked up by physical key.
-    ``keep_file``/``keep_pos`` expose the ``__file`` basename and
-    ``__pos`` (``_metadata.row_index``) working columns (the
-    UPDATE/DV-writer input: per-row file coordinates).
-
-    Adds carrying a ``deletionVector`` descriptor are applied
-    merge-on-read: the driver fetches each DV's COMPRESSED roaring
-    payload (a byte slice, CRC-checked — never the expanded positions),
-    ships it as one row, and an Arrow ``mapInPandas`` explodes it to
-    (file, position) ON EXECUTORS for one LEFT ANTI join against the
-    scan's ``_metadata.row_index`` — the same distributed shape as the
-    Iceberg position-delete path."""
-    P = mapping or {}
-    phys = T.StructType(
-        [
-            T.StructField(P.get(f.name, f.name), f.dataType, f.nullable)
+    """Add (or cdc) actions → ONE relation through the core: partition
+    columns restored from the log's authoritative ``partitionValues``,
+    deletion vectors applied merge-on-read.  Column-mapped tables scan
+    data files under their PHYSICAL names and look partition values up by
+    physical key.  ``schema`` defaults to the snapshot's; ``extra`` is
+    (column, one value per item) — the CDF ``_commit_version`` or a
+    compaction group id; ``lineage`` appends ``_row_id`` (``baseRowId`` +
+    position; the materialized column wins) and
+    ``_row_commit_version``."""
+    schema = schema if schema is not None else snap.schema
+    path = path.rstrip("/")
+    pcols = snap.partition_columns
+    P = snap.column_mapping or {}
+    col, values = extra if extra is not None else (None, [None] * len(items))
+    refs = []
+    for (rel, add), value in zip(items, values):
+        pv = add.get("partitionValues") or {}
+        refs.append(
+            core.FileRef(
+                fs.spark_path(fs.join(path, rel)),
+                {c: pv.get(P.get(c, c), pv.get(c)) for c in pcols},
+                extra=value,
+                lineage=tuple(
+                    None if add.get(k) is None else int(add[k])
+                    for k in ("baseRowId", "defaultRowCommitVersion")
+                ),
+                dv=_dv(fs, path, add),
+            )
+        )
+    return core.assemble(
+        spark, schema, refs, DeltaError, pcols,
+        physical={
+            f.name: P.get(f.name, f.name)
             for f in schema.fields
             if f.name not in pcols
-        ]
+        },
+        extra=col,
+        keep=keep,
+        lineage=core.Lineage(
+            ("_row_id", "_row_commit_version"), snap.row_materialized_cols
+        )
+        if lineage
+        else None,
     )
-    if lineage and lineage_cols:
-        # hidden materialized lineage columns (rewrites carry preserved
-        # ids there); files without them read null and fall back to
-        # baseRowId + position
-        for c in lineage_cols:
-            phys = T.StructType(
-                list(phys.fields) + [T.StructField(c, T.LongType(), True)]
-            )
-    by_type = {f.name: f.dataType for f in schema.fields}
-    out_cols = [F.col(f.name) for f in schema.fields]
-    if extra is not None:
-        out_cols.append(F.col("_commit_version"))
-    if keep_file:
-        out_cols.append(F.col("__file"))
-    dv_adds = [(rel, add) for rel, add in adds if add.get("deletionVector")]
-    need_pos = bool(dv_adds) or keep_pos or lineage
-    if keep_pos:
-        out_cols.append(F.col("__pos"))
-    if lineage:
-        fresh_rid = (F.col("__brid") + F.col("__pos")).cast("long")
-        fresh_rcv = F.col("__rcv")
-        if lineage_cols:
-            fresh_rid = F.coalesce(F.col(f"`{lineage_cols[0]}`"), fresh_rid)
-            fresh_rcv = F.coalesce(F.col(f"`{lineage_cols[1]}`"), fresh_rcv)
-        out_cols += [
-            fresh_rid.alias("_row_id"),
-            fresh_rcv.alias("_row_commit_version"),
-        ]
-    if not adds:
-        # COPY before .add: StructType.add mutates in place, and the
-        # caller reuses its schema object (e.g. to build the cdc twin)
-        empty = T.StructType(list(schema.fields))
-        if extra is not None:
-            empty = empty.add("_commit_version", T.LongType())
-        if keep_file:
-            empty = empty.add("__file", T.StringType())
-        if keep_pos:
-            empty = empty.add("__pos", T.LongType())
-        if lineage:
-            empty = empty.add("_row_id", T.LongType()).add(
-                "_row_commit_version", T.LongType()
-            )
-        return spark.createDataFrame([], empty)
-
-    files = [fs.spark_path(fs.join(path.rstrip("/"), rel)) for rel, _ in adds]
-    df = spark.read.schema(phys).parquet(*files)
-    if need_pos:
-        df = df.withColumn("__pos", F.col("_metadata.row_index"))
-    if mapping:
-        df = df.select(
-            *(
-                [
-                    F.col(P.get(f.name, f.name)).alias(f.name)
-                    for f in schema.fields
-                    if f.name not in pcols
-                ]
-                + ([F.col("__pos")] if need_pos else [])
-            )
-        )
-    # The broadcast basename map only exists to ATTACH things (partition
-    # values, _commit_version, lineage base ids); when nothing needs
-    # attaching, __file/__pos come straight off the scan and the join —
-    # one Exchange + BroadcastHashJoin per read — drops out of the plan
-    # (the merge candidate scan and the unpartitioned DV-writer input hit
-    # this path on every row-level op).
-    need_map = bool(pcols) or extra is not None or lineage
-    if need_map or dv_adds or keep_file or need_pos:
-        if need_map or dv_adds or keep_file:
-            basenames = [posixpath.basename(rel) for rel, _ in adds]
-            if len(set(basenames)) != len(basenames):
-                raise DeltaError(
-                    "duplicate data-file basenames; cannot key partition map"
-                )
-            df = df.withColumn(
-                "__file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-            )
-    if need_map:
-        map_schema = T.StructType(
-            [T.StructField("__file", T.StringType())]
-            + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols]
-            + (
-                [T.StructField("_commit_version", T.LongType())]
-                if extra is not None
-                else []
-            )
-            + (
-                [
-                    T.StructField("__brid", T.LongType()),
-                    T.StructField("__rcv", T.LongType()),
-                ]
-                if lineage
-                else []
-            )
-        )
-        rows = [
-            tuple(
-                [posixpath.basename(rel)]
-                + [
-                    (add.get("partitionValues") or {}).get(
-                        P.get(c, c), (add.get("partitionValues") or {}).get(c)
-                    )
-                    for c in pcols
-                ]
-                + ([extra[rel]] if extra is not None else [])
-                + (
-                    [
-                        None
-                        if add.get("baseRowId") is None
-                        else int(add["baseRowId"]),
-                        None
-                        if add.get("defaultRowCommitVersion") is None
-                        else int(add["defaultRowCommitVersion"]),
-                    ]
-                    if lineage
-                    else []
-                )
-            )
-            for rel, add in adds
-        ]
-        mdf = spark.createDataFrame(rows, map_schema)
-        df = df.join(F.broadcast(mdf), "__file")
-        for c in pcols:
-            df = df.withColumn(c, F.col(f"__pv_{c}").cast(by_type[c])).drop(f"__pv_{c}")
-    if dv_adds:
-        payloads = [
-            (
-                posixpath.basename(rel),
-                _dv_payload_bytes(fs, path, add["deletionVector"]),
-            )
-            for rel, add in dv_adds
-        ]
-        # a foreign descriptor may omit cardinality — NEVER count it
-        # as 0 (an arbitrarily large DV would take the driver-decode
-        # path and OOM the driver; r16 advice): unknown size is
-        # over-threshold by fiat
-        cards = [
-            (add.get("deletionVector") or {}).get("cardinality")
-            for _rel, add in dv_adds
-        ]
-        total_card = (
-            sum(int(c) for c in cards)
-            if all(c is not None for c in cards)
-            else _DV_BROADCAST_MAX + 1
-        )
-        if total_card <= _DV_BROADCAST_MAX:
-            # the common case: DV positions fit a broadcast — decode
-            # driver-side (the bytes are already here) and hash-probe
-            # per task; the data relation NEVER shuffles (the
-            # per-file positional-filter shape real readers use)
-            from gofeed_spark.sources.roaring import dv_decode_payload
-
-            rows_dv = [
-                (f, int(p))
-                for f, raw in payloads
-                for p in dv_decode_payload(bytes(raw))
-            ]
-            ddf = spark.createDataFrame(
-                rows_dv,
-                T.StructType(
-                    [
-                        T.StructField("__tfile", T.StringType()),
-                        T.StructField("__tpos", T.LongType()),
-                    ]
-                ),
-            )
-            ddf = F.broadcast(ddf)
-        else:
-            # giant accumulated DVs (the table wants an OPTIMIZE
-            # purge): explode payloads ON EXECUTORS and let the
-            # planner shuffle — correct at any size, never OOMs
-            pdf = spark.createDataFrame(
-                [(f, bytearray(raw)) for f, raw in payloads],
-                T.StructType(
-                    [
-                        T.StructField("__tfile", T.StringType()),
-                        T.StructField("__dv", T.BinaryType()),
-                    ]
-                ),
-            )
-
-            def _explode_dv(batches):
-                import pandas as _pd
-
-                from gofeed_spark.sources.roaring import dv_decode_payload
-
-                for b in batches:
-                    for f, raw in zip(b["__tfile"], b["__dv"]):
-                        poss = sorted(dv_decode_payload(bytes(raw)))
-                        yield _pd.DataFrame(
-                            {
-                                "__tfile": f,
-                                "__tpos": _pd.Series(poss, dtype="int64"),
-                            }
-                        )
-
-            ddf = pdf.mapInPandas(
-                _explode_dv, "__tfile string, __tpos long"
-            )
-        df = df.join(
-            ddf,
-            (df["__file"] == ddf["__tfile"])
-            & (df["__pos"] == ddf["__tpos"]),
-            "left_anti",
-        )
-    if not keep_file:
-        df = df.drop("__file")
-    return df.select(*out_cols)
 
 
 def read_delta_changes(
@@ -924,9 +707,9 @@ def read_delta_changes(
     log = _log_dir(path)
     commits, _cps = _list_log(fs, log)
     adds: list[tuple[str, dict]] = []
-    extra: dict[str, int] = {}
+    versions: list[int] = []
     cdcs: list[tuple[str, dict]] = []
-    cdc_extra: dict[str, int] = {}
+    cdc_versions: list[int] = []
     for v in range(start_version + 1, end + 1):
         if v not in commits:
             raise DeltaError(
@@ -937,15 +720,14 @@ def read_delta_changes(
         cdc_actions = [a["cdc"] for a in actions if "cdc" in a]
         if cdc_actions and cdf:
             for c in cdc_actions:
-                rel = urllib.parse.unquote(c["path"])
-                cdcs.append((rel, c))
-                cdc_extra[rel] = v
+                cdcs.append((urllib.parse.unquote(c["path"]), c))
+                cdc_versions.append(v)
             continue  # cdc IS the commit's change data
         for action in actions:
             if "add" in action and action["add"].get("dataChange", True):
                 rel = urllib.parse.unquote(action["add"]["path"])
                 adds.append((rel, action["add"]))
-                extra[rel] = v
+                versions.append(v)
             elif "remove" in action and action["remove"].get("dataChange", True):
                 raise DeltaUnsupported(
                     f"commit {v} removes data; append-only change reads "
@@ -958,9 +740,9 @@ def read_delta_changes(
                     )
                 )
     schema = snap.schema
-    pcols = snap.partition_columns
-    mapping = snap.column_mapping
-    base = _assemble(spark, fs, path, schema, pcols, adds, extra, mapping=mapping)
+    base = _scan(
+        spark, fs, path, snap, adds, extra=("_commit_version", versions)
+    )
     if not cdf:
         return base
     out_cols = [*[f.name for f in schema.fields], "_change_type", "_commit_version"]
@@ -968,12 +750,13 @@ def read_delta_changes(
     if not cdcs:
         return base
     # cdc files carry the table schema + _change_type INSIDE the file,
-    # Hive-partitioned like data files — _assemble reads them unchanged
+    # Hive-partitioned like data files — _scan reads them unchanged
     cdc_schema = T.StructType(
         list(schema.fields) + [T.StructField("_change_type", T.StringType())]
     )
-    cdc_df = _assemble(
-        spark, fs, path, cdc_schema, pcols, cdcs, cdc_extra, mapping=mapping
+    cdc_df = _scan(
+        spark, fs, path, snap, cdcs, schema=cdc_schema,
+        extra=("_commit_version", cdc_versions),
     ).select(*out_cols)
     return base.unionByName(cdc_df)
 
@@ -1139,25 +922,47 @@ def _publish_commit(
         )
 
 
-def _hive_partition_values(rel: str, pcols: list[str]) -> dict[str, str | None]:
-    """Decode ``key=value`` directory segments of a staged file path into
-    the protocol's partitionValues map (percent-decoded; the Hive null
-    sentinel maps to JSON null)."""
-    values: dict[str, str | None] = {}
-    for seg in rel.split("/")[:-1]:
-        if "=" not in seg:
-            continue
-        k, v = seg.split("=", 1)
-        if k in pcols:
-            values[k] = None if v == _NULL_PARTITION else urllib.parse.unquote(v)
-    missing = [c for c in pcols if c not in values]
-    if missing:
-        raise DeltaError(f"staged file {rel!r} lacks partition dirs for {missing}")
-    return values
+def _remove(add: dict, data_change: bool = True) -> dict:
+    return {
+        "remove": {
+            "path": add["path"],
+            "dataChange": data_change,
+            "partitionValues": add.get("partitionValues") or {},
+        }
+    }
 
 
-def _schema_fingerprint(schema: T.StructType) -> list[tuple[str, str]]:
-    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+def _commit(
+    fs: FileSystem,
+    path: str,
+    version: int,
+    operation: str,
+    params: dict | None = None,
+    head: list[dict] = (),
+    remove: list[dict] = (),
+    add: list[dict] = (),
+    cdc: list[dict] = (),
+    hwm: int | None = None,
+    data_change: bool = True,
+) -> int:
+    """The commit tail every writer shares: ``commitInfo``, the ``head``
+    actions (txn, protocol, metaData, DV re-adds), a ``remove`` for each
+    replaced add action, the new ``add`` and ``cdc`` actions and — given
+    the row-tracking high-water mark ``hwm`` — fresh row ids on the new
+    adds plus the domain action advancing the mark; published by
+    :func:`_publish_commit`.  Returns ``version``."""
+    info: dict = {"operation": operation}
+    if params is not None:
+        info["operationParameters"] = params
+    info["engineInfo"] = _ENGINE
+    actions = [{"commitInfo": info}, *head]
+    actions += [_remove(a, data_change) for a in remove]
+    actions += [{"add": a} for a in add]
+    actions += [{"cdc": c} for c in cdc]
+    if hwm is not None and add:
+        actions.append(_assign_fresh_row_ids(hwm, add, version))
+    _publish_commit(fs, path, version, actions)
+    return version
 
 
 def write_delta(
@@ -1239,9 +1044,8 @@ def write_delta(
             raise DeltaSchemaMismatch(
                 f"partition_by {list(partition_by)} != table's {pcols}"
             )
-        fp_new, fp_old = _schema_fingerprint(df.schema), _schema_fingerprint(
-            existing.schema
-        )
+        fp_new = core.fingerprint(df.schema)
+        fp_old = core.fingerprint(existing.schema)
         if fp_new != fp_old:
             if (
                 evolve_schema
@@ -1281,74 +1085,19 @@ def write_delta(
     # paths never collide across writers or retries.  Column-mapped
     # tables stage under PHYSICAL column names (data files and
     # partitionValues both use them, per the protocol).
-    token = uuid.uuid4().hex
-    staging = f"{path}_delta_staging_{token}"
     pcols_disk = [mapping.get(c, c) for c in pcols] if mapping else pcols
     stage_df = (
         df.select(*[F.col(c).alias(mapping[c]) for c in df.columns])
         if mapping
         else df
     )
-    writer = stage_df.write.mode("overwrite")
-    if pcols_disk:
-        writer = writer.partitionBy(*pcols_disk)
-    writer.parquet(fs.spark_path(staging))
-
-    adds: list[dict] = []
-    ordinal = 0
-    for rel, size in fs.walk_files(staging):
-        base = rel.rsplit("/", 1)[-1]
-        if base.startswith(("_", ".")) or not base.endswith(".parquet"):
-            continue
-        part_dir = rel.rsplit("/", 1)[0] + "/" if "/" in rel else ""
-        new_rel = f"{part_dir}part-{ordinal:05d}-{token}.snappy.parquet"
-        src, dst = fs.join(staging, rel), fs.join(path, new_rel)
-        if fs.supports_rename():
-            fs.makedirs(posixpath.dirname(dst))
-            fs.rename(src, dst)
-        else:
-            fs.put_bytes(dst, fs.read_bytes(src))
-        stat = fs.stat(dst)
-        stats = _file_stats_json(fs, dst)
-        adds.append(
-            {
-                "path": urllib.parse.quote(new_rel),
-                "partitionValues": _hive_partition_values(new_rel, pcols_disk),
-                "size": stat[0] if stat else size,
-                "modificationTime": (stat[1] // 1_000_000) if stat else 0,
-                "dataChange": True,
-                **({"stats": stats} if stats else {}),
-            }
-        )
-        ordinal += 1
-    fs.delete_tree(staging)
-
-    # fresh row ids: contiguous per file from the table's high-water
-    # mark; ids are never reused (overwrite removes files but the mark
-    # only advances)
-    row_dom = (
-        _assign_fresh_row_ids(
-            existing.row_hwm if existing is not None else -1, adds, version
-        )
-        if tracked and adds
-        else None
+    adds = _stage_and_publish(
+        fs, path, stage_df, pcols_disk, uuid.uuid4().hex, "w"
     )
 
-    actions: list[dict] = []
-    op = "WRITE" if existing is not None else "CREATE TABLE AS SELECT"
-    actions.append(
-        {
-            "commitInfo": {
-                "operation": op,
-                "operationParameters": {"mode": mode.upper(), "partitionBy": json.dumps(pcols)},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    )
+    head: list[dict] = []
     if txn is not None:
-        actions.append(
-            {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
-        )
+        head.append({"txn": {"appId": str(txn[0]), "version": int(txn[1])}})
     if existing is None:
         if column_mapping:
             protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
@@ -1395,8 +1144,8 @@ def write_delta(
             protocol = dict(_PROTOCOL)
             schema_json = df.schema.json()
             configuration = {}
-        actions.append({"protocol": protocol})
-        actions.append(
+        head.append({"protocol": protocol})
+        head.append(
             {
                 "metaData": {
                     "id": str(uuid.uuid4()),
@@ -1422,26 +1171,25 @@ def write_delta(
                 for f in df.schema.fields[n_old:]
             ]
         )
-        actions.append(
+        head.append(
             {"metaData": {**existing.metadata, "schemaString": widened.json()}}
         )
-    if mode == "overwrite" and existing is not None:
-        for rel, add in existing.adds.items():
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues") or {},
-                    }
-                }
-            )
-    actions.extend({"add": add} for add in adds)
-    if row_dom is not None:
-        actions.append(row_dom)
-
-    _publish_commit(fs, path, version, actions)
-    return version
+    # fresh row ids: contiguous per file from the table's high-water
+    # mark; ids are never reused (overwrite removes files but the mark
+    # only advances)
+    return _commit(
+        fs, path, version,
+        "WRITE" if existing is not None else "CREATE TABLE AS SELECT",
+        {"mode": mode.upper(), "partitionBy": json.dumps(pcols)},
+        head=head,
+        remove=list(existing.adds.values())
+        if mode == "overwrite" and existing is not None
+        else [],
+        add=adds,
+        hwm=(existing.row_hwm if existing is not None else -1)
+        if tracked
+        else None,
+    )
 
 
 def enable_row_tracking(path: str) -> int:
@@ -1493,194 +1241,70 @@ def enable_row_tracking(path: str) -> int:
         "delta.rowTracking.materializedRowCommitVersionColumnName",
         f"_row-commit-version-col-{uuid.uuid4().hex[:12]}",
     )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.enableRowTracking": "true"}
-                    )
-                },
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        },
-        {"protocol": new_proto},
-        {"metaData": {**snap.metadata, "configuration": cfg}},
-    ]
     # a stale delta.rowTracking domain can outlive the config (e.g. a
     # RESTORE across the enablement boundary): ids are NEVER reused, so
     # the backfill starts above any surviving high-water mark
-    base = snap.row_hwm + 1
+    readds = []
     for rel in sorted(snap.adds):
         add = snap.adds[rel]
-        nrec = (
-            json.loads(add["stats"]).get("numRecords")
-            if add.get("stats")
-            else None
-        )
-        if nrec is None:
+        stats = json.loads(add["stats"]) if add.get("stats") else {}
+        if stats.get("numRecords") is None:
             raise DeltaError(
                 f"cannot backfill row ids: {rel} has no numRecords stats"
             )
-        actions.append(
-            {
-                "add": {
-                    **add,
-                    "dataChange": False,
-                    "baseRowId": base,
-                    "defaultRowCommitVersion": version,
-                }
-            }
-        )
-        base += int(nrec)
-    actions.append(
-        {
-            "domainMetadata": {
-                "domain": "delta.rowTracking",
-                "configuration": json.dumps({"rowIdHighWaterMark": base - 1}),
-                "removed": False,
-            }
-        }
+        readds.append({**add, "dataChange": False})
+    return _commit(
+        fs, path, version, "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.enableRowTracking": "true"})},
+        head=[
+            {"protocol": new_proto},
+            {"metaData": {**snap.metadata, "configuration": cfg}},
+        ],
+        add=readds,
+        hwm=snap.row_hwm,
     )
-    _publish_commit(fs, path, version, actions)
-    return version
-
-
-#: python types the file-skipping comparisons trust end-to-end (stats
-#: JSON natives vs Spark agg outputs); anything else keeps the file a
-#: candidate rather than risking a type-coercion misprune
-_STATS_PRUNABLE = (int, float, str)
-
-
-def _comparable(a, b) -> bool:
-    """True when two stat bounds order meaningfully against each other:
-    both numeric (bool excluded — it IS an int in Python) or both str."""
-    if isinstance(a, bool) or isinstance(b, bool):
-        return False
-    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
-        return True
-    return isinstance(a, str) and isinstance(b, str)
 
 
 def _file_stats_json(fs: FileSystem, dst: str) -> str | None:
     """Per-file column statistics for the add action's ``stats`` field
     (the protocol's file-skipping input: numRecords / minValues /
-    maxValues / nullCount over top-level leaf columns) — read off the
-    staged parquet FOOTER driver-side, the same metadata-sized I/O as
-    the row counts.  Only JSON-native stat types are recorded (int /
-    float / str / bool); exotic leaves are simply absent, which readers
-    must treat as 'no stats, keep the file'."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        sp = fs.spark_path(dst)
-        md = (
-            pq.read_metadata(sp)
-            if "://" not in sp
-            else pq.read_metadata(pa.BufferReader(fs.read_bytes(dst)))
-        )
-    except Exception:  # noqa: BLE001 — stats are best-effort, never fatal
+    maxValues / nullCount over top-level leaf columns), off the staged
+    file's parquet footer; None when unavailable — readers treat that as
+    'no stats, keep the file'."""
+    stats = core.footer_stats(fs, dst)
+    if stats is None:
         return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    poisoned_max: set = set()  # no finite upper bound derivable
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name:
-                continue  # nested leaves: top-level stats only
-            st = col.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-            if not st.has_min_max:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes) or isinstance(hi, bytes):
-                continue  # undecoded binary: not JSON-representable
-            if not isinstance(lo, (*_STATS_PRUNABLE, bool)):
-                continue
-            if isinstance(lo, str):
-                # parquet may truncate long string stats to a prefix: the
-                # min stays a valid lower bound, but a truncated max is
-                # NOT an upper bound — publish the incremented-prefix
-                # form instead (valid whether or not the stat was exact)
-                lo, hi = stat_string_bounds(st, lo, hi)
-                if hi is None:
-                    poisoned_max.add(name)
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            if hi is not None:
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    for name in poisoned_max:
-        maxs.pop(name, None)
+    n, mins, maxs, nulls = stats
     try:
         return json.dumps(
-            {
-                "numRecords": md.num_rows,
-                "minValues": mins,
-                "maxValues": maxs,
-                "nullCount": nulls,
-            }
+            {"numRecords": n, "minValues": mins, "maxValues": maxs, "nullCount": nulls}
         )
     except (TypeError, ValueError):
         return None
 
 
-def _prune_adds_by_key_range(
-    items: list[tuple[str, dict]],
-    on: list[str],
-    lo: dict,
-    hi: dict,
-) -> list[tuple[str, dict]]:
-    """File skipping for the MERGE candidate scan: keep only files whose
-    stats ranges INTERSECT the source keys' [lo, hi] on EVERY key column
-    — the standard min/max skip real engines run before touching data.
-    Files without usable stats (older writers, exotic types) always stay
-    candidates; an all-null key column never equi-matches, so such files
-    prune.  Conservative by construction: may keep too much, never drops
-    a possible match."""
-    kept = []
-    for rel, add in items:
-        raw = add.get("stats")
-        if not raw:
-            kept.append((rel, add))
-            continue
-        try:
-            st = json.loads(raw)
-        except (TypeError, ValueError):
-            kept.append((rel, add))
-            continue
-        mins = st.get("minValues") or {}
-        maxs = st.get("maxValues") or {}
-        nulls = st.get("nullCount") or {}
-        n = st.get("numRecords")
-        keep = True
-        for c in on:
-            if (
-                n is not None
-                and nulls.get(c) is not None
-                and nulls[c] >= n
-            ):
-                keep = False  # every key in this file is NULL: no match
-                break
-            fl, fh = mins.get(c), maxs.get(c)
-            sl, sh = lo.get(c), hi.get(c)
-            if None in (fl, fh, sl, sh):
-                continue  # no usable bound on this key: stay conservative
-            if not (_comparable(fl, sl) and _comparable(fh, sh)):
-                continue
-            if fh < sl or fl > sh:
-                keep = False
-                break
-        if keep:
-            kept.append((rel, add))
-    return kept
+def _add_bounds(item: tuple[str, dict]):
+    """An add action's ``stats`` as :func:`tablecore.prune_by_range`
+    bounds (min/max by physical column, all-null columns), or None when
+    it carries no usable stats (older writers — the file stays)."""
+    raw = item[1].get("stats")
+    try:
+        st = json.loads(raw) if raw else None
+    except (TypeError, ValueError):
+        st = None
+    if not st:
+        return None
+    n = st.get("numRecords")
+    nulls = st.get("nullCount") or {}
+    return (
+        st.get("minValues") or {},
+        st.get("maxValues") or {},
+        {
+            c
+            for c, k in nulls.items()
+            if n is not None and k is not None and k >= n
+        },
+    )
 
 
 def _stage_and_publish(
@@ -1690,47 +1314,35 @@ def _stage_and_publish(
     pcols: list[str],
     token: str,
     tag: str,
-    rel_prefix: str,
-    data_change: bool,
+    rel_prefix: str = "",
+    data_change: bool = True,
 ) -> list[dict]:
     """One distributed staged write → files moved under the table root
-    (``rel_prefix`` e.g. ``_change_data/``) → add-action dicts."""
+    (``rel_prefix`` e.g. ``_change_data/``) → add-action dicts; data
+    files carry file-skipping stats, cdc files (``data_change=False``)
+    never feed scans."""
     st = f"{path}_delta_stage_{tag}_{token}"
     w = df_out.write.mode("overwrite")
     if pcols:
         w = w.partitionBy(*pcols)
     w.parquet(fs.spark_path(st))
-    out_actions = []
-    ordinal = 0
-    for rel, size in fs.walk_files(st):
-        base = rel.rsplit("/", 1)[-1]
-        if base.startswith(("_", ".")) or not base.endswith(".parquet"):
-            continue
-        part_dir = rel.rsplit("/", 1)[0] + "/" if "/" in rel else ""
-        new_rel = f"{rel_prefix}{part_dir}part-{ordinal:05d}-{token}.parquet"
-        src, dst = fs.join(st, rel), fs.join(path, new_rel)
-        if fs.supports_rename():
-            fs.makedirs(posixpath.dirname(dst))
-            fs.rename(src, dst)
-        else:
-            fs.put_bytes(dst, fs.read_bytes(src))
-        stat = fs.stat(dst)
-        # data files get file-skipping stats; cdc files never feed scans
-        stats = _file_stats_json(fs, dst) if data_change else None
-        out_actions.append(
+    out = []
+    for f in core.ingest_staged(
+        fs, st, path,
+        lambda rel, i: f"{rel_prefix}{core.staged_dir(rel)}part-{i:05d}-{token}.parquet",
+    ):
+        stats = _file_stats_json(fs, f.dst) if data_change else None
+        out.append(
             {
-                "path": urllib.parse.quote(new_rel),
-                "partitionValues": _hive_partition_values(rel, pcols)
-                if pcols
-                else {},
-                "size": stat[0] if stat else size,
+                "path": urllib.parse.quote(f.new_rel),
+                "partitionValues": core.hive_values(f.rel, pcols, DeltaError),
+                "size": f.size,
+                **({"modificationTime": f.mtime_ms} if data_change else {}),
                 "dataChange": data_change,
                 **({"stats": stats} if stats else {}),
             }
         )
-        ordinal += 1
-    fs.delete_tree(st)
-    return out_actions
+    return out
 
 
 def _assign_fresh_row_ids(hwm: int, new_adds: list[dict], version: int) -> dict:
@@ -1823,48 +1435,62 @@ def update_delta(
     cond = F.expr(where) if isinstance(where, str) else where
 
     items = list(snap.adds.items())
+    by_type = {f.name: f.dataType for f in schema.fields}
+
+    def _set(c):
+        e = set_exprs[c]
+        return (F.expr(e) if isinstance(e, str) else e).cast(by_type[c])
+
     if dv:
-        return _update_with_dv(
-            spark, fs, path, snap, schema, pcols, items, cond, where,
-            set_exprs, mat,
+        # hide the matched rows with deletion vectors and append their
+        # updated versions in the same commit (no data file rewritten);
+        # updated rows keep their durable _row_id, their commit version
+        # falls back to the new file's default
+        matched, head = _dv_matches(spark, fs, path, snap, items, cond, tracked)
+        if matched is None:
+            return -1
+        upd = matched.select(
+            *[_set(c).alias(c) if c in set_exprs else F.col(c) for c in schema.names],
+            *(
+                [F.col("_row_id").alias(mat[0]), F.lit(None).cast("long").alias(mat[1])]
+                if tracked
+                else []
+            ),
         )
-    working = _assemble(spark, fs, path, schema, pcols, items, keep_file=True)
-    hits = {
-        r["__file"]
-        for r in working.filter(cond).select("__file").distinct().collect()
-    }
-    if not hits:
+        cdc = (
+            matched.select(*schema.names)
+            .withColumn("_change_type", F.lit("update_preimage"))
+            .unionByName(
+                upd.select(*schema.names).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
+            )
+        )
+        return _rewrite_commit(
+            fs, path, snap, "UPDATE", {"predicate": str(where)}, upd, cdc,
+            head=head,
+        )
+    affected = _hit_files(spark, fs, path, snap, items, cond)
+    if not affected:
         return -1
-    affected = [
-        (rel, add)
-        for rel, add in items
-        if posixpath.basename(rel) in hits
-    ]
 
     # all three outputs (rewrite, preimage, postimage) derive from one
     # frame over the affected files; set expressions see the OLD row
-    work = _assemble(
-        spark, fs, path, schema, pcols, affected,
-        lineage=tracked, lineage_cols=mat,
-    ).withColumn("__hit", cond)
-    for c, e in set_exprs.items():
-        expr = F.expr(e) if isinstance(e, str) else e
+    work = _scan(spark, fs, path, snap, affected, lineage=tracked).withColumn(
+        "__hit", cond
+    )
+    for c in set_exprs:
         work = work.withColumn(
-            f"__new_{c}", F.when(F.col("__hit"), expr).otherwise(F.col(c))
+            f"__new_{c}", F.when(F.col("__hit"), _set(c)).otherwise(F.col(c))
         )
     work = work.localCheckpoint()  # feeds 2 staged writes
 
     def _pick(post: bool):
         return [
-            (
-                F.col(f"__new_{c}").cast(by_type[c]).alias(c)
-                if post and c in set_exprs
-                else F.col(c)
-            )
+            F.col(f"__new_{c}").alias(c) if post and c in set_exprs else F.col(c)
             for c in schema.names
         ]
 
-    by_type = {f.name: f.dataType for f in schema.fields}
     rewritten = work.select(
         *_pick(True),
         *(
@@ -1889,150 +1515,111 @@ def update_delta(
             *_pick(True), F.lit("update_postimage").alias("_change_type")
         )
     )
+    return _rewrite_commit(
+        fs, path, snap, "UPDATE", {"predicate": str(where)}, rewritten, cdc,
+        remove=[add for _rel, add in affected],
+    )
 
+
+def _hit_files(spark, fs, path, snap, items, cond) -> list[tuple[str, dict]]:
+    """The add actions holding rows that match ``cond``: one slim scan
+    carrying per-row file identity, distinct at the driver — O(files)."""
+    working = _scan(spark, fs, path, snap, items, keep=("__file",))
+    hits = {
+        r["__file"]
+        for r in working.filter(cond).select("__file").distinct().collect()
+    }
+    return [(rel, add) for rel, add in items if posixpath.basename(rel) in hits]
+
+
+def _rewrite_commit(
+    fs, path, snap, operation, params, data, cdc, remove=(), head=()
+) -> int:
+    """Stage ``data`` (the new data files' rows, or None) and ``cdc``
+    (the change rows, written under ``_change_data/``), then commit them
+    replacing the ``remove`` add actions; row-tracked tables give the
+    new files fresh id ranges."""
     token = uuid.uuid4().hex
-    new_adds = _stage_and_publish(fs, path, rewritten, pcols, token, "rw", "", True)
-    cdc_adds = _stage_and_publish(
+    pcols = snap.partition_columns
+    adds = (
+        _stage_and_publish(fs, path, data, pcols, token, "rw")
+        if data is not None
+        else []
+    )
+    cdcs = _stage_and_publish(
         fs, path, cdc, pcols, token, "cdc", "_change_data/", False
     )
-    for a in new_adds:
-        a["modificationTime"] = 0
-    version = snap.version + 1
+    return _commit(
+        fs, path, snap.version + 1, operation, params,
+        head=head, remove=remove, add=adds, cdc=cdcs,
+        hwm=snap.row_hwm if snap.row_tracking else None,
+    )
 
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": str(where)},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    for rel, add in affected:
-        actions.append(
+
+def _dv_matches(spark, fs, path, snap, items, cond, lineage: bool):
+    """The DV legs of DELETE and UPDATE (dv=True): the live rows matching
+    ``cond`` (with ``__file``/``__pos``, checkpointed — they feed several
+    outputs) and the head actions hiding them — the deletionVectors
+    protocol upgrade when the table lacks it, then a remove + DV-bearing
+    re-add per affected file.  Each file's new positions are encoded on
+    executors, merged with its existing DV, and framed with the others
+    into ONE new DV file; other add fields (stats, baseRowId) carry
+    through.  ``(None, [])`` when nothing matches."""
+    from gofeed_spark.sources import roaring as R
+
+    matched = (
+        _scan(spark, fs, path, snap, items, keep=("__file", "__pos"), lineage=lineage)
+        .filter(cond)
+        .localCheckpoint()
+    )
+    payloads = core.dv_payloads(matched)
+    if not payloads:
+        return None, []
+    head: list[dict] = []
+    proto = snap.protocol
+    feats = set(proto.get("readerFeatures") or [])
+    if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in feats:
+        head.append(
             {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "partitionValues": add.get("partitionValues") or {},
+                "protocol": {
+                    "minReaderVersion": 3,
+                    "minWriterVersion": 7,
+                    "readerFeatures": sorted(feats | {"deletionVectors"}),
+                    "writerFeatures": sorted(
+                        set(proto.get("writerFeatures") or [])
+                        | {"deletionVectors"}
+                    ),
                 }
             }
         )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend({"cdc": c} for c in cdc_adds)
-    if tracked and new_adds:
-        actions.append(_assign_fresh_row_ids(snap.row_hwm, new_adds, version))
-    _publish_commit(fs, path, version, actions)
-    return version
-
-
-def _collect_dv_payloads(matched) -> dict[str, bytes]:
-    """Matched rows (``__file``/``__pos`` working columns) → per-file
-    roaring payloads encoded ON EXECUTORS (compressed bytes reach the
-    driver, never exploded positions)."""
-
-    def _enc(key, pdf):
-        import pandas as _pd
-
-        from gofeed_spark.sources.roaring import dv_payload
-
-        return _pd.DataFrame(
-            {
-                "__file": [key[0]],
-                "__dv": [bytearray(dv_payload(pdf["__pos"].tolist()))],
-            }
-        )
-
-    return {
-        r["__file"]: bytes(r["__dv"])
-        for r in matched.select("__file", "__pos")
-        .groupBy("__file")
-        .applyInPandas(_enc, "__file string, __dv binary")
-        .collect()
-    }
-
-
-def _update_with_dv(
-    spark, fs, path, snap, schema, pcols, items, cond, where, set_exprs, mat
-) -> int:
-    """DV-mode UPDATE body (``update_delta(dv=True)``): hide the matched
-    rows with deletion vectors (no data file rewritten — O(matched) I/O,
-    the merge-on-read trade) and append the updated versions in the same
-    commit; ``set_exprs`` see the OLD row.  On a row-tracked table the
-    updated rows keep their durable ``_row_id`` (materialized) with the
-    commit version falling back to the new file's default; the new files
-    take fresh base ids.  CDC carries update_preimage/postimage exactly
-    like the copy-on-write form."""
-    tracked = mat is not None
-    by_type = {f.name: f.dataType for f in schema.fields}
-    working = _assemble(
-        spark, fs, path, schema, pcols, items, keep_file=True, keep_pos=True,
-        lineage=tracked, lineage_cols=mat,
-    )
-    matched = working.filter(cond).localCheckpoint()  # feeds 3 outputs
-    payloads = _collect_dv_payloads(matched)
-    if not payloads:
-        return -1
-
-    upd = matched.select(
-        *[
-            (
-                (F.expr(e) if isinstance(e, str) else e)
-                .cast(by_type[c])
-                .alias(c)
-                if (e := set_exprs.get(c)) is not None
-                else F.col(c)
-            )
-            for c in schema.names
-        ],
-        *(
-            [
-                F.col("_row_id").alias(mat[0]),
-                F.lit(None).cast("long").alias(mat[1]),
-            ]
-            if tracked
-            else []
-        ),
-    )
-    cdc = (
-        matched.select(*schema.names)
-        .withColumn("_change_type", F.lit("update_preimage"))
-        .unionByName(
-            upd.select(*schema.names).withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-        )
-    )
-    token = uuid.uuid4().hex
-    new_adds = _stage_and_publish(fs, path, upd, pcols, token, "upd", "", True)
-    cdc_adds = _stage_and_publish(
-        fs, path, cdc, pcols, token, "cdc", "_change_data/", False
-    )
-    version = snap.version + 1
-    row_dom = (
-        _assign_fresh_row_ids(snap.row_hwm, new_adds, version)
-        if tracked and new_adds
-        else None
-    )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": str(where)},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
+    by_base = {posixpath.basename(rel): add for rel, add in items}
+    ordered = sorted(payloads)
+    blobs, cards = [], []
+    for base in ordered:
+        # positions are file-physical on both sides of the merge
+        pos = R.dv_decode_payload(payloads[base])
+        old = by_base[base].get("deletionVector")
+        if old:
+            pos |= R.dv_decode_payload(_dv_payload_bytes(fs, path, old))
+        blobs.append(R.dv_payload(pos))
+        cards.append(len(pos))
+    blob, offsets = R.dv_file_bytes(blobs)
+    dv_uuid = str(uuid.uuid4())
+    fs.put_bytes(fs.join(path, R.dv_file_name(dv_uuid)), blob)
+    for i, base in enumerate(ordered):
+        add = by_base[base]
+        head.append(_remove(add))
+        new_add = {k: v for k, v in add.items() if k != "deletionVector"}
+        new_add["dataChange"] = True
+        new_add["deletionVector"] = {
+            "storageType": "u",
+            "pathOrInlineDv": R.dv_pack_u(dv_uuid),
+            "offset": offsets[i],
+            "sizeInBytes": len(blobs[i]),
+            "cardinality": cards[i],
         }
-    ]
-    upg = _dv_protocol_upgrade(snap)
-    if upg is not None:
-        actions.append(upg)
-    actions.extend(_dv_mark_actions(fs, path, items, payloads))
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend({"cdc": c} for c in cdc_adds)
-    if row_dom is not None:
-        actions.append(row_dom)
-    _publish_commit(fs, path, version, actions)
-    return version
+        head.append({"add": new_add})
+    return matched, head
 
 
 def delete_delta_rows(
@@ -2075,28 +1662,27 @@ def delete_delta_rows(
             "materialized row-id column names; use dv=True"
         )
     schema = snap.schema
-    pcols = snap.partition_columns
     cond = F.expr(where) if isinstance(where, str) else where
 
     items = list(snap.adds.items())
     if dv:
-        return _delete_with_dv(
-            spark, fs, path, snap, schema, pcols, items, cond, where
+        matched, head = _dv_matches(spark, fs, path, snap, items, cond, False)
+        if matched is None:
+            return -1
+        # cdc rows: the deleted rows, change-feed-visible
+        cdc = matched.select(*schema.names).withColumn(
+            "_change_type", F.lit("delete")
         )
-    working = _assemble(spark, fs, path, schema, pcols, items, keep_file=True)
-    hits = {
-        r["__file"]
-        for r in working.filter(cond).select("__file").distinct().collect()
-    }
-    if not hits:
+        return _rewrite_commit(
+            fs, path, snap, "DELETE", {"predicate": str(where)}, None, cdc,
+            head=head,
+        )
+    affected = _hit_files(spark, fs, path, snap, items, cond)
+    if not affected:
         return -1
-    affected = [
-        (rel, add) for rel, add in items if posixpath.basename(rel) in hits
-    ]
-    work = _assemble(
-        spark, fs, path, schema, pcols, affected,
-        lineage=tracked, lineage_cols=mat,
-    ).withColumn("__hit", cond)
+    work = _scan(spark, fs, path, snap, affected, lineage=tracked).withColumn(
+        "__hit", cond
+    )
     work = work.localCheckpoint()  # feeds 2 staged writes
     survivors = work.filter(~F.col("__hit")).select(
         *schema.names,
@@ -2115,155 +1701,10 @@ def delete_delta_rows(
         .select(*schema.names)
         .withColumn("_change_type", F.lit("delete"))
     )
-    token = uuid.uuid4().hex
-    new_adds = _stage_and_publish(
-        fs, path, survivors, pcols, token, "rw", "", True
+    return _rewrite_commit(
+        fs, path, snap, "DELETE", {"predicate": str(where)}, survivors, cdc,
+        remove=[add for _rel, add in affected],
     )
-    cdc_adds = _stage_and_publish(
-        fs, path, cdc, pcols, token, "cdc", "_change_data/", False
-    )
-    version = snap.version + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "DELETE",
-                "operationParameters": {"predicate": str(where)},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    for rel, add in affected:
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "partitionValues": add.get("partitionValues") or {},
-                }
-            }
-        )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend({"cdc": c} for c in cdc_adds)
-    if tracked and new_adds:
-        actions.append(_assign_fresh_row_ids(snap.row_hwm, new_adds, version))
-    _publish_commit(fs, path, version, actions)
-    return version
-
-
-def _dv_mark_actions(fs, path, items, payloads) -> list[dict]:
-    """The Delta DV leg shared by DELETE and UPDATE (dv=True): merge the
-    new per-file roaring payloads with each file's existing DV, frame
-    ONE new DV file, and return the remove + DV-bearing re-add actions
-    for every affected file (other add fields — stats, baseRowId —
-    carry through untouched)."""
-    from gofeed_spark.sources import roaring as R
-
-    by_base = {posixpath.basename(rel): (rel, add) for rel, add in items}
-    # merge with any EXISTING DV on the file (positions are file-physical
-    # on both sides) and frame everything into ONE new DV file
-    ordered = sorted(payloads)
-    blobs = []
-    cards = []
-    for base in ordered:
-        new_pos = R.dv_decode_payload(payloads[base])
-        _rel, add = by_base[base]
-        old_dv = add.get("deletionVector")
-        if old_dv:
-            new_pos |= R.dv_decode_payload(_dv_payload_bytes(fs, path, old_dv))
-        blobs.append(R.dv_payload(new_pos))
-        cards.append(len(new_pos))
-    blob, offsets = R.dv_file_bytes(blobs)
-    dv_uuid = str(uuid.uuid4())
-    fs.put_bytes(fs.join(path, R.dv_file_name(dv_uuid)), blob)
-
-    actions: list[dict] = []
-    for i, base in enumerate(ordered):
-        _rel, add = by_base[base]
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "partitionValues": add.get("partitionValues") or {},
-                }
-            }
-        )
-        new_add = {
-            k: v for k, v in add.items() if k != "deletionVector"
-        }
-        new_add["dataChange"] = True
-        new_add["deletionVector"] = {
-            "storageType": "u",
-            "pathOrInlineDv": R.dv_pack_u(dv_uuid),
-            "offset": offsets[i],
-            "sizeInBytes": len(blobs[i]),
-            "cardinality": cards[i],
-        }
-        actions.append({"add": new_add})
-    return actions
-
-
-def _dv_protocol_upgrade(snap) -> dict | None:
-    """The protocol action enabling deletionVectors (None when the table
-    already has the feature)."""
-    proto = snap.protocol
-    feats = set(proto.get("readerFeatures") or [])
-    if proto.get("minReaderVersion", 1) >= 3 and "deletionVectors" in feats:
-        return None
-    return {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": sorted(feats | {"deletionVectors"}),
-            "writerFeatures": sorted(
-                set(proto.get("writerFeatures") or [])
-                | {"deletionVectors"}
-            ),
-        }
-    }
-
-
-def _delete_with_dv(
-    spark, fs, path, snap, schema, pcols, items, cond, where
-) -> int:
-    """DV-mode DELETE body: per-file roaring payloads encoded on
-    executors, merged with existing DVs, one new DV file, re-added adds.
-    See :func:`delete_delta_rows` (dv=True)."""
-    working = _assemble(
-        spark, fs, path, schema, pcols, items, keep_file=True, keep_pos=True
-    )
-    matched = working.filter(cond).localCheckpoint()  # feeds cdc + payloads
-    payloads = _collect_dv_payloads(matched)
-    if not payloads:
-        return -1
-
-    # cdc rows: the deleted rows, change-feed-visible
-    cdc = (
-        matched.select(*schema.names)
-        .withColumn("_change_type", F.lit("delete"))
-    )
-    token = uuid.uuid4().hex
-    cdc_adds = _stage_and_publish(
-        fs, path, cdc, pcols, token, "cdc", "_change_data/", False
-    )
-
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "DELETE",
-                "operationParameters": {"predicate": str(where)},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    upg = _dv_protocol_upgrade(snap)
-    if upg is not None:
-        actions.append(upg)
-    actions.extend(_dv_mark_actions(fs, path, items, payloads))
-    actions.extend({"cdc": c} for c in cdc_adds)
-    version = snap.version + 1
-    _publish_commit(fs, path, version, actions)
-    return version
 
 
 def merge_delta(
@@ -2326,29 +1767,9 @@ def merge_delta(
       only the named non-key columns from the source, keeping the rest
       of the target row; the source then needs only ``on + set_cols``
       columns (inserts are refused — a partial row cannot insert)."""
-    matched_cond: str | None = None
-    if isinstance(when_matched, tuple):
-        if len(when_matched) != 2 or not isinstance(when_matched[1], str):
-            raise DeltaError(
-                "conditional when_matched is ('update'|'delete', '<sql>')"
-            )
-        when_matched, matched_cond = when_matched
-    if when_matched not in ("update", "delete", None):
-        raise DeltaError(f"when_matched must be update|delete|None, got {when_matched!r}")
-    if when_not_matched not in ("insert", None):
-        raise DeltaError(f"when_not_matched must be insert|None, got {when_not_matched!r}")
-    if set_cols is not None:
-        if when_matched != "update":
-            raise DeltaError("set_cols requires when_matched='update'")
-        if when_not_matched == "insert":
-            raise DeltaError(
-                "set_cols cannot insert (a partial row is not a table row); "
-                "pass when_not_matched=None"
-            )
-    if when_matched is None and when_not_matched is None:
-        raise DeltaError("MERGE with no WHEN clause is a no-op by construction")
-    if not on:
-        raise DeltaError("MERGE needs at least one key column")
+    when_matched, matched_cond = core.merge_clauses(
+        when_matched, when_not_matched, set_cols, on, DeltaError
+    )
     path = path.rstrip("/")
     fs = get_filesystem(path)
     snap = _snapshot(fs, path)
@@ -2363,76 +1784,24 @@ def merge_delta(
             "cannot preserve _row_id"
         )
     schema = snap.schema
-    pcols = snap.partition_columns
     by_type = {f.name: f.dataType for f in schema.fields}
-    missing = [c for c in on if c not in schema.names]
-    if missing:
-        raise DeltaError(f"merge keys {missing} not in table schema")
-    delete_only = when_matched == "delete" and when_not_matched is None
-    if set_cols is not None:
-        bad = [c for c in set_cols if c not in schema.names or c in on]
-        if bad:
-            raise DeltaError(f"set_cols {bad} not non-key table columns")
-        need = [*on, *set_cols]
-        missing_src = [c for c in need if c not in source_df.columns]
-        if missing_src:
-            raise DeltaError(f"source lacks columns {missing_src}")
-        src = source_df.select(
-            *[F.col(c).cast(by_type[c]).alias(c) for c in need]
-        )
-    elif delete_only:
-        missing_src = [c for c in on if c not in source_df.columns]
-        if missing_src:
-            raise DeltaError(f"source lacks merge keys {missing_src}")
-        src = source_df.select(*on)
-    else:
-        if _schema_fingerprint(source_df.schema) != _schema_fingerprint(schema):
-            raise DeltaSchemaMismatch(
-                f"source schema {_schema_fingerprint(source_df.schema)} != "
-                f"table's {_schema_fingerprint(schema)}"
-            )
-        src = source_df
-    # the source feeds several jobs (uniqueness check, file scan, rewrite
-    # join, insert anti join) — pin it once
-    src = src.localCheckpoint()
-    # ONE aggregation job answers both per-merge questions about the
-    # source: key uniqueness (max per-key count) and the key min/max that
-    # feeds file skipping — the separate groupBy-filter-limit-count probe
-    # was a whole extra job per merge (§1.2: fewer passes)
-    stats = (
-        src.groupBy(*on)
-        .count()
-        .agg(
-            F.max("count").alias("__dup"),
-            *[F.min(c).alias(f"__lo_{c}") for c in on],
-            *[F.max(c).alias(f"__hi_{c}") for c in on],
-        )
-        .collect()[0]
+    src, lo, hi = core.merge_source(
+        source_df, schema, on, when_matched, when_not_matched, set_cols,
+        DeltaError, DeltaSchemaMismatch,
     )
-    if (stats["__dup"] or 0) > 1:
-        raise DeltaError(
-            "MERGE source has duplicate key rows (ambiguous by the SQL rule); "
-            "reduce to one row per key first"
-        )
     skeys = src.select(*on)
 
     items = list(snap.adds.items())
     affected: list[tuple[str, dict]] = []
     if items and when_matched is not None:
         # FILE SKIPPING before the candidate scan: the source keys'
-        # min/max (from the stats job above) + add-action stats (written
-        # by this module's writers, carried through checkpoints) drop
-        # every file whose key range cannot intersect — at large table
-        # sizes the scan reads only the overlapping files instead of the
-        # whole table's key columns
-        lo = {c: stats[f"__lo_{c}"] for c in on}
-        hi = {c: stats[f"__hi_{c}"] for c in on}
-        candidates = _prune_adds_by_key_range(items, on, lo, hi)
+        # min/max (from the source stats job) + add-action stats drop
+        # every file whose key range cannot intersect — the scan reads
+        # only the overlapping files instead of the whole table's keys
+        candidates = core.prune_by_range(items, lo, hi, _add_bounds)
         hits: set = set()
         if candidates:
-            working = _assemble(
-                spark, fs, path, schema, pcols, candidates, keep_file=True
-            )
+            working = _scan(spark, fs, path, snap, candidates, keep=("__file",))
             hits = {
                 r["__file"]
                 for r in working.select(*on, "__file")
@@ -2445,115 +1814,69 @@ def merge_delta(
             (rel, add) for rel, add in items if posixpath.basename(rel) in hits
         ]
 
-    from gofeed_spark.sources.mergeutil import cond_sql as _cond_sql
-
     rewritten = None
     cdc_parts: list[DataFrame] = []
     mkeys = None  # matched source keys (excluded from inserts)
-    n_matched = 0
     if affected:
         # row-tracked tables rewrite through the lineage view: updated
         # and carried rows keep their durable _row_id (materialized into
         # the new files); updated rows' commit version falls back to the
         # new file's default (= this merge), carried rows keep theirs
-        tgt = _assemble(
-            spark, fs, path, schema, pcols, affected,
-            lineage=tracked, lineage_cols=mat,
-        )
+        tgt = _scan(spark, fs, path, snap, affected, lineage=tracked)
         if when_matched == "update":
             val_cols = (
                 set_cols
                 if set_cols is not None
                 else [c for c in schema.names if c not in on]
             )
-            srcren = src.select(
+            srcsel = src.select(
                 *on,
                 *[F.col(c).alias(f"__src_{c}") for c in val_cols],
                 F.lit(True).alias("__m"),
             )
-            j = tgt.join(srcren, on, "left")
-            if matched_cond is not None:
-                j = j.withColumn(
-                    "__t", F.struct(*[F.col(c).alias(c) for c in schema.names])
-                ).withColumn(
-                    "__s",
-                    F.struct(
-                        *[F.col(c).alias(c) for c in on],
-                        *[F.col(f"__src_{c}").alias(c) for c in val_cols],
-                    ),
-                )
-                guarded = (
-                    F.col("__m").isNotNull()
-                    & F.expr(
-                        _cond_sql(matched_cond)
-                    )
-                )
-                j = j.withColumn(
-                    "__upd", F.coalesce(guarded, F.lit(False))
-                ).drop("__t", "__s")
-            else:
-                j = j.withColumn(
-                    "__upd", F.coalesce(F.col("__m"), F.lit(False))
-                )
-            j = j.localCheckpoint()  # feeds 3 writes + counts
+        else:  # delete
+            val_cols = []
+            srcsel = skeys.withColumn("__m", F.lit(True))
+        j = tgt.join(srcsel, on, "left")
+        upd = F.col("__m")
+        if matched_cond is not None:
+            j = core.with_guard(j, schema.names, on, val_cols, matched_cond)
+            upd = F.col("__m").isNotNull() & F.col("__guard")
+        j = j.withColumn("__upd", F.coalesce(upd, F.lit(False))).localCheckpoint()
+        matched = j.filter(F.col("__m"))
+        updated = j.filter(F.col("__upd"))  # rows the WHEN clause hits
+        if when_matched == "update":
             repl = [
-                F.col(c)
-                if c not in val_cols
-                else F.when(F.col("__upd"), F.col(f"__src_{c}"))
+                F.when(F.col("__upd"), F.col(f"__src_{c}"))
                 .otherwise(F.col(c))
                 .cast(by_type[c])
                 .alias(c)
+                if c in val_cols
+                else F.col(c)
                 for c in schema.names
             ]
-            lin_out = (
-                [
-                    F.col("_row_id").alias(mat[0]),
-                    F.when(F.col("__upd"), F.lit(None).cast("long"))
-                    .otherwise(F.col("_row_commit_version"))
-                    .alias(mat[1]),
-                ]
-                if tracked
-                else []
+            rewritten = j.select(
+                *repl,
+                *(
+                    [
+                        F.col("_row_id").alias(mat[0]),
+                        F.when(F.col("__upd"), F.lit(None).cast("long"))
+                        .otherwise(F.col("_row_commit_version"))
+                        .alias(mat[1]),
+                    ]
+                    if tracked
+                    else []
+                ),
             )
-            rewritten = j.select(*repl, *lin_out)
-            matched = j.filter(F.col("__m"))
-            updated = j.filter(F.col("__upd"))
-            cdc_parts.append(
+            cdc_parts += [
                 updated.select(*schema.names).withColumn(
                     "_change_type", F.lit("update_preimage")
-                )
-            )
-            cdc_parts.append(
+                ),
                 updated.select(*repl).withColumn(
                     "_change_type", F.lit("update_postimage")
-                )
-            )
-        else:  # delete
-            j = tgt.join(
-                skeys.withColumn("__m", F.lit(True)), on, "left"
-            )
-            if matched_cond is not None:
-                j = j.withColumn(
-                    "__t", F.struct(*[F.col(c).alias(c) for c in schema.names])
-                ).withColumn(
-                    "__s", F.struct(*[F.col(c).alias(c) for c in on])
-                )
-                guarded = (
-                    F.col("__m").isNotNull()
-                    & F.expr(
-                        _cond_sql(matched_cond)
-                    )
-                )
-                j = j.withColumn(
-                    "__upd", F.coalesce(guarded, F.lit(False))
-                ).drop("__t", "__s")
-            else:
-                j = j.withColumn(
-                    "__upd", F.coalesce(F.col("__m"), F.lit(False))
-                )
-            j = j.localCheckpoint()
-            matched = j.filter(F.col("__m"))
-            updated = j.filter(F.col("__upd"))  # the rows actually deleted
+                ),
+            ]
+        else:
             rewritten = j.filter(~F.col("__upd")).select(
                 *schema.names,
                 *(
@@ -2578,8 +1901,7 @@ def merge_delta(
             F.count(F.when(F.col("__upd"), F.lit(1))).alias("__n_upd"),
             F.count(F.when(F.col("__m"), F.lit(1))).alias("__n_m"),
         ).collect()[0]
-        n_matched = cnts["__n_upd"]
-        if n_matched == 0:
+        if cnts["__n_upd"] == 0:
             # nothing updates/deletes: no rewrite, no CDC — but matched
             # keys STILL suppress inserts (they matched, the SQL rule),
             # so mkeys survives when any key matched at all
@@ -2595,8 +1917,9 @@ def merge_delta(
         elif items and when_matched is None:
             # insert-only merge: exclude EVERY existing key (key-column
             # scan only — column pruning keeps the I/O slim)
-            working = _assemble(spark, fs, path, schema, pcols, items)
-            ins = src.join(working.select(*on), on, "left_anti")
+            ins = src.join(
+                _scan(spark, fs, path, snap, items).select(*on), on, "left_anti"
+            )
         else:
             ins = src  # empty table or nothing matched
         ins = ins.localCheckpoint()  # feeds data + cdc writes
@@ -2611,19 +1934,14 @@ def merge_delta(
     if not affected and not n_ins:
         return -1
 
-    data_out = None
-    if rewritten is not None:
-        data_out = rewritten
+    data_out = rewritten
     if n_ins:
         # inserted rows carry NULL materialized lineage: their fresh
         # _row_id is the new file's baseRowId + position
         insel = ins.select(
             *schema.names,
             *(
-                [
-                    F.lit(None).cast("long").alias(mat[0]),
-                    F.lit(None).cast("long").alias(mat[1]),
-                ]
+                [F.lit(None).cast("long").alias(c) for c in mat]
                 if tracked
                 else []
             ),
@@ -2632,61 +1950,24 @@ def merge_delta(
     cdc = cdc_parts[0]
     for part in cdc_parts[1:]:
         cdc = cdc.unionByName(part)
-
-    token = uuid.uuid4().hex
-    new_adds = (
-        _stage_and_publish(fs, path, data_out, pcols, token, "mrg", "", True)
-        if data_out is not None
-        else []
-    )
-    cdc_adds = _stage_and_publish(
-        fs, path, cdc, pcols, token, "cdc", "_change_data/", False
-    )
-    version = snap.version + 1
-    # fresh id range per new file (carried/updated rows never surface
-    # these — their materialized values win; inserts do)
-    row_dom = (
-        _assign_fresh_row_ids(snap.row_hwm, new_adds, version)
-        if tracked and new_adds
-        else None
-    )
-    actions: list[dict] = [
+    return _rewrite_commit(
+        fs, path, snap, "MERGE",
         {
-            "commitInfo": {
-                "operation": "MERGE",
-                "operationParameters": {
-                    "matchedPredicates": json.dumps(
-                        [{"actionType": when_matched}] if when_matched else []
-                    ),
-                    "notMatchedPredicates": json.dumps(
-                        [{"actionType": when_not_matched}]
-                        if when_not_matched
-                        else []
-                    ),
-                    "predicate": json.dumps([f"{c} = {c}" for c in on]),
-                },
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    if txn is not None:
-        actions.append({"txn": {"appId": str(txn[0]), "version": int(txn[1])}})
-    for rel, add in affected:
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "partitionValues": add.get("partitionValues") or {},
-                }
-            }
-        )
-    actions.extend({"add": a} for a in new_adds)
-    actions.extend({"cdc": c} for c in cdc_adds)
-    if row_dom is not None:
-        actions.append(row_dom)
-    _publish_commit(fs, path, version, actions)
-    return version
+            "matchedPredicates": json.dumps(
+                [{"actionType": when_matched}] if when_matched else []
+            ),
+            "notMatchedPredicates": json.dumps(
+                [{"actionType": when_not_matched}] if when_not_matched else []
+            ),
+            "predicate": json.dumps([f"{c} = {c}" for c in on]),
+        },
+        data_out,
+        cdc,
+        remove=[add for _rel, add in affected],
+        head=[{"txn": {"appId": str(txn[0]), "version": int(txn[1])}}]
+        if txn is not None
+        else [],
+    )
 
 
 def apply_changes_delta(
@@ -2716,8 +1997,6 @@ def apply_changes_delta(
     ``{"upserted_version", "deleted_version", "end_version",
     "n_upserts", "n_deletes"}`` (versions -1 when that half was a
     no-op)."""
-    from pyspark.sql.window import Window
-
     # resolve the window end ONCE, before the read: a commit landing
     # between the read and a later latest_version() call would be
     # reported as consumed without being read (silent CDC loss)
@@ -2733,28 +2012,10 @@ def apply_changes_delta(
     # key's postimage outranks its preimage (an update pair), and our
     # writers emit one operation per commit so no other same-commit tie
     # exists
-    rank = (
-        F.when(F.col("_change_type") == "update_preimage", F.lit(0))
-        .otherwise(F.lit(1))
+    ups, dels, n_ups, n_dels = core.net_changes(
+        ch, on, "_commit_version", "update_preimage",
+        ("_change_type", "_commit_version"),
     )
-    w = Window.partitionBy(*on).orderBy(
-        F.col("_commit_version").desc(), rank.desc()
-    )
-    latest = (
-        ch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint()  # feeds two merges
-    )
-    data_cols = [
-        c for c in latest.columns
-        if c not in ("_change_type", "_commit_version")
-    ]
-    ups = latest.filter(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).select(*data_cols)
-    dels = latest.filter(F.col("_change_type") == "delete").select(*on)
-    n_ups, n_dels = ups.count(), dels.count()
     # the idempotency stamp rides the LAST commit only (see docstring)
     uv = (
         merge_delta(
@@ -2783,20 +2044,9 @@ def apply_changes_delta(
     if txn is not None and not stamped:
         tpath = target_path.rstrip("/")
         tfs = get_filesystem(tpath)
-        tsnap = _snapshot(tfs, tpath)
-        _publish_commit(
-            tfs,
-            tpath,
-            tsnap.version + 1,
-            [
-                {
-                    "commitInfo": {
-                        "operation": "TXN",
-                        "engineInfo": "gofeed_spark-delta/0.1",
-                    }
-                },
-                {"txn": {"appId": str(txn[0]), "version": int(txn[1])}},
-            ],
+        _commit(
+            tfs, tpath, _snapshot(tfs, tpath).version + 1, "TXN",
+            head=[{"txn": {"appId": str(txn[0]), "version": int(txn[1])}}],
         )
     return {
         "upserted_version": uv,
@@ -2851,34 +2101,14 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
             f"cannot restore to version {version}: {len(missing)} data "
             f"file(s) vacuumed away (first: {missing[0]!r})"
         )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    if cur.metadata != target.metadata:
-        actions.append({"metaData": target.metadata})
-    for add in removes:
-        actions.append(
-            {
-                "remove": {
-                    "path": add["path"],
-                    "dataChange": True,
-                    "partitionValues": add.get("partitionValues") or {},
-                }
-            }
-        )
-    for add in readds:
-        new_add = dict(add)
-        new_add["dataChange"] = True
-        actions.append({"add": new_add})
-    new_version = cur.version + 1
-    _publish_commit(fs, path, new_version, actions)
-    return new_version
+    return _commit(
+        fs, path, cur.version + 1, "RESTORE", {"version": version},
+        head=[{"metaData": target.metadata}]
+        if cur.metadata != target.metadata
+        else [],
+        remove=removes,
+        add=[{**add, "dataChange": True} for add in readds],
+    )
 
 
 # --- checkpoint + vacuum ----------------------------------------------------
@@ -3065,18 +2295,7 @@ def optimize_delta(
     pcols = snap.partition_columns
     schema = snap.schema
     P = snap.column_mapping or {}
-    # column-mapped tables rewrite under PHYSICAL names end to end (the
-    # staged read+write never leaves physical space, so no aliasing)
     disk_pcols = [P.get(c, c) for c in pcols]
-    phys = T.StructType(
-        [
-            T.StructField(P.get(f.name, f.name), f.dataType, f.nullable)
-            for f in schema.fields
-            if f.name not in pcols
-        ]
-    )
-
-    zkeys_phys: list[str] = []
     if zorder_by:
         missing_z = [c for c in zorder_by if c not in schema.names]
         if missing_z:
@@ -3087,165 +2306,87 @@ def optimize_delta(
                 f"zorder_by {in_part} are partition columns (constant "
                 "within each rewrite group — nothing to cluster)"
             )
-        zkeys_phys = [P.get(c, c) for c in zorder_by]
 
-    groups: dict[tuple, list[tuple[str, dict]]] = {}
-    for rel, add in snap.adds.items():
-        key = tuple(
-            (add.get("partitionValues") or {}).get(c) for c in disk_pcols
+    # DV-bearing groups always rewrite: the pack reads the LIVE view, so
+    # packed files carry surviving rows only and the DVs die with the old
+    # adds — REORG APPLY (PURGE) inside OPTIMIZE's dataChange=false
+    # commit (snapshot contents unchanged: DV'd rows were already dead)
+    groups = core.compaction_groups(
+        list(snap.adds.items()),
+        lambda it: tuple(
+            (it[1].get("partitionValues") or {}).get(c) for c in disk_pcols
+        ),
+        lambda it: it[1].get("size", 0),
+        target_file_bytes, min_files,
+        cluster=bool(zorder_by),
+        force=lambda members: any(a.get("deletionVector") for _r, a in members),
+    )
+
+    def frame(members, gids):
+        # the group's LIVE view under PHYSICAL names; a row-tracked table
+        # writes every surviving row's durable id into the hidden
+        # materialized columns (packed files get FRESH baseRowIds below,
+        # the materialized values win at read time)
+        df = _scan(
+            spark, fs, path, snap, members,
+            extra=("__gid", gids) if gids is not None else None,
+            lineage=tracked,
+        ).drop(*pcols)
+        renames = {c: P[c] for c in df.columns if c in P}
+        if tracked:
+            renames.update(
+                {"_row_id": mat_cols[0], "_row_commit_version": mat_cols[1]}
+            )
+        return df.withColumnsRenamed(renames) if renames else df
+
+    def name(group, i):
+        part_dir = "".join(
+            f"{c}={core.NULL_PARTITION if v is None else urllib.parse.quote(v)}/"
+            for c, v in zip(disk_pcols, group.key)
         )
-        groups.setdefault(key, []).append((rel, add))
+        return f"{part_dir}part-{i:05d}-{token}.opt.parquet"
 
     token = uuid.uuid4().hex
-    removes: list[dict] = []
-    adds: list[dict] = []
-    ordinal = 0
-    n_parts = 0
-    for key, members in sorted(groups.items()):
-        has_dv = any(a.get("deletionVector") for _r, a in members)
-        # re-clustering rewrites every group: an unordered single packed
-        # file is exactly the layout zorder exists to fix
-        if len(members) < min_files and not (has_dv or zorder_by):
-            continue
-        total = sum(a.get("size", 0) for _r, a in members)
-        n_out = max(1, -(-total // target_file_bytes))
-        if n_out >= len(members) and not (has_dv or zorder_by):
-            continue  # already at or under the packed count
-        if not zorder_by:
-            n_out = min(n_out, len(members))
-        n_parts += 1
-        part_dir = ""
-        if disk_pcols:
-            segs = []
-            for c, v in zip(disk_pcols, key):
-                segs.append(
-                    f"{c}={_NULL_PARTITION if v is None else urllib.parse.quote(v)}"
-                )
-            part_dir = "/".join(segs) + "/"
-        staging = f"{path}_delta_optimize_{token}_{n_parts}"
-        if tracked:
-            # row-tracked rewrite: read the group's LIVE view WITH
-            # lineage (existing materialized values win over
-            # baseRowId+pos) and write the preserved ids into the
-            # table's hidden materialized columns — packed files get a
-            # FRESH baseRowId below, but every surviving row's durable
-            # _row_id rides the column (protocol §Row Tracking)
-            group_df = _assemble(
-                spark, fs, path, schema, pcols, members,
-                lineage=True, lineage_cols=mat_cols,
-            ).drop(*pcols)
-            group_df = group_df.withColumnsRenamed(
-                {
-                    "_row_id": mat_cols[0],
-                    "_row_commit_version": mat_cols[1],
-                }
-            )
-            if zorder_by:
-                group_df = cluster_layout(group_df, zkeys_phys, n_out)
-            else:
-                group_df = group_df.coalesce(n_out)
-            group_df.write.mode("overwrite").parquet(fs.spark_path(staging))
-        elif has_dv:
-            # PURGE: the group rewrites through the LIVE view (deletion
-            # vectors applied), so packed files carry surviving rows only
-            # and the DVs die with the old adds — REORG APPLY (PURGE)
-            # semantics inside OPTIMIZE's dataChange=false commit
-            # (snapshot contents unchanged: DV'd rows were already dead)
-            group_df = _assemble(
-                spark, fs, path, schema, pcols, members,
-                mapping=snap.column_mapping,
-            ).drop(*pcols)
-            if P:
-                group_df = group_df.select(
-                    *[
-                        F.col(f.name).alias(P.get(f.name, f.name))
-                        for f in schema.fields
-                        if f.name not in pcols
-                    ]
-                )
-            if zorder_by:
-                group_df = cluster_layout(group_df, zkeys_phys, n_out)
-            else:
-                group_df = group_df.coalesce(n_out)
-            group_df.write.mode("overwrite").parquet(fs.spark_path(staging))
-        else:
-            files = [fs.spark_path(fs.join(path, rel)) for rel, _a in members]
-            group_df = spark.read.schema(phys).parquet(*files)
-            if zorder_by:
-                group_df = cluster_layout(group_df, zkeys_phys, n_out)
-            else:
-                group_df = group_df.coalesce(n_out)
-            group_df.write.mode("overwrite").parquet(fs.spark_path(staging))
-        for rel, _size in fs.walk_files(staging):
-            base = rel.rsplit("/", 1)[-1]
-            if base.startswith(("_", ".")) or not base.endswith(".parquet"):
-                continue
-            new_rel = f"{part_dir}part-{ordinal:05d}-{token}.opt.parquet"
-            src, dst = fs.join(staging, rel), fs.join(path, new_rel)
-            if fs.supports_rename():
-                fs.makedirs(posixpath.dirname(dst))
-                fs.rename(src, dst)
-            else:
-                fs.put_bytes(dst, fs.read_bytes(src))
-            stat = fs.stat(dst)
-            # packed files keep file-skipping working post-compaction
-            stats = _file_stats_json(fs, dst)
-            adds.append(
-                {
-                    "path": urllib.parse.quote(new_rel),
-                    "partitionValues": dict(zip(disk_pcols, key)),
-                    "size": stat[0] if stat else 0,
-                    "modificationTime": (stat[1] // 1_000_000) if stat else 0,
-                    "dataChange": False,
-                    **({"stats": stats} if stats else {}),
-                }
-            )
-            ordinal += 1
-        fs.delete_tree(staging)
-        for rel, add in members:
-            removes.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "dataChange": False,
-                        "partitionValues": add.get("partitionValues") or {},
-                    }
-                }
-            )
-
-    if not adds:
+    packed = core.compact(
+        fs, path, groups, frame, name, f"{path}_delta_optimize_{token}",
+        [P.get(c, c) for c in zorder_by] if zorder_by else None,
+    )
+    if not packed:
         return {"version": -1, "rewritten": 0, "packed": 0, "partitions": 0}
-    version = snap.version + 1
+    # packed files keep file-skipping working post-compaction
+    adds = []
+    for group, f in packed:
+        stats = _file_stats_json(fs, f.dst)
+        adds.append(
+            {
+                "path": urllib.parse.quote(f.new_rel),
+                "partitionValues": dict(zip(disk_pcols, group.key)),
+                "size": f.size,
+                "modificationTime": f.mtime_ms,
+                "dataChange": False,
+                **({"stats": stats} if stats else {}),
+            }
+        )
+    removes = [a for g in groups for _r, a in g.members]
     # packed files get FRESH baseRowId ranges (the mark only advances);
     # preserved ids live in the materialized columns and win at read time
-    row_dom = _assign_fresh_row_ids(snap.row_hwm, adds, version) if tracked else None
-    actions: list[dict] = [
+    version = _commit(
+        fs, path, snap.version + 1, "OPTIMIZE",
         {
-            "commitInfo": {
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetFileBytes": target_file_bytes,
-                    "minFiles": min_files,
-                    **(
-                        {"zOrderBy": json.dumps(list(zorder_by))}
-                        if zorder_by
-                        else {}
-                    ),
-                },
-                "engineInfo": "gofeed_spark-delta/0.1",
-            }
-        }
-    ]
-    actions.extend(removes)
-    actions.extend({"add": a} for a in adds)
-    if row_dom is not None:
-        actions.append(row_dom)
-    _publish_commit(fs, path, version, actions)
+            "targetFileBytes": target_file_bytes,
+            "minFiles": min_files,
+            **({"zOrderBy": json.dumps(list(zorder_by))} if zorder_by else {}),
+        },
+        remove=removes,
+        add=adds,
+        hwm=snap.row_hwm if tracked else None,
+        data_change=False,
+    )
     return {
         "version": version,
         "rewritten": len(removes),
         "packed": len(adds),
-        "partitions": n_parts,
+        "partitions": len(groups),
     }
 
 

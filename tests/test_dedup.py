@@ -907,8 +907,10 @@ def test_doc_shingles_byte_identical_to_per_row_reference(spark):
 
 
 def test_minhash_signatures_match_per_doc_reference(spark):
-    """The batched reduceat signature pass must equal the per-doc
-    multiply-shift min-reduce exactly (same seeds, same wraparound)."""
+    """The fused kernel (shingling and, per doc, one (n_shingles ×
+    num_hashes) multiply-shift broadcast min-reduce in the same Arrow
+    batch) must equal this reference min-reduce exactly (same seeds,
+    same uint64 wraparound)."""
     import numpy as np
 
     rng = np.random.RandomState(9172)

@@ -865,7 +865,9 @@ def test_dv_giant_fallback_path(spark, tmp_path, monkeypatch):
     D.delete_delta_rows(spark, tbl, "doc_id % 3 = 0", dv=True)
     want = {i for i in range(50) if i % 3 != 0}
     assert {r.doc_id for r in D.read_delta(spark, tbl).collect()} == want
-    monkeypatch.setattr(D, "_DV_BROADCAST_MAX", 0)
+    from gofeed_spark.sources import tablecore
+
+    monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX", 0)
     assert {r.doc_id for r in D.read_delta(spark, tbl).collect()} == want
 
 
@@ -1275,7 +1277,7 @@ def test_merge_skips_files_by_key_range(spark, tmp_path):
     """MERGE's candidate scan reads only files whose stats key range can
     intersect the source keys — the min/max file skipping real engines
     run before touching data."""
-    from gofeed_spark.sources.delta import _prune_adds_by_key_range
+    from gofeed_spark.sources.tablecore import prune_by_range
 
     # unit: synthetic adds
     import json as _json
@@ -1291,11 +1293,11 @@ def test_merge_skips_files_by_key_range(spark, tmp_path):
 
     items = [add(0, 9), add(10, 19), add(20, 29), add(0, 99, stats=False),
              add(50, 59, nulls=10)]
-    kept = _prune_adds_by_key_range(items, ["k"], {"k": 12}, {"k": 14})
+    kept = prune_by_range(items, {"k": 12}, {"k": 14}, D._add_bounds)
     # overlapping file + stats-less file stay; all-null-key file prunes
     assert [a["path"] for _r, a in kept] == ["f10", "f0"]
     # incomparable bounds (str vs int) stay conservative
-    kept2 = _prune_adds_by_key_range(items[:1], ["k"], {"k": "a"}, {"k": "b"})
+    kept2 = prune_by_range(items[:1], {"k": "a"}, {"k": "b"}, D._add_bounds)
     assert len(kept2) == 1
 
     # e2e: three disjoint-range files; a merge into the middle range must
@@ -1307,17 +1309,17 @@ def test_merge_skips_files_by_key_range(spark, tmp_path):
                                             (F.col("id") * 10).alias("v")),
             tbl,
         )
-    from gofeed_spark.sources import delta as DM
+    from gofeed_spark.sources import tablecore
 
     scanned = []
-    real_assemble = DM._assemble
+    real_assemble = tablecore.assemble
 
-    def spy(spark_, fs, path, schema, pcols, adds, **kw):
-        if kw.get("keep_file"):
-            scanned.append(len(adds))
-        return real_assemble(spark_, fs, path, schema, pcols, adds, **kw)
+    def spy(spark_, schema, files, *args, **kw):
+        if kw.get("keep") == ("__file",):
+            scanned.append(len(files))
+        return real_assemble(spark_, schema, files, *args, **kw)
 
-    DM._assemble = spy
+    tablecore.assemble = spy
     try:
         v = D.merge_delta(
             spark, tbl,
@@ -1325,7 +1327,7 @@ def test_merge_skips_files_by_key_range(spark, tmp_path):
             on=["k"],
         )
     finally:
-        DM._assemble = real_assemble
+        tablecore.assemble = real_assemble
     assert scanned == [1]  # ONE candidate file, not three
     out = {r.k: r.v for r in D.read_delta(spark, tbl).collect()}
     assert out[12] == -1 and out[14] == -2 and out[0] == 0 and len(out) == 30

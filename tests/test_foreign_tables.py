@@ -687,3 +687,215 @@ def test_foreign_iceberg_v3_dv_changelog(spark, tmp_path):
     assert sorted((r.k, r._change_type) for r in ch.collect()) == [
         (2, "delete"), (4, "delete"),
     ]
+
+
+# --- Iceberg: hand-committed manifest layouts ----------------------------------
+
+
+def _existing(entry: dict) -> dict:
+    """A live data entry carried into a new manifest as EXISTING, with its
+    data sequence number explicit (what a manifest-merging writer emits)."""
+    return {
+        "status": 0,
+        "snapshot_id": None,
+        "sequence_number": entry["_seq"],
+        "file_sequence_number": entry["_seq"],
+        "data_file": {k: v for k, v in entry.items() if not k.startswith("_")},
+    }
+
+
+def _added(path: str, n_rows: int) -> dict:
+    return {
+        "status": 1,
+        "snapshot_id": None,
+        "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": 0,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": n_rows,
+            "file_size_in_bytes": os.path.getsize(path),
+        },
+    }
+
+
+def _hand_commit(root: str, data_entries: list[dict], op: str) -> int:
+    """Publish a snapshot the way a foreign writer does: ONE data manifest
+    holding ``data_entries`` (ADDED and EXISTING alike) under the new
+    snapshot's id, the current delete manifests carried by pointer.
+    Returns the snapshot id."""
+    from gofeed_spark.fs import get_filesystem
+
+    fs = get_filesystem(root)
+    meta, version = I._load_metadata(fs, root)
+    seq = int(meta["last-sequence-number"]) + 1
+    sid = 5000 + seq
+    mbytes = write_container(json.dumps(I._manifest_entry_schema([])), data_entries)
+    mpath = f"{root}/metadata/m-{sid}-hand.avro"
+    fs.put_bytes(mpath, mbytes)
+
+    def rows(status):
+        return [e["data_file"]["record_count"] for e in data_entries if e["status"] == status]
+
+    mf = {
+        "manifest_path": mpath,
+        "manifest_length": len(mbytes),
+        "partition_spec_id": 0,
+        "content": 0,
+        "sequence_number": seq,
+        "min_sequence_number": min(
+            [seq] + [e["sequence_number"] for e in data_entries if e["status"] == 0]
+        ),
+        "added_snapshot_id": sid,
+        "added_data_files_count": len(rows(1)),
+        "existing_data_files_count": len(rows(0)),
+        "deleted_data_files_count": 0,
+        "added_rows_count": sum(rows(1)),
+        "existing_rows_count": sum(rows(0)),
+        "deleted_rows_count": 0,
+    }
+    dels = [m for m in I._carry_manifests(fs, meta) if m["content"] == 1]
+    lpath = f"{root}/metadata/snap-{sid}-hand.avro"
+    fs.put_bytes(lpath, write_container(json.dumps(I._MANIFEST_FILE_SCHEMA), [mf] + dels))
+    new_meta = dict(meta)
+    new_meta["last-sequence-number"] = seq
+    new_meta["current-snapshot-id"] = sid
+    new_meta["snapshots"] = list(meta["snapshots"]) + [
+        {
+            "snapshot-id": sid,
+            "parent-snapshot-id": meta["current-snapshot-id"],
+            "sequence-number": seq,
+            "timestamp-ms": seq,
+            "summary": {"operation": op},
+            "manifest-list": lpath,
+            "schema-id": 0,
+        }
+    ]
+    new_meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
+        {"timestamp-ms": seq, "snapshot-id": sid}
+    ]
+    I._publish_metadata(fs, root, version, new_meta)
+    return sid
+
+
+def _live_data(root: str) -> list[dict]:
+    from gofeed_spark.fs import get_filesystem
+
+    fs = get_filesystem(root)
+    meta, _v = I._load_metadata(fs, root)
+    data, _dels = I._live_entries(fs, I._snapshot_of(meta, None))
+    return sorted(data, key=lambda e: int(e["_seq"]))
+
+
+def test_iceberg_changelog_manifest_merging_append(spark, tmp_path):
+    """A manifest-merging writer's plain APPEND rewrites the data manifest
+    and carries the old file in as EXISTING: the changelog must report
+    only the snapshot's ADDED file as inserts, and the memoized live
+    state must not resurrect the carried file's deleted rows — checked
+    row for row against the from-scratch derivation (each snapshot's
+    table diffed against its parent's)."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "tbl")
+    I.write_iceberg(
+        spark.range(0, 10)
+        .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        .coalesce(1),
+        root,
+    )
+    I.delete_iceberg_rows(spark, root, "k % 3 = 0")
+    carried = _live_data(root)
+    new_path = f"{root}/data/merged-append.parquet"
+    _pq_write(new_path, {"k": [10, 11, 12], "v": [20, 22, 24]})
+    merged = _hand_commit(
+        root, [_existing(e) for e in carried] + [_added(new_path, 3)], "append"
+    )
+    I.delete_iceberg_rows(spark, root, "k IN (1, 10)")
+    # an equality delete naming an already-dead key (3) besides a live one
+    I.delete_iceberg_equality(spark, root, spark.createDataFrame([(3,), (11,)], "k long"))
+
+    ch = I.read_iceberg_changes(spark, root, 0, cdf=True)
+    got = Counter((r.k, r.v, r._change_type, r._snapshot_id) for r in ch.collect())
+
+    from gofeed_spark.fs import get_filesystem
+
+    meta, _v = I._load_metadata(get_filesystem(root), root)
+    want: Counter = Counter()
+    prev: Counter = Counter()
+    for s in sorted(meta["snapshots"], key=lambda s: s["sequence-number"]):
+        sid = s["snapshot-id"]
+        cur = Counter(
+            (r.k, r.v) for r in I.read_iceberg(spark, root, snapshot_id=sid).collect()
+        )
+        want.update({(*row, "insert", sid): n for row, n in (cur - prev).items()})
+        want.update({(*row, "delete", sid): n for row, n in (prev - cur).items()})
+        prev = cur
+    assert got == want
+    # the carried file's rows are never re-reported by the merging append
+    assert {k for k, _v, t, sid in got if t == "insert" and sid == merged} == {10, 11, 12}
+
+
+def test_duplicate_basenames_refuse_row_level_deletes(spark, tmp_path):
+    """Two live data files sharing a basename (a foreign layout: same name
+    in different directories) cannot be told apart by the file map that
+    position deletes and deletion vectors key on — DELETE and UPDATE must
+    refuse and leave the table unchanged, not hide rows in the wrong
+    file."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "ice")
+    for lo in (0, 5):
+        I.write_iceberg(
+            spark.range(lo, lo + 5)
+            .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+            .coalesce(1),
+            root,
+        )
+    a, b = _live_data(root)
+    twin = f"{root}/data/sub/{os.path.basename(a['file_path'])}"
+    os.makedirs(os.path.dirname(twin))
+    os.rename(b["file_path"], twin)
+    moved = _existing(b)
+    moved["data_file"]["file_path"] = twin
+    _hand_commit(root, [_existing(a), moved], "replace")
+    head = I.latest_snapshot(root)
+    want = sorted(r.k for r in I.read_iceberg(spark, root).collect())
+    assert want == list(range(10))
+    with pytest.raises(I.IcebergError, match="duplicate"):
+        I.delete_iceberg_rows(spark, root, "k = 7")
+    with pytest.raises(I.IcebergError, match="duplicate"):
+        I.update_iceberg(spark, root, "k = 7", {"v": "v + 1"})
+    assert I.latest_snapshot(root) == head
+    assert sorted(r.k for r in I.read_iceberg(spark, root).collect()) == want
+
+    # the Delta twin: a hand-written log with two adds sharing a basename
+    droot = str(tmp_path / "delta")
+    for d, ks in (("a", [0, 1, 2]), ("b", [3, 4])):
+        _pq_write(f"{droot}/{d}/part-0.parquet", {"k": ks})
+    log = f"{droot}/_delta_log"
+    os.makedirs(log)
+    schema = json.dumps(
+        {"type": "struct", "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+    )
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "dup-basenames", "format": {"provider": "parquet"},
+                      "schemaString": schema, "partitionColumns": [],
+                      "configuration": {}}},
+    ] + [
+        {"add": {"path": f"{d}/part-0.parquet", "partitionValues": {},
+                 "size": os.path.getsize(f"{droot}/{d}/part-0.parquet"),
+                 "modificationTime": 0, "dataChange": True}}
+        for d in ("a", "b")
+    ]
+    with open(f"{log}/{0:020d}.json", "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    with pytest.raises(D.DeltaError, match="duplicate"):
+        D.delete_delta_rows(spark, droot, "k = 4", dv=True)
+    assert D.latest_version(droot) == 0
+    assert sorted(r.k for r in D.read_delta(spark, droot).collect()) == [0, 1, 2, 3, 4]

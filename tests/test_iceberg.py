@@ -1044,7 +1044,9 @@ def test_delete_broadcast_gated(spark, corpus, tmp_path, monkeypatch):
     assert {r.doc_id for r in small.collect()} == want
     assert "SortMergeJoin" not in plan(small)  # proven-small: broadcast
 
-    monkeypatch.setattr(I, "_DELETE_BROADCAST_MAX", 0)
+    from gofeed_spark.sources import tablecore
+
+    monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX", 0)
     big = I.read_iceberg(spark, tbl)
     assert {r.doc_id for r in big.collect()} == want
     # the anti joins fell back to planner-chosen (non-broadcast) joins
@@ -1056,11 +1058,11 @@ def test_delete_broadcast_gated(spark, corpus, tmp_path, monkeypatch):
 
     # unknown record_count must NEVER count as zero/broadcastable
     rel = spark.range(3).toDF("x")
-    monkeypatch.setattr(I, "_DELETE_BROADCAST_MAX", 10)
-    assert I._maybe_broadcast(rel, [{"record_count": None}]) is rel
-    assert I._maybe_broadcast(rel, [{}]) is rel
-    assert I._maybe_broadcast(rel, [{"record_count": 11}]) is rel
-    assert I._maybe_broadcast(rel, [{"record_count": 2}]) is not rel
+    monkeypatch.setattr(tablecore, "DELETE_BROADCAST_MAX", 10)
+    assert tablecore.maybe_broadcast(rel, [None]) is rel
+    assert tablecore.maybe_broadcast(rel, [2, None]) is rel
+    assert tablecore.maybe_broadcast(rel, [11]) is rel
+    assert tablecore.maybe_broadcast(rel, [2]) is not rel
 
 
 def test_staged_files_carry_parquet_field_ids(spark, corpus, tmp_path):

@@ -222,3 +222,44 @@ def test_filtered_ann_probe_pushes_predicate_beside_pruning(spark, tmp_path):
     assert "label" in pushed, pushed
     labels = {r.neighbor_id % 3 for r in out.collect()}
     assert labels == {1}  # only label-1 rows survive
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_table_read_join_shapes(spark, tmp_path, fmt):
+    """The table core's read shapes, pinned identically for both formats:
+    the basename map join exists only to attach per-file values — none
+    for an unpartitioned read without deletes, ONE for a partitioned read
+    — and deletion vectors apply as ONE left-anti join on (__file,
+    __pos)."""
+    from pyspark.sql import functions as F
+
+    from gofeed_spark.sources import delta as D
+    from gofeed_spark.sources import iceberg as I
+
+    df = spark.range(0, 20).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("g")
+    )
+    flat, part, dv = (str(tmp_path / n) for n in ("flat", "part", "dv"))
+    if fmt == "delta":
+        D.write_delta(df, flat)
+        D.write_delta(df, part, partition_by=["g"])
+        D.write_delta(df, dv)
+        D.delete_delta_rows(spark, dv, "k % 5 = 0", dv=True)
+        read = lambda p: D.read_delta(spark, p)  # noqa: E731
+    else:
+        I.write_iceberg(df, flat)
+        I.write_iceberg(df, part, partition_by=["g"])
+        I.write_iceberg(df, dv, format_version=3)
+        I.delete_iceberg_rows(spark, dv, "k % 5 = 0")  # v3: deletion vectors
+        read = lambda p: I.read_iceberg(spark, p)  # noqa: E731
+
+    def joins(p):
+        plan = read(p)._jdf.queryExecution().executedPlan().toString()
+        return [ln for ln in plan.splitlines() if "Join" in ln]
+
+    assert joins(flat) == []
+    part_joins = joins(part)
+    assert len(part_joins) == 1 and "BroadcastHashJoin" in part_joins[0]
+    (anti,) = [ln for ln in joins(dv) if "LeftAnti" in ln]
+    assert "__file" in anti and "__pos" in anti
+    assert read(dv).count() == 16

@@ -39,6 +39,7 @@ def main():
     spark = get_spark("bench-delete", master="local[32]", shuffle_partitions=32)
     from gofeed_spark.sources import delta as D
     from gofeed_spark.sources import iceberg as I
+    from gofeed_spark.sources import tablecore
 
     work = tempfile.mkdtemp(prefix="bench_delete_")
     df = spark.range(n_rows).select(
@@ -101,8 +102,8 @@ def main():
     # the r16 gated-broadcast fallback: a delete set the manifests cannot
     # prove small must NOT broadcast — force the bound to 0 and time the
     # planner-chosen join path (counts must match the broadcast path)
-    orig = I._DELETE_BROADCAST_MAX
-    I._DELETE_BROADCAST_MAX = 0
+    orig = tablecore.DELETE_BROADCAST_MAX
+    tablecore.DELETE_BROADCAST_MAX = 0
     try:
         for name in ("iceberg_position", "iceberg_equality"):
             t0 = time.time()
@@ -110,7 +111,7 @@ def main():
             legs[name]["read_fallback_sec"] = round(time.time() - t0, 3)
             assert n == n_rows - n_rows // 100, (name, n)
     finally:
-        I._DELETE_BROADCAST_MAX = orig
+        tablecore.DELETE_BROADCAST_MAX = orig
     shutil.rmtree(work, ignore_errors=True)
     print(
         json.dumps(
