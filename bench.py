@@ -3,7 +3,8 @@
 Prints ONE JSON line:
     {"metric": "headline_total", "value": <sec>, "unit": "sec",
      "queries": {"q06_groupby_multiagg": <sec>, ...}, "sf": <float>,
-     "oracle_total": <sec>, "ratio": <value/oracle_total>}
+     "oracle_total": <sec>, "ratio": <value/oracle_total>,
+     "cpus": <sc.defaultParallelism>, "master": <spark master>}
 
 Methodology (r17): the Spark and DuckDB legs INTERLEAVE per run within
 each query — spark, oracle, spark, oracle ... back-to-back in the same
@@ -200,6 +201,9 @@ def main() -> None:
     # CPU steal hits Spark's many-small-tasks scheduling harder than the
     # oracle) is visible in the artifact itself
     out["load"] = [round(x, 2) for x in (*la_start, *os.getloadavg())]
+    # the cores the numbers were taken on: the line describes its own box
+    out["cpus"] = spark.sparkContext.defaultParallelism
+    out["master"] = spark.sparkContext.master
     print(json.dumps(out), flush=True)
 
 

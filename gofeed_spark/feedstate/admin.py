@@ -69,42 +69,6 @@ def auto_migrate(
     return out
 
 
-def transactional_write(
-    spark: SparkSession, writes: dict[str, "object"], base_path: str
-) -> None:
-    """Atomic multi-table write — the reference's Transaction wrapper
-    (repo.go:164-170) re-expressed for immutable storage: stage every
-    table first, then flip them with directory renames in staging order —
-    a crash mid-flip leaves a prefix of tables fully flipped and never a
-    torn single table; the next run's re-staging completes the flip
-    idempotently.  (On Delta this is a single multi-table commit; the
-    staging dance is the plain-parquet equivalent.)
-
-    Stale ``*_txn_old`` / ``*_txn_staging`` directories left by a crash
-    between a rename and its cleanup are removed up-front, so recovery
-    never wedges on a non-empty rename target (ENOTEMPTY).
-
-    ``writes`` maps table name (under ``base_path``) to its full new
-    DataFrame contents.
-    """
-    import shutil
-
-    staged = []
-    for name, df in writes.items():
-        target = os.path.join(base_path, name)
-        staging = target + "_txn_staging"
-        shutil.rmtree(staging, ignore_errors=True)  # stale from a crashed run
-        df.write.mode("overwrite").parquet(staging)
-        staged.append((staging, target))
-    for staging, target in staged:
-        old = target + "_txn_old"
-        shutil.rmtree(old, ignore_errors=True)  # stale _old would wedge os.replace
-        if os.path.exists(target):
-            os.replace(target, old)
-        os.replace(staging, target)
-        shutil.rmtree(old, ignore_errors=True)
-
-
 def _dir_bytes(path: str) -> int:
     total = 0
     for root, _dirs, files in os.walk(path):
@@ -140,13 +104,53 @@ def write_bucket_marker(table_path: str, n_buckets: int) -> None:
     os.replace(tmp, os.path.join(table_path, BUCKET_MARKER))
 
 
+def flip_buckets(base_path: str, table: str, whole: bool) -> None:
+    """Parquet publish tail: move the bucket dirs staged at
+    ``{table}_txn_staging`` into the live table (the reference's
+    Transaction wrapper, repo.go:164-170, re-expressed for immutable
+    storage).  ``whole`` flips the entire table dir — a layout conversion,
+    whose staging carries the ``_n_buckets`` marker so the modulus travels
+    atomically with the data; otherwise each staged bucket replaces its live
+    twin and untouched buckets stay as they are.
+
+    Every flip renames the live dir aside first — ``{table}_txn_old`` for
+    a whole table, ``{table}_txn_old_b=XX`` for a bucket, both at the BASE,
+    never inside the table dir, where a stale dir would be discovered as a
+    partition — then its replacement in.  A crash mid-flip leaves a prefix
+    of buckets flipped: the uncommitted batch replays and recomputes
+    (at-least-once), and ``recover_bucketed`` restores a dir caught
+    between its two renames.  Stale aside dirs from an earlier crash are
+    removed first, so a flip never wedges on a non-empty rename target."""
+    import shutil
+
+    target = os.path.join(base_path, table)
+    staging = target + "_txn_staging"
+    if whole:
+        moves = [(staging, target, target + "_txn_old")]
+    else:
+        os.makedirs(target, exist_ok=True)
+        moves = [
+            (os.path.join(staging, b), os.path.join(target, b), f"{target}_txn_old_{b}")
+            for b in os.listdir(staging)
+            if b.startswith("b=")
+        ]
+    for src, dst, old in moves:
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(dst):
+            os.replace(dst, old)
+        os.replace(src, dst)
+        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
 def recover_bucketed(base_path: str, tables: list[str]) -> None:
-    """Crash recovery for ``bucketed_write``'s per-bucket flip: a crash
-    between renaming a live bucket aside and renaming its replacement in
-    leaves ``{table}_txn_old_b=XX`` at the base with the bucket missing
-    from the table — restore it (the staged replacement is re-derived by
-    the batch replay).  An old dir whose bucket IS present is leftover
-    cleanup — remove it.  Run before reading bucketed state."""
+    """Crash recovery for ``flip_buckets``: a crash between renaming a live
+    dir aside and renaming its replacement in leaves ``{table}_txn_old``
+    (whole table) or ``{table}_txn_old_b=XX`` (one bucket) at the base with
+    the dir missing from its place — restore it (the staged replacement is
+    re-derived by the batch replay).  An aside dir whose original IS
+    present is leftover cleanup — remove it.  Run before reading bucketed
+    state."""
     import shutil
 
     try:
@@ -154,120 +158,21 @@ def recover_bucketed(base_path: str, tables: list[str]) -> None:
     except OSError:
         return
     for name in tables:
-        prefix = f"{name}_txn_old_"
+        prefix = f"{name}_txn_old"
         target = os.path.join(base_path, name)
         for entry in entries:
             if not entry.startswith(prefix):
                 continue
             bdir = entry[len(prefix):]
+            if bdir and not bdir.startswith("_b="):
+                continue
             src = os.path.join(base_path, entry)
-            dst = os.path.join(target, bdir)
+            dst = os.path.join(target, bdir[1:]) if bdir else target
             if os.path.exists(dst):
                 shutil.rmtree(src, ignore_errors=True)
             else:
-                os.makedirs(target, exist_ok=True)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(src, dst)
-
-
-def bucketed_write(
-    spark: SparkSession,
-    writes: dict[str, tuple["object", list[str] | None]],
-    base_path: str,
-    n_buckets: int,
-    small_delta_rows: int = 8192,
-) -> dict[str, int]:
-    """Touched-bucket state write: the scale-with-work-done replacement for
-    ``transactional_write``'s full-snapshot flip.  State tables are laid
-    out hash-bucketed (``{table}/b=bNNNN/``, bucket = pmod(xxhash64(id),
-    n_buckets), values prefixed non-numeric by construction so partition
-    discovery can never re-infer them as INT); a micro-batch rewrites ONLY
-    the buckets containing touched rows, so write volume tracks work done,
-    not table size — the parquet twin of the dbapi backend's per-row
-    upserts (reference contract repo.go:125-138: one row per save).
-
-    ``writes`` maps table name to ``(df, mode)`` or ``(df, mode,
-    delta_rows)``: ``df`` carries the bucket column ``b`` and holds the
-    FULL new contents of the buckets to write; ``mode`` is ``None`` for a
-    whole-table rewrite (legacy→bucketed layout conversion — folded into
-    the first batch commit so it costs no extra version and no extra
-    write) or ``"auto"`` — flip exactly the bucket dirs the staging write
-    produced (the caller pre-filters ``df`` to touched buckets, typically
-    via a broadcast semi-join, so touched discovery costs no extra Spark
-    job).  ``delta_rows`` (known row count of ``df``): at or below
-    ``small_delta_rows`` the staging write runs ``coalesce(1)`` instead of
-    ``repartition(b)`` — one task still writes exactly one file per bucket
-    via partitionBy, but the per-batch shuffle (a fixed ~10-14%% of feed
-    throughput at the 200k-item profile, measured round 8) disappears.
-    Callers pass deltas of CHECKPOINTED frames, so the single task reads
-    in-memory blocks, not a recomputed lineage.
-
-    Whole-table rewrites also stamp the bucket modulus into the staging
-    dir (``_n_buckets``, Spark-invisible) BEFORE the flip — the marker
-    travels atomically with the data, so a restart can never misread the
-    layout's modulus (see ``read_bucket_marker``).
-
-    Staging order matches ``transactional_write``: every table stages
-    before any flip.  Whole-table flips are atomic dir renames; per-bucket
-    flips rename each live bucket aside (``{table}_txn_old_b=XX`` at the
-    BASE, never inside the table dir — a stale dir there would be
-    discovered as a partition) then its replacement in.  A crash mid-flip
-    leaves a prefix of buckets flipped — the uncommitted batch replays and
-    recomputes (the same at-least-once posture as the table-level flip);
-    ``recover_bucketed`` restores any bucket caught between its two
-    renames.  Returns bytes staged per table (the write-volume metric).
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    stats: dict[str, int] = {}
-    staged = []
-    for name, spec in writes.items():
-        df, mode = spec[0], spec[1]
-        delta_rows = spec[2] if len(spec) > 2 else None
-        target = os.path.join(base_path, name)
-        staging = target + "_txn_staging"
-        shutil.rmtree(staging, ignore_errors=True)  # stale from a crashed run
-        # ONE file per bucket: repartition ON b puts each bucket's rows
-        # wholly in one task (partitionBy alone writes files-per-task-per-
-        # bucket — measured 8× the files and footer overhead dominating
-        # small deltas).  The shuffle moves only the rows being written,
-        # which by construction is the work done; for a KNOWN-small delta
-        # coalesce(1) produces the identical one-file-per-bucket layout
-        # from one task with no shuffle at all.
-        if delta_rows is not None and delta_rows <= small_delta_rows:
-            df = df.coalesce(1)
-        else:
-            df = df.repartition(F.col("b"))
-        df.write.partitionBy("b").mode("overwrite").parquet(staging)
-        if mode is None:
-            # whole-table flip: the modulus marker rides the atomic rename
-            write_bucket_marker(staging, n_buckets)
-        stats[name] = _dir_bytes(staging)
-        staged.append((staging, target, mode))
-    for staging, target, mode in staged:
-        if mode is None:
-            old = target + "_txn_old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(target):
-                os.replace(target, old)
-            os.replace(staging, target)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.makedirs(target, exist_ok=True)
-            for bdir in os.listdir(staging):
-                if not bdir.startswith("b="):
-                    continue
-                src = os.path.join(staging, bdir)
-                dst = os.path.join(target, bdir)
-                old = target + f"_txn_old_{bdir}"
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(dst):
-                    os.replace(dst, old)
-                os.replace(src, dst)
-                shutil.rmtree(old, ignore_errors=True)
-            shutil.rmtree(staging, ignore_errors=True)
-    return stats
 
 
 def healthcheck(

@@ -1,9 +1,10 @@
 """Multi-writer atomic multi-table commits over plain parquet.
 
-``transactional_write`` (admin.py) is the single-writer staging dance; this
-log provides the piece the reference gets from its DB and Delta gets from
-its log protocol — ARBITRATION BETWEEN CONCURRENT COMMITTERS — using the
-one primitive every local/posix filesystem gives us: create-exclusive
+The parquet state store's bucket flip (``admin.flip_buckets``) is the
+single-writer staging dance; this log provides the piece the reference
+gets from its DB and Delta gets from its log protocol — ARBITRATION
+BETWEEN CONCURRENT COMMITTERS — using the one primitive every
+local/posix filesystem gives us: create-exclusive
 (``os.open(..., O_CREAT | O_EXCL)``).  It is the storage-layer twin of the
 reference's transaction + optimistic save (repo.go:125-138, 164-170): a
 losing committer gets a ``CommitConflict`` and re-reads, exactly the

@@ -16,16 +16,18 @@ OCC version column arbitrates any concurrent batch writer.
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import json
 import os
+import shutil
 import threading
+from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofeed_spark.feedstate.engine import feed_step
-from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
 from gofeed_spark.feedstate.processors import ProcessorFn
 from gofeed_spark.sources.feed_cdc import register_feed_cdc
 
@@ -92,6 +94,32 @@ def _drain_confs(spark, shuffle_partitions=None):
                 sess.conf.set("spark.sql.shuffle.partitions", sp)
 
 
+@dataclass
+class _Snapshot:
+    """What one state commit read: items (with ``updated_at``) and
+    partitions, the re-queue tick, the dbapi pushed-down decision counts,
+    and the txlog manifest (version + tables) the commit is based on."""
+
+    items: DataFrame
+    parts: DataFrame
+    tick: int
+    counts: DataFrame | None = None
+    version: int | None = None
+    tables: dict | None = None
+
+
+def _overlay(table: DataFrame, changed: DataFrame) -> DataFrame:
+    """``table`` with ``changed``'s rows in place of their ids' rows, every
+    row flagged ``__changed`` — the shape ``FeedRunner._publish`` takes."""
+    return (
+        table.join(changed.select("id"), "id", "left_anti")
+        .withColumn("__changed", F.lit(False))
+        .unionByName(
+            changed.select(*table.columns).withColumn("__changed", F.lit(True))
+        )
+    )
+
+
 class FeedRunner:
     """Continuous feed processing over versioned state tables.
 
@@ -102,8 +130,16 @@ class FeedRunner:
     retryable items stay Available and re-match the next poll,
     item.go:27-38 / repo.go:114-120).
 
-    ``storage``: ``"parquet"`` (default) writes plain table dirs flipped by
-    ``transactional_write`` — single-writer-safe, the original layout.
+    Every state change — a micro-batch and ``requeue_dead_letters`` alike
+    — is ONE state commit (``_run``): ``_read`` a snapshot, decide the new
+    rows flagged ``__changed`` (the same for every store), ``_publish``
+    them.  The snapshot stores share one touched-bucket planner
+    (``_plan``) and one staging write (``_stage``), and each has one short
+    tail; dbapi upserts the changed rows.
+
+    ``storage``: ``"parquet"`` (default) keeps hash-bucketed table dirs
+    whose touched buckets flip in place (``admin.flip_buckets``) —
+    single-writer-safe.
     ``"txlog"`` commits both tables through the manifest log
     (feedstate/txlog.py): multi-writer-safe — a concurrent runner's commit
     loses the O_EXCL claim, and this runner re-reads the fresh state and
@@ -165,40 +201,31 @@ class FeedRunner:
 
         ``state_buckets`` (parquet/txlog): the items/partitions tables are
         laid out hash-bucketed (bucket = pmod(xxhash64(id), n); directory
-        values prefixed ``b0007``-style, non-numeric by construction) and
-        each micro-batch rewrites ONLY buckets containing touched rows —
-        write volume scales with work done, not table size, the snapshot-
-        store twin of the dbapi backend's per-row upserts.  A legacy
-        (unbucketed) table converts inside the first batch commit.  Size it
-        so one bucket ≈ one comfortable write task at your state size;
-        more buckets = finer write granularity + more files.
+        values ``b0007``-style, non-numeric by construction) and each
+        commit rewrites ONLY buckets containing changed rows — write volume
+        scales with work done, the snapshot-store twin of dbapi's per-row
+        upserts.  A legacy (unbucketed) table converts inside the first
+        commit.  Size it so one bucket ≈ one comfortable write task.
 
-        The LAYOUT owns the modulus: an existing bucketed table records
-        its bucket count in the layout itself (parquet: an ``_n_buckets``
-        marker inside the table dir, flipped atomically with conversions;
-        txlog: ``@m{n}b{NNNN}`` manifest keys, committed atomically with
-        the data), and ``__init__`` ADOPTS that value over a disagreeing
-        ``state_buckets`` argument — restarting with a different number
-        can never mix two moduli over one table (which would silently
+        The LAYOUT owns the modulus: a bucketed table records its bucket
+        count (parquet: an ``_n_buckets`` marker flipped with conversions;
+        txlog: ``@m{n}b{NNNN}`` manifest keys committed with the data), and
+        ``__init__`` ADOPTS it over a disagreeing ``state_buckets`` — a
+        restart can never mix two moduli over one table (which would
         duplicate or strand rows).  Pre-marker legacy layouts are claimed
         with the configured value on first contact.
 
         ``bucket_target_bytes`` / ``max_state_buckets``: size-tiered
         growth.  When the items table's mean bucket size exceeds the
-        target, the next batch commit converts the state to the next
-        power-of-two bucket count that brings it back under (same
-        in-commit mechanism as the legacy conversion: no extra manifest
-        version, atomic) — so per-batch write volume stays
-        ~O(touched rows × bucket_target_bytes) as the table grows, the
-        reference contract of one row per save (repo.go:125-138)
-        approximated with a bounded constant instead of degrading
-        linearly with table size.
+        target, the next commit converts the state to the next power-of-two
+        bucket count that brings it back under (the legacy conversion's
+        mechanism) — per-batch write volume stays ~O(touched rows ×
+        bucket_target_bytes) as the table grows, the reference contract of
+        one row per save (repo.go:125-138) with a bounded constant.
 
         ``small_delta_rows``: staging writes at or below this row count
-        skip the ``repartition(b)`` shuffle (``coalesce(1)`` writes the
-        identical one-file-per-bucket layout from one task) — the shuffle
-        cost ~10-14% of feed throughput at the 200k-item profile for
-        typical few-KB deltas."""
+        skip the ``repartition(b)`` shuffle (see ``_stage``) — ~10-14% of
+        feed throughput at the 200k-item profile for few-KB deltas."""
         self.spark = spark
         self.base = base_path
         self.runner_id = runner_id or "w0"
@@ -264,16 +291,13 @@ class FeedRunner:
         self._rel_bytes: dict[str, int] = {}
         # adopt the layout's modulus over a disagreeing ctor argument —
         # see the docstring; self.bucket_count_adopted records it happened
-        self.bucket_count_adopted = False
-        layout_n = self._layout_bucket_count()
-        if layout_n is not None and layout_n != self.state_buckets:
+        tables = self.log.latest()[1] if storage == "txlog" else None
+        layout_n = None if storage == "dbapi" else self._layout_modulus(tables, self.t_items)
+        self.bucket_count_adopted = layout_n not in (None, state_buckets)
+        if self.bucket_count_adopted:
             self.state_buckets = layout_n
-            self.bucket_count_adopted = True
-        # write-volume accounting (bytes staged per table, last batch and
-        # cumulative, plus a bounded per-batch history) — the bench_feed
-        # metric proving writes track work done, not table size
-        import collections
-
+        # write volume (bytes staged per table: last commit, cumulative, a
+        # bounded history) — the proof that writes track work done
         self.last_write_bytes: dict[str, int] = {}
         self.total_write_bytes: int = 0
         self.write_history: collections.deque = collections.deque(maxlen=64)
@@ -298,23 +322,14 @@ class FeedRunner:
             ),
         )
 
-    def _parquet_legacy(self, path: str) -> bool:
-        """True when ``path`` is not yet in bucketed layout (missing, empty,
-        or root-level part files) — the next write converts wholesale."""
-        if not os.path.isdir(path):
-            return True
-        return not any(e.startswith("b=") for e in os.listdir(path))
+    @staticmethod
+    def _txlog_owns(table: str, key: str) -> bool:
+        # the plain entry, legacy "@b" bucket keys and modulus-stamped
+        # "@m{n}bNNNN" keys
+        return key == table or key.startswith(table + "@")
 
     def _txlog_rels(self, tables: dict, table: str) -> list[str]:
-        # "@b": legacy bucket keys; "@m": modulus-stamped keys (m{n}bNNNN)
-        keys = [
-            k
-            for k in tables
-            if k == table
-            or k.startswith(table + "@b")
-            or k.startswith(table + "@m")
-        ]
-        return [tables[k] for k in sorted(keys)]
+        return [tables[k] for k in sorted(tables) if self._txlog_owns(table, k)]
 
     @staticmethod
     def _manifest_modulus(tables: dict, table: str) -> int | None:
@@ -329,20 +344,23 @@ class FeedRunner:
                 return int(k[len(prefix):].split("b", 1)[0])
         return None
 
-    def _layout_bucket_count(self) -> int | None:
-        """The bucket modulus the EXISTING state layout was written under,
-        or None (no state yet / legacy pre-marker layout)."""
-        if self.storage == "parquet":
-            from gofeed_spark.feedstate.admin import read_bucket_marker
-
-            return read_bucket_marker(self.items_path)
+    def _layout_modulus(self, tables: dict | None, table: str) -> int | None:
+        """The bucket modulus ``table``'s EXISTING layout records (txlog:
+        the ``@m{n}`` keys of the manifest ``tables``; parquet: the
+        ``_n_buckets`` marker), or None when the layout cannot tell: no
+        state yet, a plain legacy table, or a bucketed layout that predates
+        the record (its modulus is unknowable — the next commit converts it
+        under the configured value)."""
         if self.storage == "txlog":
-            try:
-                _, tables = self.log.latest()
-            except Exception:
-                return None
-            return self._manifest_modulus(tables, self.t_items)
-        return None
+            return None if table in tables else self._manifest_modulus(tables, table)
+        from gofeed_spark.feedstate.admin import read_bucket_marker
+
+        path = os.path.join(self.base, table)
+        if not os.path.isdir(path) or not any(
+            e.startswith("b=") for e in os.listdir(path)
+        ):
+            return None
+        return read_bucket_marker(path)
 
     def _maybe_schedule_growth(self, items_table_bytes: int) -> None:
         """Size-tiered buckets: when mean bucket size exceeds the target,
@@ -366,16 +384,11 @@ class FeedRunner:
         cache is pruned to the manifest's live set each call — bounded by
         rel count); an object-store deployment would read sizes straight
         off the manifest instead of listing."""
-        rels = [
-            v
-            for k, v in tables.items()
-            if k == table or k.startswith(table + "@")
-        ]
         from gofeed_spark.feedstate.admin import _dir_bytes
 
         total = 0
         fresh: dict[str, int] = {}
-        for rel in rels:
+        for rel in self._txlog_rels(tables, table):
             b = self._rel_bytes.get(rel)
             if b is None:
                 b = _dir_bytes(os.path.join(self.base, rel))
@@ -384,26 +397,23 @@ class FeedRunner:
         self._rel_bytes = fresh
         return total
 
-    def _txlog_read(self, table):
+    def _txlog_read(self, table: str, tables: dict | None = None):
         """Read a possibly-bucketed txlog table: the union of the plain
-        entry (legacy / pre-conversion) and every ``{table}@bNNNN`` bucket
-        snapshot named by the latest manifest."""
-        _, tables = self.log.latest()
-        return self._txlog_read_snapshot(tables, table)
-
-    def _txlog_read_snapshot(self, tables: dict, table: str):
-        """Same as ``_txlog_read`` but against an EXPLICIT manifest
-        snapshot.  ``commit_retry`` compute closures must use this with
-        the tables dict they were handed: re-reading ``latest()`` inside
-        the closure races a concurrent commit, building writes from a
+        entry (legacy / pre-conversion) and every bucket snapshot named by
+        the manifest ``tables`` (default: the latest).  A state commit
+        passes the manifest it read its version from: re-reading
+        ``latest()`` would race a concurrent commit, building writes from a
         newer snapshot than the OCC expected_version — a guaranteed
         conflict that burns retry attempts."""
+        if tables is None:
+            _, tables = self.log.latest()
         rels = self._txlog_rels(tables, table)
         if not rels:
             raise ValueError(f"table {table!r} not in commit: {sorted(tables)}")
         return self.spark.read.parquet(
             *[os.path.join(self.base, r) for r in rels]
         )
+
     def _read_fanout(self, n_rows: int) -> int:
         """Read partitions for an n_rows read: 1 (plain driver SELECT) up
         to 32 executor-side ranges, one per `fanout_rows` of volume."""
@@ -451,7 +461,7 @@ class FeedRunner:
             json.dump(ids, f)
         os.replace(tmp, self.manifest)
 
-    # -- the micro-batch body --------------------------------------------
+    # -- the state commit: read → decide → publish -------------------------
     def _step(self, changed, batch_id: int) -> None:
         if batch_id in self._committed():
             return  # re-delivered after crash: idempotent skip
@@ -464,77 +474,95 @@ class FeedRunner:
             empty = changed.isEmpty()
         if empty:
             return
-        # txlog mode: a concurrent runner may win the commit claim; re-read
-        # the fresh snapshot and recompute (at-least-once, like every retry
-        # path here — the batch-id manifest still dedups whole batches).
-        attempts = 8 if self.storage == "txlog" else 1
-        last_conflict = None
-        for _ in range(attempts):
-            if self._attempt(batch_id):
-                return
-            from gofeed_spark.feedstate.txlog import CommitConflict
+        self._run(self._decide, batch_id)
+        self._commit(batch_id)
 
-            last_conflict = CommitConflict("txlog commit lost repeatedly")
-        raise last_conflict
+    def _run(self, decide, batch_id: int | None = None, full: bool = False) -> None:
+        """One state commit: ``_read`` a snapshot, ``decide(snapshot,
+        ckpt)`` the new rows, ``_publish`` them.  On txlog a concurrent
+        runner may win the commit claim; the loop re-reads the fresh
+        snapshot and decides again (at-least-once, like every retry path
+        here — the batch-id manifest still dedups whole batches).  Every
+        localCheckpoint an attempt creates is released on the way out
+        (success, conflict, or raise): once the storage commit has the data
+        — or the attempt is abandoned — the blocks are dead weight, and a
+        long-lived runner would otherwise accumulate 4-5 of them per
+        micro-batch until driver GC notices."""
+        from gofeed_spark.feedstate.txlog import CommitConflict
+        from gofeed_spark.functions.lineage import release_local_checkpoint
 
-    def _attempt(self, batch_id: int) -> bool:
-        # Every localCheckpoint this attempt creates is released on the way
-        # out (success, conflict, or raise): once the storage commit has the
-        # data — or the attempt is abandoned — the checkpoint blocks are
-        # dead weight, and a long-lived runner would otherwise accumulate
-        # 4-5 of them per micro-batch until driver GC notices.
-        ckpts: list = []
+        for _ in range(8 if self.storage == "txlog" else 1):
+            ckpts: list = []
 
-        def ckpt(df):
-            d = df.localCheckpoint()
-            ckpts.append(d)
-            return d
+            def ckpt(df):
+                ckpts.append(df.localCheckpoint())
+                return ckpts[-1]
 
-        try:
-            return self._attempt_inner(batch_id, ckpt)
-        finally:
-            from gofeed_spark.functions.lineage import release_local_checkpoint
+            try:
+                snap = self._read(full)
+                change = decide(snap, ckpt)
+                if change is None or self._publish(snap, *change, batch_id):
+                    return
+            finally:
+                for d in ckpts:
+                    release_local_checkpoint(d)
+        raise CommitConflict("txlog commit lost repeatedly")
 
-            for d in ckpts:
-                release_local_checkpoint(d)
+    def _read(self, full: bool) -> _Snapshot:
+        """read: one consistent view of both state tables plus the re-queue
+        tick, which must exceed the GLOBAL high-water mark the CDC source
+        has seen (it may sit on a row outside a predicate-pushed read).
 
-    def _attempt_inner(self, batch_id: int, ckpt) -> bool:
+        dbapi pushes the reference's poll predicates into the database
+        unless ``full`` (repo.go:114-120 over the covering index): the gate
+        decision consumes ONE pushed-down GROUP BY (the GetStatusCounts
+        twin), so only the rows processing can touch — Available items in
+        non-Complete partitions — ever cross the driver; terminal Failed
+        rows are counted in the database, never fetched, and the tick is
+        one index-only MAX.  txlog reads every table from ONE manifest, the
+        version its commit expects."""
         from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE
 
-        expected = self.log.latest()[0] if self.storage == "txlog" else None
-        decision_counts = None
         if self.storage == "dbapi":
-            # Decision-step reads push the reference's poll predicates into
-            # the database (repo.go:114-120 over the covering index): the
-            # gate decision consumes ONE pushed-down GROUP BY (the
-            # GetStatusCounts twin), so only the rows processing can touch —
-            # Available items in non-Complete partitions — ever cross the
-            # driver.  Complete rows are never rewritten, and terminal
-            # Failed rows (which accumulate for the feed's lifetime) are
-            # counted in the database, never fetched: micro-batch cost
-            # scales with READY work, not table size.
-            decision_counts = self.db.read_decision_counts(self.spark)
+            if full:
+                return _Snapshot(
+                    self._items_with_ts(), self.partitions(),
+                    self.db.max_updated_at() + 1,
+                )
+            counts = self.db.read_decision_counts(self.spark)
             avail = self.db.count_items(statuses=(AVAILABLE,))
-            with_ts = self.db.read_items(
+            items = self.db.read_items(
                 self.spark,
                 statuses=(AVAILABLE,),
                 num_partitions=self._read_fanout(avail),
             )
-            parts = self.db.read_partitions(
-                self.spark, exclude_statuses=(COMPLETE,)
-            )
+            parts = self.db.read_partitions(self.spark, exclude_statuses=(COMPLETE,))
+            return _Snapshot(items, parts, self.db.max_updated_at() + 1, counts=counts)
+        version, tables = None, None
+        if self.storage == "txlog":
+            version, tables = self.log.latest()
+            items = self._txlog_read(self.t_items, tables).drop("b")
+            parts = self._txlog_read(self.t_parts, tables).drop("b")
         else:
-            with_ts = self._items_with_ts()
-            parts = self.partitions()
-        items = with_ts.drop("updated_at")
+            items, parts = self._items_with_ts(), self.partitions()
+        tick = (items.agg(F.max("updated_at")).collect()[0][0] or 0) + 1
+        return _Snapshot(items, parts, tick, version=version, tables=tables)
+
+    def _decide(self, snap: _Snapshot, ckpt):
+        """decide: one feed_step and the rows every store commits — items
+        and partitions flagged ``__changed`` (changed rows carry version+1,
+        so dbapi's strict CAS applies exactly them, and changed items carry
+        the re-queue tick) plus the dead-letter rows."""
+        from gofeed_spark.feedstate.model import AVAILABLE, FAILED
+
         new_parts, new_items = feed_step(
-            parts,
-            items,
+            snap.parts,
+            snap.items.drop("updated_at"),
             self.processor,
             max_retries=self.max_retries,
             manual_checkpoint=self.manual_checkpoint,
             auto_close=self.auto_close,
-            decision_counts=decision_counts,
+            decision_counts=snap.counts,
         )
         # Materialize the processor output ONCE, immediately: everything
         # below (dead.isEmpty, dead.write, the items upsert) would otherwise
@@ -543,369 +571,254 @@ class FeedRunner:
         # non-deterministic outcome could make the dead-letter log disagree
         # with the committed items table.
         new_items = ckpt(new_items)
-        new_parts = ckpt(new_parts)
-        # Re-queue ONLY rows whose version moved this step: they get
-        # updated_at = batch tick (> the source's high-water mark), so the
-        # CDC source re-delivers them for the next decision round; untouched
-        # rows keep their timestamp and are not re-delivered — quiescence
-        # is reached exactly when a step changes nothing.
-        # The re-queue tick must exceed the GLOBAL high-water mark the CDC
-        # source has seen (which may sit on a Complete row outside the
-        # predicate-pushed read) — in dbapi mode it comes back as ONE
-        # pushed-down, index-only MAX, not a row fetch.
-        if self.storage == "dbapi":
-            tick = self.db.max_updated_at() + 1
-        else:
-            tick = (
-                with_ts.agg(F.max("updated_at")).collect()[0][0] or 0
-            ) + 1
-        prev = with_ts.select(
+        # gate_decision carries the partition version through unchanged; a
+        # partition whose gate or status moved is saved with version+1 (the
+        # reference's Save), and its id rides the same checkpoint
+        old = snap.parts.select(
+            "id", F.col("gate").alias("__og"), F.col("status").alias("__os")
+        )
+        decided = ckpt(new_parts.join(old, "id"))
+        gate_moved = F.col("gate") != F.col("__og")
+        moved = gate_moved | (F.col("status") != F.col("__os"))
+        parts = decided.select(
+            "id",
+            (F.col("version") + moved.cast("int")).alias("version"),
+            "gate",
+            "status",
+            moved.alias("__changed"),
+        )
+        prev = snap.items.select(
             "id",
             F.col("version").alias("__old_v"),
             F.col("updated_at").alias("__old_ts"),
             F.col("status").alias("__old_status"),
         )
-        joined = new_items.join(prev, "id", "left")
-        changed = F.col("version") > F.coalesce(F.col("__old_v"), F.lit(-1))
-        out_items = (
-            joined.withColumn(
-                "updated_at",
-                F.when(changed, F.lit(tick))
-                .otherwise(F.coalesce(F.col("__old_ts"), F.lit(0)))
-                .cast("long"),
-            )
-            .withColumn("__changed", changed)
-            .drop("__old_v", "__old_ts", "__old_status")
+        # Re-queue ONLY rows that changed this step: they get updated_at =
+        # the tick, so the CDC source re-delivers them for the next decision
+        # round; untouched rows keep their timestamp and are not
+        # re-delivered — quiescence is reached exactly when a step changes
+        # nothing.  Available items of a partition whose gate moved count
+        # as changed: the step that advanced the gate processed none of
+        # them, and without a fresh tick the drain would stop with them
+        # stranded at the new gate.
+        bumped = F.col("version") > F.coalesce(F.col("__old_v"), F.lit(-1))
+        woken = (
+            ~bumped
+            & (F.col("status") == AVAILABLE)
+            & F.col("__gate_moved").isNotNull()
         )
+        changed = bumped | woken
         # Dead-letter routing: items that TRANSITIONED to Failed this step
         # (retries exhausted or non-retryable — item.go:35-37) land in a
-        # log with their error trail.
-        from gofeed_spark.feedstate.model import FAILED as _FAILED
-
-        dead = joined.filter(
-            (F.col("status") == _FAILED)
-            & (F.coalesce(F.col("__old_status"), F.lit(-1)) != _FAILED)
-        ).select(
-            "id", "partition_id", "gate", "retry_count", "error_messages", "data",
-            F.lit(tick).alias("failed_at_tick"),
-        )
-        # Materialize dead BEFORE the storage commit: its lineage reads the
-        # PRE-commit items table, whose files the commit replaces.
-        dead = ckpt(dead)
-        if self.storage == "txlog":
-            # EXACTLY-once dead letters: the dead_letter table rides in the
-            # SAME atomic manifest commit as the state tables — a crash can
-            # never separate a Failed transition from its dead-letter row,
-            # and a conflict retry recomputes both together.  State tables
-            # commit BUCKETED: only buckets containing touched rows are
-            # staged as fresh snapshot dirs; every untouched bucket is
-            # carried into the new manifest by NAME — zero bytes written,
-            # so commit volume scales with work done, not table size.  A
-            # legacy plain-table manifest converts inside this same commit
-            # (all buckets staged, the plain entry dropped) at no extra
-            # version.  Dead letters are exactly that append sink: one
-            # immutable delta snapshot per failing batch, carried forward
-            # by name ever after.
-            import shutil as _shutil
-            import uuid as _uuid
-
-            from gofeed_spark.feedstate.admin import _dir_bytes
-            from gofeed_spark.feedstate.txlog import CommitConflict
-
-            _, prev_tables = self.log.latest()
-            token = _uuid.uuid4().hex[:8]
-            # The LAYOUT owns the modulus: adopt the snapshot's stamped
-            # bucket count (``@m{n}b...`` keys) — a concurrent runner may
-            # have converted the table since our __init__, and computing
-            # touched buckets under a different modulus than the layout
-            # would flip deltas against wrongly-shaped buckets.  A layout
-            # with only legacy un-stamped ``@b`` keys has an UNKNOWABLE
-            # modulus, so it converts wholesale this commit (claiming the
-            # configured value) — same in-commit mechanism as the plain
-            # legacy conversion, no extra manifest version.
-            m_items = self._manifest_modulus(prev_tables, self.t_items)
-            if m_items is not None and m_items != self.state_buckets:
-                self.state_buckets = m_items
-                self._grow_to = None  # re-derive against the adopted layout
-            grow = self._grow_to
-            n_buckets = grow if grow is not None else self.state_buckets
-
-            def _needs_convert(table, modulus):
-                if grow is not None or table in prev_tables:
-                    return True
-                if modulus is None:  # legacy @b keys, modulus unknown
-                    return any(
-                        k.startswith(table + "@b") for k in prev_tables
-                    )
-                return modulus != n_buckets
-
-            convert_items = _needs_convert(self.t_items, m_items)
-            convert_parts = _needs_convert(
-                self.t_parts, self._manifest_modulus(prev_tables, self.t_parts)
+        # log with their error trail.  Both frames come from ONE checkpoint,
+        # taken BEFORE the storage commit: its lineage reads the PRE-commit
+        # items table, whose files the commit replaces.
+        rows = ckpt(
+            new_items.join(prev, "id", "left")
+            .join(
+                decided.filter(gate_moved).select(
+                    F.col("id").alias("partition_id"),
+                    F.lit(True).alias("__gate_moved"),
+                ),
+                "partition_id",
+                "left",
             )
-            writes: dict = {
-                k: v
-                for k, v in prev_tables.items()
-                if (
-                    not convert_items
-                    and (
-                        k.startswith(self.t_items + "@b")
-                        or k.startswith(self.t_items + "@m")
-                    )
-                )
-                or (
-                    not convert_parts
-                    and (
-                        k.startswith(self.t_parts + "@b")
-                        or k.startswith(self.t_parts + "@m")
-                    )
-                )
-                or k == self.t_dead  # legacy plain dead-letter snapshot
-                or k.startswith(self.t_dead + "@d")  # per-batch deltas
-            }
-            fresh_rels: list[str] = []
-            stats: dict[str, int] = {}
-
-            def stage_buckets(table, sel, full, delta_rows=None):
-                # ONE partitionBy write job (``sel`` is already filtered to
-                # touched buckets unless ``full``; repartition ON b = one
-                # file per bucket), then rename each produced bucket dir to
-                # a top-level snapshot name (vacuum's __v convention) —
-                # never one Spark job per bucket.  A KNOWN-small delta
-                # skips the repartition shuffle: coalesce(1) writes the
-                # identical one-file-per-bucket layout from one task over
-                # the checkpointed in-memory blocks.
-                staging = os.path.join(self.base, f"{table}__vstage_{token}")
-                _shutil.rmtree(staging, ignore_errors=True)
-                if delta_rows is not None and delta_rows <= self.small_delta_rows:
-                    sel = sel.coalesce(1)
-                else:
-                    sel = sel.repartition(F.col("b"))
-                sel.write.partitionBy("b").mode("overwrite").parquet(staging)
-                for entry in os.listdir(staging):
-                    if not entry.startswith("b="):
-                        continue
-                    # key carries the layout's modulus: {table}@m{n}b{NNNN}
-                    rel = f"{table}@m{n_buckets}{entry[2:]}__v_{token}"
-                    os.replace(
-                        os.path.join(staging, entry), os.path.join(self.base, rel)
-                    )
-                    writes[f"{table}@m{n_buckets}{entry[2:]}"] = rel
-                    fresh_rels.append(rel)
-                    stats[table] = stats.get(table, 0) + _dir_bytes(
-                        os.path.join(self.base, rel)
-                    )
-                _shutil.rmtree(staging, ignore_errors=True)
-
-            items_b = ckpt(out_items.withColumn("b", self._bucket_col(n_buckets)))
-            if convert_items:
-                # legacy plain entry / un-stamped layout / scheduled
-                # growth: convert wholesale this commit
-                stage_buckets(self.t_items, items_b.drop("__changed"), True)
-            else:
-                # one collect yields touched buckets AND their full row
-                # counts (the delta is the whole content of each touched
-                # bucket) — same job count as a distinct() would be
-                brows = (
-                    items_b.groupBy("b")
-                    .agg(
-                        F.count("*").alias("c"),
-                        F.max(F.col("__changed").cast("int")).alias("t"),
-                    )
-                    .collect()
-                )
-                tb = [r.b for r in brows if r.t == 1]
-                if tb:
-                    stage_buckets(
-                        self.t_items,
-                        items_b.filter(F.col("b").isin(tb)).drop("__changed"),
-                        False,
-                        delta_rows=sum(r.c for r in brows if r.t == 1),
-                    )
-            parts_b = new_parts.withColumn("b", self._bucket_col(n_buckets))
-            if convert_parts:
-                stage_buckets(self.t_parts, parts_b, True)
-            else:
-                ch = self._changed_part_ids(parts, new_parts)
-                prows = (
-                    parts_b.join(
-                        ch.withColumn("__t", F.lit(1)), "id", "left"
-                    )
-                    .groupBy("b")
-                    .agg(
-                        F.count("*").alias("c"),
-                        F.max("__t").alias("t"),
-                    )
-                    .collect()
-                )
-                pb = [r.b for r in prows if r.t == 1]
-                if pb:
-                    stage_buckets(
-                        self.t_parts,
-                        parts_b.filter(F.col("b").isin(pb)),
-                        False,
-                        delta_rows=sum(r.c for r in prows if r.t == 1),
-                    )
-            # Dead letters land as a PER-BATCH delta snapshot
-            # (``dead_letter@d_<token>``): prior deltas ride forward by
-            # name (zero rewrite — the append-sink shape the table-rewrite
-            # comment used to promise), and the new rows still share this
-            # manifest's atomicity with the state tables.  Readers union
-            # every delta (plus a legacy plain snapshot, carried above).
-            if not dead.isEmpty():
-                writes[f"{self.t_dead}@d_{token}"] = dead
-            try:
-                self.log.commit(writes, expected_version=expected)
-            except CommitConflict:
-                # losers clean their own pre-staged bucket snapshots (the
-                # same courtesy commit() extends to DataFrame stagings)
-                for rel in fresh_rels:
-                    _shutil.rmtree(
-                        os.path.join(self.base, rel), ignore_errors=True
-                    )
-                return False  # recompute against the fresh snapshot
-            if grow is not None:
-                self.state_buckets = grow
-                self._grow_to = None
-            self._record_write(batch_id, stats)
-            self._maybe_schedule_growth(
-                self._txlog_table_bytes(writes, self.t_items)
-            )
-        elif self.storage == "dbapi":
-            # Dead letters first (same at-least-once ordering as parquet
-            # mode), then per-row CAS upserts of ONLY the rows this step
-            # touched: touched items carry version+1 (so the strict
-            # `excluded.version > version` guard applies them, and the loser
-            # of a two-writer race is dropped row-by-row in the database);
-            # untouched rows are simply not in the statement — no table
-            # rewrite, so concurrent out-of-band inserts survive, and the
-            # write volume scales with work done, not table size.
-            if not dead.isEmpty():
-                dead.write.mode("append").parquet(self.dead_dir)
-            self.db.upsert_items(out_items.filter("__changed").drop("__changed"))
-            # gate_decision carries the partition version through unchanged;
-            # bump it here for partitions whose decision actually moved so
-            # the CAS accepts exactly those rows, and skip the rest entirely
-            changed_parts = new_parts.join(
-                self._changed_part_ids(parts, new_parts), "id"
-            ).select(
+            .select(
                 "id",
-                (F.col("version") + 1).alias("version"),
+                (F.col("version") + woken.cast("int")).alias("version"),
+                "retry_count",
+                "partition_id",
                 "gate",
                 "status",
+                "error_messages",
+                "data",
+                F.when(changed, F.lit(snap.tick))
+                .otherwise(F.coalesce(F.col("__old_ts"), F.lit(0)))
+                .cast("long")
+                .alias("updated_at"),
+                changed.alias("__changed"),
+                (
+                    (F.col("status") == FAILED)
+                    & (F.coalesce(F.col("__old_status"), F.lit(-1)) != FAILED)
+                ).alias("__dead"),
             )
-            self.db.upsert_partitions(changed_parts)
-        else:
-            # Parquet mode is single-writer: write dead letters BEFORE the
-            # state flip so a crash between the two can only DUPLICATE a
-            # dead letter on batch replay (at-least-once, the reference's
-            # posture), never lose one — the post-crash recompute sees the
-            # item already Failed and would skip it.  State lands through
-            # bucketed_write: only buckets containing touched rows are
-            # rewritten (write volume tracks work done); a legacy
-            # unbucketed table converts wholesale on its first write.
-            if not dead.isEmpty():
-                dead.write.mode("append").parquet(self.dead_dir)
-            from gofeed_spark.feedstate.admin import (
-                _dir_bytes,
-                bucketed_write,
-                read_bucket_marker,
-            )
+        )
+        dead = rows.filter("__dead").select(
+            "id", "partition_id", "gate", "retry_count", "error_messages",
+            "data", F.lit(snap.tick).alias("failed_at_tick"),
+        )
+        return rows.drop("__dead"), parts, dead
 
-            grow = self._grow_to
-            n_buckets = grow if grow is not None else self.state_buckets
+    def _publish(self, snap, items, parts, dead, batch_id) -> bool:
+        """publish: commit the decided rows; False when a concurrent txlog
+        commit won (the caller re-reads and decides again).
 
-            def _full_rewrite(path):
-                # legacy plain layout, OR a bucketed layout that predates
-                # the ``_n_buckets`` marker (its modulus is unknowable —
-                # claim it under the configured value, stamping the
-                # marker), OR scheduled size-tiered growth
-                if grow is not None or self._parquet_legacy(path):
-                    return True
-                return (
-                    os.path.exists(path)
-                    and read_bucket_marker(path) is None
-                )
-
-            items_b = ckpt(out_items.withColumn("b", self._bucket_col(n_buckets)))
-            writes = {}
-            if _full_rewrite(self.items_path):
-                writes[self.t_items] = (items_b.drop("__changed"), None)
-            else:
-                # touched buckets + their full row counts in ONE collect
-                # over the CHECKPOINTED frame (an in-memory scan, not a
-                # recompute) so an untouched table skips its write job
-                # entirely — the common case for a mostly-settled feed —
-                # and a known-small delta skips the repartition shuffle
-                brows = (
-                    items_b.groupBy("b")
-                    .agg(
-                        F.count("*").alias("c"),
-                        F.max(F.col("__changed").cast("int")).alias("t"),
-                    )
-                    .collect()
-                )
-                tb = [r.b for r in brows if r.t == 1]
-                if tb:
-                    writes[self.t_items] = (
-                        items_b.filter(F.col("b").isin(tb)).drop("__changed"),
-                        "auto",
-                        sum(r.c for r in brows if r.t == 1),
-                    )
-            parts_b = new_parts.withColumn("b", self._bucket_col(n_buckets))
-            if _full_rewrite(self.parts_path):
-                writes[self.t_parts] = (parts_b, None)
-            else:
-                ch = self._changed_part_ids(parts, new_parts)
-                prows = (
-                    parts_b.join(ch.withColumn("__t", F.lit(1)), "id", "left")
-                    .groupBy("b")
-                    .agg(F.count("*").alias("c"), F.max("__t").alias("t"))
-                    .collect()
-                )
-                pb = [r.b for r in prows if r.t == 1]
-                if pb:
-                    writes[self.t_parts] = (
-                        parts_b.filter(F.col("b").isin(pb)),
-                        "auto",
-                        sum(r.c for r in prows if r.t == 1),
-                    )
-            stats = bucketed_write(
-                self.spark,
-                writes,
-                self.base,
-                n_buckets,
-                small_delta_rows=self.small_delta_rows,
-            )
-            if grow is not None:
-                self.state_buckets = grow
-                self._grow_to = None
-            self._record_write(batch_id, stats)
-            self._maybe_schedule_growth(_dir_bytes(self.items_path))
-        self._commit(batch_id)
+        dbapi upserts ONLY the changed rows with per-row CAS (dead letters
+        first, the parquet posture below): untouched rows are not in the
+        statement — no table rewrite, so concurrent out-of-band inserts
+        survive, and the loser of a two-writer race is dropped row-by-row
+        in the database.  The snapshot stores (parquet, txlog) share the
+        touched-bucket planner and the one staging write, then diverge only
+        in their tails: parquet flips bucket dirs, txlog carries untouched
+        bucket keys by name into one manifest commit."""
+        if self.storage == "dbapi":
+            self._append_dead(dead)
+            self.db.upsert_items(items.filter("__changed").drop("__changed"))
+            self.db.upsert_partitions(parts.filter("__changed").drop("__changed"))
+            return True
+        # The LAYOUT owns the modulus: adopt the snapshot's (a concurrent
+        # txlog runner may have converted the table since our __init__, and
+        # planning touched buckets under another modulus than the layout's
+        # would flip deltas against wrongly-shaped buckets).
+        m = self._layout_modulus(snap.tables, self.t_items)
+        if m is not None and m != self.state_buckets:
+            self.state_buckets, self._grow_to = m, None
+        grow = self._grow_to
+        n = grow or self.state_buckets
+        plans = {}
+        for table, rows in ((self.t_items, items), (self.t_parts, parts)):
+            df = rows.withColumn("b", self._bucket_col(n))
+            convert = grow is not None or self._layout_modulus(snap.tables, table) != n
+            plan = self._plan(df, convert)
+            if plan is not None:
+                plans[table] = plan
+        tail = self._publish_txlog if self.storage == "txlog" else self._publish_parquet
+        done = tail(snap, plans, dead, n)
+        if done is None:
+            return False
+        stats, items_bytes = done
+        if grow is not None:
+            self.state_buckets, self._grow_to = grow, None
+        self._record_write(batch_id, stats)
+        self._maybe_schedule_growth(items_bytes)
         return True
 
-    def _record_write(self, batch_id: int, stats: dict[str, int]) -> None:
+    @staticmethod
+    def _plan(df, convert: bool):
+        """The touched-bucket planner: ``(rows to stage, row count)``.
+
+        ``convert`` (legacy layout, a modulus the layout does not record or
+        disagrees with, scheduled growth) stages the whole table, count
+        None.  Otherwise ONE collect over ``df`` yields the touched buckets
+        AND their full row counts — each touched bucket is rewritten whole,
+        untouched ones are not written at all (the common case for a
+        mostly-settled feed); None when no row changed."""
+        if convert:
+            return df.drop("__changed"), None
+        rows = (
+            df.groupBy("b")
+            .agg(
+                F.count("*").alias("c"),
+                F.max(F.col("__changed").cast("int")).alias("t"),
+            )
+            .collect()
+        )
+        touched = [r for r in rows if r.t == 1]
+        if not touched:
+            return None
+        return (
+            df.filter(F.col("b").isin([r.b for r in touched])).drop("__changed"),
+            sum(r.c for r in touched),
+        )
+
+    def _stage(self, df, rows: int | None, staging: str) -> int:
+        """The one staging write: ONE partitionBy job, one file per bucket.
+        ``repartition(b)`` puts each bucket's rows wholly in one task
+        (partitionBy alone writes files-per-task-per-bucket — measured 8×
+        the files, footer overhead dominating small deltas); a KNOWN-small
+        delta (``rows`` ≤ ``small_delta_rows``) skips that shuffle, since
+        ``coalesce(1)`` writes the identical layout from one task over the
+        checkpointed in-memory blocks.  Returns the bytes staged."""
+        from gofeed_spark.feedstate.admin import _dir_bytes
+
+        shutil.rmtree(staging, ignore_errors=True)  # stale from a crashed run
+        if rows is not None and rows <= self.small_delta_rows:
+            df = df.coalesce(1)
+        else:
+            df = df.repartition(F.col("b"))
+        df.write.partitionBy("b").mode("overwrite").parquet(staging)
+        return _dir_bytes(staging)
+
+    def _publish_parquet(self, snap, plans, dead, n):
+        """parquet tail (single writer): dead letters BEFORE the state flip,
+        so a crash between the two can only DUPLICATE a dead letter on
+        batch replay (at-least-once, the reference's posture), never lose
+        one — the post-crash recompute sees the item already Failed and
+        would skip it.  Every table stages before any flips; a whole-table
+        staging carries the ``_n_buckets`` marker through its flip."""
+        from gofeed_spark.feedstate.admin import (
+            _dir_bytes,
+            flip_buckets,
+            write_bucket_marker,
+        )
+
+        self._append_dead(dead)
+        stats = {}
+        for table, (df, rows) in plans.items():
+            staging = os.path.join(self.base, f"{table}_txn_staging")
+            stats[table] = self._stage(df, rows, staging)
+            if rows is None:
+                write_bucket_marker(staging, n)
+        for table, (_, rows) in plans.items():
+            flip_buckets(self.base, table, whole=rows is None)
+        return stats, _dir_bytes(self.items_path)
+
+    def _publish_txlog(self, snap, plans, dead, n):
+        """txlog tail: each staged bucket dir becomes a top-level snapshot
+        (``{table}@m{n}bNNNN__v_<token>``, vacuum's __v convention) and
+        every other manifest entry — untouched buckets, prior dead-letter
+        deltas, other feeds' tables — rides into the new manifest by NAME,
+        zero bytes written; a converting table drops its old entries.  Dead
+        letters land as a PER-BATCH delta snapshot (``dead_letter@d_<token>``)
+        in the SAME atomic commit as the state: a crash can never separate
+        a Failed transition from its dead-letter row, and a conflict retry
+        recomputes both together."""
+        import uuid
+
+        from gofeed_spark.feedstate.txlog import CommitConflict
+
+        token = uuid.uuid4().hex[:8]
+        dropped = [t for t, (_, rows) in plans.items() if rows is None]
+        writes = {
+            k: v
+            for k, v in snap.tables.items()
+            if not any(self._txlog_owns(t, k) for t in dropped)
+        }
+        fresh: list[str] = []
+        stats = {}
+        for table, (df, rows) in plans.items():
+            staging = os.path.join(self.base, f"{table}__vstage_{token}")
+            stats[table] = self._stage(df, rows, staging)
+            for entry in os.listdir(staging):
+                if entry.startswith("b="):
+                    key = f"{table}@m{n}{entry[2:]}"
+                    writes[key] = f"{key}__v_{token}"
+                    fresh.append(writes[key])
+                    os.replace(
+                        os.path.join(staging, entry),
+                        os.path.join(self.base, writes[key]),
+                    )
+            shutil.rmtree(staging, ignore_errors=True)
+        if dead is not None and not dead.isEmpty():
+            writes[f"{self.t_dead}@d_{token}"] = dead
+        try:
+            self.log.commit(writes, expected_version=snap.version)
+        except CommitConflict:
+            # losers clean their own pre-staged bucket snapshots (the same
+            # courtesy commit() extends to DataFrame stagings)
+            for rel in fresh:
+                shutil.rmtree(os.path.join(self.base, rel), ignore_errors=True)
+            return None
+        return stats, self._txlog_table_bytes(writes, self.t_items)
+
+    def _append_dead(self, dead) -> None:
+        if dead is not None and not dead.isEmpty():
+            dead.write.mode("append").parquet(self.dead_dir)
+
+    def _record_write(self, batch_id, stats: dict[str, int]) -> None:
         self.last_write_bytes = stats
         self.total_write_bytes += sum(stats.values())
         self.write_history.append({"batch_id": batch_id, **stats})
-
-    def _changed_part_ids(self, parts, new_parts):
-        """ids of partitions whose decision (gate or status) moved this
-        step — the write set for every backend's partition upsert."""
-        old_p = parts.select(
-            "id",
-            F.col("gate").alias("__og"),
-            F.col("status").alias("__os"),
-        )
-        return (
-            new_parts.join(old_p, "id")
-            .filter(
-                (F.col("gate") != F.col("__og"))
-                | (F.col("status") != F.col("__os"))
-            )
-            .select("id")
-        )
 
     def dead_letters(self):
         """The dead-letter log as a DataFrame (None when nothing failed)."""
@@ -933,12 +846,14 @@ class FeedRunner:
         them), and re-open their FAILED partitions.  The reference
         documents this as a manual step (README.md:104-110: "you can later
         update the partition to make sure it is in the Available state");
-        here it is one OCC-guarded write.  ``ids`` restricts the requeue
-        to those item ids (None = every dead-lettered item).  The
-        dead-letter log keeps its rows — it is an audit log, not a queue.
-        Returns the number of items requeued."""
+        here it is one state commit through the micro-batch's own publish
+        (touched buckets only; on txlog the rows are re-derived from the
+        fresh snapshot on every OCC retry, so a requeue can never write
+        stale versions or a tick at/below a newer high-water mark; its
+        ``write_history`` entry has batch_id None).  ``ids`` restricts the requeue to those item ids (None = every
+        dead-lettered item).  The dead-letter log keeps its rows — it is an
+        audit log, not a queue.  Returns the number of items requeued."""
         from gofeed_spark.feedstate.model import AVAILABLE, FAILED
-        from gofeed_spark.functions.lineage import release_local_checkpoint
 
         dead = self.dead_letters()
         if dead is None:
@@ -946,10 +861,12 @@ class FeedRunner:
         dids = dead.select("id").distinct()
         if ids is not None:
             dids = dids.filter(F.col("id").isin([*ids]))
+        requeued_n = 0
 
-        def build_requeued(items_t, tick):
-            return (
-                items_t.join(dids, "id")
+        def decide(snap, ckpt):
+            nonlocal requeued_n
+            requeued = ckpt(
+                snap.items.join(dids, "id")
                 .filter(F.col("status") == FAILED)
                 .select(
                     "id",
@@ -960,16 +877,16 @@ class FeedRunner:
                     F.lit(AVAILABLE).cast("int").alias("status"),
                     F.lit("").alias("error_messages"),
                     "data",
-                    F.lit(tick).cast("long").alias("updated_at"),
+                    F.lit(snap.tick).cast("long").alias("updated_at"),
                 )
             )
-
-        def build_reopened(parts_t, requeued):
-            part_ids = requeued.select(
-                F.col("partition_id").alias("id")
-            ).distinct()
-            return (
-                parts_t.join(part_ids, "id")
+            requeued_n = requeued.count()
+            if requeued_n == 0:
+                return None
+            reopened = ckpt(
+                snap.parts.join(
+                    requeued.select(F.col("partition_id").alias("id")).distinct(), "id"
+                )
                 .filter(F.col("status") == FAILED)
                 .select(
                     "id",
@@ -978,97 +895,10 @@ class FeedRunner:
                     F.lit(AVAILABLE).cast("int").alias("status"),
                 )
             )
+            return _overlay(snap.items, requeued), _overlay(snap.parts, reopened), None
 
-        released: list = []
-        try:
-            if self.storage == "txlog":
-                # Versions and the updated_at tick are derived INSIDE the
-                # compute closure from the snapshot commit_retry hands it:
-                # an OCC retry after a concurrent commit re-reads fresh
-                # state, so it can never write stale versions or a tick
-                # at/below the new CDC high-water mark (which would let the
-                # requeue be clobbered or never re-delivered).
-                counted = {"n": 0}
-
-                def compute(version, tables):
-                    # reads span plain + bucket entries; the write below is
-                    # a plain full-table snapshot (requeue is a rare ops
-                    # action) whose manifest drops the bucket entries — the
-                    # next micro-batch commit re-buckets it
-                    items_t = self._txlog_read_snapshot(tables, self.t_items).drop("b")
-                    parts_t = self._txlog_read_snapshot(tables, self.t_parts).drop("b")
-                    tick = (
-                        items_t.agg(F.max("updated_at")).collect()[0][0] or 0
-                    ) + 1
-                    requeued = build_requeued(items_t, tick).localCheckpoint()
-                    released.append(requeued)
-                    counted["n"] = requeued.count()
-                    if counted["n"] == 0:
-                        # nothing left to requeue against THIS snapshot
-                        # (e.g. a concurrent requeue won): carry every
-                        # table forward by name — a no-rewrite commit.
-                        return dict(tables)
-                    reopened = build_reopened(parts_t, requeued).localCheckpoint()
-                    released.append(reopened)
-                    writes = {
-                        self.t_items: items_t.join(
-                            requeued.select("id"), "id", "left_anti"
-                        ).unionByName(requeued.select(*items_t.columns)),
-                        self.t_parts: parts_t.join(
-                            reopened.select("id"), "id", "left_anti"
-                        ).unionByName(reopened.select(*parts_t.columns)),
-                    }
-                    for k, v in tables.items():  # dead-letter snapshots by name
-                        if k == self.t_dead or k.startswith(self.t_dead + "@d"):
-                            writes[k] = v
-                    return writes
-
-                self.log.commit_retry(compute)
-                return counted["n"]
-            with_ts = self._items_with_ts()
-            if self.storage == "dbapi":
-                tick = self.db.max_updated_at() + 1
-            else:
-                tick = (
-                    with_ts.agg(F.max("updated_at")).collect()[0][0] or 0
-                ) + 1
-            requeued = build_requeued(with_ts, tick).localCheckpoint()
-            released.append(requeued)
-            n = requeued.count()
-            if n == 0:
-                return 0
-            reopened = build_reopened(self.partitions(), requeued).localCheckpoint()
-            released.append(reopened)
-            if self.storage == "dbapi":
-                self.db.upsert_items(requeued)
-                self.db.upsert_partitions(reopened)
-            else:
-                from gofeed_spark.feedstate.admin import transactional_write
-
-                # checkpoint the merged frames BEFORE the write: their
-                # lineage reads the very parquet dirs the write replaces
-                items_t = self._items_with_ts()
-                parts_t = self.partitions()
-                merged_items = (
-                    items_t.join(requeued.select("id"), "id", "left_anti")
-                    .unionByName(requeued.select(*items_t.columns))
-                    .localCheckpoint()
-                )
-                merged_parts = (
-                    parts_t.join(reopened.select("id"), "id", "left_anti")
-                    .unionByName(reopened.select(*parts_t.columns))
-                    .localCheckpoint()
-                )
-                released.extend([merged_items, merged_parts])
-                transactional_write(
-                    self.spark,
-                    {self.t_items: merged_items, self.t_parts: merged_parts},
-                    self.base,
-                )
-            return n
-        finally:
-            for df in released:
-                release_local_checkpoint(df)
+        self._run(decide, full=True)
+        return requeued_n
 
     def maintain(
         self,

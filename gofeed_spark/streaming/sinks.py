@@ -11,8 +11,8 @@ Scale contract (the reference's own is one row per OCC save,
 repo.go:125-138): state is HASH-BUCKETED on the merge key and a
 micro-batch reads and rewrites ONLY the buckets containing its keys, so
 per-batch I/O tracks the batch's keys, not total state — the streaming
-twin of the feed store's bucketed layout (feedstate/admin.py
-``bucketed_write``), re-expressed in the object-store commit shape:
+twin of the feed store's bucketed layout (streaming/feed_runner.py
+``FeedRunner._publish``), re-expressed in the object-store commit shape:
 
 Write protocol (single streaming writer per query — Spark guarantees
 foreachBatch calls are serial): the touched buckets' merged contents are

@@ -384,8 +384,8 @@ def test_txlog_bucket_growth_and_modulus_adoption(spark, tmp_path):
             max_state_buckets=64,
         )
         assert runner2.state_buckets == 16 and runner2.bucket_count_adopted
-        # requeue (plain-snapshot rewrite) + drain: the re-bucketing batch
-        # plus the tiny target forces growth 16 -> 64 mid-drain
+        # requeue (rewrites only its touched buckets) + drain: the tiny
+        # target forces growth 16 -> 64 in the next commit
         assert runner2.requeue_dead_letters() == 3
         runner2.run_available()
     finally:
@@ -716,3 +716,108 @@ def test_maintain_compacts_dead_letters_and_vacuums_txlog(spark, tmp_path):
     removed = r2.maintain(vacuum_keep=1, vacuum_min_age_s=0.0)["vacuumed"]
     assert removed  # superseded snapshots reclaimed
     assert {tuple(x) for x in r2.items().collect()} == before_state
+
+
+def _store(spark, base, storage, item_rows, part_rows, **kw):
+    """A runner over a fresh ``storage`` store seeded with ``item_rows``
+    (ITEM_DDL tuples) and ``part_rows``."""
+    from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
+    from gofeed_spark.feedstate.txlog import TxLog
+
+    os.makedirs(base)
+    if storage == "dbapi":
+        runner = FeedRunner(spark, base, json_times_processor, storage="dbapi", **kw)
+        runner.db.seed(
+            items_rows=[r + (1,) for r in item_rows], parts_rows=part_rows
+        )
+        return runner
+    items = spark.createDataFrame(item_rows, ITEM_DDL).withColumn(
+        "updated_at", F.lit(0).cast("long")
+    )
+    parts = spark.createDataFrame(part_rows, PARTITION_DDL)
+    if storage == "txlog":
+        TxLog(base).commit({"items": items, "partitions": parts})
+    else:
+        items.write.parquet(os.path.join(base, "items"))
+        parts.write.parquet(os.path.join(base, "partitions"))
+    return FeedRunner(spark, base, json_times_processor, storage=storage, **kw)
+
+
+@pytest.mark.parametrize("storage", ["parquet", "txlog", "dbapi"])
+def test_gate_advance_requeues_waiting_items(spark, tmp_path, storage):
+    """The micro-batch that advances a partition's gate processes no item
+    (none sits at the old gate), so it changes no item row; the items
+    waiting at the new gate must still be re-queued, or the drain stops
+    with them — and their partition — stranded Available at gate 1."""
+    rows = [
+        ("a", 0, 0, "p1", 0, AVAILABLE, "", '{"times":1}'),
+        ("b", 0, 0, "p1", 0, AVAILABLE, "", '{"times":2,"gate":1}'),
+    ]
+    runner = _store(
+        spark, str(tmp_path / storage), storage, rows, [("p1", 0, 0, AVAILABLE)]
+    )
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        runner.run_available()
+        runner.run_available()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    items = {r.id: (r.status, r.gate) for r in runner.items().collect()}
+    assert items == {"a": (COMPLETE, 0), "b": (COMPLETE, 1)}, items
+    parts = {r.id: (r.status, r.gate) for r in runner.partitions().collect()}
+    assert parts == {"p1": (COMPLETE, 1)}, parts
+
+
+@pytest.mark.parametrize("storage", ["parquet", "txlog"])
+def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
+    """A requeue publishes like a micro-batch: it rewrites only the
+    buckets its rows touch and keeps the layout's modulus record — the
+    txlog manifest keeps only ``@m16b`` keys, the parquet table keeps its
+    ``_n_buckets`` marker and every part file inside a ``b=`` dir."""
+    from gofeed_spark.feedstate.admin import _dir_bytes, read_bucket_marker
+
+    settled = [
+        (f"d{i}", 1, 0, f"q{i % 8}", 0, COMPLETE, "", '{"times":1}')
+        for i in range(400)
+    ]
+    rows = settled + [("x", 0, 0, "p1", 0, AVAILABLE, "", '{"times":1,"fail":true}')]
+    parts = [(f"q{i}", 1, 0, COMPLETE) for i in range(8)] + [("p1", 0, 0, AVAILABLE)]
+    base = str(tmp_path / storage)
+    runner = _store(spark, base, storage, rows, parts, max_retries=0)
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        runner.run_available()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    assert {r.id: r.status for r in runner.items().collect()}["x"] == FAILED
+
+    def items_bytes():
+        if storage == "parquet":
+            return _dir_bytes(os.path.join(base, "items"))
+        _, tables = runner.log.latest()
+        return sum(
+            _dir_bytes(os.path.join(base, v))
+            for k, v in tables.items()
+            if k.startswith("items@")
+        )
+
+    full = items_bytes()
+    assert runner.requeue_dead_letters() == 1
+    last = runner.write_history[-1]
+    assert last["batch_id"] is None and 0 < last["items"] < full / 2, (last, full)
+    st = {r.id: (r.status, r.retry_count) for r in runner.items().collect()}
+    assert st["x"] == (AVAILABLE, 0) and len(st) == 401
+    if storage == "txlog":
+        _, tables = runner.log.latest()
+        for t in ("items", "partitions"):
+            keys = [k for k in tables if k == t or k.startswith(t + "@")]
+            assert keys and all(k.startswith(f"{t}@m16b") for k in keys), keys
+    else:
+        for t in ("items", "partitions"):
+            path = os.path.join(base, t)
+            assert read_bucket_marker(path) == 16
+            for root, _, files in os.walk(path):
+                parts_here = [f for f in files if f.endswith(".parquet")]
+                assert not parts_here or os.path.basename(root).startswith("b="), root

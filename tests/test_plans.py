@@ -127,6 +127,17 @@ def test_decontamination_plans_have_no_shuffle(spark):
         assert "SortMergeJoin" not in plan, f"{name}: {plan[:400]}"
 
 
+def test_q41_minhash_pairs_plan_shape(spark):
+    """q41's MinHash-LSH pair search keeps the shape its optimization won:
+    the signature payload rides the band groups (no broadcast join back to
+    the documents, no cached relation), and the Arrow boundary is crossed
+    at most twice (measured: one MapInPandas, two Exchanges)."""
+    plan = plan_of(spark, "q41_minhash_lsh_pairs")
+    assert plan.count("BroadcastHashJoin") == 0, plan
+    assert plan.count("InMemoryRelation") == 0, plan
+    assert plan.count("MapInPandas") <= 2, plan
+
+
 def test_plan_lint_sweep_every_registered_query(spark):
     """Engine-wide physical-plan lint over EVERY registered query: no
     CartesianProduct may appear anywhere (an unintended cross join is the
