@@ -13,7 +13,9 @@ Scale + concurrency shape:
   (repo.go:114-120: equi-predicates on status/partition/gate + ORDER BY
   updated_at + LIMIT, over the covering index item.go:17-21): the driver
   only ever fetches rows matching the decision predicates — never the
-  full table.  For state too large for one driver fetch,
+  full table — and hands them to Spark as one typed Arrow table (a
+  ``LocalRelation``, which every action reuses without a Python
+  worker).  For state too large for one driver fetch,
   ``num_partitions>1`` fans the SELECT out to executors as range
   predicates on ``updated_at`` (the ``spark.read.jdbc``
   partitionColumn pattern re-expressed over PEP-249).
@@ -65,6 +67,9 @@ PARTITION_COLS = ["id", "version", "gate", "status"]
 
 COUNTS_SCHEMA = "partition_id string, status int, n long"
 
+# Arrow type of each DDL type the store's frames use
+_ARROW_TYPES = {"string": "string", "int": "int32", "long": "int64"}
+
 # Upsert dialect by driver module: the sqlite/postgres family speaks
 # INSERT ... ON CONFLICT; the SQL Server family (the reference's headline
 # deployment) takes the T-SQL MERGE rendered below.  Oracle is
@@ -91,6 +96,29 @@ def _connect(module_name: str, path: str):
         con.execute("PRAGMA busy_timeout=60000")
         return con
     return mod.connect(path)
+
+
+def _frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-fetched ``rows`` as a DataFrame typed by ``ddl`` (flat
+    ``name type, ...``): one ``pyarrow.Table`` built column by column with
+    the DDL's types, which Spark takes whole as a ``LocalRelation`` — no
+    Python RDD that every action (each of a micro-batch's
+    localCheckpoints) re-runs through a Python worker.  Not through
+    pandas, where an int column holding None turns float.  A value its
+    column's type cannot hold (an int beyond int32) raises."""
+    import pyarrow as pa
+
+    fields = [f.split() for f in ddl.split(",")]
+    cols = list(zip(*rows)) or [()] * len(fields)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                name: pa.array(col, getattr(pa, _ARROW_TYPES[typ])())
+                for (name, typ), col in zip(fields, cols)
+            }
+        ),
+        ddl,
+    )
 
 
 def _placeholders(module_name: str, n: int) -> list[str]:
@@ -293,7 +321,7 @@ class DbApiStore:
             f"SELECT partition_id, status, COUNT(*) FROM {self.items_table} "
             "GROUP BY partition_id, status"
         )
-        return spark.createDataFrame(rows, COUNTS_SCHEMA)
+        return _frame(spark, rows, COUNTS_SCHEMA)
 
     def read_decision_counts(self, spark: SparkSession) -> DataFrame:
         """The gate decision's complete input, as ONE pushed-down grouped
@@ -305,9 +333,7 @@ class DbApiStore:
             f"SELECT partition_id, status, gate, COUNT(*) FROM {self.items_table} "
             "GROUP BY partition_id, status, gate"
         )
-        return spark.createDataFrame(
-            rows, "partition_id string, status int, gate int, n long"
-        )
+        return _frame(spark, rows, "partition_id string, status int, gate int, n long")
 
     # -- reads -----------------------------------------------------------
     def read_items(
@@ -336,7 +362,7 @@ class DbApiStore:
             f"SELECT {', '.join(_COLS)} FROM {self.items_table}{where} "
             f"ORDER BY updated_at, id{self._limit_clause(limit)}"
         )
-        return spark.createDataFrame(self._fetchall(sql), CDC_SCHEMA)
+        return _frame(spark, self._fetchall(sql), CDC_SCHEMA)
 
     def _read_items_fanout(
         self, spark: SparkSession, preds: list[str], num_partitions: int
@@ -350,7 +376,7 @@ class DbApiStore:
             f"SELECT MIN(updated_at), MAX(updated_at) FROM {self.items_table}{where}"
         )
         if not rows or rows[0][0] is None:
-            return spark.createDataFrame([], CDC_SCHEMA)
+            return _frame(spark, [], CDC_SCHEMA)
         lo, hi = int(rows[0][0]), int(rows[0][1])
         n = max(1, min(num_partitions, hi - lo + 1))
         step = (hi - lo + 1 + n - 1) // n
@@ -398,7 +424,7 @@ class DbApiStore:
         )
         from gofeed_spark.feedstate.model import PARTITION_DDL
 
-        return spark.createDataFrame(rows, PARTITION_DDL)
+        return _frame(spark, rows, PARTITION_DDL)
 
     # -- writes ----------------------------------------------------------
     def upsert_items(self, items: DataFrame) -> None:

@@ -143,9 +143,11 @@ def _make_scan_dbapi(module_name: str):
     source's ``path`` option as the DSN, run the reference's literal query
     shape (``WHERE updated_at > ? ORDER BY updated_at, id``) with the
     driver's own ``paramstyle``, fetch, close.  One connection per poll —
-    the availableNow cadence is seconds, and per-poll connections keep the
-    reader fork-safe across Spark's Python workers (a pooled handle would
-    not survive the pickling boundary)."""
+    a poll runs once per trigger (back to back in a drain, which stops at
+    the first empty one; once per interval in service mode), next to a
+    micro-batch that costs far more than a connect, and per-poll
+    connections keep the reader fork-safe across Spark's Python workers (a
+    pooled handle would not survive the pickling boundary)."""
     import importlib
 
     mod = importlib.import_module(module_name)

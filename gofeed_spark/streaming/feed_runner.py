@@ -10,8 +10,10 @@ twin of the reference's Watcher.Start loop (watcher.go:68-212):
         next trigger picks up continuation work (multi-gate items flow
         gate by gate exactly like the reference's re-poll loop)
 
-Exactly-once effect: streaming checkpoint + the batch-id manifest; the
-OCC version column arbitrates any concurrent batch writer.
+A drain is ONE streaming query triggered back to back until a trigger
+finds no new data.  Exactly-once effect: streaming checkpoint + the
+batch-id manifest; the OCC version column arbitrates any concurrent batch
+writer.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ import json
 import os
 import shutil
 import threading
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,6 +111,20 @@ class _Snapshot:
     tables: dict | None = None
 
 
+@dataclass
+class _Drain:
+    """One ``run_available``'s budget, charged by ``_step`` on the stream
+    thread: micro-batches plus restarts against ``max_rounds``, and
+    ``beat`` — when the drain started or last committed a batch — for the
+    timeout watchdog."""
+
+    max_rounds: int
+    rounds: int = 0
+    beat: float = field(default_factory=time.monotonic)
+    exhausted: bool = False
+    timed_out: bool = False
+
+
 def _overlay(table: DataFrame, changed: DataFrame) -> DataFrame:
     """``table`` with ``changed``'s rows in place of their ids' rows, every
     row flagged ``__changed`` — the shape ``FeedRunner._publish`` takes."""
@@ -136,6 +153,11 @@ class FeedRunner:
     them.  The snapshot stores share one touched-bucket planner
     (``_plan``) and one staging write (``_stage``), and each has one short
     tail; dbapi upserts the changed rows.
+
+    Both driving modes run the one streaming query ``_start`` builds:
+    ``run_available`` triggers it back to back and stops it at the first
+    trigger that finds no new data (one query per drain, a new one only
+    after a streaming failure); ``run_forever`` triggers it on an interval.
 
     ``storage``: ``"parquet"`` (default) keeps hash-bucketed table dirs
     whose touched buckets flip in place (``admin.flip_buckets``) —
@@ -301,6 +323,7 @@ class FeedRunner:
         self.last_write_bytes: dict[str, int] = {}
         self.total_write_bytes: int = 0
         self.write_history: collections.deque = collections.deque(maxlen=64)
+        self._drain: _Drain | None = None
         register_feed_cdc(self.spark)
 
     # -- state-table accessors -------------------------------------------
@@ -463,19 +486,29 @@ class FeedRunner:
 
     # -- the state commit: read → decide → publish -------------------------
     def _step(self, changed, batch_id: int) -> None:
-        if batch_id in self._committed():
-            return  # re-delivered after crash: idempotent skip
-        try:
-            empty = changed.isEmpty()
-        except Exception:
-            # Transient task loss (local mode fails a job on FIRST task
-            # failure; concurrent Python-data-source queries occasionally
-            # hit a JVM deserialization hiccup) — one retry re-runs the job.
-            empty = changed.isEmpty()
-        if empty:
-            return
-        self._run(self._decide, batch_id)
-        self._commit(batch_id)
+        drain = self._drain
+        if drain is not None:
+            if drain.rounds >= drain.max_rounds:
+                # failing the batch keeps its offsets uncommitted, so the
+                # next drain re-delivers it; returning would drop its rows
+                drain.exhausted = True
+                raise RuntimeError(f"drain budget of {drain.max_rounds} rounds spent")
+            drain.rounds += 1
+        # a batch already in the manifest was re-delivered after a crash:
+        # idempotent skip
+        if batch_id not in self._committed():
+            try:
+                empty = changed.isEmpty()
+            except Exception:
+                # Transient task loss (local mode fails a job on FIRST task
+                # failure; concurrent Python-data-source queries occasionally
+                # hit a JVM deserialization hiccup) — one retry re-runs the job.
+                empty = changed.isEmpty()
+            if not empty:
+                self._run(self._decide, batch_id)
+                self._commit(batch_id)
+        if drain is not None:
+            drain.beat = time.monotonic()
 
     def _run(self, decide, batch_id: int | None = None, full: bool = False) -> None:
         """One state commit: ``_read`` a snapshot, ``decide(snapshot,
@@ -946,10 +979,11 @@ class FeedRunner:
         return {}
 
     # -- driver ----------------------------------------------------------
-    def _cdc_reader(self):
-        """The CDC readStream for this runner's storage backend — shared by
-        the drain mode and the service mode so their source options can
-        never diverge."""
+    def _start(self, interval_s: float):
+        """Start the streaming query both modes run — CDC source →
+        ``foreachBatch(self._step)`` on this runner's checkpoint, one
+        trigger every ``interval_s`` — so the drain and the service can
+        never diverge in source options or sink."""
         if self.storage == "txlog":
             src_path, backend = self.base, "txlog"
         elif self.storage == "dbapi":
@@ -966,7 +1000,13 @@ class FeedRunner:
             reader = reader.option("dbapi_module", self.dbapi_module)
         if self.poll_limit is not None:
             reader = reader.option("poll_limit", str(self.poll_limit))
-        return reader
+        return (
+            reader.load()
+            .writeStream.option("checkpointLocation", self.ckpt)
+            .trigger(processingTime=f"{interval_s} seconds")
+            .foreachBatch(self._step)
+            .start()
+        )
 
     def run_forever(self, poll_interval_s: float = 10.0):
         """The reference's long-running service mode (main.go:33
@@ -988,57 +1028,76 @@ class FeedRunner:
                 "spark.sql.shuffle.partitions",
                 str(self.drain_shuffle_partitions),
             )
-        return (
-            self._cdc_reader()
-            .load()
-            .writeStream.option("checkpointLocation", self.ckpt)
-            .trigger(processingTime=f"{poll_interval_s} seconds")
-            .foreachBatch(self._step)
-            .start()
-        )
+        return self._start(poll_interval_s)
 
     def run_available(self, timeout_s: int = 300, max_rounds: int = 16) -> None:
-        """Drain all available work: repeated availableNow passes until the
-        CDC source has nothing new (each pass may re-queue continuation
-        work for the next).
+        """Drain all available work in ONE streaming query: it triggers
+        back to back (each micro-batch's re-queued continuation work is the
+        next trigger's input) and stops once a trigger finds no new data
+        after the last committed batch — ``processAllAvailable``'s
+        contract.  A new query starts only after a streaming failure (a
+        failed batch is safe to retry wholesale: the checkpoint re-delivers
+        it and the batch-id manifest + OCC storage commit make
+        re-processing idempotent), after a per-runner jittered pause.
 
-        Raises instead of returning when the drain does not converge: a
-        persistent per-batch failure (processor bug, corrupt checkpoint)
-        re-raises the last streaming error after ``max_rounds``; a feed
-        that keeps generating work without quiescing raises RuntimeError.
-        Exhaustion is never silent — the caller must know the run failed."""
+        ``max_rounds`` bounds micro-batches plus restarts; ``timeout_s``
+        bounds how long the drain may go without committing a batch.
+        Either limit stops the query and raises: a feed that keeps
+        generating work (continuation loop, hot producer) raises
+        RuntimeError, a stalled batch TimeoutError, and a persistent
+        per-batch failure (processor bug, corrupt checkpoint) re-raises the
+        last streaming error.  Exhaustion is never silent — the caller must
+        know the run failed."""
         import hashlib
-        import time
 
         from pyspark.errors.exceptions.captured import StreamingQueryException
 
-        last_exc: Exception | None = None
-        with _drain_confs(self.spark, self.drain_shuffle_partitions):
-            for attempt in range(max_rounds):
-                before = self._committed()
-                q = (
-                    self._cdc_reader()
-                    .load()
-                    .writeStream.option("checkpointLocation", self.ckpt)
-                    .trigger(availableNow=True)
-                    .foreachBatch(self._step)
-                    .start()
-                )
-                try:
-                    q.awaitTermination(timeout_s)
-                    last_exc = None
-                except StreamingQueryException as exc:
-                # A failed round is safe to retry wholesale: the streaming
-                # checkpoint re-delivers the batch and the batch-id manifest
-                # + OCC storage commit make re-processing idempotent (seen
-                # under concurrent runners as transient local-mode task
-                # failures).  Kept for the retry; re-raised on exhaustion.
-                    last_exc = exc
-                    # DECORRELATE the retry: runners that fail the same
-                    # round would otherwise restart in lockstep and can
-                    # re-collide on the same transient every round until
-                    # exhaustion.  Deterministic per-runner jitter (id
-                    # hash) plus linear growth spreads the restarts apart.
+        drain = self._drain = _Drain(max_rounds)
+        restarts = 0
+        try:
+            with _drain_confs(self.spark, self.drain_shuffle_partitions):
+                while True:
+                    q = self._start(0)
+                    done = threading.Event()
+
+                    def watch():
+                        while not done.wait(0.1):
+                            if time.monotonic() - drain.beat > timeout_s:
+                                drain.timed_out = True
+                                q.stop()
+                                return
+
+                    watchdog = threading.Thread(target=watch, daemon=True)
+                    watchdog.start()
+                    try:
+                        q.processAllAvailable()
+                        exc = None
+                    except StreamingQueryException as err:
+                        exc = err
+                    finally:
+                        done.set()
+                        watchdog.join()
+                        q.stop()
+                    if drain.timed_out:
+                        raise TimeoutError(
+                            f"feed drain committed no batch for {timeout_s} s"
+                        ) from exc
+                    if drain.exhausted:
+                        raise RuntimeError(
+                            f"feed did not quiesce within {max_rounds} rounds: "
+                            "every batch re-queued new work (continuation loop "
+                            "or hot producer)"
+                        ) from exc
+                    if exc is None:
+                        return
+                    drain.rounds += 1
+                    if drain.rounds >= max_rounds:
+                        raise exc
+                    # DECORRELATE the restart: runners that fail the same
+                    # batch would otherwise restart in lockstep and can
+                    # re-collide on the same transient until exhaustion.
+                    # Deterministic per-runner jitter (id hash) plus linear
+                    # growth spreads the restarts apart.
                     jitter = (
                         int.from_bytes(
                             hashlib.blake2b(
@@ -1048,13 +1107,7 @@ class FeedRunner:
                         )
                         % 997
                     ) / 600.0
-                    time.sleep(0.1 + jitter + attempt * 0.15)
-                    continue
-                if self._committed() == before:
-                    return  # a clean round committed nothing new: converged
-        if last_exc is not None:
-            raise last_exc
-        raise RuntimeError(
-            f"feed did not quiesce within {max_rounds} rounds: every round "
-            "committed new work (continuation loop or hot producer)"
-        )
+                    time.sleep(0.1 + jitter + restarts * 0.15)
+                    restarts += 1
+        finally:
+            self._drain = None

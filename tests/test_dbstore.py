@@ -422,6 +422,84 @@ def test_runner_fanout_read_drains_correctly(spark, tmp_path):
     assert all(s == COMPLETE for s in parts.values())
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_driver_reads_are_typed_local_relations(spark, tmp_path, monkeypatch):
+    """Every driver-side read hands Spark exactly the rows ``_fetchall``
+    fetched, typed by its DDL, as a ``LocalRelation`` — no Python RDD that
+    each action re-runs through a worker.  NULL text and empty results
+    keep their types."""
+    from gofeed_spark.feedstate.model import PARTITION_DDL
+    from gofeed_spark.sources.feed_cdc import CDC_SCHEMA
+
+    store = _seeded_store(tmp_path)
+    store.seed(
+        [
+            _item("a", ts=3),
+            ("b", 1, 2, "p", 1, FAILED, None, None, 5),
+            _item("c", partition="q", status=COMPLETE, version=1, ts=9),
+        ],
+        [("p", 0, 0, AVAILABLE), ("q", 1, 0, COMPLETE)],
+    )
+    fetched = []
+    real_fetchall = store._fetchall
+
+    def spy(sql):
+        fetched.append(real_fetchall(sql))
+        return fetched[-1]
+
+    monkeypatch.setattr(store, "_fetchall", spy)
+    reads = {
+        "items": (lambda: store.read_items(spark), CDC_SCHEMA, 3),
+        "available": (
+            lambda: store.read_items(spark, statuses=(AVAILABLE,), limit=5),
+            CDC_SCHEMA,
+            1,
+        ),
+        "partitions": (lambda: store.read_partitions(spark), PARTITION_DDL, 2),
+        "no_partitions": (
+            lambda: store.read_partitions(spark, statuses=(FAILED,)),
+            PARTITION_DDL,
+            0,
+        ),
+        "decision_counts": (
+            lambda: store.read_decision_counts(spark),
+            "partition_id string, status int, gate int, n long",
+            3,
+        ),
+        "status_counts": (
+            lambda: store.read_status_counts(spark),
+            "partition_id string, status int, n long",
+            3,
+        ),
+    }
+    for name, (read, ddl, n) in reads.items():
+        df = read()
+        got = [tuple(r) for r in df.collect()]
+        assert got == fetched[-1] and len(got) == n, (name, got, fetched[-1])
+        assert df.schema == spark.createDataFrame([], ddl).schema, name
+        plan = _optimized_plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (name, plan)
+    b = store.read_items(spark).filter("id = 'b'").first()
+    assert b.error_messages is None and b.data is None and b.retry_count == 2
+    # the executor fan-out's empty result is a typed local relation too
+    empty = _seeded_store(tmp_path, "empty.db").read_items(spark, num_partitions=4)
+    assert empty.collect() == []
+    assert empty.schema == spark.createDataFrame([], CDC_SCHEMA).schema
+    assert "LogicalRDD" not in _optimized_plan(empty)
+
+
+def test_driver_read_refuses_int_out_of_range(spark, tmp_path):
+    """A value its DDL type cannot hold raises instead of wrapping or
+    turning float: ``version`` is an int column."""
+    store = _seeded_store(tmp_path)
+    store.seed([_item("a", version=2**40)], [("p", 0, 0, AVAILABLE)])
+    with pytest.raises(ValueError):
+        store.read_items(spark).collect()
+
+
 def test_decision_counts_pushdown_matches_item_based_decision(spark, tmp_path):
     """gate_decision over raw items and gate_decision_from_counts over the
     store's pushed-down GROUP BY must produce identical decisions — the

@@ -718,7 +718,7 @@ def test_maintain_compacts_dead_letters_and_vacuums_txlog(spark, tmp_path):
     assert {tuple(x) for x in r2.items().collect()} == before_state
 
 
-def _store(spark, base, storage, item_rows, part_rows, **kw):
+def _store(spark, base, storage, item_rows, part_rows, processor=json_times_processor, **kw):
     """A runner over a fresh ``storage`` store seeded with ``item_rows``
     (ITEM_DDL tuples) and ``part_rows``."""
     from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
@@ -726,7 +726,7 @@ def _store(spark, base, storage, item_rows, part_rows, **kw):
 
     os.makedirs(base)
     if storage == "dbapi":
-        runner = FeedRunner(spark, base, json_times_processor, storage="dbapi", **kw)
+        runner = FeedRunner(spark, base, processor, storage="dbapi", **kw)
         runner.db.seed(
             items_rows=[r + (1,) for r in item_rows], parts_rows=part_rows
         )
@@ -740,7 +740,7 @@ def _store(spark, base, storage, item_rows, part_rows, **kw):
     else:
         items.write.parquet(os.path.join(base, "items"))
         parts.write.parquet(os.path.join(base, "partitions"))
-    return FeedRunner(spark, base, json_times_processor, storage=storage, **kw)
+    return FeedRunner(spark, base, processor, storage=storage, **kw)
 
 
 @pytest.mark.parametrize("storage", ["parquet", "txlog", "dbapi"])
@@ -821,3 +821,37 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
             for root, _, files in os.walk(path):
                 parts_here = [f for f in files if f.endswith(".parquet")]
                 assert not parts_here or os.path.basename(root).startswith("b="), root
+
+
+def _slow_processor(item_id: str, data: str):
+    import time
+
+    time.sleep(6)
+    return json_times_processor(item_id, data)
+
+
+def test_run_available_timeout_stops_and_raises(spark, tmp_path):
+    """``timeout_s`` bounds how long a drain may go without committing a
+    batch: a batch that outlasts it stops the query and raises, instead of
+    returning with the query still running and the item untouched."""
+    rows = [("a", 0, 0, "p1", 0, AVAILABLE, "", '{"times":1}')]
+    runner = _store(
+        spark, str(tmp_path / "slow"), "txlog", rows, [("p1", 0, 0, AVAILABLE)],
+        processor=_slow_processor,
+    )
+    with pytest.raises(TimeoutError):
+        runner.run_available(timeout_s=2)
+    assert spark.streams.active == []
+
+
+def test_run_available_raises_when_feed_never_quiesces(spark, tmp_path):
+    """Every batch re-queues the item (it needs 1000 passes): the drain
+    spends its ``max_rounds`` and raises, leaving no query running."""
+    rows = [("a", 0, 0, "p1", 0, AVAILABLE, "", '{"times":1000}')]
+    runner = _store(
+        spark, str(tmp_path / "loop"), "txlog", rows, [("p1", 0, 0, AVAILABLE)]
+    )
+    with pytest.raises(RuntimeError, match="did not quiesce"):
+        runner.run_available(max_rounds=3)
+    assert spark.streams.active == []
+    assert len(runner._committed()) == 3
