@@ -13,17 +13,16 @@ Interchangeable backing stores (option ``backend``):
 
 - ``parquet`` (default): a parquet directory polled through pyarrow
   predicate-filtered reads,
-- ``sqlite``: a SQLite database file polled with an actual SQL cursor —
-  ``SELECT ... WHERE updated_at > ? ORDER BY updated_at`` — the same
-  store family the reference uses (Gorm over SQL Server/SQLite,
-  examples/state_processor/main.go:74-80, go.mod:11-12),
 - ``dbapi``: ANY PEP-249 driver, named by option ``dbapi_module`` (e.g.
   ``pyodbc`` for SQL Server, ``psycopg2``, ``sqlite3``); ``path`` is
-  passed to the module's ``connect()``.  The exact cursor contract as
-  ``sqlite``, with the placeholder style adapted from the module's
-  declared ``paramstyle`` — this is the portable form of the reference's
-  production store (Gorm over SQL Server), proven here through sqlite3's
-  DB-API face,
+  passed to the module's ``connect()``.  A real SQL cursor runs
+  ``SELECT ... WHERE updated_at > ? ORDER BY updated_at, id`` with the
+  placeholder style adapted from the module's declared ``paramstyle`` —
+  this is the portable form of the reference's production store (Gorm
+  over SQL Server, examples/state_processor/main.go:74-80),
+- ``sqlite``: the ``dbapi`` poll over stdlib ``sqlite3`` with ``path`` a
+  database file — the same store family the reference uses (Gorm over
+  SQLite, go.mod:11-12); a file that does not exist yet polls as empty,
 - ``txlog``: a TxLog-managed snapshot table.
 """
 
@@ -96,53 +95,14 @@ def _scan_parquet(
     return _cap_at_boundary(rows, limit)
 
 
-def _scan_sqlite(
-    path: str, after: int, table: str = "items", limit: int | None = None
-) -> list[tuple]:
-    """Poll a SQLite table with the reference's literal query shape:
-    ``WHERE updated_at > ? ORDER BY updated_at [LIMIT ?]`` (repo.go:106-120)
-    through a real DB cursor (stdlib sqlite3 — the same store Gorm's sqlite
-    driver wraps, go.mod:12).
-
-    ``limit`` caps one poll's backlog (driver memory stays bounded under a
-    hot producer); the cap then EXTENDS to every row sharing the boundary
-    timestamp, because the offset is the updated_at high-water mark —
-    cutting inside one timestamp would advance the offset past rows never
-    delivered."""
-    import sqlite3
-
-    if not os.path.exists(path):
-        return []
-    con = sqlite3.connect(path)
-    try:
-        base = (
-            f"SELECT {', '.join(_COLS)} FROM {table} "
-            "WHERE updated_at > ? ORDER BY updated_at, id"
-        )
-        if limit is None:
-            return [tuple(r) for r in con.execute(base, (after,)).fetchall()]
-        rows = [
-            tuple(r)
-            for r in con.execute(base + " LIMIT ?", (after, limit)).fetchall()
-        ]
-        if rows and len(rows) == limit:
-            boundary = rows[-1][-1]
-            extra = con.execute(
-                f"SELECT {', '.join(_COLS)} FROM {table} "
-                "WHERE updated_at = ? AND id > ? ORDER BY id",
-                (boundary, rows[-1][0]),
-            ).fetchall()
-            rows.extend(tuple(r) for r in extra)
-        return rows
-    finally:
-        con.close()
-
-
-def _make_scan_dbapi(module_name: str):
+def _make_scan_dbapi(module_name: str, path_is_file: bool = False):
     """Build a poll function over any PEP-249 driver: connect with the
     source's ``path`` option as the DSN, run the reference's literal query
-    shape (``WHERE updated_at > ? ORDER BY updated_at, id``) with the
-    driver's own ``paramstyle``, fetch, close.  One connection per poll —
+    shape (``WHERE updated_at > ? ORDER BY updated_at, id``,
+    repo.go:106-120) with the driver's own ``paramstyle``, fetch, close.
+    ``path_is_file``: the DSN is a database file (the ``sqlite`` backend);
+    a file that does not exist yet polls as empty instead of letting
+    ``connect`` create it.  One connection per poll —
     a poll runs once per trigger (back to back in a drain, which stops at
     the first empty one; once per interval in service mode), next to a
     micro-batch that costs far more than a connect, and per-poll
@@ -172,6 +132,8 @@ def _make_scan_dbapi(module_name: str):
     def scan(
         path: str, after: int, table: str = "items", limit: int | None = None
     ) -> list[tuple]:
+        if path_is_file and not os.path.exists(path):
+            return []
         con = mod.connect(path)
         try:
             cur = con.cursor()
@@ -184,7 +146,7 @@ def _make_scan_dbapi(module_name: str):
                 cur.execute(sql + f" LIMIT {int(limit)}", params)
                 rows = [tuple(r) for r in cur.fetchall()]
                 if len(rows) == limit and rows:
-                    # boundary-timestamp extension (see _scan_sqlite): one
+                    # boundary-timestamp extension (see _cap_at_boundary): one
                     # follow-up query drains the rest of the boundary ts
                     bcur = con.cursor()
                     ph2 = {
@@ -271,7 +233,7 @@ def _scan_txlog(
     return []
 
 
-_BACKENDS = {"parquet": _scan_parquet, "sqlite": _scan_sqlite, "txlog": _scan_txlog}
+_BACKENDS = {"parquet": _scan_parquet, "txlog": _scan_txlog}
 
 
 class FeedCDCReader(SimpleDataSourceStreamReader):
@@ -285,11 +247,13 @@ class FeedCDCReader(SimpleDataSourceStreamReader):
             if not module:
                 raise ValueError("feed_cdc backend=dbapi requires option 'dbapi_module'")
             self._scan = _make_scan_dbapi(module)
+        elif backend == "sqlite":
+            self._scan = _make_scan_dbapi("sqlite3", path_is_file=True)
         elif backend in _BACKENDS:
             self._scan = _BACKENDS[backend]
         else:
             raise ValueError(
-                f"feed_cdc backend must be one of {sorted([*_BACKENDS, 'dbapi'])}"
+                f"feed_cdc backend must be one of {sorted([*_BACKENDS, 'dbapi', 'sqlite'])}"
             )
         self.table = options.get("table", "items")
         # bounded poll (the reference's LIMIT, repo.go:114-120): caps one

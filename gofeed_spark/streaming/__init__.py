@@ -5,11 +5,7 @@
   tables on a timer — watcher.go:89-122 — which IS micro-batching).
 - ``gate_stream``: the per-partition gate state machine as a keyed stateful
   operator (applyInPandasWithState), the streaming twin of
-  watcher.go:147-161.
-- ``gate_stream_tws``: the same machine on the Spark 4 typed-state API
-  (transformWithStateInPandas + RocksDB provider, MapState per item) —
-  the migration path; ``tws_supported()`` reports whether the runtime can
-  run it, and the shared test suite parameterizes over both.
+  watcher.go:147-161, and the only streaming form of it.
 - ``sinks.ParquetUpsertSink``: idempotent keyed MERGE sink for
   foreachBatch — checkpoint + batch-id manifest gives exactly-once effect
   on restart (the OCC-save replacement, repo.go:125-138); hash-bucketed
@@ -19,9 +15,7 @@
 
 from gofeed_spark.streaming.feed_stream import (
     gate_stream,
-    gate_stream_tws,
     replay_stream,
-    tws_supported,
 )
 from gofeed_spark.streaming.sinks import ParquetUpsertSink
 from gofeed_spark.streaming.windows import (

@@ -7,13 +7,11 @@ a CDC/JDBC incremental source slots in without touching the rest), and the
 gate machine is ``applyInPandasWithState`` keyed by partition_id — state is
 the per-partition item map, the decision ladder is re-evaluated on every
 update batch, exactly the semantics of watcher.go:147-161 with the timer
-replaced by data arrival.
+replaced by data arrival.  ``gate_stream`` is the only streaming form of
+the ladder.
 """
 
 from __future__ import annotations
-
-import os
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -33,30 +31,15 @@ GATE_STATE_DDL = (
 )
 
 
-def replay_stream(
-    spark: SparkSession,
-    stage_dir: str,
-    schema_ddl: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
+def replay_stream(spark: SparkSession, stage_dir: str, schema_ddl: str) -> DataFrame:
     """File-replay micro-batch source: every parquet file staged into
-    ``stage_dir`` becomes (at most) one micro-batch.  Tests stage the batch
-    fixture in slices to drive deterministic trigger sequences."""
+    ``stage_dir`` becomes one micro-batch.  Tests stage the batch fixture
+    in slices to drive deterministic trigger sequences."""
     return (
         spark.readStream.schema(schema_ddl)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(stage_dir)
     )
-
-
-def stage_slices(df_slices: Iterable, stage_dir: str) -> None:
-    """Write each DataFrame slice as one staged file (one micro-batch)."""
-    os.makedirs(stage_dir, exist_ok=True)
-    for i, sdf in enumerate(df_slices):
-        # repartition(1), not coalesce(1): a coalesced task evaluates every
-        # parent partition's Python chain sequentially (~4 s for a tiny
-        # driver-built frame on local[32])
-        sdf.repartition(1).write.mode("append").parquet(stage_dir)
 
 
 def one_slice_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
@@ -70,33 +53,29 @@ def one_slice_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema_ddl)
 
 
-def _decide_counts(gate: int, status: int, failed_n: int, avail_n: int,
-                   at_gate_n: int, manual_checkpoint: bool,
-                   auto_close: bool) -> tuple[int, int]:
-    """The decision ladder (watcher.go:147-161) over the status COUNTS —
-    shared by both state-machine impls so they can never diverge: the
-    legacy impl derives the counts from its in-state item map, the
-    typed-state impl maintains them incrementally."""
-    if status == COMPLETE:
-        return gate, status
-    if failed_n > 0:
-        return gate, FAILED
-    if avail_n > 0:
-        if at_gate_n == 0 and not manual_checkpoint:
-            gate += 1
-        return gate, AVAILABLE
-    return gate, (COMPLETE if auto_close else status)
-
-
 def _decide(items: dict[str, tuple[int, int]], gate: int, status: int,
-            manual_checkpoint: bool, auto_close: bool) -> tuple[int, int]:
-    """The decision ladder over the in-state item map."""
-    failed_n = sum(1 for g, s in items.values() if s == FAILED)
-    avail_n = sum(1 for g, s in items.values() if s == AVAILABLE)
-    at_gate_n = sum(1 for g, s in items.values() if s == AVAILABLE and g == gate)
-    return _decide_counts(
-        gate, status, failed_n, avail_n, at_gate_n, manual_checkpoint, auto_close
-    )
+            manual_checkpoint: bool, auto_close: bool) -> tuple[int, int, int, int]:
+    """The decision ladder (watcher.go:147-161) over the in-state item map
+    → (gate, status, failed_n, avail_n); the counts come from one pass over
+    the map and also feed the output row and the eviction check."""
+    failed_n = avail_n = at_gate_n = 0
+    for g, s in items.values():
+        if s == FAILED:
+            failed_n += 1
+        elif s == AVAILABLE:
+            avail_n += 1
+            if g == gate:
+                at_gate_n += 1
+    if status != COMPLETE:
+        if failed_n > 0:
+            status = FAILED
+        elif avail_n > 0:
+            if at_gate_n == 0 and not manual_checkpoint:
+                gate += 1
+            status = AVAILABLE
+        elif auto_close:
+            status = COMPLETE
+    return gate, status, failed_n, avail_n
 
 
 def gate_stream(
@@ -136,8 +115,9 @@ def gate_stream(
             items.update(
                 zip(pdf["id"].tolist(), zip(pdf["gate"].tolist(), pdf["status"].tolist()))
             )
-        gate, status = _decide(items, gate, status, manual_checkpoint, auto_close)
-        avail_n = sum(1 for g, s in items.values() if s == AVAILABLE)
+        gate, status, failed_n, avail_n = _decide(
+            items, gate, status, manual_checkpoint, auto_close
+        )
         if status == COMPLETE or (status == FAILED and avail_n == 0):
             state.remove()  # terminal: evict (watcher.go:170-173)
         else:
@@ -153,7 +133,7 @@ def gate_stream(
                 "gate": [gate],
                 "status": [status],
                 "n_items": [len(items)],
-                "failed_n": [sum(1 for g, s in items.values() if s == FAILED)],
+                "failed_n": [failed_n],
                 "avail_n": [avail_n],
             }
         )
@@ -164,239 +144,4 @@ def gate_stream(
         stateStructType=GATE_STATE_DDL,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def tws_supported() -> bool:
-    """True when the runtime can actually RUN the Spark 4 typed-state API
-    (``transformWithStateInPandas``).  Gate for ``gate_stream_tws`` —
-    callers fall back to ``gate_stream`` otherwise.
-
-    Two requirements, both checked: the API surface itself, and a working
-    ``google.protobuf`` — transformWithState's state access runs over a
-    protobuf-encoded worker↔JVM protocol, and a missing protobuf only
-    surfaces at query start as an opaque "driver worker exited
-    unexpectedly" crash; probing it here turns that into a clean
-    capability report.  When the real package is absent the vendored
-    minimal runtime (gofeed_spark/vendor/minipb) is installed instead —
-    ``gate_stream_tws`` additionally ships it to workers via addPyFile."""
-    try:
-        from gofeed_spark.vendor.shim import ensure_protobuf
-
-        ensure_protobuf()  # real protobuf if present, vendored shim if not
-        from google.protobuf import descriptor  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-
-        from pyspark.sql import GroupedData
-
-        return hasattr(GroupedData, "transformWithStateInPandas")
-    except ImportError:
-        return False
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def gate_stream_tws(
-    item_events: DataFrame,
-    manual_checkpoint: bool = False,
-    auto_close: bool = True,
-    initial_state: DataFrame | None = None,
-) -> DataFrame:
-    """``transformWithStateInPandas`` implementation of the gate machine —
-    the Spark 4 typed-state migration path for ``gate_stream``, same
-    semantics behind the same tests.
-
-    State layout is where this one earns its keep at scale: the head
-    (gate, status, counters) lives in a ValueState and the item map in a
-    MapState keyed by item id, so an item update touches ONE state-store
-    key instead of deserializing + rewriting the whole per-partition item
-    array the applyInPandasWithState encoding carries.  With the RocksDB
-    provider (required by transformWithState — set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``ROCKSDB_PROVIDER``) a million-item partition costs an update only
-    the touched keys, not O(items).
-
-    The decision ladder's status counts are maintained INCREMENTALLY:
-    each incoming item delta reads the item's previous (gate, status),
-    adjusts (n_items, failed_n) in the head and the per-gate Available
-    count in a small ``avail_gates`` MapState, then writes the new value —
-    O(touched) state-store reads+writes per micro-batch, never a scan of
-    the standing item map (a full-map iterator pass per trigger would put
-    O(items) back on the hot path and was measured at 144 MB of iterator
-    reads per 16 batches on the 4×20k hot-partition profile).
-    ``at_gate_n`` is one point lookup; ``avail_n`` sums the per-gate map,
-    whose size is the number of DISTINCT in-flight gates (small by the
-    reference's design — gates are sequential barriers).  timeMode="none":
-    the reference's gate is data-arrival driven (watcher.go:147-161), no
-    timers.
-
-    CHECKPOINT COMPATIBILITY: the head ValueState widened from
-    (gate, status) to (gate, status, n_items, failed_n) when the counts
-    moved into state — transformWithState's schema check rejects resuming
-    a pre-widening checkpoint with this build; drain the old query (the
-    gate machine is terminal-evicting, so a drained stream holds no
-    state) or start a fresh checkpoint.
-
-    BULK INITIAL STATE: ``initial_state`` (a batch DataFrame with the
-    item-event columns ``id, partition_id, gate, status``) bulk-loads the
-    STANDING item map at query start — the restart-against-existing-state
-    path, where replaying every registration through ``handleInputRows``
-    pays one state-server round-trip per key (142 s/1M keys,
-    BENCH_SCALE.md r10).  ``handleInitialState`` folds each partition's
-    snapshot in one pandas pass, derives the head counters and per-gate
-    Available counts, and writes the item map through
-    ``state_bulk.bulk_map_update`` (pipelined windows + lean
-    serialization).  The head starts at (gate 0, AVAILABLE) over the
-    loaded counters; no decision runs and no output row is emitted until
-    the first live item event arrives — exactly a standing feed awaiting
-    its next delta.  Initial state applies only to a FRESH checkpoint
-    (Spark invokes ``handleInitialState`` on the first batch only).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from gofeed_spark.vendor.shim import ensure_worker_protobuf
-
-    # every worker needs google.protobuf for the state socket protocol;
-    # ship the vendored runtime when the real package is absent
-    ensure_worker_protobuf(item_events.sparkSession)
-
-    mc, ac = manual_checkpoint, auto_close
-
-    class GateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self._head = handle.getValueState(
-                "head", "gate int, status int, n_items int, failed_n int"
-            )
-            self._items = handle.getMapState(
-                "items", "id string", "gate int, status int"
-            )
-            self._avail = handle.getMapState("avail_gates", "gate int", "n int")
-
-        def _bump_avail(self, g: int, d: int) -> None:
-            k = (g,)
-            cur = self._avail.getValue(k)[0] if self._avail.containsKey(k) else 0
-            cur += d
-            if cur <= 0:
-                if self._avail.containsKey(k):
-                    self._avail.removeKey(k)
-            else:
-                self._avail.updateValue(k, (cur,))
-
-        def handleInputRows(self, key, rows, timerValues):
-            (partition_id,) = key
-            if self._head.exists():
-                gate, status, n_items, failed_n = self._head.get()
-            else:
-                gate, status, n_items, failed_n = 0, AVAILABLE, 0, 0
-            # fold the micro-batch driver-side first (last delivery wins,
-            # re-deliveries collapse), then touch each distinct item's
-            # store key ONCE and apply per-gate avail deltas once per gate
-            # — state-server round-trips stay O(touched + distinct gates)
-            updates: dict[str, tuple[int, int]] = {}
-            for pdf in rows:
-                updates.update(
-                    zip(
-                        pdf["id"].tolist(),
-                        zip(pdf["gate"].tolist(), pdf["status"].tolist()),
-                    )
-                )
-            gate_delta: dict[int, int] = {}
-            for iid, (g, s) in updates.items():
-                g, s = int(g), int(s)
-                k = (iid,)
-                if self._items.containsKey(k):
-                    old = self._items.getValue(k)
-                    if old[1] == FAILED:
-                        failed_n -= 1
-                    elif old[1] == AVAILABLE:
-                        gate_delta[old[0]] = gate_delta.get(old[0], 0) - 1
-                else:
-                    n_items += 1
-                self._items.updateValue(k, (g, s))
-                if s == FAILED:
-                    failed_n += 1
-                elif s == AVAILABLE:
-                    gate_delta[g] = gate_delta.get(g, 0) + 1
-            for g, d in gate_delta.items():
-                if d:
-                    self._bump_avail(g, d)
-            avail_n = sum(v[0] for _k, v in self._avail.iterator())
-            at_gate_n = (
-                self._avail.getValue((gate,))[0]
-                if self._avail.containsKey((gate,))
-                else 0
-            )
-            gate, status = _decide_counts(
-                gate, status, failed_n, avail_n, at_gate_n, mc, ac
-            )
-            if status == COMPLETE or (status == FAILED and avail_n == 0):
-                # terminal eviction (see gate_stream): clear ALL state
-                # columns so the store's row count returns to zero once
-                # every partition drains
-                self._head.clear()
-                self._items.clear()
-                self._avail.clear()
-            else:
-                self._head.update((gate, status, n_items, failed_n))
-            yield pd.DataFrame(
-                {
-                    "partition_id": [partition_id],
-                    "gate": [gate],
-                    "status": [status],
-                    "n_items": [n_items],
-                    "failed_n": [failed_n],
-                    "avail_n": [avail_n],
-                }
-            )
-
-        def handleInitialState(self, key, initialState, timerValues):
-            from gofeed_spark.streaming.state_bulk import bulk_map_update
-
-            # fold the snapshot (last delivery wins, like handleInputRows)
-            items: dict[str, tuple[int, int]] = {}
-            items.update(
-                zip(
-                    initialState["id"].tolist(),
-                    zip(
-                        (int(g) for g in initialState["gate"].tolist()),
-                        (int(s) for s in initialState["status"].tolist()),
-                    ),
-                )
-            )
-            failed_n = 0
-            avail: dict[int, int] = {}
-            for g, s in items.values():
-                if s == FAILED:
-                    failed_n += 1
-                elif s == AVAILABLE:
-                    avail[g] = avail.get(g, 0) + 1
-            bulk_map_update(
-                self._items, (((iid,), gs) for iid, gs in items.items())
-            )
-            bulk_map_update(
-                self._avail, (((g,), (n,)) for g, n in avail.items())
-            )
-            self._head.update((0, AVAILABLE, len(items), failed_n))
-
-        def close(self):
-            pass
-
-    grouped = item_events.groupBy("partition_id")
-    kwargs = {}
-    if initial_state is not None:
-        kwargs["initialState"] = initial_state.groupBy("partition_id")
-    return grouped.transformWithStateInPandas(
-        GateProcessor(),
-        outputStructType=GATE_OUT_DDL,
-        outputMode="update",
-        timeMode="none",
-        **kwargs,
     )

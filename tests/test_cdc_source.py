@@ -190,7 +190,7 @@ def test_scan_poll_limit_extends_to_boundary_timestamp(tmp_path):
     a mid-timestamp cut would skip the rest of that timestamp forever."""
     import sqlite3
 
-    from gofeed_spark.sources.feed_cdc import _make_scan_dbapi, _scan_sqlite
+    from gofeed_spark.sources.feed_cdc import FeedCDCReader
 
     db = str(tmp_path / "poll.db")
     con = sqlite3.connect(db)
@@ -207,7 +207,8 @@ def test_scan_poll_limit_extends_to_boundary_timestamp(tmp_path):
     con.commit()
     con.close()
 
-    for scan in (_scan_sqlite, _make_scan_dbapi("sqlite3")):
+    for opts in ({"backend": "sqlite"}, {"backend": "dbapi", "dbapi_module": "sqlite3"}):
+        scan = FeedCDCReader({"path": db, **opts})._scan
         # limit 4 cuts inside the ts=4 group -> extends to all 5 of them
         got = scan(db, 0, "items", 4)
         assert [r[0] for r in got] == ["a1", "a2", "a3", "b0", "b1", "b2", "b3", "b4"]
@@ -216,6 +217,21 @@ def test_scan_poll_limit_extends_to_boundary_timestamp(tmp_path):
         assert [r[0] for r in nxt] == ["z9"]
         # no limit: everything
         assert len(scan(db, 0, "items")) == 9
+
+
+def test_sqlite_poll_of_missing_file_is_empty_and_creates_nothing(tmp_path):
+    """A sqlite feed whose database file does not exist yet polls as empty
+    (the producer has not written it) and must not create the file as a
+    side effect of connecting."""
+    from gofeed_spark.sources.feed_cdc import FeedCDCReader
+
+    db = tmp_path / "not_yet.db"
+    reader = FeedCDCReader({"path": str(db), "backend": "sqlite"})
+    rows, offset = reader.read(reader.initialOffset())
+    assert list(rows) == []
+    assert offset == {"last_ts": -1}
+    assert list(reader.readBetweenOffsets({"last_ts": -1}, {"last_ts": 10})) == []
+    assert not db.exists()
 
 
 def test_feed_runner_poll_limit_drains_backlog(spark, tmp_path):

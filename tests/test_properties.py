@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from gofeed_spark.feedstate.engine import apply_process_results, gate_decision
 from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE, FAILED, ITEM_DDL, PARTITION_DDL
+from gofeed_spark.streaming.feed_stream import _decide
 
 STATUSES = [0, AVAILABLE, COMPLETE, FAILED]
 
@@ -41,6 +42,18 @@ def model_decision(p_gate, p_status, items, manual_checkpoint, auto_close):
     if avail > 0:
         return (p_gate + 1 if at_gate == 0 and not manual_checkpoint else p_gate), AVAILABLE
     return p_gate, (COMPLETE if auto_close else p_status)
+
+
+@settings(max_examples=500, deadline=None)
+@given(part=partition_st, manual=st.booleans(), auto=st.booleans())
+def test_stream_decide_matches_model(part, manual, auto):
+    """The streaming gate machine's ladder (pure Python, no Spark job)."""
+    g, s, items = part
+    item_map = {f"i{k}": gs for k, gs in enumerate(items)}
+    gate, status, failed_n, avail_n = _decide(item_map, g, s, manual, auto)
+    assert (gate, status) == model_decision(g, s, items, manual, auto)
+    assert failed_n == sum(1 for _g, st_ in items if st_ == FAILED)
+    assert avail_n == sum(1 for _g, st_ in items if st_ == AVAILABLE)
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))

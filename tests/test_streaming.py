@@ -18,11 +18,8 @@ from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE, FAILED
 from gofeed_spark.queries import QUERIES
 from gofeed_spark.streaming.feed_stream import (
     ITEM_EVENT_DDL,
-    ROCKSDB_PROVIDER,
     gate_stream,
-    gate_stream_tws,
     replay_stream,
-    tws_supported,
 )
 from gofeed_spark.streaming.sinks import ParquetUpsertSink
 from gofeed_spark.streaming.windows import (
@@ -34,46 +31,17 @@ from tests.conftest import rows
 SF = "/root/testdata/sf0.001"
 
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _state_provider(spark, impl):
-    """transformWithState requires the RocksDB state store provider; scope
-    the conf to the query start (streaming queries capture confs at start,
-    so restoring afterwards can't disturb a running one)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    if impl is not gate_stream_tws:
-        yield
-        return
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-# both state-machine implementations run the SAME test suite: the Spark 4
-# typed-state path must be drop-in for the applyInPandasWithState one
-GATE_IMPLS = [gate_stream] + ([gate_stream_tws] if tws_supported() else [])
-
-
-def _run_stream(spark, stage_dir, ckpt_dir, sink, impl=gate_stream):
+def _run_stream(spark, stage_dir, ckpt_dir, sink):
     src = replay_stream(spark, stage_dir, ITEM_EVENT_DDL)
-    with _state_provider(spark, impl):
-        q = (
-            impl(src)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(sink)
-            .start()
-        )
-        q.awaitTermination(120)
+    q = (
+        gate_stream(src)
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .foreachBatch(sink)
+        .start()
+    )
+    q.awaitTermination(120)
     return q
 
 
@@ -96,8 +64,7 @@ def _stage(spark, stage_dir, rows_, name):
     one_slice_df(spark, rows_, ITEM_EVENT_DDL).write.mode("append").parquet(stage_dir)
 
 
-@pytest.mark.parametrize("impl", GATE_IMPLS, ids=lambda f: f.__name__)
-def test_gate_stream_restart_exactly_once(spark, dirs, impl):
+def test_gate_stream_restart_exactly_once(spark, dirs):
     sink = ParquetUpsertSink(dirs["sink"], key="partition_id")
 
     # --- phase 1: two items available at gate 0 -> partition Available
@@ -106,7 +73,7 @@ def test_gate_stream_restart_exactly_once(spark, dirs, impl):
         [("i1", "p1", 0, AVAILABLE), ("i2", "p1", 0, AVAILABLE)],
         "slice1",
     )
-    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
+    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: (r.status, r.gate) for r in sink.read(spark).collect()}
     assert state["p1"] == (AVAILABLE, 0)
     committed_after_1 = sink.committed()
@@ -118,7 +85,7 @@ def test_gate_stream_restart_exactly_once(spark, dirs, impl):
         [("i1", "p1", 0, COMPLETE), ("i2", "p1", 0, FAILED)],
         "slice2",
     )
-    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
+    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: (r.status, r.gate) for r in sink.read(spark).collect()}
     assert state["p1"] == (FAILED, 0)  # failed item fails the partition
     # restart consumed ONLY the new slice: batch ids strictly extend, no reuse
@@ -137,8 +104,7 @@ def test_gate_stream_restart_exactly_once(spark, dirs, impl):
     assert after == before
 
 
-@pytest.mark.parametrize("impl", GATE_IMPLS, ids=lambda f: f.__name__)
-def test_gate_stream_advances_gate(spark, dirs, impl):
+def test_gate_stream_advances_gate(spark, dirs):
     sink = ParquetUpsertSink(dirs["sink"], key="partition_id")
     # all gate-0 work done, one item waiting at gate 1 -> barrier clears,
     # gate increments (watcher.go:151-155 semantics)
@@ -147,22 +113,20 @@ def test_gate_stream_advances_gate(spark, dirs, impl):
         [("i1", "p1", 0, COMPLETE), ("i2", "p1", 1, AVAILABLE)],
         "slice1",
     )
-    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
+    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: (r.status, r.gate) for r in sink.read(spark).collect()}
     assert state["p1"] == (AVAILABLE, 1)
 
 
-@pytest.mark.parametrize("impl", GATE_IMPLS, ids=lambda f: f.__name__)
-def test_gate_stream_autoclose(spark, dirs, impl):
+def test_gate_stream_autoclose(spark, dirs):
     sink = ParquetUpsertSink(dirs["sink"], key="partition_id")
     _stage(spark, dirs["stage"], [("i1", "p1", 0, COMPLETE)], "slice1")
-    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
+    _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: r.status for r in sink.read(spark).collect()}
     assert state["p1"] == COMPLETE
 
 
-@pytest.mark.parametrize("impl", GATE_IMPLS, ids=lambda f: f.__name__)
-def test_gate_stream_evicts_terminal_partition_state(spark, dirs, impl):
+def test_gate_stream_evicts_terminal_partition_state(spark, dirs):
     """State-store row count returns to ZERO once every partition reaches
     a terminal decision (Complete, or Failed with nothing left to retry) —
     the reference drops its watcher on InActive() (watcher.go:170-173);
@@ -182,98 +146,19 @@ def test_gate_stream_evicts_terminal_partition_state(spark, dirs, impl):
         [("i1", "p1", 0, AVAILABLE), ("i2", "p2", 0, AVAILABLE)],
         "slice1",
     )
-    q = _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
-    # encoding-specific row counts: applyInPandasWithState = 1 row per
-    # partition; transformWithState = 1 head ValueState row + 1 items
-    # MapState row PER ITEM + 1 avail_gates MapState row per in-flight
-    # gate (the per-key granularity is the point of the TWS layout — an
-    # item update touches the touched keys, not the whole array)
-    assert state_rows(q) == (2 if impl is gate_stream else 6)
+    q = _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
+    # applyInPandasWithState keeps one state row per partition
+    assert state_rows(q) == 2
     # p1 completes, p2 fails with no retryable items -> both evict
     _stage(
         spark, dirs["stage"],
         [("i1", "p1", 0, COMPLETE), ("i2", "p2", 0, FAILED)],
         "slice2",
     )
-    q = _run_stream(spark, dirs["stage"], dirs["ckpt"], sink, impl)
+    q = _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: r.status for r in sink.read(spark).collect()}
     assert state == {"p1": COMPLETE, "p2": FAILED}  # decisions still emitted
     assert state_rows(q) == 0
-
-
-def _tws_api_present() -> bool:
-    try:
-        from pyspark.sql import GroupedData
-
-        return hasattr(GroupedData, "transformWithStateInPandas")
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(not _tws_api_present(), reason="no typed-state API")
-def test_gate_stream_tws_plan_builds(spark, dirs):
-    """Even where the runtime can't EXECUTE transformWithState (e.g. no
-    protobuf), plan construction must work and produce the same streaming
-    schema as gate_stream — catches drift between the two paths' output
-    contracts on every runtime."""
-    src = replay_stream(spark, dirs["stage"], ITEM_EVENT_DDL)
-    a, b = gate_stream(src), gate_stream_tws(src)
-    assert b.isStreaming
-    assert a.schema == b.schema
-
-
-@pytest.mark.skipif(not tws_supported(), reason="no typed-state runtime")
-def test_gate_stream_tws_initial_state_matches_streamed_registration(
-    spark, dirs, tmp_path
-):
-    """Bulk-loading a standing item snapshot via ``initial_state`` must
-    leave the machine in the same state as streaming the identical items
-    through handleInputRows: run the same update batch against both and
-    compare the full sink rows.  600 items in one partition pushes
-    ``bulk_map_update`` across multiple pipeline windows."""
-    from gofeed_spark.streaming.feed_stream import one_slice_df
-
-    snapshot = [(f"i{j}", "p1", 0, AVAILABLE) for j in range(600)] + [
-        (f"j{j}", "p2", 0, AVAILABLE) for j in range(10)
-    ] + [("j10", "p2", 0, FAILED)]
-    updates = [
-        ("i0", "p1", 0, COMPLETE),
-        ("i1", "p1", 0, FAILED),
-        ("j10", "p2", 0, AVAILABLE),
-    ]
-
-    def run(stage, ckpt, sink_dir, slices, initial_state):
-        sink = ParquetUpsertSink(sink_dir, key="partition_id")
-        os.makedirs(stage, exist_ok=True)
-        for s in slices:
-            _stage(spark, stage, s, "s")
-        src = replay_stream(spark, stage, ITEM_EVENT_DDL)
-        with _state_provider(spark, gate_stream_tws):
-            q = (
-                gate_stream_tws(src, initial_state=initial_state)
-                .writeStream.outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .foreachBatch(sink)
-                .start()
-            )
-            q.awaitTermination(120)
-        return {
-            r.partition_id: (r.gate, r.status, r.n_items, r.failed_n, r.avail_n)
-            for r in sink.read(spark).collect()
-        }
-
-    streamed = run(
-        str(tmp_path / "st1"), str(tmp_path / "ck1"), str(tmp_path / "sk1"),
-        [snapshot, updates], None,
-    )
-    bulk = run(
-        str(tmp_path / "st2"), str(tmp_path / "ck2"), str(tmp_path / "sk2"),
-        [updates], one_slice_df(spark, snapshot, ITEM_EVENT_DDL),
-    )
-    assert bulk == streamed
-    assert streamed["p1"] == (0, FAILED, 600, 1, 598)
-    assert streamed["p2"] == (0, AVAILABLE, 11, 0, 11)
 
 
 def _write_events(spark, tmp_path):
