@@ -19,10 +19,11 @@ Flag parity (main.go:23-30):
 
 Spark-side extensions (no reference analog):
 
-    --storage {parquet,txlog,dbapi}  state-store layout (dbapi is implied
-                                     by --sql-connection/--local)
-    --base-path            state directory for parquet/txlog (and the
-                           --local SQLite file)
+    --storage {txlog,dbapi}  state store: the txlog manifest log under
+                             --base-path (default), or a PEP-249 database
+                             (implied by --sql-connection/--local)
+    --base-path            state directory for txlog (and the --local
+                           SQLite file)
     --dbapi-module         PEP-249 driver module (default sqlite3; e.g.
                            pyodbc for the reference's SQL Server store)
     --max-retries          retry budget before dead-lettering (default 5)
@@ -71,7 +72,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--batch-size", type=int, default=50, help="poll LIMIT; 0 = unbounded")
     p.add_argument("--table-prefix", default="")
     p.add_argument("--healthcheck-address", default=":8080")
-    p.add_argument("--storage", choices=("parquet", "txlog", "dbapi"), default=None)
+    p.add_argument("--storage", choices=("txlog", "dbapi"), default=None)
     p.add_argument("--base-path", default="./feed_state")
     p.add_argument("--dbapi-module", default="sqlite3")
     p.add_argument("--max-retries", type=int, default=5)
@@ -102,7 +103,7 @@ def main(argv: list[str] | None = None) -> int:
 
     storage = args.storage
     if storage is None:
-        storage = "dbapi" if (args.local or args.sql_connection) else "parquet"
+        storage = "dbapi" if (args.local or args.sql_connection) else "txlog"
     if storage == "dbapi" and not (args.local or args.sql_connection):
         print("--storage dbapi needs --sql-connection or --local", file=sys.stderr)
         return 2
@@ -141,8 +142,8 @@ def main(argv: list[str] | None = None) -> int:
         poll_limit=args.batch_size if args.batch_size > 0 else None,
     )
     # AutoMigrate before starting (main.go:106-108): dbapi DDL ran in the
-    # runner's constructor; parquet/txlog create their table layouts here
-    if storage == "parquet":
+    # runner's constructor; txlog commits whichever tables it lacks here
+    if storage == "txlog":
         auto_migrate(spark, args.base_path, table_prefix=args.table_prefix)
 
     # served healthcheck (main.go:99-104): engine ping + processor probe

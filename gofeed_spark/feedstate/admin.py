@@ -1,6 +1,7 @@
 """Operational surface of the feed engine: table DDL/migration and
 healthcheck — the Spark twins of AutoMigrate (repo.go:102-104, invoked
-main.go:106-108) and Watcher.Healthcheck (watcher.go:214-239).
+main.go:106-108) and Watcher.Healthcheck (watcher.go:214-239).  Table
+creation is one txlog commit (feedstate/txlog.py).
 """
 
 from __future__ import annotations
@@ -12,61 +13,44 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import SparkSession
 
 from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
+from gofeed_spark.feedstate.txlog import TxLog, table_snapshots
 
-FEED_TABLES = {"partitions": PARTITION_DDL, "items": ITEM_DDL}
+# the txlog items table carries the CDC offset column beside the item DDL
+FEED_TABLES = {"partitions": PARTITION_DDL, "items": ITEM_DDL + ", updated_at long"}
 
 
-def auto_migrate(
-    spark: SparkSession, base_path: str, table_prefix: str = ""
-) -> dict[str, str]:
-    """Create the feed-state tables (empty parquet with the declared schema)
-    when absent; existing tables are evolved in-place by reading with
-    mergeSchema and rewriting any missing columns as typed NULLs — the
-    additive half of Gorm's AutoMigrate, which also never drops columns.
+def auto_migrate(spark: SparkSession, base_path: str, table_prefix: str = "") -> int:
+    """Create the feed-state tables a txlog store lacks: each of
+    ``{prefix}items`` / ``{prefix}partitions`` that the latest manifest
+    does not name (plain or bucketed) lands as an empty typed table, all
+    in ONE commit that carries every other entry by name.  Existing tables
+    are left as they are.
 
     ``table_prefix`` namespaces the table names (``{prefix}items`` ...) so
-    several feed instances can cohabit one warehouse dir — the reference's
+    several feed instances can cohabit one manifest log — the reference's
     Gorm TablePrefix knob (main.go:29, README.md:131-135); the dbapi store
     applies the same prefix to its SQL tables (dbstore.py).
 
-    Returns {prefixed table: path}.  On a real deployment this maps to
-    ``CREATE TABLE ... USING delta`` + ``mergeSchema`` evolution.
+    Returns the log version afterwards — unchanged when nothing was
+    missing.
     """
-    out = {}
-    for bare, ddl in FEED_TABLES.items():
-        name = f"{table_prefix}{bare}"
-        path = os.path.join(base_path, name)
-        want = spark.createDataFrame([], ddl)
-        if not os.path.exists(path):
-            want.write.mode("overwrite").parquet(path)
-        else:
-            have = spark.read.option("mergeSchema", "true").parquet(path)
-            # bucketed runner layout (FeedRunner state_buckets): `b` is a
-            # partition directory, not data — preserve it through evolution
-            bucketed = any(e.startswith("b=") for e in os.listdir(path))
-            missing = [f for f in want.schema.fields if f.name not in have.columns]
-            if missing:
-                from pyspark.sql import functions as F
+    wanted = {f"{table_prefix}{bare}": ddl for bare, ddl in FEED_TABLES.items()}
 
-                for f in missing:
-                    have = have.withColumn(f.name, F.lit(None).cast(f.dataType))
-                import shutil
+    def writes(_version, tables):
+        return {
+            **tables,
+            **{
+                name: spark.createDataFrame([], ddl)
+                for name, ddl in wanted.items()
+                if not table_snapshots(tables, name)
+            },
+        }
 
-                tmp = path + "_migrating"
-                cols = [f.name for f in want.schema.fields] + (
-                    ["b"] if bucketed else []
-                )
-                writer = have.select(cols).write.mode("overwrite")
-                if bucketed:
-                    writer = writer.partitionBy("b")
-                writer.parquet(tmp)
-                old = path + "_old"
-                shutil.rmtree(old, ignore_errors=True)  # stale from a crashed run
-                os.replace(path, old)
-                os.replace(tmp, path)
-                shutil.rmtree(old, ignore_errors=True)
-        out[name] = path
-    return out
+    log = TxLog(base_path)
+    version, tables = log.latest()
+    if all(table_snapshots(tables, name) for name in wanted):
+        return version
+    return log.commit_retry(writes)
 
 
 def _dir_bytes(path: str) -> int:
@@ -78,101 +62,6 @@ def _dir_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
-
-
-BUCKET_MARKER = "_n_buckets"
-
-
-def read_bucket_marker(table_path: str) -> int | None:
-    """The bucket modulus a bucketed parquet state table was laid out
-    under — recorded INSIDE the table dir (underscore-prefixed, so Spark's
-    readers ignore it) and therefore flipped atomically with the data on
-    every whole-table conversion.  None for legacy tables that predate the
-    marker (their modulus is unknowable from the layout; FeedRunner claims
-    them with its configured value on first contact)."""
-    try:
-        with open(os.path.join(table_path, BUCKET_MARKER)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
-
-
-def write_bucket_marker(table_path: str, n_buckets: int) -> None:
-    tmp = os.path.join(table_path, BUCKET_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(n_buckets))
-    os.replace(tmp, os.path.join(table_path, BUCKET_MARKER))
-
-
-def flip_buckets(base_path: str, table: str, whole: bool) -> None:
-    """Parquet publish tail: move the bucket dirs staged at
-    ``{table}_txn_staging`` into the live table (the reference's
-    Transaction wrapper, repo.go:164-170, re-expressed for immutable
-    storage).  ``whole`` flips the entire table dir — a layout conversion,
-    whose staging carries the ``_n_buckets`` marker so the modulus travels
-    atomically with the data; otherwise each staged bucket replaces its live
-    twin and untouched buckets stay as they are.
-
-    Every flip renames the live dir aside first — ``{table}_txn_old`` for
-    a whole table, ``{table}_txn_old_b=XX`` for a bucket, both at the BASE,
-    never inside the table dir, where a stale dir would be discovered as a
-    partition — then its replacement in.  A crash mid-flip leaves a prefix
-    of buckets flipped: the uncommitted batch replays and recomputes
-    (at-least-once), and ``recover_bucketed`` restores a dir caught
-    between its two renames.  Stale aside dirs from an earlier crash are
-    removed first, so a flip never wedges on a non-empty rename target."""
-    import shutil
-
-    target = os.path.join(base_path, table)
-    staging = target + "_txn_staging"
-    if whole:
-        moves = [(staging, target, target + "_txn_old")]
-    else:
-        os.makedirs(target, exist_ok=True)
-        moves = [
-            (os.path.join(staging, b), os.path.join(target, b), f"{target}_txn_old_{b}")
-            for b in os.listdir(staging)
-            if b.startswith("b=")
-        ]
-    for src, dst, old in moves:
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.replace(dst, old)
-        os.replace(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def recover_bucketed(base_path: str, tables: list[str]) -> None:
-    """Crash recovery for ``flip_buckets``: a crash between renaming a live
-    dir aside and renaming its replacement in leaves ``{table}_txn_old``
-    (whole table) or ``{table}_txn_old_b=XX`` (one bucket) at the base with
-    the dir missing from its place — restore it (the staged replacement is
-    re-derived by the batch replay).  An aside dir whose original IS
-    present is leftover cleanup — remove it.  Run before reading bucketed
-    state."""
-    import shutil
-
-    try:
-        entries = os.listdir(base_path)
-    except OSError:
-        return
-    for name in tables:
-        prefix = f"{name}_txn_old"
-        target = os.path.join(base_path, name)
-        for entry in entries:
-            if not entry.startswith(prefix):
-                continue
-            bdir = entry[len(prefix):]
-            if bdir and not bdir.startswith("_b="):
-                continue
-            src = os.path.join(base_path, entry)
-            dst = os.path.join(target, bdir[1:]) if bdir else target
-            if os.path.exists(dst):
-                shutil.rmtree(src, ignore_errors=True)
-            else:
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
 
 
 def healthcheck(

@@ -34,7 +34,7 @@ Scale + concurrency shape:
   losing the version race drops the write and the loser re-reads).
 - Rows the runner never touched this batch are absent from the
   upsert, so out-of-band INSERTS that land mid-batch survive untouched
-  (the snapshot-flip parquet layout would rewrite the whole table and
+  (a snapshot commit would rewrite the touched buckets around them and
   lose them — the database layout is what makes "items added while
   Available" safe, README.md:104-110).
 

@@ -18,7 +18,6 @@ import urllib.request
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 PROCESS_OUT_DDL = (
@@ -123,6 +122,10 @@ def process_items(items: DataFrame, processor: ProcessorFn) -> DataFrame:
     driver never sees item payloads."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # imported here, not at module level: the CDC poll imports this
+        # package (feedstate.txlog) in a worker that has no pandas loaded
+        import pandas as pd
+
         for pdf in batches:
             out = {k: [] for k in
                    ("id", "next_gate", "complete", "new_data", "error_msg", "no_retry")}

@@ -1,9 +1,9 @@
-"""Multi-writer atomic multi-table commits over plain parquet.
+"""Multi-writer atomic multi-table commits over plain parquet — the
+feed's one snapshot store (``FeedRunner(storage="txlog")``).
 
-The parquet state store's bucket flip (``admin.flip_buckets``) is the
-single-writer staging dance; this log provides the piece the reference
-gets from its DB and Delta gets from its log protocol — ARBITRATION
-BETWEEN CONCURRENT COMMITTERS — using the one primitive every
+This log provides the piece the reference gets from its DB and Delta
+gets from its log protocol — ARBITRATION BETWEEN CONCURRENT
+COMMITTERS — using the one primitive every
 local/posix filesystem gives us: create-exclusive
 (``os.open(..., O_CREAT | O_EXCL)``).  It is the storage-layer twin of the
 reference's transaction + optimistic save (repo.go:125-138, 164-170): a
@@ -59,6 +59,52 @@ import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _versions(logdir: str) -> list[int]:
+    """Every manifest number in ``logdir``, ascending ([] when absent)."""
+    try:
+        names = os.listdir(logdir)
+    except FileNotFoundError:
+        return []
+    out = []
+    for name in names:
+        stem, ext = os.path.splitext(name)
+        if ext == ".json" and stem.isdigit():
+            out.append(int(stem))
+    return sorted(out)
+
+
+def _load(logdir: str, version: int) -> dict | None:
+    try:
+        with open(os.path.join(logdir, f"{version:08d}.json")) as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None  # burned version (crash mid-write) — skip
+
+
+def latest_manifest(base: str) -> tuple[int, dict[str, str]]:
+    """(version, {table: snapshot dir}) of the newest complete manifest
+    under ``base/_txlog``, skipping burned versions; (0, {}) when there is
+    none.  Pure JSON, and it never creates ``_txlog/`` — a CDC poll of a
+    store nobody has committed to must leave it absent."""
+    logdir = os.path.join(base, "_txlog")
+    for v in reversed(_versions(logdir)):
+        m = _load(logdir, v)
+        if m is not None:
+            return v, dict(m["tables"])
+    return 0, {}
+
+
+def table_snapshots(tables: dict[str, str], table: str) -> dict[str, str]:
+    """``table``'s entries in a manifest's ``tables``, in key order: the
+    plain entry plus every ``{table}@…`` key — state buckets
+    (``@b{NNNN}``, modulus-stamped ``@m{n}b{NNNN}``) and dead-letter
+    deltas (``@d_<token>``).  The values are the table's snapshot dirs;
+    another feed's ``{prefix}{table}`` keys never match."""
+    return {
+        k: tables[k] for k in sorted(tables) if k == table or k.startswith(table + "@")
+    }
 
 
 class CommitConflict(Exception):
@@ -151,29 +197,13 @@ class TxLog:
         os.makedirs(self.logdir, exist_ok=True)
 
     # -- resolution ------------------------------------------------------
-    def _manifest_versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.logdir):
-            stem, ext = os.path.splitext(name)
-            if ext == ".json" and stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
-
     def _load(self, version: int) -> dict | None:
-        try:
-            with open(os.path.join(self.logdir, f"{version:08d}.json")) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None  # burned version (crash mid-write) — skip
+        return _load(self.logdir, version)
 
     def latest(self) -> tuple[int, dict[str, str]]:
         """(version, {table: snapshot dir}) of the newest complete commit;
         (0, {}) for an empty log."""
-        for v in reversed(self._manifest_versions()):
-            m = self._load(v)
-            if m is not None:
-                return v, dict(m["tables"])
-        return 0, {}
+        return latest_manifest(self.base)
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
         """Read ``table`` at the latest (or a pinned) committed version."""
@@ -206,7 +236,7 @@ class TxLog:
         on — saves staging work; the O_EXCL claim is the real arbiter.
         Returns the committed version; raises ``CommitConflict`` on loss.
         """
-        versions = self._manifest_versions()
+        versions = _versions(self.logdir)
         # OCC pre-check compares COMPLETE commits only (latest() semantics):
         # a burned manifest must not wedge every expected_version commit
         # forever.  The claim target still skips burned numbers.
@@ -291,7 +321,7 @@ class TxLog:
         a manifest pointing at nothing."""
         import time
 
-        complete = [v for v in self._manifest_versions() if self._load(v) is not None]
+        complete = [v for v in _versions(self.logdir) if self._load(v) is not None]
         keep_versions = complete[-keep:] if keep else []
         live = set()
         for v in keep_versions:

@@ -1384,9 +1384,9 @@ def append_minhash_index(
 
 
 def recover_minhash_index(path: str, staging_ttl_sec: float = 1800.0) -> bool:
-    """Crash-restore for the index relation lifecycle — the twin of the
-    feed state store's ``recover_bucketed``, run by probe/append/compact
-    on entry so no crash point ever needs manual surgery.
+    """Crash-restore for the index relation lifecycle, run by
+    probe/append/compact on entry so no crash point ever needs manual
+    surgery.
 
     Two generations of crash state are repaired:
 

@@ -23,7 +23,12 @@ Interchangeable backing stores (option ``backend``):
 - ``sqlite``: the ``dbapi`` poll over stdlib ``sqlite3`` with ``path`` a
   database file — the same store family the reference uses (Gorm over
   SQLite, go.mod:11-12); a file that does not exist yet polls as empty,
-- ``txlog``: a TxLog-managed snapshot table.
+- ``txlog``: a TxLog-managed snapshot table — FeedRunner's default
+  store; its manifest rules (newest complete manifest, a table's
+  snapshot dirs) come from feedstate/txlog.py.
+
+FeedRunner drains through ``txlog`` or ``dbapi``; ``parquet`` and
+``sqlite`` serve standalone streams over a plain directory or file.
 """
 
 from __future__ import annotations
@@ -32,6 +37,8 @@ import ast
 import os
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+from gofeed_spark.feedstate.txlog import latest_manifest, table_snapshots
 
 CDC_SCHEMA = (
     "id string, version int, retry_count int, partition_id string, "
@@ -194,43 +201,15 @@ def _scan_txlog(
 ) -> list[tuple]:
     """Poll a TxLog-managed table (feedstate/txlog.py): resolve the latest
     complete manifest (pure JSON — no Spark on the poll path) and
-    predicate-read that snapshot dir.  The snapshot is immutable, so this
-    poll is consistent even while a writer is staging the next commit."""
-    import json
-
-    logdir = os.path.join(path, "_txlog")
-    if not os.path.isdir(logdir):
+    predicate-read the table's snapshot dirs as ONE dataset, so the
+    boundary cap applies to the merged rows.  Snapshots are immutable, so
+    this poll is consistent even while a writer is staging the next
+    commit."""
+    _, tables = latest_manifest(path)
+    rels = list(table_snapshots(tables, table).values())
+    if not rels:
         return []
-    versions = sorted(
-        int(os.path.splitext(f)[0])
-        for f in os.listdir(logdir)
-        if f.endswith(".json") and os.path.splitext(f)[0].isdigit()
-    )
-    for v in reversed(versions):
-        try:
-            with open(os.path.join(logdir, f"{v:08d}.json")) as f:
-                manifest = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue  # burned version
-        tables = manifest["tables"]
-        # the table may be committed as ONE plain snapshot (legacy), as
-        # hash-bucketed `{table}@bNNNN` snapshots (pre-modulus-stamp), or
-        # as modulus-stamped `{table}@m{n}bNNNN` snapshots (FeedRunner
-        # state_buckets) — poll the union; the boundary cap applies to
-        # the MERGED rows
-        rels = [
-            tables[k]
-            for k in sorted(tables)
-            if k == table
-            or k.startswith(table + "@b")
-            or k.startswith(table + "@m")
-        ]
-        if not rels:
-            return []
-        return _scan_parquet(
-            [os.path.join(path, rel) for rel in rels], after, table, limit
-        )
-    return []
+    return _scan_parquet([os.path.join(path, rel) for rel in rels], after, table, limit)
 
 
 _BACKENDS = {"parquet": _scan_parquet, "txlog": _scan_txlog}

@@ -30,9 +30,45 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gofeed_spark.feedstate.admin import _dir_bytes
 from gofeed_spark.feedstate.engine import feed_step
 from gofeed_spark.feedstate.processors import ProcessorFn
+from gofeed_spark.feedstate.txlog import CommitConflict, TxLog, table_snapshots
 from gofeed_spark.sources.feed_cdc import register_feed_cdc
+
+# Sizing.  Module constants rather than constructor arguments: no caller
+# tunes them per runner; tests set them with monkeypatch.
+#
+# dbapi: active-work rows per read partition.  A pushed-down COUNT sizes
+# each micro-batch's read; at or below one partition's worth the read is a
+# single driver-side SELECT, above it the rows come in executor-side as
+# ``updated_at`` range predicates (DbApiStore.read_items num_partitions),
+# so large active state never funnels through the driver.
+FANOUT_ROWS = 200_000
+# Drain-time shuffle parallelism.  Feed state per micro-batch is modest;
+# with AQE off during drains (see _drain_confs) a fixed small count
+# replaces AQE's runtime coalescing and measures FASTER than AQE ever did
+# at the 200k-item profile.
+DRAIN_SHUFFLE_PARTITIONS = 8
+# txlog: the items/partitions tables are laid out hash-bucketed (bucket =
+# pmod(xxhash64(id), n); key values ``b0007``-style) and each commit
+# rewrites ONLY buckets containing changed rows — write volume scales with
+# work done, the snapshot-store twin of dbapi's per-row upserts.  A fresh
+# or legacy (unbucketed) table is laid out under STATE_BUCKETS inside its
+# first commit; a layout that records its modulus keeps it (see __init__).
+STATE_BUCKETS = 16
+# Size-tiered growth: when the items table's mean bucket size exceeds the
+# target, the next commit re-buckets the state to the next power-of-two
+# count that brings it back under — per-batch write volume stays
+# ~O(touched rows x BUCKET_TARGET_BYTES) as the table grows, the reference
+# contract of one row per save (repo.go:125-138) with a bounded constant.
+# Growth stops at MAX_STATE_BUCKETS (bucket names have 4 digits).
+BUCKET_TARGET_BYTES = 16 * 1024 * 1024
+MAX_STATE_BUCKETS = 4096
+# Staging writes at or below this row count skip the ``repartition(b)``
+# shuffle (see _stage) — ~10-14% of feed throughput at the 200k-item
+# profile for few-KB deltas.
+SMALL_DELTA_ROWS = 8192
 
 # AQE-off guard for streaming runs.  Streaming does not support AQE — every
 # query start then DISABLES it on a conf clone (ResolveWriteToStream), and
@@ -58,10 +94,10 @@ _AQE_SAVED: dict[int, tuple[object, tuple[str, str]]] = {}
 
 
 @contextlib.contextmanager
-def _drain_confs(spark, shuffle_partitions=None):
-    """AQE off (+ optional fixed drain parallelism) for the drain's
-    lifetime.  AQE off is correctness (the per-start disable race above);
-    the fixed shuffle-partition count is the PERFORMANCE replacement for
+def _drain_confs(spark):
+    """AQE off and ``DRAIN_SHUFFLE_PARTITIONS`` for the drain's lifetime.
+    AQE off is correctness (the per-start disable race above); the fixed
+    shuffle-partition count is the PERFORMANCE replacement for
     what AQE was buying — runtime coalescing of the 32-partition default
     on modest per-batch state (measured at the 200k-item profile: AQE-on
     8.5k/13.5k/8.0k items/s parquet/txlog/dbapi, AQE-off 7.3k/11.9k/4.7k,
@@ -80,10 +116,9 @@ def _drain_confs(spark, shuffle_partitions=None):
                 ),
             )
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-            if shuffle_partitions is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(shuffle_partitions)
-                )
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(DRAIN_SHUFFLE_PARTITIONS)
+            )
         _AQE_DEPTH[key] = _AQE_DEPTH.get(key, 0) + 1
     try:
         yield
@@ -150,29 +185,29 @@ class FeedRunner:
     Every state change — a micro-batch and ``requeue_dead_letters`` alike
     — is ONE state commit (``_run``): ``_read`` a snapshot, decide the new
     rows flagged ``__changed`` (the same for every store), ``_publish``
-    them.  The snapshot stores share one touched-bucket planner
-    (``_plan``) and one staging write (``_stage``), and each has one short
-    tail; dbapi upserts the changed rows.
+    them.
 
     Both driving modes run the one streaming query ``_start`` builds:
     ``run_available`` triggers it back to back and stops it at the first
     trigger that finds no new data (one query per drain, a new one only
     after a streaming failure); ``run_forever`` triggers it on an interval.
 
-    ``storage``: ``"parquet"`` (default) keeps hash-bucketed table dirs
-    whose touched buckets flip in place (``admin.flip_buckets``) —
-    single-writer-safe.
-    ``"txlog"`` commits both tables through the manifest log
-    (feedstate/txlog.py): multi-writer-safe — a concurrent runner's commit
-    loses the O_EXCL claim, and this runner re-reads the fresh state and
-    recomputes before retrying, the reference's dirty=false path at the
-    storage layer.
+    ``storage``: ``"txlog"`` (default) commits both tables and the dead
+    letters through the manifest log (feedstate/txlog.py) as
+    hash-bucketed snapshots: the touched-bucket planner (``_plan``) and
+    the staging write (``_stage``) feed ONE atomic manifest commit that
+    carries untouched buckets by name.  Multi-writer-safe — a concurrent
+    runner's commit loses the O_EXCL claim, and this runner re-reads the
+    fresh state and recomputes before retrying, the reference's
+    dirty=false path at the storage layer.
     ``"dbapi"`` keeps both tables in a PEP-249 database
     (feedstate/dbstore.py — the reference's literal Gorm-over-SQL
     deployment): the CDC source polls it with a cursor and writes land as
     per-row OCC upserts, so out-of-band INSERTS arriving mid-batch
-    survive (a snapshot flip would rewrite the table around them) and a
+    survive (a snapshot commit would rewrite the table around them) and a
     concurrent row update can never be clobbered by a stale runner write.
+    Sizing (bucket counts, read fan-out, drain parallelism) is set by the
+    module constants above.
     """
 
     def __init__(
@@ -183,71 +218,37 @@ class FeedRunner:
         max_retries: int = 5,
         manual_checkpoint: bool = False,
         auto_close: bool = True,
-        storage: str = "parquet",
+        storage: str = "txlog",
         runner_id: str = "",
         dbapi_module: str = "sqlite3",
         db_path: str | None = None,
         table_prefix: str = "",
-        fanout_rows: int = 200_000,
         poll_limit: int | None = None,
-        drain_shuffle_partitions: int | None = 8,
-        state_buckets: int = 16,
-        bucket_target_bytes: int = 16 * 1024 * 1024,
-        max_state_buckets: int = 4096,
-        small_delta_rows: int = 8192,
     ):
         """``runner_id``: distinct per concurrent runner sharing one store
-        (txlog mode) — each runner keeps its OWN streaming checkpoint and
-        batch manifest (its private poll offsets, like each reference
-        watcher's in-process cursor) while the shared TxLog arbitrates the
-        state commits.
+        — each runner keeps its OWN streaming checkpoint and batch manifest
+        (its private poll offsets, like each reference watcher's
+        in-process cursor) while the shared TxLog (or database) arbitrates
+        the state commits.
 
         ``table_prefix``: namespaces this feed's tables (reference
         ``main.go:29`` / README.md:131-135) so several feed instances can
-        cohabit ONE store — one database (dbapi), one warehouse dir
-        (parquet), or one manifest log (txlog): ``{prefix}items``,
-        ``{prefix}partitions``, ``{prefix}dead_letter``, with the
-        checkpoint/manifest paths namespaced alongside.
-
-        ``fanout_rows`` (dbapi): active-work rows per read partition.  A
-        pushed-down COUNT sizes each micro-batch's read; at or below one
-        partition's worth the read is a single driver-side SELECT, above
-        it the rows come in executor-side as ``updated_at`` range
-        predicates (DbApiStore.read_items num_partitions) so large active
-        state never funnels through the driver.
+        cohabit ONE store — one database (dbapi) or one manifest log
+        (txlog): ``{prefix}items``, ``{prefix}partitions``,
+        ``{prefix}dead_letter``, with the checkpoint/manifest paths
+        namespaced alongside.
 
         ``poll_limit``: caps each CDC poll's backlog (the reference's poll
         LIMIT, repo.go:114-120) so a hot producer can't balloon one
         micro-batch; undelivered rows re-poll next round and
         ``run_available`` keeps draining until quiescent.
 
-        ``state_buckets`` (parquet/txlog): the items/partitions tables are
-        laid out hash-bucketed (bucket = pmod(xxhash64(id), n); directory
-        values ``b0007``-style, non-numeric by construction) and each
-        commit rewrites ONLY buckets containing changed rows — write volume
-        scales with work done, the snapshot-store twin of dbapi's per-row
-        upserts.  A legacy (unbucketed) table converts inside the first
-        commit.  Size it so one bucket ≈ one comfortable write task.
-
-        The LAYOUT owns the modulus: a bucketed table records its bucket
-        count (parquet: an ``_n_buckets`` marker flipped with conversions;
-        txlog: ``@m{n}b{NNNN}`` manifest keys committed with the data), and
-        ``__init__`` ADOPTS it over a disagreeing ``state_buckets`` — a
+        The txlog LAYOUT owns the bucket modulus: bucket keys record it
+        (``{table}@m{n}b{NNNN}``, committed with the data), and ``__init__``
+        ADOPTS it over ``STATE_BUCKETS`` (``bucket_count_adopted``) — a
         restart can never mix two moduli over one table (which would
-        duplicate or strand rows).  Pre-marker legacy layouts are claimed
-        with the configured value on first contact.
-
-        ``bucket_target_bytes`` / ``max_state_buckets``: size-tiered
-        growth.  When the items table's mean bucket size exceeds the
-        target, the next commit converts the state to the next power-of-two
-        bucket count that brings it back under (the legacy conversion's
-        mechanism) — per-batch write volume stays ~O(touched rows ×
-        bucket_target_bytes) as the table grows, the reference contract of
-        one row per save (repo.go:125-138) with a bounded constant.
-
-        ``small_delta_rows``: staging writes at or below this row count
-        skip the ``repartition(b)`` shuffle (see ``_stage``) — ~10-14% of
-        feed throughput at the 200k-item profile for few-KB deltas."""
+        duplicate or strand rows).  Pre-stamp layouts are claimed with
+        ``STATE_BUCKETS`` on first contact."""
         self.spark = spark
         self.base = base_path
         self.runner_id = runner_id or "w0"
@@ -255,8 +256,6 @@ class FeedRunner:
         self.t_items = f"{table_prefix}items"
         self.t_parts = f"{table_prefix}partitions"
         self.t_dead = f"{table_prefix}dead_letter"
-        self.items_path = os.path.join(base_path, self.t_items)
-        self.parts_path = os.path.join(base_path, self.t_parts)
         suffix = (f"_{table_prefix}" if table_prefix else "") + (
             f"_{runner_id}" if runner_id else ""
         )
@@ -273,14 +272,20 @@ class FeedRunner:
         self.max_retries = max_retries
         self.manual_checkpoint = manual_checkpoint
         self.auto_close = auto_close
-        if storage not in ("parquet", "txlog", "dbapi"):
-            raise ValueError("storage must be 'parquet', 'txlog' or 'dbapi'")
+        if storage not in ("txlog", "dbapi"):
+            raise ValueError("storage must be 'txlog' or 'dbapi'")
         self.storage = storage
+        if poll_limit is not None and poll_limit < 1:
+            raise ValueError("poll_limit must be >= 1 (None = unbounded)")
+        self.poll_limit = poll_limit
+        self.state_buckets = STATE_BUCKETS
+        self._grow_to: int | None = None
+        self._rel_bytes: dict[str, int] = {}
+        layout_n = None
         if storage == "txlog":
-            from gofeed_spark.feedstate.txlog import TxLog
-
             self.log = TxLog(base_path)
-        elif storage == "dbapi":
+            layout_n = self._layout_modulus(self.log.latest()[1], self.t_items)
+        else:
             from gofeed_spark.feedstate.dbstore import DbApiStore
 
             os.makedirs(base_path, exist_ok=True)
@@ -288,34 +293,8 @@ class FeedRunner:
             self.dbapi_module = dbapi_module
             self.db = DbApiStore(self.db_path, dbapi_module, table_prefix=table_prefix)
             self.db.ensure_schema()
-        self.fanout_rows = max(1, fanout_rows)
-        if poll_limit is not None and poll_limit < 1:
-            raise ValueError("poll_limit must be >= 1 (None = unbounded)")
-        self.poll_limit = poll_limit
-        # Drain-time shuffle parallelism (None = leave the session's).
-        # Feed state per micro-batch is modest; with AQE off during drains
-        # (see _drain_confs) a fixed small count replaces AQE's runtime
-        # coalescing and measures FASTER than AQE ever did at the 200k
-        # profile.  Size it up only for very large active state.
-        self.drain_shuffle_partitions = drain_shuffle_partitions
-        if state_buckets < 1:
-            raise ValueError("state_buckets must be >= 1")
-        self.state_buckets = state_buckets
-        self.bucket_target_bytes = max(1, bucket_target_bytes)
-        self.max_state_buckets = max(state_buckets, max_state_buckets)
-        if self.max_state_buckets > 9999:
-            # bucket dir values are zero-padded to 4 digits ('b0000'…);
-            # lpad TRUNCATES longer strings, which would silently collide
-            # buckets — refuse rather than corrupt
-            raise ValueError("state_buckets/max_state_buckets must be <= 9999")
-        self.small_delta_rows = small_delta_rows
-        self._grow_to: int | None = None
-        self._rel_bytes: dict[str, int] = {}
-        # adopt the layout's modulus over a disagreeing ctor argument —
-        # see the docstring; self.bucket_count_adopted records it happened
-        tables = self.log.latest()[1] if storage == "txlog" else None
-        layout_n = None if storage == "dbapi" else self._layout_modulus(tables, self.t_items)
-        self.bucket_count_adopted = layout_n not in (None, state_buckets)
+        # adopt the layout's modulus over the constant — see the docstring
+        self.bucket_count_adopted = layout_n not in (None, STATE_BUCKETS)
         if self.bucket_count_adopted:
             self.state_buckets = layout_n
         # write volume (bytes staged per table: last commit, cumulative, a
@@ -346,44 +325,21 @@ class FeedRunner:
         )
 
     @staticmethod
-    def _txlog_owns(table: str, key: str) -> bool:
-        # the plain entry, legacy "@b" bucket keys and modulus-stamped
-        # "@m{n}bNNNN" keys
-        return key == table or key.startswith(table + "@")
-
-    def _txlog_rels(self, tables: dict, table: str) -> list[str]:
-        return [tables[k] for k in sorted(tables) if self._txlog_owns(table, k)]
-
-    @staticmethod
-    def _manifest_modulus(tables: dict, table: str) -> int | None:
+    def _layout_modulus(tables: dict, table: str) -> int | None:
         """Bucket modulus recorded in a manifest's ``{table}@m{n}bNNNN``
         keys — committed atomically with the data, so concurrent runners
         derive the SAME modulus as the snapshot they read (a racing
-        conversion makes their commit conflict and recompute).  None for
-        legacy ``@b`` keys / plain entries (modulus not recorded)."""
+        conversion makes their commit conflict and recompute).  None when
+        the layout cannot tell: no state yet, a plain legacy entry, or
+        pre-stamp ``@b`` keys (the next commit converts them under
+        ``state_buckets``)."""
+        if table in tables:
+            return None
         prefix = table + "@m"
         for k in tables:
             if k.startswith(prefix):
                 return int(k[len(prefix):].split("b", 1)[0])
         return None
-
-    def _layout_modulus(self, tables: dict | None, table: str) -> int | None:
-        """The bucket modulus ``table``'s EXISTING layout records (txlog:
-        the ``@m{n}`` keys of the manifest ``tables``; parquet: the
-        ``_n_buckets`` marker), or None when the layout cannot tell: no
-        state yet, a plain legacy table, or a bucketed layout that predates
-        the record (its modulus is unknowable — the next commit converts it
-        under the configured value)."""
-        if self.storage == "txlog":
-            return None if table in tables else self._manifest_modulus(tables, table)
-        from gofeed_spark.feedstate.admin import read_bucket_marker
-
-        path = os.path.join(self.base, table)
-        if not os.path.isdir(path) or not any(
-            e.startswith("b=") for e in os.listdir(path)
-        ):
-            return None
-        return read_bucket_marker(path)
 
     def _maybe_schedule_growth(self, items_table_bytes: int) -> None:
         """Size-tiered buckets: when mean bucket size exceeds the target,
@@ -391,15 +347,12 @@ class FeedRunner:
         The NEXT batch commit performs the conversion (full restage under
         the new modulus, same in-commit mechanism as the legacy
         conversion), keeping per-batch write volume ~O(touched rows ×
-        bucket_target_bytes) as state grows."""
+        BUCKET_TARGET_BYTES) as state grows."""
         n = self.state_buckets
-        while (
-            items_table_bytes / n > self.bucket_target_bytes
-            and n < self.max_state_buckets
-        ):
+        while items_table_bytes / n > BUCKET_TARGET_BYTES and n < MAX_STATE_BUCKETS:
             n *= 2
         if n != self.state_buckets:
-            self._grow_to = min(n, self.max_state_buckets)
+            self._grow_to = min(n, MAX_STATE_BUCKETS)
 
     def _txlog_table_bytes(self, tables: dict, table: str) -> int:
         """Total on-disk bytes of a txlog table across its manifest rels.
@@ -407,11 +360,9 @@ class FeedRunner:
         cache is pruned to the manifest's live set each call — bounded by
         rel count); an object-store deployment would read sizes straight
         off the manifest instead of listing."""
-        from gofeed_spark.feedstate.admin import _dir_bytes
-
         total = 0
         fresh: dict[str, int] = {}
-        for rel in self._txlog_rels(tables, table):
+        for rel in table_snapshots(tables, table).values():
             b = self._rel_bytes.get(rel)
             if b is None:
                 b = _dir_bytes(os.path.join(self.base, rel))
@@ -430,7 +381,7 @@ class FeedRunner:
         conflict that burns retry attempts."""
         if tables is None:
             _, tables = self.log.latest()
-        rels = self._txlog_rels(tables, table)
+        rels = list(table_snapshots(tables, table).values())
         if not rels:
             raise ValueError(f"table {table!r} not in commit: {sorted(tables)}")
         return self.spark.read.parquet(
@@ -439,23 +390,17 @@ class FeedRunner:
 
     def _read_fanout(self, n_rows: int) -> int:
         """Read partitions for an n_rows read: 1 (plain driver SELECT) up
-        to 32 executor-side ranges, one per `fanout_rows` of volume."""
-        return min(32, max(1, (n_rows + self.fanout_rows - 1) // self.fanout_rows))
+        to 32 executor-side ranges, one per ``FANOUT_ROWS`` of volume."""
+        return min(32, max(1, (n_rows + FANOUT_ROWS - 1) // FANOUT_ROWS))
 
     def _items_with_ts(self):
         if self.storage == "txlog":
             return self._txlog_read(self.t_items).drop("b")
-        if self.storage == "dbapi":
-            # full-table accessor: size the read from a pushed-down COUNT
-            # so even user-facing reads never funnel big state through the
-            # driver
-            return self.db.read_items(
-                self.spark, num_partitions=self._read_fanout(self.db.count_items())
-            )
-        from gofeed_spark.feedstate.admin import recover_bucketed
-
-        recover_bucketed(self.base, [self.t_items])
-        return self.spark.read.parquet(self.items_path).drop("b")
+        # full-table accessor: size the read from a pushed-down COUNT so
+        # even user-facing reads never funnel big state through the driver
+        return self.db.read_items(
+            self.spark, num_partitions=self._read_fanout(self.db.count_items())
+        )
 
     def items(self):
         return self._items_with_ts().drop("updated_at")
@@ -463,12 +408,7 @@ class FeedRunner:
     def partitions(self):
         if self.storage == "txlog":
             return self._txlog_read(self.t_parts).drop("b")
-        if self.storage == "dbapi":
-            return self.db.read_partitions(self.spark)
-        from gofeed_spark.feedstate.admin import recover_bucketed
-
-        recover_bucketed(self.base, [self.t_parts])
-        return self.spark.read.parquet(self.parts_path).drop("b")
+        return self.db.read_partitions(self.spark)
 
     def _committed(self) -> list[int]:
         if not os.path.exists(self.manifest):
@@ -521,7 +461,6 @@ class FeedRunner:
         — or the attempt is abandoned — the blocks are dead weight, and a
         long-lived runner would otherwise accumulate 4-5 of them per
         micro-batch until driver GC notices."""
-        from gofeed_spark.feedstate.txlog import CommitConflict
         from gofeed_spark.functions.lineage import release_local_checkpoint
 
         for _ in range(8 if self.storage == "txlog" else 1):
@@ -571,13 +510,9 @@ class FeedRunner:
             )
             parts = self.db.read_partitions(self.spark, exclude_statuses=(COMPLETE,))
             return _Snapshot(items, parts, self.db.max_updated_at() + 1, counts=counts)
-        version, tables = None, None
-        if self.storage == "txlog":
-            version, tables = self.log.latest()
-            items = self._txlog_read(self.t_items, tables).drop("b")
-            parts = self._txlog_read(self.t_parts, tables).drop("b")
-        else:
-            items, parts = self._items_with_ts(), self.partitions()
+        version, tables = self.log.latest()
+        items = self._txlog_read(self.t_items, tables).drop("b")
+        parts = self._txlog_read(self.t_parts, tables).drop("b")
         tick = (items.agg(F.max("updated_at")).collect()[0][0] or 0) + 1
         return _Snapshot(items, parts, tick, version=version, tables=tables)
 
@@ -686,23 +621,24 @@ class FeedRunner:
         """publish: commit the decided rows; False when a concurrent txlog
         commit won (the caller re-reads and decides again).
 
-        dbapi upserts ONLY the changed rows with per-row CAS (dead letters
-        first, the parquet posture below): untouched rows are not in the
-        statement — no table rewrite, so concurrent out-of-band inserts
-        survive, and the loser of a two-writer race is dropped row-by-row
-        in the database.  The snapshot stores (parquet, txlog) share the
-        touched-bucket planner and the one staging write, then diverge only
-        in their tails: parquet flips bucket dirs, txlog carries untouched
-        bucket keys by name into one manifest commit."""
+        dbapi appends the dead letters, then upserts ONLY the changed rows
+        with per-row CAS: untouched rows are not in the statement — no
+        table rewrite, so concurrent out-of-band inserts survive, and the
+        loser of a two-writer race is dropped row-by-row in the database.
+        A crash between the two can only DUPLICATE a dead letter on batch
+        replay (at-least-once, the reference's posture), never lose one.
+        txlog plans the touched buckets, stages them and commits them in
+        one manifest (``_publish_txlog``)."""
         if self.storage == "dbapi":
-            self._append_dead(dead)
+            if dead is not None and not dead.isEmpty():
+                dead.write.mode("append").parquet(self.dead_dir)
             self.db.upsert_items(items.filter("__changed").drop("__changed"))
             self.db.upsert_partitions(parts.filter("__changed").drop("__changed"))
             return True
         # The LAYOUT owns the modulus: adopt the snapshot's (a concurrent
-        # txlog runner may have converted the table since our __init__, and
+        # runner may have converted the table since our __init__, and
         # planning touched buckets under another modulus than the layout's
-        # would flip deltas against wrongly-shaped buckets).
+        # would commit deltas against wrongly-shaped buckets).
         m = self._layout_modulus(snap.tables, self.t_items)
         if m is not None and m != self.state_buckets:
             self.state_buckets, self._grow_to = m, None
@@ -715,8 +651,7 @@ class FeedRunner:
             plan = self._plan(df, convert)
             if plan is not None:
                 plans[table] = plan
-        tail = self._publish_txlog if self.storage == "txlog" else self._publish_parquet
-        done = tail(snap, plans, dead, n)
+        done = self._publish_txlog(snap, plans, dead, n)
         if done is None:
             return False
         stats, items_bytes = done
@@ -759,45 +694,19 @@ class FeedRunner:
         ``repartition(b)`` puts each bucket's rows wholly in one task
         (partitionBy alone writes files-per-task-per-bucket — measured 8×
         the files, footer overhead dominating small deltas); a KNOWN-small
-        delta (``rows`` ≤ ``small_delta_rows``) skips that shuffle, since
+        delta (``rows`` ≤ ``SMALL_DELTA_ROWS``) skips that shuffle, since
         ``coalesce(1)`` writes the identical layout from one task over the
         checkpointed in-memory blocks.  Returns the bytes staged."""
-        from gofeed_spark.feedstate.admin import _dir_bytes
-
         shutil.rmtree(staging, ignore_errors=True)  # stale from a crashed run
-        if rows is not None and rows <= self.small_delta_rows:
+        if rows is not None and rows <= SMALL_DELTA_ROWS:
             df = df.coalesce(1)
         else:
             df = df.repartition(F.col("b"))
         df.write.partitionBy("b").mode("overwrite").parquet(staging)
         return _dir_bytes(staging)
 
-    def _publish_parquet(self, snap, plans, dead, n):
-        """parquet tail (single writer): dead letters BEFORE the state flip,
-        so a crash between the two can only DUPLICATE a dead letter on
-        batch replay (at-least-once, the reference's posture), never lose
-        one — the post-crash recompute sees the item already Failed and
-        would skip it.  Every table stages before any flips; a whole-table
-        staging carries the ``_n_buckets`` marker through its flip."""
-        from gofeed_spark.feedstate.admin import (
-            _dir_bytes,
-            flip_buckets,
-            write_bucket_marker,
-        )
-
-        self._append_dead(dead)
-        stats = {}
-        for table, (df, rows) in plans.items():
-            staging = os.path.join(self.base, f"{table}_txn_staging")
-            stats[table] = self._stage(df, rows, staging)
-            if rows is None:
-                write_bucket_marker(staging, n)
-        for table, (_, rows) in plans.items():
-            flip_buckets(self.base, table, whole=rows is None)
-        return stats, _dir_bytes(self.items_path)
-
     def _publish_txlog(self, snap, plans, dead, n):
-        """txlog tail: each staged bucket dir becomes a top-level snapshot
+        """The txlog commit: each staged bucket dir becomes a top-level snapshot
         (``{table}@m{n}bNNNN__v_<token>``, vacuum's __v convention) and
         every other manifest entry — untouched buckets, prior dead-letter
         deltas, other feeds' tables — rides into the new manifest by NAME,
@@ -808,15 +717,14 @@ class FeedRunner:
         recomputes both together."""
         import uuid
 
-        from gofeed_spark.feedstate.txlog import CommitConflict
-
         token = uuid.uuid4().hex[:8]
-        dropped = [t for t, (_, rows) in plans.items() if rows is None]
-        writes = {
-            k: v
-            for k, v in snap.tables.items()
-            if not any(self._txlog_owns(t, k) for t in dropped)
+        dropped = {
+            k
+            for t, (_, rows) in plans.items()
+            if rows is None
+            for k in table_snapshots(snap.tables, t)
         }
+        writes = {k: v for k, v in snap.tables.items() if k not in dropped}
         fresh: list[str] = []
         stats = {}
         for table, (df, rows) in plans.items():
@@ -844,24 +752,18 @@ class FeedRunner:
             return None
         return stats, self._txlog_table_bytes(writes, self.t_items)
 
-    def _append_dead(self, dead) -> None:
-        if dead is not None and not dead.isEmpty():
-            dead.write.mode("append").parquet(self.dead_dir)
-
     def _record_write(self, batch_id, stats: dict[str, int]) -> None:
         self.last_write_bytes = stats
         self.total_write_bytes += sum(stats.values())
         self.write_history.append({"batch_id": batch_id, **stats})
 
     def dead_letters(self):
-        """The dead-letter log as a DataFrame (None when nothing failed)."""
+        """The dead-letter log as a DataFrame (None when nothing failed):
+        txlog reads the table's per-batch delta snapshots, dbapi the
+        per-runner ``writer=`` dirs."""
         if self.storage == "txlog":
             _, tables = self.log.latest()
-            rels = [
-                tables[k]
-                for k in sorted(tables)
-                if k == self.t_dead or k.startswith(self.t_dead + "@d")
-            ]
+            rels = list(table_snapshots(tables, self.t_dead).values())
             if not rels:
                 return None
             return self.spark.read.parquet(
@@ -946,37 +848,33 @@ class FeedRunner:
           ``vacuum_keep`` complete manifests (TxLog.vacuum — also reclaims
           superseded state buckets and dead-letter deltas past the
           retention window).
-        - parquet: compact the accreting dead-letter partition dirs
+        - dbapi: compact the accreting dead-letter partition dirs
           (per-batch appends → byte-targeted file counts; the state
-          buckets stay one-file-per-bucket by construction and need no
-          compaction).
-        - dbapi: nothing to do (the database manages its own storage).
+          tables live in the database, which manages its own storage).
 
-        Returns a summary dict.  Single-runner invariant for parquet
-        compaction (same as every staging flip); txlog vacuum is safe
-        beside live writers (retention window protects in-flight
-        stagings)."""
+        Returns a summary dict.  txlog vacuum is safe beside live writers
+        (the retention window protects in-flight stagings); dead-letter
+        compaction rewrites every runner's ``writer=`` dir, so run it while
+        no runner of this feed is draining."""
         if self.storage == "txlog":
             return {
                 "vacuumed": self.log.vacuum(
                     keep=vacuum_keep, min_age_s=vacuum_min_age_s
                 )
             }
-        if self.storage == "parquet":
-            from gofeed_spark.fs import get_filesystem
-            from gofeed_spark.sources.io import compact
+        from gofeed_spark.fs import get_filesystem
+        from gofeed_spark.sources.io import compact
 
-            fs = get_filesystem(self.base)
-            compacted: dict[str, int] = {}
-            root = fs.join(self.base, self.t_dead)
-            for entry in fs.listdir(root):
-                sub = fs.join(root, entry)
-                if entry.startswith("writer=") and fs.isdir(sub):
-                    compacted[entry] = compact(
-                        self.spark, sub, target_file_bytes=compact_target_bytes
-                    )
-            return {"compacted": compacted}
-        return {}
+        fs = get_filesystem(self.base)
+        compacted: dict[str, int] = {}
+        root = fs.join(self.base, self.t_dead)
+        for entry in fs.listdir(root):
+            sub = fs.join(root, entry)
+            if entry.startswith("writer=") and fs.isdir(sub):
+                compacted[entry] = compact(
+                    self.spark, sub, target_file_bytes=compact_target_bytes
+                )
+        return {"compacted": compacted}
 
     # -- driver ----------------------------------------------------------
     def _start(self, interval_s: float):
@@ -984,16 +882,10 @@ class FeedRunner:
         ``foreachBatch(self._step)`` on this runner's checkpoint, one
         trigger every ``interval_s`` — so the drain and the service can
         never diverge in source options or sink."""
-        if self.storage == "txlog":
-            src_path, backend = self.base, "txlog"
-        elif self.storage == "dbapi":
-            src_path, backend = self.db_path, "dbapi"
-        else:
-            src_path, backend = self.items_path, "parquet"
         reader = (
             self.spark.readStream.format("feed_cdc")
-            .option("path", src_path)
-            .option("backend", backend)
+            .option("path", self.base if self.storage == "txlog" else self.db_path)
+            .option("backend", self.storage)
             .option("table", self.t_items)
         )
         if self.storage == "dbapi":
@@ -1023,11 +915,9 @@ class FeedRunner:
         a service-mode deployment owns its session, like the reference's
         watcher process owns its DB handle)."""
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        if self.drain_shuffle_partitions is not None:
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(self.drain_shuffle_partitions),
-            )
+        self.spark.conf.set(
+            "spark.sql.shuffle.partitions", str(DRAIN_SHUFFLE_PARTITIONS)
+        )
         return self._start(poll_interval_s)
 
     def run_available(self, timeout_s: int = 300, max_rounds: int = 16) -> None:
@@ -1055,7 +945,7 @@ class FeedRunner:
         drain = self._drain = _Drain(max_rounds)
         restarts = 0
         try:
-            with _drain_confs(self.spark, self.drain_shuffle_partitions):
+            with _drain_confs(self.spark):
                 while True:
                     q = self._start(0)
                     done = threading.Event()

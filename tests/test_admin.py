@@ -2,68 +2,43 @@
 
 from __future__ import annotations
 
-import os
-
 from gofeed_spark.feedstate.admin import (
     auto_migrate,
     healthcheck,
     http_healthcheck,
 )
+from gofeed_spark.feedstate.txlog import TxLog
 
 
 def test_auto_migrate_creates_and_evolves(spark, tmp_path):
+    """AutoMigrate on the txlog store: ONE commit adds whichever feed
+    tables the manifest lacks, empty and typed, and carries every other
+    entry by name; a second call commits nothing."""
     base = str(tmp_path / "feed")
-    paths = auto_migrate(spark, base)
-    items = spark.read.parquet(paths["items"])
-    assert "retry_count" in items.columns and items.count() == 0
-
-    # simulate an OLD table missing two columns, with data
-    old = spark.createDataFrame(
-        [("x", 0, "p", 0, 1)], "id string, version int, partition_id string, gate int, status int"
+    log = TxLog(base)
+    log.commit(
+        {
+            "other": spark.createDataFrame([(1,)], "x int"),
+            # a bucketed table counts as present
+            "partitions@m16b0003": spark.createDataFrame(
+                [("p", 0, 0, 1)], "id string, version int, gate int, status int"
+            ),
+        }
     )
-    old.write.mode("overwrite").parquet(paths["items"])
-    auto_migrate(spark, base)
-    evolved = spark.read.parquet(paths["items"])
-    assert "error_messages" in evolved.columns and "retry_count" in evolved.columns
-    row = evolved.collect()[0]
-    assert row.id == "x" and row.retry_count is None  # data kept, new cols NULL
+    _, before = log.latest()
+    assert auto_migrate(spark, base) == 2
+    version, tables = log.latest()
+    assert version == 2 and set(tables) == {*before, "items"}
+    assert all(tables[k] == v for k, v in before.items())
+    items = log.read(spark, "items")
+    assert {"retry_count", "updated_at"} <= set(items.columns) and items.count() == 0
 
-
-def _stage(spark, base, table, rows):
-    """Stage ``rows`` (id, v, b) the way FeedRunner does: partitionBy b
-    into ``{table}_txn_staging``."""
-    df = spark.createDataFrame(rows, "id int, v string, b string")
-    df.write.partitionBy("b").mode("overwrite").parquet(f"{base}/{table}_txn_staging")
-
-
-def _rows(spark, path):
-    return sorted((r.id, r.v, r.b) for r in spark.read.parquet(path).collect())
-
-
-def test_flip_buckets_flips_every_staged_table(spark, tmp_path):
-    """Whole-table flips carry the staged ``_n_buckets`` marker; a later
-    per-bucket flip replaces only the staged buckets of each table."""
-    from gofeed_spark.feedstate.admin import (
-        flip_buckets,
-        read_bucket_marker,
-        write_bucket_marker,
-    )
-
-    base = str(tmp_path)
-    for t in ("t1", "t2"):
-        _stage(spark, base, t, [(1, f"{t}a", "b0000"), (2, f"{t}b", "b0001")])
-        write_bucket_marker(f"{base}/{t}_txn_staging", 2)
-    for t in ("t1", "t2"):
-        flip_buckets(base, t, whole=True)
-    assert read_bucket_marker(f"{base}/t1") == read_bucket_marker(f"{base}/t2") == 2
-    for t in ("t1", "t2"):
-        _stage(spark, base, t, [(2, f"{t}b2", "b0001")])
-    for t in ("t1", "t2"):
-        flip_buckets(base, t, whole=False)
-    assert _rows(spark, f"{base}/t1") == [(1, "t1a", "b0000"), (2, "t1b2", "b0001")]
-    assert _rows(spark, f"{base}/t2") == [(1, "t2a", "b0000"), (2, "t2b2", "b0001")]
-    assert read_bucket_marker(f"{base}/t1") == 2
-    assert sorted(os.listdir(base)) == ["t1", "t2"]
+    # fresh store: both tables, one commit; then a no-op
+    fresh = str(tmp_path / "fresh")
+    assert auto_migrate(spark, fresh) == 1
+    assert set(TxLog(fresh).latest()[1]) == {"items", "partitions"}
+    assert auto_migrate(spark, fresh) == 1
+    assert TxLog(fresh).latest()[0] == 1
 
 
 def test_healthcheck_all_green(spark):
@@ -87,54 +62,6 @@ def test_http_healthcheck_status_mapping():
         raise AssertionError("expected raise")
     except RuntimeError as e:
         assert "503" in str(e)
-
-
-def test_flip_buckets_recovers_from_stale_dirs(spark, tmp_path):
-    """A crash between a flip's rename and its cleanup leaves non-empty
-    ``*_txn_old`` dirs behind; the next flip must go through instead of
-    wedging on ENOTEMPTY, and leave no aside dir."""
-    from gofeed_spark.feedstate.admin import flip_buckets
-
-    base = str(tmp_path)
-    _stage(spark, base, "t1", [(1, "a", "b0000"), (2, "b", "b0001")])
-    flip_buckets(base, "t1", whole=True)
-    for stale in ("t1_txn_old", "t1_txn_old_b=b0001"):
-        os.makedirs(f"{base}/{stale}")
-        open(f"{base}/{stale}/leftover", "w").write("x")
-    _stage(spark, base, "t1", [(2, "b2", "b0001")])
-    flip_buckets(base, "t1", whole=False)
-    assert _rows(spark, f"{base}/t1") == [(1, "a", "b0000"), (2, "b2", "b0001")]
-    _stage(spark, base, "t1", [(3, "c", "b0000")])
-    flip_buckets(base, "t1", whole=True)
-    assert _rows(spark, f"{base}/t1") == [(3, "c", "b0000")]
-    assert sorted(os.listdir(base)) == ["t1"]
-
-
-def test_recover_bucketed_crash_windows(spark, tmp_path):
-    """Each crash window of a bucket flip, then ``recover_bucketed``: an
-    aside dir whose bucket (or table) is missing is restored, one whose
-    bucket is present is removed — a read then sees every row once."""
-    import shutil
-
-    from gofeed_spark.feedstate.admin import flip_buckets, recover_bucketed
-
-    base = str(tmp_path)
-    rows = [(1, "a", "b0000"), (2, "b", "b0001"), (3, "c", "b0001")]
-    _stage(spark, base, "t", rows)
-    flip_buckets(base, "t", whole=True)
-    # case 1: the live bucket was renamed aside, its replacement never in
-    os.replace(f"{base}/t/b=b0001", f"{base}/t_txn_old_b=b0001")
-    recover_bucketed(base, ["t"])
-    assert _rows(spark, f"{base}/t") == rows
-    # case 2: the replacement is in, the aside dir was never removed
-    shutil.copytree(f"{base}/t/b=b0000", f"{base}/t_txn_old_b=b0000")
-    recover_bucketed(base, ["t"])
-    assert _rows(spark, f"{base}/t") == rows
-    # whole-table flip: the table was renamed aside, the staging never in
-    os.replace(f"{base}/t", f"{base}/t_txn_old")
-    recover_bucketed(base, ["t"])
-    assert _rows(spark, f"{base}/t") == rows
-    assert sorted(os.listdir(base)) == ["t"]
 
 
 def test_served_healthcheck_endpoint(spark):

@@ -18,6 +18,7 @@ from gofeed_spark.feedstate.dbstore import DbApiStore
 from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE, FAILED
 from gofeed_spark.feedstate.processors import json_times_processor
 from gofeed_spark.sources.feed_cdc import _COLS
+from gofeed_spark.streaming import feed_runner
 from gofeed_spark.streaming.feed_runner import FeedRunner
 
 
@@ -389,20 +390,23 @@ def test_two_prefixed_feeds_share_one_database(spark, tmp_path):
 
 def test_auto_migrate_table_prefix(spark, tmp_path):
     from gofeed_spark.feedstate.admin import auto_migrate
+    from gofeed_spark.feedstate.txlog import TxLog
 
-    paths = auto_migrate(spark, str(tmp_path), table_prefix="blue_")
-    assert set(paths) == {"blue_items", "blue_partitions"}
-    assert spark.read.parquet(paths["blue_items"]).columns[0] == "id"
+    auto_migrate(spark, str(tmp_path), table_prefix="blue_")
+    log = TxLog(str(tmp_path))
+    assert set(log.latest()[1]) == {"blue_items", "blue_partitions"}
+    assert log.read(spark, "blue_items").columns[0] == "id"
 
 
-def test_runner_fanout_read_drains_correctly(spark, tmp_path):
-    """fanout_rows below the active-set size flips the micro-batch read to
+def test_runner_fanout_read_drains_correctly(spark, tmp_path, monkeypatch):
+    """FANOUT_ROWS below the active-set size flips the micro-batch read to
     the executor-side range fan-out; the drain must be byte-equivalent to
     the driver-read path."""
+    monkeypatch.setattr(feed_runner, "FANOUT_ROWS", 8)
     base = str(tmp_path / "feed_fanout")
     runner = FeedRunner(
         spark, base, json_times_processor, max_retries=3, auto_close=True,
-        storage="dbapi", fanout_rows=8,
+        storage="dbapi",
     )
     runner.db.seed(
         items_rows=[

@@ -17,24 +17,38 @@ from gofeed_spark.feedstate.model import (
     AVAILABLE,
     COMPLETE,
     FAILED,
+    ITEM_FIXTURE,
+    PARTITION_FIXTURE,
     seed_dataframes,
 )
 from gofeed_spark.feedstate.processors import json_times_processor
+from gofeed_spark.feedstate.txlog import TxLog
+from gofeed_spark.streaming import feed_runner
 from gofeed_spark.streaming.feed_runner import FeedRunner
 
 
 def _seed(spark, base):
+    """The golden fixture committed as one plain txlog manifest."""
     parts, items = seed_dataframes(spark)
-    os.makedirs(base, exist_ok=True)
-    items.withColumn("updated_at", F.lit(0).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "items"))
-    parts.write.mode("overwrite").parquet(os.path.join(base, "partitions"))
+    log = TxLog(base)
+    log.commit(
+        {
+            "items": items.withColumn("updated_at", F.lit(0).cast("long")),
+            "partitions": parts,
+        }
+    )
+    return log
 
 
 def test_streaming_feed_reaches_reference_goldens(spark, tmp_path):
+    """The reference goldens on the streaming path, with state committed
+    through the multi-writer TxLog: every micro-batch lands as one atomic
+    two-table manifest commit, and the CDC source polls through the
+    manifest (backend='txlog')."""
+    from gofeed_spark.feedstate.txlog import CommitConflict
+
     base = str(tmp_path / "feed")
-    _seed(spark, base)
+    log = _seed(spark, base)
     runner = FeedRunner(
         spark, base, json_times_processor, max_retries=3, auto_close=True
     )
@@ -57,54 +71,6 @@ def test_streaming_feed_reaches_reference_goldens(spark, tmp_path):
     assert parts["p2_gate"] == (FAILED, 0)
     assert all(s == COMPLETE for p, (s, g) in parts.items() if p.startswith("p1"))
 
-    # dead-letter log: exactly the items that transitioned to Failed, once
-    dead = spark.read.parquet(os.path.join(base, "dead_letter"))
-    dl = sorted(r.id for r in dead.collect())
-    assert dl == ["s10_ready_should_fail", "s13_gate_fail", "s6_owned_should_fail"]
-    assert all(r.retry_count == 4 for r in dead.collect())  # MaxRetries=3 + 1
-    assert all("moving to failed item" in r.error_messages for r in dead.collect())
-
-    # crash-idempotency: re-delivering an already-committed batch is a no-op
-    before = {tuple(r) for r in runner.items().collect()}
-    poison = spark.createDataFrame([(1,)], "x int")
-    runner._step(poison, runner._committed()[-1])
-    after = {tuple(r) for r in runner.items().collect()}
-    assert after == before
-
-
-def test_feed_runner_on_txlog_storage(spark, tmp_path):
-    """The same golden run with state committed through the multi-writer
-    TxLog: every micro-batch lands as one atomic two-table manifest commit,
-    and the CDC source polls through the manifest (backend='txlog')."""
-    from gofeed_spark.feedstate.txlog import TxLog
-
-    base = str(tmp_path / "feed_tx")
-    parts, items = seed_dataframes(spark)
-    log = TxLog(base)
-    log.commit(
-        {
-            "items": items.withColumn("updated_at", F.lit(0).cast("long")),
-            "partitions": parts,
-        }
-    )
-    runner = FeedRunner(
-        spark, base, json_times_processor, max_retries=3, auto_close=True,
-        storage="txlog",
-    )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        runner.run_available()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    items_out = {r.id: r for r in runner.items().collect()}
-    assert items_out["s1_ready"].status == COMPLETE
-    assert items_out["s2_fail"].status == FAILED
-    assert items_out["s6_owned_should_fail"].status == FAILED
-    parts_out = {r.id: (r.status, r.gate) for r in runner.partitions().collect()}
-    assert parts_out["p1_gate"] == (COMPLETE, 1)
-    assert parts_out["p2_gate"] == (FAILED, 0)
     # one manifest version per committed micro-batch, atop the seed commit
     # (the legacy→bucketed layout conversion folds into the first batch
     # commit — it costs no extra version)
@@ -119,14 +85,23 @@ def test_feed_runner_on_txlog_storage(spark, tmp_path):
     # never misread the layout's bucket count
     assert any(k.startswith("items@m16b") for k in tables)
     assert any(k.startswith("partitions@m16b") for k in tables)
-    dl = sorted(r.id for r in runner.dead_letters().collect())
+
+    # dead-letter log: exactly the items that transitioned to Failed, once
+    dead = runner.dead_letters()
+    dl = sorted(r.id for r in dead.collect())
     assert dl == ["s10_ready_should_fail", "s13_gate_fail", "s6_owned_should_fail"]
+    assert all(r.retry_count == 4 for r in dead.collect())  # MaxRetries=3 + 1
+    assert all("moving to failed item" in r.error_messages for r in dead.collect())
+
+    # crash-idempotency: re-delivering an already-committed batch is a no-op
+    before = {tuple(r) for r in runner.items().collect()}
+    poison = spark.createDataFrame([(1,)], "x int")
+    runner._step(poison, runner._committed()[-1])
+    after = {tuple(r) for r in runner.items().collect()}
+    assert after == before
+
     # a stale-expected commit from "another writer" conflicts cleanly
-    import pytest as _pytest
-
-    from gofeed_spark.feedstate.txlog import CommitConflict
-
-    with _pytest.raises(CommitConflict):
+    with pytest.raises(CommitConflict):
         log.commit({"items": runner._items_with_ts()}, expected_version=0)
 
 
@@ -241,52 +216,18 @@ def _two_phase_fixture(spark, n_done=1900, n_work=10):
     return pdf, idf
 
 
-def test_parquet_writes_scale_with_work_done(spark, tmp_path):
-    """The scale posture of the bucketed parquet store: the first batch
-    converts the legacy table wholesale (full write), but every later
-    batch rewrites ONLY buckets containing touched rows — bytes written
-    per batch track the touched-row count, not the table size."""
-    base = str(tmp_path / "feed_bw")
-    os.makedirs(base)
-    pdf, idf = _two_phase_fixture(spark)
-    idf.write.mode("overwrite").parquet(os.path.join(base, "items"))
-    pdf.drop("updated_at", "b").write.mode("overwrite").parquet(
-        os.path.join(base, "partitions")
-    )
-    runner = FeedRunner(
-        spark, base, json_times_processor, max_retries=3, state_buckets=64
-    )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        runner.run_available()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    items = {r.id: r for r in runner.items().collect()}
-    assert all(items[f"w{i}"].status == COMPLETE for i in range(10))
-    hist = list(runner.write_history)
-    assert len(hist) >= 2  # conversion batch + at least one delta batch
-    full = hist[0]["items"]  # conversion: whole 1910-row table
-    deltas = [h.get("items", 0) for h in hist[1:]]
-    # later batches rewrite only the touched buckets (10 ids hash into at
-    # most 10 of 64 buckets; the conversion wrote all of them)
-    assert max(deltas) < full * 0.4, hist
-    assert runner.last_write_bytes is not None
-
-
-def test_txlog_carries_untouched_buckets_by_name(spark, tmp_path):
+def test_txlog_carries_untouched_buckets_by_name(spark, tmp_path, monkeypatch):
     """TxLog bucketed commits: buckets without touched rows ride into the
     next manifest as the SAME snapshot-dir names — zero bytes rewritten —
-    while touched buckets get fresh dirs."""
-    from gofeed_spark.feedstate.txlog import TxLog
-
+    while touched buckets get fresh dirs, so bytes written per batch track
+    the touched-row count, not the table size."""
+    monkeypatch.setattr(feed_runner, "STATE_BUCKETS", 64)
     base = str(tmp_path / "feed_bwtx")
     pdf, idf = _two_phase_fixture(spark)
     log = TxLog(base)
     log.commit({"items": idf, "partitions": pdf})
     runner = FeedRunner(
         spark, base, json_times_processor, max_retries=3, storage="txlog",
-        state_buckets=64,
     )
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -305,59 +246,24 @@ def test_txlog_carries_untouched_buckets_by_name(spark, tmp_path):
     shared = [k for k, v in conv_items.items() if final.get(k) == v]
     assert len(conv_items) >= 8
     assert len(shared) >= len(conv_items) // 2, (conv_items, final)
+    # the first batch converts the legacy table wholesale (full write);
+    # every later batch rewrites ONLY buckets containing touched rows
+    hist = list(runner.write_history)
+    assert len(hist) >= 2  # conversion batch + at least one delta batch
+    full = hist[0]["items"]  # conversion: whole 1910-row table
+    deltas = [h.get("items", 0) for h in hist[1:]]
+    # later batches rewrite only the touched buckets (10 ids hash into at
+    # most 10 of 64 buckets; the conversion wrote all of them)
+    assert max(deltas) < full * 0.4, hist
+    assert runner.last_write_bytes is not None
 
 
-def test_parquet_bucket_growth_and_modulus_adoption(spark, tmp_path):
-    """Size-tiered buckets + the layout owning its modulus (parquet): a
-    tiny bucket_target_bytes forces growth to max_state_buckets mid-drain
-    (in-commit conversion, marker stamped atomically with the data), and a
-    restart with a DIFFERENT state_buckets argument ADOPTS the layout's
-    recorded modulus instead of mixing two moduli over one table."""
-    from gofeed_spark.feedstate.admin import read_bucket_marker
-
-    base = str(tmp_path / "feed_grow")
-    os.makedirs(base)
-    pdf, idf = _two_phase_fixture(spark)
-    idf.write.mode("overwrite").parquet(os.path.join(base, "items"))
-    pdf.write.mode("overwrite").parquet(os.path.join(base, "partitions"))
-    runner = FeedRunner(
-        spark, base, json_times_processor, max_retries=3,
-        state_buckets=8, bucket_target_bytes=1, max_state_buckets=32,
-    )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        runner.run_available()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    # growth ran: the layout is now 32 buckets and says so in its marker
-    assert runner.state_buckets == 32
-    assert read_bucket_marker(os.path.join(base, "items")) == 32
-    buckets = [
-        int(e[len("b=b"):]) for e in os.listdir(os.path.join(base, "items"))
-        if e.startswith("b=b")
-    ]
-    assert buckets and all(v < 32 for v in buckets)
-    # no duplication or stranding across the conversions
-    items = runner.items()
-    assert items.count() == 1910 == items.select("id").distinct().count()
-    st = {r.id: r.status for r in items.collect()}
-    assert all(st[f"w{i}"] == COMPLETE for i in range(10))
-    # restart with a disagreeing ctor argument: the layout wins
-    runner2 = FeedRunner(
-        spark, base, json_times_processor, max_retries=3, state_buckets=8
-    )
-    assert runner2.state_buckets == 32 and runner2.bucket_count_adopted
-    assert runner2.items().count() == 1910
-
-
-def test_txlog_bucket_growth_and_modulus_adoption(spark, tmp_path):
-    """Txlog twin: bucket keys carry their modulus (``@m{n}bNNNN``), a
-    restarted runner adopts the stamped modulus over its ctor argument,
-    and size-tiered growth re-buckets in-commit — the final manifest holds
-    exactly ONE modulus, never a mix."""
-    from gofeed_spark.feedstate.txlog import TxLog
-
+def test_txlog_bucket_growth_and_modulus_adoption(spark, tmp_path, monkeypatch):
+    """Bucket keys carry their modulus (``@m{n}bNNNN``), a restarted
+    runner adopts the stamped modulus over ``STATE_BUCKETS``, and
+    size-tiered growth re-buckets in-commit up to ``MAX_STATE_BUCKETS`` —
+    the final manifest holds exactly ONE modulus, never a mix, and no row
+    is duplicated or stranded."""
     base = str(tmp_path / "feed_growtx")
     parts, items = seed_dataframes(spark)
     log = TxLog(base)
@@ -378,10 +284,12 @@ def test_txlog_bucket_growth_and_modulus_adoption(spark, tmp_path):
         _, tables = log.latest()
         assert any(k.startswith("items@m16b") for k in tables)
         # restart asking for 64: the stamped layout (16) wins
+        monkeypatch.setattr(feed_runner, "STATE_BUCKETS", 64)
+        monkeypatch.setattr(feed_runner, "BUCKET_TARGET_BYTES", 1)
+        monkeypatch.setattr(feed_runner, "MAX_STATE_BUCKETS", 64)
         runner2 = FeedRunner(
             spark, base, json_times_processor, max_retries=3, auto_close=True,
-            storage="txlog", state_buckets=64, bucket_target_bytes=1,
-            max_state_buckets=64,
+            storage="txlog",
         )
         assert runner2.state_buckets == 16 and runner2.bucket_count_adopted
         # requeue (rewrites only its touched buckets) + drain: the tiny
@@ -546,14 +454,7 @@ def test_run_forever_service_mode_processes_and_stops(spark, tmp_path):
         deadline = time.time() + 180
         items = {}
         while time.time() < deadline:
-            try:
-                items = {r.id: r.status for r in runner.items().collect()}
-            except Exception:
-                # the parquet store is replaced per tick; a poll that lands
-                # mid-replace sees missing files — the live-concurrent
-                # store is txlog (tested elsewhere), this poll just retries
-                time.sleep(1)
-                continue
+            items = {r.id: r.status for r in runner.items().collect()}
             if items.get("s1_ready") == COMPLETE and items.get("s14_gate") == COMPLETE:
                 break
             time.sleep(2)
@@ -589,12 +490,11 @@ def test_requeue_dead_letters_recovers_after_fix(spark, tmp_path):
 
     from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
     from gofeed_spark.feedstate.processors import ProcResult, json_times_processor
-    from gofeed_spark.feedstate.txlog import TxLog
 
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        for storage in ("parquet", "txlog", "dbapi"):
+        for storage in ("txlog", "dbapi"):
             base = str(tmp_path / f"requeue_{storage}")
             os.makedirs(base, exist_ok=True)
             marker = os.path.join(base, "fixed.marker")
@@ -623,15 +523,7 @@ def test_requeue_dead_letters_recovers_after_fix(spark, tmp_path):
                 parts = spark.createDataFrame(
                     [("p1", 0, 0, AVAILABLE)], PARTITION_DDL
                 )
-                if storage == "txlog":
-                    TxLog(base).commit({"items": items, "partitions": parts})
-                else:
-                    items.write.mode("overwrite").parquet(
-                        os.path.join(base, "items")
-                    )
-                    parts.write.mode("overwrite").parquet(
-                        os.path.join(base, "partitions")
-                    )
+                TxLog(base).commit({"items": items, "partitions": parts})
                 runner = FeedRunner(
                     spark, base, proc, max_retries=2, auto_close=True,
                     storage=storage,
@@ -657,16 +549,17 @@ def test_requeue_dead_letters_recovers_after_fix(spark, tmp_path):
 
 
 def test_maintain_compacts_dead_letters_and_vacuums_txlog(spark, tmp_path):
-    """The off-hot-path maintenance job: parquet mode compacts the
+    """The off-hot-path maintenance job: dbapi mode compacts the
     accreting dead-letter appends without changing their contents; txlog
     mode reclaims snapshot dirs superseded beyond the retention window."""
 
-    # parquet: the golden fixture's failing items produce dead-letter
+    # dbapi: the golden fixture's failing items produce dead-letter
     # appends across batches (json_times_processor returns error results,
     # the retry budget exhausts, transitions land per batch)
     base = str(tmp_path / "mt")
-    _seed(spark, base)
-    runner = FeedRunner(spark, base, json_times_processor, max_retries=1)
+    runner = _store(
+        spark, base, "dbapi", ITEM_FIXTURE, PARTITION_FIXTURE, max_retries=1
+    )
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -691,18 +584,8 @@ def test_maintain_compacts_dead_letters_and_vacuums_txlog(spark, tmp_path):
     assert dead_after == dead_before  # compaction never changes contents
 
     # txlog: superseded state-bucket snapshots reclaim once aged out
-    from gofeed_spark.feedstate.model import seed_dataframes
-    from gofeed_spark.feedstate.txlog import TxLog
-
     base2 = str(tmp_path / "mt_tx")
-    parts, items = seed_dataframes(spark)
-    log = TxLog(base2)
-    log.commit(
-        {
-            "items": items.withColumn("updated_at", F.lit(0).cast("long")),
-            "partitions": parts,
-        }
-    )
+    _seed(spark, base2)
     r2 = FeedRunner(
         spark, base2, json_times_processor, max_retries=3, storage="txlog"
     )
@@ -722,7 +605,6 @@ def _store(spark, base, storage, item_rows, part_rows, processor=json_times_proc
     """A runner over a fresh ``storage`` store seeded with ``item_rows``
     (ITEM_DDL tuples) and ``part_rows``."""
     from gofeed_spark.feedstate.model import ITEM_DDL, PARTITION_DDL
-    from gofeed_spark.feedstate.txlog import TxLog
 
     os.makedirs(base)
     if storage == "dbapi":
@@ -735,15 +617,11 @@ def _store(spark, base, storage, item_rows, part_rows, processor=json_times_proc
         "updated_at", F.lit(0).cast("long")
     )
     parts = spark.createDataFrame(part_rows, PARTITION_DDL)
-    if storage == "txlog":
-        TxLog(base).commit({"items": items, "partitions": parts})
-    else:
-        items.write.parquet(os.path.join(base, "items"))
-        parts.write.parquet(os.path.join(base, "partitions"))
+    TxLog(base).commit({"items": items, "partitions": parts})
     return FeedRunner(spark, base, processor, storage=storage, **kw)
 
 
-@pytest.mark.parametrize("storage", ["parquet", "txlog", "dbapi"])
+@pytest.mark.parametrize("storage", ["txlog", "dbapi"])
 def test_gate_advance_requeues_waiting_items(spark, tmp_path, storage):
     """The micro-batch that advances a partition's gate processes no item
     (none sits at the old gate), so it changes no item row; the items
@@ -769,13 +647,11 @@ def test_gate_advance_requeues_waiting_items(spark, tmp_path, storage):
     assert parts == {"p1": (COMPLETE, 1)}, parts
 
 
-@pytest.mark.parametrize("storage", ["parquet", "txlog"])
-def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
+def test_requeue_keeps_bucketed_layout(spark, tmp_path):
     """A requeue publishes like a micro-batch: it rewrites only the
     buckets its rows touch and keeps the layout's modulus record — the
-    txlog manifest keeps only ``@m16b`` keys, the parquet table keeps its
-    ``_n_buckets`` marker and every part file inside a ``b=`` dir."""
-    from gofeed_spark.feedstate.admin import _dir_bytes, read_bucket_marker
+    txlog manifest keeps only ``@m16b`` keys."""
+    from gofeed_spark.feedstate.admin import _dir_bytes
 
     settled = [
         (f"d{i}", 1, 0, f"q{i % 8}", 0, COMPLETE, "", '{"times":1}')
@@ -783,8 +659,8 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
     ]
     rows = settled + [("x", 0, 0, "p1", 0, AVAILABLE, "", '{"times":1,"fail":true}')]
     parts = [(f"q{i}", 1, 0, COMPLETE) for i in range(8)] + [("p1", 0, 0, AVAILABLE)]
-    base = str(tmp_path / storage)
-    runner = _store(spark, base, storage, rows, parts, max_retries=0)
+    base = str(tmp_path / "txlog")
+    runner = _store(spark, base, "txlog", rows, parts, max_retries=0)
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -794,8 +670,6 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
     assert {r.id: r.status for r in runner.items().collect()}["x"] == FAILED
 
     def items_bytes():
-        if storage == "parquet":
-            return _dir_bytes(os.path.join(base, "items"))
         _, tables = runner.log.latest()
         return sum(
             _dir_bytes(os.path.join(base, v))
@@ -809,18 +683,10 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path, storage):
     assert last["batch_id"] is None and 0 < last["items"] < full / 2, (last, full)
     st = {r.id: (r.status, r.retry_count) for r in runner.items().collect()}
     assert st["x"] == (AVAILABLE, 0) and len(st) == 401
-    if storage == "txlog":
-        _, tables = runner.log.latest()
-        for t in ("items", "partitions"):
-            keys = [k for k in tables if k == t or k.startswith(t + "@")]
-            assert keys and all(k.startswith(f"{t}@m16b") for k in keys), keys
-    else:
-        for t in ("items", "partitions"):
-            path = os.path.join(base, t)
-            assert read_bucket_marker(path) == 16
-            for root, _, files in os.walk(path):
-                parts_here = [f for f in files if f.endswith(".parquet")]
-                assert not parts_here or os.path.basename(root).startswith("b="), root
+    _, tables = runner.log.latest()
+    for t in ("items", "partitions"):
+        keys = [k for k in tables if k == t or k.startswith(t + "@")]
+        assert keys and all(k.startswith(f"{t}@m16b") for k in keys), keys
 
 
 def _slow_processor(item_id: str, data: str):

@@ -16,6 +16,8 @@ from gofeed_spark.feedstate.txlog import (
     ConditionalPutClaim,
     LinkClaim,
     TxLog,
+    latest_manifest,
+    table_snapshots,
 )
 
 
@@ -217,3 +219,43 @@ def test_vacuum_reclaims_stale_manifest_temp(spark, tmp_path):
     assert os.path.join("_txlog", ".tmp_00000002_deadbeef.json") in removed
     assert not os.path.exists(stale)
     assert log.latest()[0] == 1  # published manifests untouched
+
+
+def test_manifest_rules_name_each_tables_snapshots(spark, tmp_path):
+    """The one manifest rule every reader shares (FeedRunner, its dead
+    letters, the CDC poll): a table owns its plain entry and its
+    ``{table}@…`` keys, never another feed's prefixed keys; and the newest
+    complete manifest resolves without creating ``_txlog/``."""
+    from gofeed_spark.sources.feed_cdc import _scan_txlog
+
+    tables = {
+        "items": "items__v00000001_aa",
+        "items@b0003": "items@b0003__v_bb",
+        "items@m16b0001": "items@m16b0001__v_cc",
+        "partitions@m16b0000": "partitions@m16b0000__v_cc",
+        "dead_letter@d_cc": "dead_letter@d_cc__v00000002_dd",
+        "blue_items@m16b0001": "blue_items@m16b0001__v_ee",
+        "items_archive": "items_archive__v00000001_ff",
+    }
+    assert list(table_snapshots(tables, "items").values()) == [
+        "items__v00000001_aa", "items@b0003__v_bb", "items@m16b0001__v_cc",
+    ]
+    assert list(table_snapshots(tables, "partitions").values()) == [
+        "partitions@m16b0000__v_cc",
+    ]
+    assert list(table_snapshots(tables, "dead_letter").values()) == [
+        "dead_letter@d_cc__v00000002_dd",
+    ]
+    assert list(table_snapshots(tables, "blue_items")) == ["blue_items@m16b0001"]
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert latest_manifest(str(empty)) == (0, {})
+    assert _scan_txlog(str(empty), -1) == []
+    assert not (empty / "_txlog").exists()
+
+    base = str(tmp_path / "log")
+    log = TxLog(base)
+    log.commit({"t": df(spark, (1, "x"))})
+    open(os.path.join(log.logdir, "00000002.json"), "w").close()  # burned
+    assert latest_manifest(base) == log.latest() and log.latest()[0] == 1

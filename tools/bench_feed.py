@@ -6,10 +6,10 @@ actual job is judged by, measured per storage backend.
     python tools/bench_feed.py [n_items] [n_parts] [store ...]
         [--settled N] [--target-bytes B]
 
-Defaults: 200000 items x 1000 partitions, stores parquet txlog dbapi
-(the three FeedRunner layouts).  Every item completes in one processor
-pass; the drain converges in one work round + one empty confirmation
-round, so items/sec ~= n_items / wall(run_available).
+Defaults: 200000 items x 1000 partitions, stores txlog dbapi (the two
+FeedRunner stores).  Every item completes in one processor pass; the
+drain is one streaming query that stops at the first trigger finding no
+new data, so items/sec ~= n_items / wall(run_available).
 
 ``--settled N`` switches to the settled-state profile: N extra COMPLETE
 items (in complete partitions, never touched by the drain) sit alongside
@@ -17,7 +17,7 @@ the active ones, and the active items take TWO processor passes — so the
 write trail shows [conversion, growth conversion if scheduled, delta,
 delta] and the LAST delta is the steady-state per-batch write volume for
 that table size.  Sweeping N across 1x/10x with a fixed --target-bytes
-(FeedRunner bucket_target_bytes) is the evidence that size-tiered bucket
+(sets feed_runner.BUCKET_TARGET_BYTES) is the evidence that size-tiered bucket
 growth keeps delta writes ~flat as the table grows.
 
 Prints ONE JSON line:
@@ -25,8 +25,8 @@ Prints ONE JSON line:
      "items_per_sec": {store: rate}, "wall_sec": {store: s},
      "write_bytes_per_batch": {store: [b0, b1, ...]}}
 
-``write_bytes_per_batch`` (parquet/txlog only) is the bucketed state
-store's staged bytes per committed micro-batch: the first batch converts +
+``write_bytes_per_batch`` (txlog only) is the bucketed state store's
+staged bytes per committed micro-batch: the first batch converts +
 writes the full state, later batches write only buckets containing touched
 rows — the per-batch trail is the evidence that write volume tracks work
 done, not table size.
@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from gofeed_spark.feedstate.model import AVAILABLE
 from gofeed_spark.feedstate.processors import json_times_processor
 from gofeed_spark.session import get_spark
+from gofeed_spark.streaming import feed_runner
 from gofeed_spark.streaming.feed_runner import FeedRunner
 
 
@@ -99,10 +100,7 @@ def _seed(
     n_settled: int = 0,
 ):
     parts, items = _frames(spark, n_items, n_parts, n_settled)
-    if store == "parquet":
-        items.write.mode("overwrite").parquet(runner.items_path)
-        parts.write.mode("overwrite").parquet(runner.parts_path)
-    elif store == "txlog":
+    if store == "txlog":
         runner.log.commit({runner.t_items: items, runner.t_parts: parts})
     else:  # dbapi: executemany through the store's own upsert SQL
         runner.db.seed(
@@ -112,17 +110,13 @@ def _seed(
 
 
 def bench_store(
-    spark, store: str, n_items: int, n_parts: int,
-    n_settled: int = 0, target_bytes: int | None = None,
+    spark, store: str, n_items: int, n_parts: int, n_settled: int = 0,
 ) -> tuple[float, list[int], int]:
     base = tempfile.mkdtemp(prefix=f"feed_bench_{store}_")
     try:
-        kw = {}
-        if target_bytes is not None:
-            kw["bucket_target_bytes"] = target_bytes
         runner = FeedRunner(
             spark, base, json_times_processor, max_retries=3,
-            auto_close=True, storage=store, **kw,
+            auto_close=True, storage=store,
         )
         _seed(spark, runner, store, n_items, n_parts, n_settled)
         t0 = time.perf_counter()
@@ -152,16 +146,17 @@ def main():
     if "--target-bytes" in args:
         i = args.index("--target-bytes")
         target_bytes = int(args[i + 1])
+        feed_runner.BUCKET_TARGET_BYTES = target_bytes
         del args[i : i + 2]
     n_items = int(args[0]) if len(args) > 0 else 200_000
     n_parts = int(args[1]) if len(args) > 1 else 1_000
-    stores = args[2:] or ["parquet", "txlog", "dbapi"]
+    stores = args[2:] or ["txlog", "dbapi"]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("feed-bench", master=f"local[{cpus}]")
     walls, rates, write_bytes, buckets = {}, {}, {}, {}
     for store in stores:
         wall, per_batch, n_buckets = bench_store(
-            spark, store, n_items, n_parts, n_settled, target_bytes
+            spark, store, n_items, n_parts, n_settled
         )
         walls[store] = round(wall, 2)
         rates[store] = round(n_items / wall)
