@@ -14,7 +14,8 @@ commit point: every artifact path resolves to a backend by URI scheme.
 Two backend SHAPES ship:
 
 - ``LocalFileSystem`` — POSIX; the default for schemeless / ``file:``
-  paths.  Atomic publish = write-temp + ``os.replace``.
+  paths.  Atomic publish = write a writer-unique temp + ``os.replace``;
+  create-if-absent = fsynced temp + ``os.link``.
 - ``ObjectStoreFileSystem`` — object-store SEMANTICS enforced by the base
   class over a pluggable four-op transport (get / put / list / delete):
   whole-object atomic PUT is the ONLY write, directories are virtual
@@ -39,6 +40,7 @@ from __future__ import annotations
 import os
 import posixpath
 import shutil
+import uuid
 
 
 class FsUnsupported(RuntimeError):
@@ -54,6 +56,39 @@ def _split_scheme(path: str) -> tuple[str, str]:
     if path.startswith("file:"):
         return "file", path[5:]
     return "", path
+
+
+def _write_temp(local: str, data: bytes, sync: bool = False) -> str:
+    """Write ``data`` to a writer-unique ``<local>.<token>.tmp`` sibling
+    (fsynced when ``sync``) and return its path; no temp survives a
+    failed write."""
+    os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+    tmp = f"{local}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "wb") as f:
+            f.write(data)
+            if sync:
+                f.flush()
+                os.fsync(f.fileno())
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return tmp
+
+
+def _link_if_absent(local: str, data: bytes) -> bool:
+    """Create-if-absent that publishes WHOLE: hard-link a complete,
+    fsynced temp into place (atomic and exclusive on POSIX — the
+    ``feedstate/txlog.py`` ``LinkClaim`` protocol), so no reader and no
+    crash ever sees an empty or partial object at ``local``."""
+    tmp = _write_temp(local, data, sync=True)
+    try:
+        os.link(tmp, local)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
 
 
 class FileSystem:
@@ -92,8 +127,9 @@ class FileSystem:
         """Create-if-absent publish: write ``data`` only if no object
         exists at ``path``; returns whether THIS call created it.  This is
         the commit-ARBITRATION primitive (two racing writers publishing
-        the same table version: exactly one True) — POSIX backends use
-        ``O_EXCL``, object stores a conditional PUT (``If-None-Match: *``).
+        the same table version: exactly one True), and the object appears
+        WHOLE or not at all — POSIX backends hard-link a complete temp,
+        object stores use a conditional PUT (``If-None-Match: *``).
         The base implementation is probe-then-put, which leaves the
         classic TOCTOU window; backends with a native conditional
         primitive MUST override (both in-repo backends do)."""
@@ -168,22 +204,15 @@ class LocalFileSystem(FileSystem):
 
     def put_bytes(self, path: str, data: bytes) -> None:
         local = self._local(path)
-        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        tmp = local + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, local)  # POSIX atomic publish
+        tmp = _write_temp(local, data)
+        try:
+            os.replace(tmp, local)  # POSIX atomic publish
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     def put_bytes_if_absent(self, path: str, data: bytes) -> bool:
-        local = self._local(path)
-        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        try:
-            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        return True
+        return _link_if_absent(self._local(path), data)
 
     def delete(self, path: str) -> None:
         try:
@@ -372,16 +401,8 @@ class DirObjectStoreFileSystem(ObjectStoreFileSystem):
 
     def put_bytes_if_absent(self, path: str, data: bytes) -> bool:
         # the conditional-PUT analogue (If-None-Match: *) the real
-        # object-store subclass maps to its SDK; O_EXCL on the backing dir
-        local = self._backing(self._key(path))
-        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        try:
-            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        return True
+        # object-store subclass maps to its SDK: the object appears whole
+        return _link_if_absent(self._backing(self._key(path)), data)
 
     def _list(self, prefix: str):
         base = self._backing(prefix)

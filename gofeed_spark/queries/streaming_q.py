@@ -522,10 +522,11 @@ def q163(spark, sf_dir):
     streaming story (q159/q162 land streams INTO the formats; here a
     table some other engine keeps appending to is consumed AS a stream):
     three partitioned commits land first, then the ``delta_feed`` Python
-    DataSource (offsets = table VERSIONS, one InputPartition per data
-    file, executor-side Arrow reads — the driver never materializes
-    rows) delivers exactly each commit's added rows labeled with
-    ``_commit_version``; a streaming aggregation per (source, version)
+    DataSource (``sources/tablestream.py``'s one table reader; offsets =
+    table VERSIONS, byte-packed InputPartitions, executor-side Arrow
+    reads — the driver never materializes rows) delivers exactly each
+    commit's added rows labeled with ``_commit_version``, by the
+    ``read_delta_changes`` append rule; a streaming aggregation per (source, version)
     drains through the idempotent upsert sink, and the final per-source
     rollup — including the distinct-version count, which a lost or
     double-delivered commit would break — hash-matches the batch oracle.
@@ -535,7 +536,7 @@ def q163(spark, sf_dir):
 
     from gofeed_spark.catalog import load_table
     from gofeed_spark.sources import delta as D
-    from gofeed_spark.sources.delta_stream import read_delta_stream
+    from gofeed_spark.sources.tablestream import read_delta_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
@@ -603,11 +604,13 @@ def q164(spark, sf_dir):
     """STREAM **FROM** AN ICEBERG TABLE — completes the 2×2 table-interop
     streaming matrix (into-Delta q159, into-Iceberg q162, from-Delta
     q163, from-Iceberg here; seventh oracle-paired streaming query):
-    offsets are snapshot SEQUENCE NUMBERS, each micro-batch is the
-    incremental append scan of its window (added manifests only —
-    carried manifests never double-deliver), per-file executor Arrow
-    reads with typed identity partition values from the manifest
-    records; the per-(source, snapshot) aggregation drains through the
+    the ``iceberg_feed`` source (the same ``sources/tablestream.py``
+    reader as q163) offsets by snapshot SEQUENCE NUMBERS, and each
+    micro-batch is the incremental append scan of its window by the
+    ``read_iceberg_changes`` rule (only the ADDED entries of the
+    manifests a snapshot wrote — carried manifests and EXISTING entries
+    never double-deliver), per-file executor Arrow reads with typed
+    identity partition values from the manifest records; the per-(source, snapshot) aggregation drains through the
     idempotent sink and the per-source rollup (distinct snapshot count
     included) hash-matches the batch oracle."""
     import shutil
@@ -617,7 +620,7 @@ def q164(spark, sf_dir):
 
     from gofeed_spark.catalog import load_table
     from gofeed_spark.sources import iceberg as I
-    from gofeed_spark.sources.iceberg_stream import read_iceberg_stream
+    from gofeed_spark.sources.tablestream import read_iceberg_stream
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"

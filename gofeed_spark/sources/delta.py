@@ -36,7 +36,7 @@ ROW TRACKING (``write_delta(row_tracking=True)`` /
 Refusals are feature-precise (id-mode mapping, unknown readerFeatures).
 
 Concurrency: commits publish by a CREATE-IF-ABSENT put of
-``{version:020d}.json`` (O_EXCL / conditional PUT on the fs seam) — a
+``{version:020d}.json`` (hard link / conditional PUT on the fs seam) — a
 lost race surfaces as ``DeltaConcurrentWrite`` on the slower writer,
 never as a silently clobbered commit.
 
@@ -704,45 +704,17 @@ def read_delta_changes(
     end = snap.version
     if start_version > end:
         raise DeltaError(f"start_version {start_version} > end {end}")
-    log = _log_dir(path)
-    commits, _cps = _list_log(fs, log)
-    adds: list[tuple[str, dict]] = []
-    versions: list[int] = []
-    cdcs: list[tuple[str, dict]] = []
-    cdc_versions: list[int] = []
-    for v in range(start_version + 1, end + 1):
-        if v not in commits:
-            raise DeltaError(
-                f"commit {v} missing from the log (checkpoint-truncated?); "
-                "cannot enumerate changes"
-            )
-        actions = _read_actions(fs, log, v)
-        cdc_actions = [a["cdc"] for a in actions if "cdc" in a]
-        if cdc_actions and cdf:
-            for c in cdc_actions:
-                cdcs.append((urllib.parse.unquote(c["path"]), c))
-                cdc_versions.append(v)
-            continue  # cdc IS the commit's change data
-        for action in actions:
-            if "add" in action and action["add"].get("dataChange", True):
-                rel = urllib.parse.unquote(action["add"]["path"])
-                adds.append((rel, action["add"]))
-                versions.append(v)
-            elif "remove" in action and action["remove"].get("dataChange", True):
-                raise DeltaUnsupported(
-                    f"commit {v} removes data; append-only change reads "
-                    "cannot represent updates/deletes"
-                    + (
-                        " (the commit carries CDC files — pass cdf=True "
-                        "to read its update change data)"
-                        if cdc_actions
-                        else ""
-                    )
-                )
+    adds, cdcs = _change_window(fs, path, start_version, end, cdf)
+
+    def scan(changes, schema=None):
+        return _scan(
+            spark, fs, path, snap,
+            [(urllib.parse.unquote(a["path"]), a) for _v, a in changes],
+            schema=schema, extra=("_commit_version", [v for v, _a in changes]),
+        )
+
     schema = snap.schema
-    base = _scan(
-        spark, fs, path, snap, adds, extra=("_commit_version", versions)
-    )
+    base = scan(adds)
     if not cdf:
         return base
     out_cols = [*[f.name for f in schema.fields], "_change_type", "_commit_version"]
@@ -754,11 +726,115 @@ def read_delta_changes(
     cdc_schema = T.StructType(
         list(schema.fields) + [T.StructField("_change_type", T.StringType())]
     )
-    cdc_df = _scan(
-        spark, fs, path, snap, cdcs, schema=cdc_schema,
-        extra=("_commit_version", cdc_versions),
-    ).select(*out_cols)
+    cdc_df = scan(cdcs, cdc_schema).select(*out_cols)
     return base.unionByName(cdc_df)
+
+
+def _commit_adds(v: int, actions: list[dict]) -> list[dict]:
+    """Commit ``v``'s data-changing ``add`` actions — the append rule
+    :func:`read_delta_changes` and the ``delta_feed`` stream share.  A
+    data-changing ``remove`` raises :class:`DeltaUnsupported`: returning
+    the adds alone would misstate the change."""
+    adds = []
+    for action in actions:
+        if "add" in action and action["add"].get("dataChange", True):
+            adds.append(action["add"])
+        elif "remove" in action and action["remove"].get("dataChange", True):
+            raise DeltaUnsupported(
+                f"commit {v} removes data; the append-only stream and change "
+                "reads cannot represent updates/deletes"
+                + (
+                    " (the commit carries CDC files — pass cdf=True to "
+                    "read_delta_changes for its update change data)"
+                    if any("cdc" in a for a in actions)
+                    else ""
+                )
+            )
+    return adds
+
+
+def _change_window(
+    fs: FileSystem, path: str, lo: int, hi: int, cdf: bool = False
+) -> tuple[list[tuple[int, dict]], list[tuple[int, dict]]]:
+    """``([(version, add)], [(version, cdc)])`` of the commits in
+    ``(lo, hi]`` under :func:`_commit_adds`; with ``cdf`` a commit that
+    carries ``cdc`` actions contributes those instead (they ARE its
+    change data).  A commit missing from the log (checkpoint-truncated)
+    raises: its changes cannot be enumerated."""
+    log = _log_dir(path)
+    commits = set(_list_log(fs, log)[0])
+    adds: list[tuple[int, dict]] = []
+    cdcs: list[tuple[int, dict]] = []
+    for v in range(lo + 1, hi + 1):
+        if v not in commits:
+            raise DeltaError(
+                f"commit {v} missing from the log (checkpoint-truncated?); "
+                "cannot enumerate changes"
+            )
+        actions = _read_actions(fs, log, v)
+        cdc = [a["cdc"] for a in actions if "cdc" in a]
+        if cdf and cdc:
+            cdcs += [(v, c) for c in cdc]
+        else:
+            adds += [(v, a) for a in _commit_adds(v, actions)]
+    return adds, cdcs
+
+
+class DeltaFeedLog:
+    """What the ``delta_feed`` stream (``sources/tablestream.py``) reads
+    from the log: offsets are table VERSIONS, and a window's files are
+    its commits' data-changing adds (:func:`_change_window`)."""
+
+    name = "delta_feed"
+    start_option, start_default = "starting_version", -1
+    offset_key = "version"
+    label = "_commit_version"
+    unsupported = DeltaUnsupported
+
+    def __init__(self, path: str):
+        self.fs, self.path = get_filesystem(path), path
+        snap = _snapshot(self.fs, path)
+        self.schema = snap.schema
+        self.pcols = snap.partition_columns
+        # column-mapped tables: data files and partitionValues use
+        # PHYSICAL names
+        self.mapping = snap.column_mapping or {}
+
+    def physical(self, col: str) -> str:
+        return self.mapping.get(col, col)
+
+    def latest(self):
+        """(head version, per-version (files, bytes) added)."""
+        commits, checkpoints = _list_log(self.fs, _log_dir(self.path))
+        if not commits and not checkpoints:
+            raise DeltaError(f"not a Delta table: {self.path}")
+        return max(commits + checkpoints), self._stats
+
+    def _stats(self, v: int) -> tuple[int, int]:
+        # a missing commit (checkpoint-truncated log) counts (0, 0) so
+        # pacing never crashes; window() raises its own clean error
+        try:
+            adds = _commit_adds(v, _read_actions(self.fs, _log_dir(self.path), v))
+        except (OSError, DeltaError):
+            return 0, 0
+        return len(adds), sum(int(a.get("size") or 0) for a in adds)
+
+    def window(self, lo: int, hi: int) -> list[tuple]:
+        """(spark path, {partition column: raw value}, version, size) per
+        file the commits in ``(lo, hi]`` added."""
+        root = self.path.rstrip("/")
+        out = []
+        for v, add in _change_window(self.fs, self.path, lo, hi)[0]:
+            pv = add.get("partitionValues") or {}
+            out.append((
+                self.fs.spark_path(
+                    self.fs.join(root, urllib.parse.unquote(add["path"]))
+                ),
+                {c: pv.get(self.physical(c), pv.get(c)) for c in self.pcols},
+                v,
+                add.get("size", 0),
+            ))
+        return out
 
 
 def delta_history(path: str) -> list[dict]:
@@ -912,7 +988,7 @@ def _publish_commit(
     fs: FileSystem, path: str, version: int, actions: list[dict]
 ) -> None:
     """Commit arbitration: create-if-absent PUT of the version's JSON
-    (O_EXCL / conditional PUT on the fs seam) — two racing writers get
+    (hard link / conditional PUT on the fs seam) — two racing writers get
     exactly one winner, never a silent clobber."""
     commit_path = fs.join(_log_dir(path), _commit_name(version))
     payload = ("\n".join(json.dumps(a) for a in actions) + "\n").encode("utf-8")

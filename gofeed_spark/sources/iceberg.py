@@ -922,17 +922,10 @@ def read_iceberg_changes(
     snapshots in the window), replace snapshots stay invisible."""
     fs = get_filesystem(path)
     meta, _v = _load_metadata(fs, path)
+    _require_seqs(meta)
     snaps = sorted(
         meta.get("snapshots") or [], key=lambda s: s.get("sequence-number", 0)
     )
-    no_seq = [s["snapshot-id"] for s in snaps if "sequence-number" not in s]
-    if no_seq or meta.get("format-version", 2) == 1:
-        # v1 snapshots carry no sequence numbers: every window would be
-        # (0, 0] and the feed would be SILENTLY empty — fail loudly instead
-        raise IcebergUnsupported(
-            "incremental reads need snapshot sequence numbers "
-            f"(format-version 2); snapshots without one: {no_seq[:5]}"
-        )
     by_id = {s["snapshot-id"]: s for s in snaps}
     if from_snapshot_id != 0 and from_snapshot_id not in by_id:
         raise IcebergError(f"from snapshot {from_snapshot_id} does not exist")
@@ -949,96 +942,22 @@ def read_iceberg_changes(
         else 0
     )
     schema = _schema_from_iceberg(_current_schema(meta))
-    window = [
-        s
-        for s in snaps
-        if from_seq < s.get("sequence-number", 0) <= end.get("sequence-number", 0)
-    ]
-    # follow ONE branch: window members must be on the target's ANCESTOR
-    # CHAIN, so commits staged on other branches (sequence numbers are
-    # TABLE-global) never leak into this consumer's feed.  The FROM
-    # snapshot itself only contributes its sequence floor — a consumer
+    # the FROM snapshot only contributes its sequence floor — a consumer
     # positioned on a rolled-back/abandoned snapshot keeps reading the
-    # surviving chain above its floor (the seq-offset contract).
-    chain = _ancestor_ids(meta, end["snapshot-id"])
-    if chain is not None:
-        window = [s for s in window if s["snapshot-id"] in chain]
+    # surviving chain above its floor (the seq-offset contract)
+    window = _seq_window(
+        meta, from_seq, end.get("sequence-number", 0), end["snapshot-id"]
+    )
     entries: list[dict] = []
     snap_ids: list[int] = []
-    delete_snaps: list[dict] = []
+    delete_snaps: list[tuple[dict, list[dict]]] = []
     adds_by_snap: dict[int, list[dict]] = {}
-    for s in window:
-        op = (s.get("summary") or {}).get("operation")
-        if op == "replace":
-            # a compaction/rewrite: contents unchanged by contract, so an
-            # incremental consumer skips it (the dataChange=false twin)
-            continue
-        if op in ("delete", "overwrite"):
-            if not cdf:
-                raise IcebergUnsupported(
-                    f"snapshot {s['snapshot-id']} is {op!r}; append-only "
-                    "change reads cannot represent row deletions "
-                    "(pass cdf=True for the changelog form)"
-                )
-        elif op != "append":
-            raise IcebergUnsupported(
-                f"snapshot {s['snapshot-id']} is {op!r}; append-only "
-                "change reads cannot represent overwrites/deletes"
-            )
-        # an 'overwrite' here is a MERGE-shaped row delta (merge_iceberg:
-        # added delete files + added data files, every parent manifest
-        # carried by pointer) — its data adds are inserts and its delete
-        # files go through the hidden-row pass below; a TRUE
-        # file-replacing overwrite (status=2 entries, or parent manifests
-        # DROPPED from the list) is not representable as a changelog and
-        # refuses.
-        has_new_dels = False
-        manifests, added, deleted = _added_entries(fs, s)
-        if op == "overwrite":
-            pid = s.get("parent-snapshot-id")
-            parent_snap = by_id.get(pid) if pid is not None else None
-            if parent_snap is not None:
-                _s3, _m3, pmfs = _read_avro(fs, parent_snap["manifest-list"])
-                carried = {mf["manifest_path"] for mf in manifests}
-                dropped = {
-                    m["manifest_path"] for m in pmfs
-                } - carried
-                if dropped:
-                    raise IcebergUnsupported(
-                        f"snapshot {s['snapshot-id']} is a file-replacing "
-                        "overwrite (parent manifests dropped); the "
-                        "changelog cannot represent it"
-                    )
-        if deleted and op in ("overwrite", "delete"):
-            # a rewritten manifest (file-level overwrite, or a foreign
-            # COPY-ON-WRITE delete) — not representable as a changelog;
-            # refusing beats fabricating rows
-            raise IcebergUnsupported(
-                f"snapshot {s['snapshot-id']} ({op}) replaces "
-                "data files; the changelog cannot represent it"
-            )
-        for _mf, e in added:
-            d = e.get("data_file") or {}
-            if _get(d, "content", default=0) in (1, 2):
-                has_new_dels = True
-                continue  # the hidden-row pass reads these
-            if op == "delete":
-                # a merge-on-read delete snapshot adds ONLY delete
-                # files; data-file entries here mean a foreign
-                # copy-on-write form whose survivors would be misread
-                # as inserts — refuse loudly
-                raise IcebergUnsupported(
-                    f"snapshot {s['snapshot-id']} (delete) adds data "
-                    "files (copy-on-write delete); the changelog "
-                    "cannot represent it"
-                )
-            if str(d.get("file_format", "")).upper() != "PARQUET":
-                raise IcebergUnsupported("non-parquet data file")
-            entries.append(d)
-            snap_ids.append(s["snapshot-id"])
-            adds_by_snap.setdefault(s["snapshot-id"], []).append(d)
-        if has_new_dels:
-            delete_snaps.append(s)
+    for s, datas, dels in _appended(fs, meta, window, cdf):
+        entries += datas
+        snap_ids += [s["snapshot-id"]] * len(datas)
+        adds_by_snap[s["snapshot-id"]] = datas
+        if dels:
+            delete_snaps.append((s, dels))
     base = _scan(spark, fs, meta, entries, extra=("_snapshot_id", snap_ids))
     if not cdf:
         return base
@@ -1090,7 +1009,7 @@ def read_iceberg_changes(
     # non-append/unknown link falls back to the from-scratch derivation.
     memo_id: int | None = None
     memo_live = None
-    for s in delete_snaps:
+    for s, new_dels in delete_snaps:
         # the ACTUAL parent, not previous-by-sequence: after a rollback
         # the previous-by-sequence snapshot is the rolled-back-FROM state
         # and hidden rows would be computed against the wrong live state
@@ -1114,21 +1033,14 @@ def read_iceberg_changes(
         if parent is None:
             continue  # delete with no parent state: nothing was hidden
         # the snapshot's NEW delete files only
-        new_dels: list[dict] = []
-        for _mf, e in _added_entries(fs, s)[1]:
-            d = e.get("data_file") or {}
-            if _get(d, "content", default=0) in (1, 2):
-                if str(d.get("file_format", "")).upper() == "PUFFIN":
-                    if not d.get("referenced_data_file"):
-                        raise IcebergUnsupported(
-                            "deletion-vector entry without "
-                            "referenced_data_file"
-                        )
-                    d["_dv"] = True
-                d["_seq"] = int(s.get("sequence-number", 0))
-                new_dels.append(d)
-        if not new_dels:
-            continue
+        for d in new_dels:
+            if str(d.get("file_format", "")).upper() == "PUFFIN":
+                if not d.get("referenced_data_file"):
+                    raise IcebergUnsupported(
+                        "deletion-vector entry without referenced_data_file"
+                    )
+                d["_dv"] = True
+            d["_seq"] = int(s.get("sequence-number", 0))
         _resolve_eq_cols(ice_schema, new_dels)
         parent_live = None
         if memo_id is not None:
@@ -1253,6 +1165,186 @@ def _added_entries(fs: FileSystem, snap: dict):
     return manifests, added, deleted
 
 
+def _require_seqs(meta: dict) -> None:
+    """Incremental reads (the change read and the ``iceberg_feed``
+    stream) offset by sequence number: v1 snapshots carry none, so every
+    window would be (0, 0] and the feed SILENTLY empty — refuse."""
+    no_seq = [
+        s["snapshot-id"]
+        for s in meta.get("snapshots") or []
+        if "sequence-number" not in s
+    ]
+    if no_seq or meta.get("format-version", 2) == 1:
+        raise IcebergUnsupported(
+            "incremental reads need snapshot sequence numbers "
+            f"(format-version 2); snapshots without one: {no_seq[:5]}"
+        )
+
+
+def _seq_window(meta: dict, lo: int, hi: int, head_id: int | None = None):
+    """The snapshots with sequence number in ``(lo, hi]`` on ``head_id``'s
+    ANCESTOR CHAIN (default the current snapshot), in sequence order: an
+    incremental consumer follows ONE branch, and commits staged on other
+    branches share the table-global sequence space without being its
+    ancestors."""
+    chain = _ancestor_ids(meta, head_id)
+    return sorted(
+        (
+            s
+            for s in meta.get("snapshots") or []
+            if lo < s.get("sequence-number", 0) <= hi
+            and (chain is None or s["snapshot-id"] in chain)
+        ),
+        key=lambda s: s.get("sequence-number", 0),
+    )
+
+
+def _appended(fs: FileSystem, meta: dict, window: list[dict], cdf: bool = False):
+    """The append-window rule :func:`read_iceberg_changes` and the
+    ``iceberg_feed`` stream share: per snapshot of ``window``, yield
+    ``(snapshot, added data-file entries, added delete-file entries)`` —
+    only the ADDED entries of the manifests it wrote
+    (:func:`_added_entries`).  ``replace`` snapshots (compaction:
+    contents unchanged) are skipped.  Any other non-append refuses,
+    except that ``cdf`` lets delete and MERGE-shaped overwrite snapshots
+    through for the changelog; file-replacing forms refuse even then."""
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots") or []}
+    for s in window:
+        op = (s.get("summary") or {}).get("operation")
+        if op == "replace":
+            continue
+        if op != "append" and not (cdf and op in ("delete", "overwrite")):
+            raise IcebergUnsupported(
+                f"snapshot {s['snapshot-id']} is {op!r}; the append-only "
+                "stream and change reads cannot represent overwrites/deletes"
+                + (
+                    " (pass cdf=True to read_iceberg_changes for the "
+                    "changelog form)"
+                    if op in ("delete", "overwrite")
+                    else ""
+                )
+            )
+        # an 'overwrite' here is a MERGE-shaped row delta (merge_iceberg:
+        # added delete files + added data files, every parent manifest
+        # carried by pointer) — its data adds are inserts and its delete
+        # files go to the changelog's hidden-row pass; a TRUE
+        # file-replacing overwrite (status=2 entries, or parent manifests
+        # DROPPED from the list) is not representable and refuses.
+        manifests, added, deleted = _added_entries(fs, s)
+        parent = by_id.get(s.get("parent-snapshot-id"))
+        if op == "overwrite" and parent is not None:
+            _s3, _m3, pmfs = _read_avro(fs, parent["manifest-list"])
+            carried = {mf["manifest_path"] for mf in manifests}
+            if {m["manifest_path"] for m in pmfs} - carried:
+                raise IcebergUnsupported(
+                    f"snapshot {s['snapshot-id']} is a file-replacing "
+                    "overwrite (parent manifests dropped); the "
+                    "changelog cannot represent it"
+                )
+        if deleted and op in ("overwrite", "delete"):
+            # a rewritten manifest (file-level overwrite, or a foreign
+            # COPY-ON-WRITE delete) — refusing beats fabricating rows
+            raise IcebergUnsupported(
+                f"snapshot {s['snapshot-id']} ({op}) replaces "
+                "data files; the changelog cannot represent it"
+            )
+        datas: list[dict] = []
+        dels: list[dict] = []
+        for _mf, e in added:
+            d = e.get("data_file") or {}
+            if _get(d, "content", default=0) in (1, 2):
+                dels.append(d)
+                continue
+            if op == "delete":
+                # a merge-on-read delete snapshot adds ONLY delete files;
+                # data-file entries here mean a foreign copy-on-write form
+                # whose survivors would be misread as inserts
+                raise IcebergUnsupported(
+                    f"snapshot {s['snapshot-id']} (delete) adds data "
+                    "files (copy-on-write delete); the changelog "
+                    "cannot represent it"
+                )
+            if str(d.get("file_format", "")).upper() != "PARQUET":
+                raise IcebergUnsupported("non-parquet data file")
+            datas.append(d)
+        yield s, datas, dels
+
+
+class IcebergFeedLog:
+    """What the ``iceberg_feed`` stream (``sources/tablestream.py``)
+    reads from the metadata: offsets are snapshot SEQUENCE NUMBERS, and
+    a window's files are the :func:`_appended` data files of its
+    snapshots.  Identity partition values of the CURRENT spec come
+    typed from the manifest's partition record."""
+
+    name = "iceberg_feed"
+    start_option, start_default = "starting_seq", 0
+    offset_key = "seq"
+    label = "_snapshot_id"
+    unsupported = IcebergUnsupported
+
+    def __init__(self, path: str):
+        self.fs, self.path = get_filesystem(path), path
+        meta, _v = _load_metadata(self.fs, path)
+        _require_seqs(meta)
+        ice = _current_schema(meta)
+        self.schema = _schema_from_iceberg(ice)
+        # identity fields are restored from partition values; transform
+        # fields (day/bucket/...) keep the source column in data files
+        self.pkeys = {
+            f["source_col"]: f["name"]
+            for f in _spec_fields(ice, _current_spec(meta))
+            if f["kind"] == "identity"
+        }
+        self.pcols = list(self.pkeys)
+
+    def physical(self, col: str) -> str:
+        return col
+
+    def latest(self):
+        """(head sequence number, per-sequence (files, bytes) added)."""
+        meta, _v = _load_metadata(self.fs, self.path)
+        return (
+            int(meta.get("last-sequence-number", 0)),
+            functools.partial(self._stats, meta),
+        )
+
+    def _stats(self, meta: dict, seq: int) -> tuple[int, int]:
+        # the summary counts real writers record, else the manifest walk;
+        # branch-staged, expired and non-append seqs count (0, 0)
+        window = _seq_window(meta, seq - 1, seq)
+        summ = (window[0].get("summary") or {}) if window else {}
+        if summ.get("operation") == "append":
+            try:
+                return int(summ["added-data-files"]), int(summ["added-files-size"])
+            except (KeyError, TypeError, ValueError):
+                pass
+        try:
+            files = self._files(meta, window)
+        except IcebergUnsupported:
+            return 0, 0
+        return len(files), sum(f[3] for f in files)
+
+    def window(self, lo: int, hi: int) -> list[tuple]:
+        """(spark path, {partition column: typed value}, snapshot id,
+        size) per file the snapshots in ``(lo, hi]`` added."""
+        meta, _v = _load_metadata(self.fs, self.path)
+        return self._files(meta, _seq_window(meta, lo, hi))
+
+    def _files(self, meta: dict, window: list[dict]) -> list[tuple]:
+        out = []
+        for s, datas, _dels in _appended(self.fs, meta, window):
+            for d in datas:
+                pv = d.get("partition") or {}
+                out.append((
+                    self.fs.spark_path(d["file_path"]),
+                    {c: pv.get(k) for c, k in self.pkeys.items()},
+                    s["snapshot-id"],
+                    d.get("file_size_in_bytes", 0),
+                ))
+        return out
+
+
 def iceberg_history(path: str) -> list[dict]:
     """Snapshot history, newest first: (snapshot-id, sequence-number,
     operation, n data files at that snapshot's manifest list)."""
@@ -1345,7 +1437,7 @@ def _publish_metadata(
     fs: FileSystem, path: str, version: int, new_meta: dict
 ) -> None:
     """Commit arbitration: create-if-absent PUT of the next metadata
-    version (O_EXCL / conditional PUT on the fs seam — two racing writers
+    version (hard link / conditional PUT on the fs seam — two racing writers
     get exactly one winner, never a silent clobber), then advance the
     advisory version hint.
 

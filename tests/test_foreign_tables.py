@@ -839,6 +839,54 @@ def test_iceberg_changelog_manifest_merging_append(spark, tmp_path):
     assert {k for k, _v, t, sid in got if t == "insert" and sid == merged} == {10, 11, 12}
 
 
+def test_iceberg_stream_skips_carried_entries(spark, tmp_path):
+    """The stream reads a manifest-merging APPEND by the batch change
+    read's rule: only the snapshot's ADDED file is new, the EXISTING
+    entries it carries are not — every row arrives exactly once, row for
+    row ``read_iceberg_changes``, and the cap-stats fallback (no
+    ``added-data-files`` summary) counts only the added file."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from gofeed_spark.sources.tablestream import (
+        IcebergFeedDataSource,
+        read_iceberg_stream,
+    )
+
+    root = str(tmp_path / "tbl")
+    I.write_iceberg(
+        spark.range(0, 10)
+        .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        .coalesce(1),
+        root,
+    )
+    new_path = f"{root}/data/merged-append.parquet"
+    _pq_write(new_path, {"k": [10, 11, 12], "v": [20, 22, 24]})
+    _hand_commit(
+        root, [_existing(e) for e in _live_data(root)] + [_added(new_path, 3)], "append"
+    )
+    out = str(tmp_path / "out")
+    q = (
+        read_iceberg_stream(spark, root)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = Counter((r.k, r.v, r._snapshot_id) for r in spark.read.parquet(out).collect())
+    assert sorted(k for k, _v, _s in got.elements()) == list(range(13))
+    want = Counter(
+        (r.k, r.v, r._snapshot_id)
+        for r in I.read_iceberg_changes(spark, root, 0).collect()
+    )
+    assert got == want
+    head, stats = IcebergFeedDataSource({"path": root}).streamReader(None).log.latest()
+    assert stats(head) == (1, os.path.getsize(new_path))
+
+
 def test_duplicate_basenames_refuse_row_level_deletes(spark, tmp_path):
     """Two live data files sharing a basename (a foreign layout: same name
     in different directories) cannot be told apart by the file map that

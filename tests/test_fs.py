@@ -46,7 +46,7 @@ def test_local_fs_roundtrip_and_atomic_put(tmp_path):
     p = str(tmp_path / "a" / "b.json")
     fs.put_bytes(p, b'{"x": 1}')
     assert fs.read_bytes(p) == b'{"x": 1}'
-    assert not os.path.exists(p + ".tmp")  # temp cleaned by the replace
+    assert os.listdir(tmp_path / "a") == ["b.json"]  # temp consumed by the replace
     assert fs.stat(p)[0] == len(b'{"x": 1}')
     assert fs.listdir(str(tmp_path)) == ["a"]
     assert fs.listdir(str(tmp_path / "missing")) == []
@@ -82,6 +82,61 @@ def test_object_store_semantics(fakefs):
     assert fs.listdir("fakefs://bucket/idx") == ["_meta.json"]
     # the LOGICAL path never exists locally: raw os.* access would fail
     assert not os.path.exists("fakefs://bucket/idx/_meta.json")
+
+
+def test_put_if_absent_publishes_whole(fakefs, tmp_path, monkeypatch):
+    """Create-if-absent publishes WHOLE on both backends: a write that
+    fails after the version is claimed leaves nothing at the path (a
+    reader would otherwise see an empty or partial Delta commit, and the
+    version would be burned) and the retry wins; a temp a crash leaves
+    behind never lists as a Delta commit or Iceberg metadata version."""
+    from gofeed_spark.sources import delta as D
+    from gofeed_spark.sources import iceberg as I
+
+    def full_disk(_fd):
+        raise OSError(28, "No space left on device")
+
+    for fs, root in ((LocalFileSystem(), str(tmp_path / "tbl")), (fakefs, "fakefs://tbl")):
+        log, md = D._log_dir(root), I._meta_dir(root)
+        v0 = fs.join(log, D._commit_name(0))
+        with monkeypatch.context() as m:
+            m.setattr(os, "fsync", full_disk)
+            with pytest.raises(OSError, match="No space"):
+                fs.put_bytes_if_absent(v0, b'{"commitInfo": {}}\n')
+        assert not fs.exists(v0)
+        assert fs.listdir(log) == []  # the temp is gone too
+        assert fs.put_bytes_if_absent(v0, b"first\n")
+        assert not fs.put_bytes_if_absent(v0, b"second\n")
+        assert fs.read_bytes(v0) == b"first\n"
+        with monkeypatch.context() as m:
+            m.setattr(os, "unlink", lambda _p: None)  # crash before cleanup
+            assert fs.put_bytes_if_absent(fs.join(log, D._commit_name(1)), b"x\n")
+            assert fs.put_bytes_if_absent(fs.join(md, I._meta_name(1)), b"{}")
+        assert any(n.endswith(".tmp") for n in fs.listdir(log))
+        assert any(n.endswith(".tmp") for n in fs.listdir(md))
+        assert D._list_log(fs, log) == ([0, 1], [])
+        assert I._list_meta_versions(fs, md) == [(1, I._meta_name(1))]
+
+
+def test_local_put_bytes_racing_writers(tmp_path, monkeypatch):
+    """Two writers replacing the same object (``version-hint.text``)
+    each publish from their own temp: the slower one's replace must not
+    find its temp taken by the faster one."""
+    fs = LocalFileSystem()
+    hint = str(tmp_path / "version-hint.text")
+    real_replace = os.replace
+    raced = []
+
+    def replace(src, dst):
+        if not raced:
+            raced.append(src)
+            fs.put_bytes(hint, b"2")  # a racing writer lands in between
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    fs.put_bytes(hint, b"1")
+    assert fs.read_bytes(hint) == b"1"
+    assert os.listdir(tmp_path) == ["version-hint.text"]
 
 
 def test_scheme_resolution(fakefs):

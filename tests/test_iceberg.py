@@ -362,7 +362,7 @@ def test_summary_watermark_and_append_sink(spark, corpus, tmp_path):
 
 
 def test_iceberg_stream_delivers_snapshots_and_restarts(spark, corpus, tmp_path):
-    from gofeed_spark.sources.iceberg_stream import read_iceberg_stream
+    from gofeed_spark.sources.tablestream import read_iceberg_stream
 
     tbl = str(tmp_path / "tbl")
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
@@ -405,7 +405,7 @@ def test_iceberg_stream_delivers_snapshots_and_restarts(spark, corpus, tmp_path)
 
 
 def test_iceberg_stream_refuses_overwrite_window(spark, corpus, tmp_path):
-    from gofeed_spark.sources.iceberg_stream import read_iceberg_stream
+    from gofeed_spark.sources.tablestream import read_iceberg_stream
 
     tbl = str(tmp_path / "tbl")
     I.write_iceberg(corpus, tbl)
@@ -552,7 +552,7 @@ def test_v1_tables_write_and_change_reads_refuse(spark, corpus, tmp_path):
     streaming reads refuse loudly (v1 snapshots carry no sequence
     numbers — a change feed would be silently empty)."""
     from gofeed_spark.fs import get_filesystem
-    from gofeed_spark.sources.iceberg_stream import IcebergStreamReader
+    from gofeed_spark.sources.tablestream import IcebergFeedDataSource
 
     tbl = str(tmp_path / "tbl")
     I.write_iceberg(corpus, tbl)
@@ -573,7 +573,7 @@ def test_v1_tables_write_and_change_reads_refuse(spark, corpus, tmp_path):
     with pytest.raises(I.IcebergUnsupported, match="sequence numbers"):
         I.read_iceberg_changes(spark, tbl, 0)
     with pytest.raises(I.IcebergUnsupported, match="sequence numbers"):
-        IcebergStreamReader({"path": tbl})
+        IcebergFeedDataSource({"path": tbl}).streamReader(None)
 
 
 def test_equality_deletes_refuse(spark, corpus, tmp_path):
@@ -1114,7 +1114,7 @@ def test_iceberg_stream_admission_caps_pace_backlog(spark, corpus, tmp_path):
     over many micro-batches (whole snapshots per trigger), byte caps
     exercise the manifest-walk stats fallback (our writer records no
     added-files-size summary), totals exactly-once."""
-    from gofeed_spark.sources.iceberg_stream import read_iceberg_stream
+    from gofeed_spark.sources.tablestream import read_iceberg_stream
 
     tbl = str(tmp_path / "tbl")
     for lo in range(0, 60, 10):  # 6 append snapshots

@@ -258,9 +258,9 @@ def test_incremental_reads_follow_one_branch(spark, tmp_path):
     assert sorted(r.k for r in inc2.collect()) == [100, 101]
 
     # the streaming source plans the same way: branch seqs deliver nothing
-    from gofeed_spark.sources.iceberg_stream import IcebergStreamReader
+    from gofeed_spark.sources.tablestream import IcebergFeedDataSource
 
-    rdr = IcebergStreamReader({"path": root})
+    rdr = IcebergFeedDataSource({"path": root}).streamReader(None)
     head = rdr.latestOffset()
     parts = rdr.partitions({"seq": 0}, head)
     import pyarrow.parquet as pq

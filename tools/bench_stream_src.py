@@ -50,8 +50,7 @@ def main():
     work = tempfile.mkdtemp(prefix="bench_stream_src_")
     from gofeed_spark.sources import delta as D
     from gofeed_spark.sources import iceberg as I
-    from gofeed_spark.sources.delta_stream import read_delta_stream
-    from gofeed_spark.sources.iceberg_stream import read_iceberg_stream
+    from gofeed_spark.sources.tablestream import read_delta_stream, read_iceberg_stream
 
     df = spark.range(n_rows).select(
         F.col("id").alias("doc_id"),
