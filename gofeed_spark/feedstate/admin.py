@@ -6,7 +6,6 @@ creation is one txlog commit (feedstate/txlog.py).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
@@ -51,17 +50,6 @@ def auto_migrate(spark: SparkSession, base_path: str, table_prefix: str = "") ->
     if all(table_snapshots(tables, name) for name in wanted):
         return version
     return log.commit_retry(writes)
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def healthcheck(

@@ -140,7 +140,8 @@ class DbApiStore:
     driver; ``path`` is its DSN — a file path for sqlite3).
 
     ``table_prefix`` namespaces the tables (``{prefix}items`` /
-    ``{prefix}partitions``); ``dialect`` selects the upsert SQL family
+    ``{prefix}partitions``, and ``{prefix}txn``: each runner's last
+    committed micro-batch id); ``dialect`` selects the upsert SQL family
     (``"on_conflict"`` or ``"merge"``, default inferred from the driver
     module, on_conflict when unknown).
     """
@@ -157,6 +158,7 @@ class DbApiStore:
         self.prefix = table_prefix
         self.items_table = f"{table_prefix}items"
         self.parts_table = f"{table_prefix}partitions"
+        self.txn_table = f"{table_prefix}txn"
         self.dialect = dialect or _DIALECT_BY_MODULE.get(module_name, "on_conflict")
         if self.dialect not in ("on_conflict", "merge"):
             raise ValueError("dialect must be 'on_conflict' or 'merge'")
@@ -178,6 +180,8 @@ class DbApiStore:
                 f"id {idt} PRIMARY KEY, version INTEGER, gate INTEGER, "
                 "status INTEGER"
             ),
+            # id = a runner's txn key, version = its last committed batch id
+            self.txn_table: f"id {idt} PRIMARY KEY, version BIGINT",
         }
 
     def _index_ddl(self, if_not_exists: bool) -> list[str]:
@@ -290,12 +294,34 @@ class DbApiStore:
             con.close()
 
     # -- driver-side scalar/agg pushdown ---------------------------------
-    def _fetchall(self, sql: str) -> list[tuple]:
+    def _fetchall(self, sql: str, *params) -> list[tuple]:
         con = _connect(self.module, self.path)
         try:
             cur = con.cursor()
-            cur.execute(sql)
+            if params:
+                cur.execute(sql, params)
+            else:
+                cur.execute(sql)
             return [tuple(r) for r in cur.fetchall()]
+        finally:
+            con.close()
+
+    def last_batch(self, key: str) -> int:
+        """The last micro-batch id recorded for ``key`` (-1 when none)."""
+        ph = _placeholders(self.module, 1)[0]
+        rows = self._fetchall(f"SELECT version FROM {self.txn_table} WHERE id = {ph}", key)
+        return int(rows[0][0]) if rows else -1
+
+    def record_batch(self, key: str, batch_id: int) -> None:
+        """Record ``batch_id`` as ``key``'s last committed micro-batch.
+        Monotone: the upsert's version rule never lets an older id
+        replace a newer one."""
+        con = _connect(self.module, self.path)
+        try:
+            con.cursor().execute(
+                self._upsert_sql(self.txn_table, ["id", "version"]), (key, batch_id)
+            )
+            con.commit()
         finally:
             con.close()
 

@@ -3,84 +3,104 @@ feed's one snapshot store (``FeedRunner(storage="txlog")``).
 
 This log provides the piece the reference gets from its DB and Delta
 gets from its log protocol — ARBITRATION BETWEEN CONCURRENT
-COMMITTERS — using the one primitive every
-local/posix filesystem gives us: create-exclusive
-(``os.open(..., O_CREAT | O_EXCL)``).  It is the storage-layer twin of the
-reference's transaction + optimistic save (repo.go:125-138, 164-170): a
-losing committer gets a ``CommitConflict`` and re-reads, exactly the
-``dirty=false`` path.
+COMMITTERS — using the one primitive every storage backend gives:
+create-if-absent (``FileSystem.put_bytes_if_absent``: an fsynced temp
+hard-linked into place on POSIX, a conditional PUT — S3/Azure
+``If-None-Match: *``, GCS ``x-goog-if-generation-match: 0`` — on an
+object store).  It is the storage-layer twin of the reference's
+transaction + optimistic save (repo.go:125-138, 164-170): a losing
+committer gets a ``CommitConflict`` and re-reads, exactly the
+``dirty=false`` path.  Every byte goes through ``get_filesystem(base)``
+(gofeed_spark/fs.py); Spark reads and writes snapshot dirs at the
+backend's ``spark_path``.
 
 Layout::
 
-    base/_txlog/00000001.json           manifest: {"tables": {name: dir}}
+    base/_txlog/00000001.json           manifest: {"tables": {name: dir},
+                                         "txn": {key: batch id}, ...}
     base/items__v00000001_ab12cd34/     immutable parquet snapshot dirs
     base/partitions__v00000001_ab12cd34/  (writer-unique suffix: racing
                                          committers never share a dir)
+    base/items__vstage_ab12cd34/b=b0003/  a manifest may name a dir's
+                                         child (FeedRunner's buckets)
 
 Commit protocol (optimistic):
 
-1. resolve the current version V (highest parseable manifest),
-2. write every table's new snapshot dir suffixed ``__V+1`` (invisible —
-   readers only follow manifests),
-3. write the FULL manifest payload to a writer-unique temp file in the
-   log dir, fsync it,
-4. publish atomically via ``_claim`` — ``os.link(tmp, V+1.json)`` — which
-   fails with EEXIST when another committer already published V+1; losers
-   remove their orphan snapshot dirs and raise ``CommitConflict``.
+1. resolve the current version V (highest manifest number),
+2. write every table's new snapshot dir suffixed ``__vV+1_<token>``
+   (invisible — readers only follow manifests),
+3. publish the FULL manifest create-if-absent at ``V+1.json``; when
+   another committer already published V+1, the loser removes its own
+   snapshot dirs and raises ``CommitConflict``.
 
 A manifest therefore either does not exist or is complete: there is no
-claim-to-fsync window in which a competitor's ``latest()`` could observe
+claim-to-write window in which a competitor's ``latest()`` could observe
 V+1 as claimed-but-torn and base a V+2 commit on V (the lost-update race
-of a claim-then-write protocol), and no version number is ever "burned"
-by a crash mid-manifest-write — a crash before (4) leaves only an
-invisible temp file and orphan snapshot dirs, both removed by ``vacuum``.
-Readers always see the highest fully-written manifest, which names only
-completely-written snapshot dirs.  Multi-table atomicity holds because
-one manifest names every table of the commit.  (Readers still skip any
-unparseable manifest defensively — e.g. one hand-corrupted on disk.)
+of a claim-then-write protocol), and a crash before (3) leaves only
+orphan snapshot dirs (and, on POSIX, an invisible temp), all removed by
+``vacuum``.  Readers always see the highest complete manifest, which
+names only completely-written snapshot dirs.  Multi-table atomicity
+holds because one manifest names every table of the commit.  (Readers
+still skip any unparseable manifest defensively — e.g. one
+hand-corrupted on disk.)
 
-Deployment mapping for the arbitration primitive: POSIX filesystems use
-hard-link-exclusive (``LinkClaim``, the default); S3 maps to a conditional
-PUT (``If-None-Match: *``), GCS to ``x-goog-if-generation-match: 0`` —
-same protocol, same guarantees.  The primitive is an injectable
-``ClaimBackend`` (``TxLog(base, claim_backend=...)``);
-``ConditionalPutClaim`` exercises the object-store semantics — content
-upload instead of a link, plus the retry ambiguity unique to conditional
-PUTs (success response lost in transit) — so the mapping is tested code,
-not a comment.
+``txn`` is Delta's txn action: ``{writer key: last batch id}``.  Every
+commit carries the ``txn`` map of the manifest it is based on, with the
+caller's entries merged over it, so a streaming writer records its batch
+id in the SAME atomic commit as the state that batch produced, and skips
+a re-delivered batch whose id the snapshot already holds (the idempotent
+sink of Structured Streaming).
+
+An object-store conditional PUT can land while its success response is
+lost in transit.  The commit then retries the PUT once: the retry is
+refused (the object exists), and reading the object back recognises the
+manifest as this committer's own — the payload is writer-unique because
+it carries the committer's token — so the commit succeeds exactly once.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import threading
+import posixpath
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gofeed_spark.fs import FileSystem, get_filesystem
 
-def _versions(logdir: str) -> list[int]:
+
+def _is_manifest(name: str) -> bool:
+    stem, ext = posixpath.splitext(name)
+    return ext == ".json" and stem.isdigit()
+
+
+def _versions(fs: FileSystem, logdir: str) -> list[int]:
     """Every manifest number in ``logdir``, ascending ([] when absent)."""
-    try:
-        names = os.listdir(logdir)
-    except FileNotFoundError:
-        return []
-    out = []
-    for name in names:
-        stem, ext = os.path.splitext(name)
-        if ext == ".json" and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
+    return sorted(int(n[:-5]) for n in fs.listdir(logdir) if _is_manifest(n))
 
 
-def _load(logdir: str, version: int) -> dict | None:
+def _load(fs: FileSystem, logdir: str, version: int) -> dict | None:
     try:
-        with open(os.path.join(logdir, f"{version:08d}.json")) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
+        return json.loads(fs.read_bytes(fs.join(logdir, f"{version:08d}.json")))
+    except (OSError, ValueError):
         return None  # burned version (crash mid-write) — skip
+
+
+def _newest(fs: FileSystem, logdir: str, versions: list[int]) -> tuple[int, dict]:
+    """(version, manifest) of the newest complete manifest among
+    ``versions``; (0, an empty manifest) when there is none."""
+    for v in reversed(versions):
+        m = _load(fs, logdir, v)
+        if m is not None:
+            return v, m
+    return 0, {"tables": {}}
+
+
+def _head(base: str) -> tuple[int, dict]:
+    fs = get_filesystem(base)
+    logdir = fs.join(base, "_txlog")
+    return _newest(fs, logdir, _versions(fs, logdir))
 
 
 def latest_manifest(base: str) -> tuple[int, dict[str, str]]:
@@ -88,12 +108,8 @@ def latest_manifest(base: str) -> tuple[int, dict[str, str]]:
     under ``base/_txlog``, skipping burned versions; (0, {}) when there is
     none.  Pure JSON, and it never creates ``_txlog/`` — a CDC poll of a
     store nobody has committed to must leave it absent."""
-    logdir = os.path.join(base, "_txlog")
-    for v in reversed(_versions(logdir)):
-        m = _load(logdir, v)
-        if m is not None:
-            return v, dict(m["tables"])
-    return 0, {}
+    version, m = _head(base)
+    return version, dict(m["tables"])
 
 
 def table_snapshots(tables: dict[str, str], table: str) -> dict[str, str]:
@@ -111,99 +127,34 @@ class CommitConflict(Exception):
     """Another committer claimed this version first — re-read and retry."""
 
 
-class ClaimBackend:
-    """The arbitration primitive behind ``TxLog`` commits: atomically
-    publish a fully-written manifest at ``claim``, raising
-    ``FileExistsError`` when another committer already published this
-    version.  Everything else in the protocol is already
-    object-store-safe (immutable snapshot dirs, manifest-only
-    visibility), so this one method is the entire deployment seam."""
-
-    def claim(self, tmp: str, claim: str) -> None:
-        raise NotImplementedError
-
-
-class LinkClaim(ClaimBackend):
-    """POSIX backend: hard link — atomic and create-exclusive on every
-    local/posix filesystem, including across processes."""
-
-    def claim(self, tmp: str, claim: str) -> None:
-        os.link(tmp, claim)
-
-
-class ConditionalPutClaim(ClaimBackend):
-    """Object-store backend semantics, runnable locally: the manifest
-    BYTES are uploaded with create-if-absent (S3 ``PUT`` +
-    ``If-None-Match: *``; GCS ``x-goog-if-generation-match: 0``; Azure
-    ``If-None-Match: *``) — no hard links exist there.
-
-    Also models the failure mode unique to remote conditional PUTs that
-    ``os.link`` never has: the PUT can SUCCEED while the success response
-    is lost in transit (timeout, dropped connection).  The client must
-    retry, the retry gets 412/precondition-failed, and idempotency is
-    recovered by reading the object back and comparing it to the payload
-    — which is writer-unique because the manifest carries the committer's
-    token.  ``lose_responses=N`` injects that fault for the first N PUTs.
-
-    The store's server-side serialization of conditional PUTs is modeled
-    with an in-process lock + atomic rename (objects appear whole or not
-    at all, like a real store); the fake therefore arbitrates THREADS, not
-    separate processes — it exists to prove the protocol, production use
-    would bind a real store client here."""
-
-    def __init__(self, lose_responses: int = 0):
-        self.lose_responses = lose_responses
-        self._lock = threading.Lock()
-        self.puts = 0  # PUTs that landed server-side
-        self.recovered = 0  # retries recognizing their own earlier PUT
-
-    def claim(self, tmp: str, claim: str) -> None:
-        with open(tmp, "rb") as f:
-            payload = f.read()
-        while True:
-            with self._lock:
-                if os.path.exists(claim):
-                    with open(claim, "rb") as f:
-                        existing = f.read()
-                    if existing == payload:
-                        # our earlier PUT landed; only its response was
-                        # lost — the retry is an idempotent success
-                        self.recovered += 1
-                        return
-                    raise FileExistsError(claim)
-                # atomic publish: the object is never readable half-written
-                # (the .putting ext keeps it invisible to manifest listing)
-                part = claim + ".putting"
-                with open(part, "wb") as f:
-                    f.write(payload)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.rename(part, claim)
-                self.puts += 1
-                if self.lose_responses > 0:
-                    self.lose_responses -= 1
-                    continue  # response lost → client retries the PUT
-                return
-
-
 class TxLog:
     """Versioned multi-table parquet store with optimistic multi-writer
     commits (see module docstring for the protocol)."""
 
-    def __init__(self, base: str, claim_backend: ClaimBackend | None = None):
+    def __init__(self, base: str):
         self.base = base
-        self.logdir = os.path.join(base, "_txlog")
-        self.claim_backend = claim_backend or LinkClaim()
-        os.makedirs(self.logdir, exist_ok=True)
+        self.fs = get_filesystem(base)
+        self.logdir = self.fs.join(base, "_txlog")
+        self.fs.makedirs(self.logdir)
 
     # -- resolution ------------------------------------------------------
     def _load(self, version: int) -> dict | None:
-        return _load(self.logdir, version)
+        return _load(self.fs, self.logdir, version)
+
+    def head(self) -> tuple[int, dict]:
+        """(version, manifest) of the newest complete commit — its
+        ``tables`` and, once a writer recorded one, its ``txn`` map."""
+        return _head(self.base)
 
     def latest(self) -> tuple[int, dict[str, str]]:
         """(version, {table: snapshot dir}) of the newest complete commit;
         (0, {}) for an empty log."""
-        return latest_manifest(self.base)
+        version, m = self.head()
+        return version, dict(m["tables"])
+
+    def spark_path(self, rel: str) -> str:
+        """Where Spark reads or writes the snapshot dir ``rel``."""
+        return self.fs.spark_path(self.fs.join(self.base, rel))
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
         """Read ``table`` at the latest (or a pinned) committed version."""
@@ -216,36 +167,37 @@ class TxLog:
             tables = m["tables"]
         if table not in tables:
             raise ValueError(f"table {table!r} not in commit: {sorted(tables)}")
-        return spark.read.parquet(os.path.join(self.base, tables[table]))
+        return spark.read.parquet(self.spark_path(tables[table]))
 
     # -- commit ----------------------------------------------------------
     def commit(
         self,
         writes: dict[str, DataFrame],
         expected_version: int | None = None,
+        txn: dict[str, int] | None = None,
     ) -> int:
         """Atomically commit new contents for every table in ``writes``.
 
         A value may be a DataFrame (staged as a new snapshot dir) or a str
-        naming an EXISTING snapshot dir from a prior manifest — carrying an
-        unchanged table into the new commit without rewriting a byte
-        (vacuum keeps every dir the retained manifests reference).
+        naming an EXISTING snapshot dir (or a child of one) from a prior
+        manifest — carrying an unchanged table into the new commit without
+        rewriting a byte (vacuum keeps every dir the retained manifests
+        reference).
 
         ``expected_version`` (optional OCC pre-check): conflict immediately
         if the log has moved past the version this writer based its work
-        on — saves staging work; the O_EXCL claim is the real arbiter.
-        Returns the committed version; raises ``CommitConflict`` on loss.
+        on — saves staging work; the create-if-absent publish is the real
+        arbiter.  ``txn`` entries are merged over the based-on manifest's
+        ``txn`` map.  Returns the committed version; raises
+        ``CommitConflict`` on loss.
         """
-        versions = _versions(self.logdir)
+        versions = _versions(self.fs, self.logdir)
         # OCC pre-check compares COMPLETE commits only (latest() semantics):
         # a burned manifest must not wedge every expected_version commit
         # forever.  The claim target still skips burned numbers.
-        if expected_version is not None:
-            current_complete = self.latest()[0]
-            if current_complete != expected_version:
-                raise CommitConflict(
-                    f"log at v{current_complete}, expected v{expected_version}"
-                )
+        current, based_on = _newest(self.fs, self.logdir, versions)
+        if expected_version is not None and current != expected_version:
+            raise CommitConflict(f"log at v{current}, expected v{expected_version}")
         target = (versions[-1] if versions else 0) + 1
         # Writer-unique snapshot names: two committers racing for the same
         # target version must never stage into one directory (the manifest,
@@ -258,39 +210,38 @@ class TxLog:
                 staged[name] = df
                 continue
             rel = f"{name}__v{target:08d}_{token}"
-            df.write.mode("overwrite").parquet(os.path.join(self.base, rel))
+            df.write.mode("overwrite").parquet(self.spark_path(rel))
             staged[name] = rel
             fresh.append(rel)
-        # Write the complete manifest to a writer-unique temp file FIRST
-        # (fsynced), then publish it atomically: the manifest never exists
-        # in a half-written state, so a competitor's latest() can never
-        # observe a claimed-but-torn version and base a commit that drops
-        # this one's changes.
-        tmp = os.path.join(self.logdir, f".tmp_{target:08d}_{token}.json")
-        with open(tmp, "w") as f:
-            # the writer token makes the payload unique per committer:
-            # ConditionalPutClaim's lost-response retry distinguishes "my
-            # earlier PUT landed" from a competitor's byte-identical
-            # manifest (possible for carry-forward-only commits)
-            json.dump({"version": target, "tables": staged, "writer": token}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        claim = os.path.join(self.logdir, f"{target:08d}.json")
-        try:
-            self._claim(tmp, claim)
-        except FileExistsError:
+        # the writer token makes the payload unique per committer, so a
+        # lost-response retry tells "my earlier PUT landed" from a
+        # competitor's otherwise byte-identical manifest (possible for
+        # carry-forward-only commits)
+        payload = json.dumps(
+            {
+                "version": target,
+                "tables": staged,
+                "txn": {**based_on.get("txn", {}), **(txn or {})},
+                "writer": token,
+            }
+        ).encode()
+        if not self._claim(self.fs.join(self.logdir, f"{target:08d}.json"), payload):
             for rel in fresh:  # lost the race: remove OUR orphans only
-                shutil.rmtree(os.path.join(self.base, rel), ignore_errors=True)
-            os.unlink(tmp)
-            raise CommitConflict(f"version {target} claimed by another writer") from None
-        os.unlink(tmp)  # the published link keeps the inode alive
+                self.fs.delete_tree(self.fs.join(self.base, rel))
+            raise CommitConflict(f"version {target} claimed by another writer")
         return target
 
-    def _claim(self, tmp: str, claim: str) -> None:
-        """Publish via the injected arbitration primitive (see
-        ``ClaimBackend``): ``LinkClaim`` on POSIX, a conditional-PUT
-        backend against an object store."""
-        self.claim_backend.claim(tmp, claim)
+    def _claim(self, claim: str, payload: bytes) -> bool:
+        """Publish the manifest create-if-absent; True when the object at
+        ``claim`` is this committer's.  A PUT whose response was lost
+        (a connection error or timeout) is retried once: the retry is
+        refused if the first landed, and the read-back recognises the
+        payload."""
+        try:
+            won = self.fs.put_bytes_if_absent(claim, payload)
+        except (ConnectionError, TimeoutError):
+            won = self.fs.put_bytes_if_absent(claim, payload)
+        return won or self.fs.read_bytes(claim) == payload
 
     def commit_retry(
         self,
@@ -309,49 +260,56 @@ class TxLog:
         raise CommitConflict(f"no commit after {max_attempts} attempts")
 
     # -- maintenance -----------------------------------------------------
+    def _mtime_ns(self, path: str) -> int:
+        """A dir's (or object's) mtime; an object store's virtual dir takes
+        its newest object's."""
+        st = self.fs.stat(path)
+        if st is not None:
+            return st[1]
+        return max(
+            (
+                (self.fs.stat(self.fs.join(path, rel)) or (0, 0))[1]
+                for rel, _size in self.fs.walk_files(path)
+            ),
+            default=0,
+        )
+
     def vacuum(self, keep: int = 2, min_age_s: float = 3600.0) -> list[str]:
         """Remove snapshot dirs not referenced by the last ``keep`` complete
-        commits (and orphans from crashed/conflicted commits).  Returns the
-        removed dir names.
+        commits (and orphans from crashed/conflicted commits); of a dir
+        whose children the manifests name, only the unreferenced children
+        go.  Stale entries of the log dir that are not manifests (temps
+        of a crashed publish) go too.  Returns the removed paths, relative
+        to the base.
 
         ``min_age_s`` is the retention window (Delta-style): a dir younger
         than this is NEVER removed even if unreferenced, because it may be
         an in-flight committer's staged snapshot that has not claimed its
         manifest yet — deleting it would let the claim succeed and publish
         a manifest pointing at nothing."""
-        import time
-
-        complete = [v for v in _versions(self.logdir) if self._load(v) is not None]
-        keep_versions = complete[-keep:] if keep else []
-        live = set()
-        for v in keep_versions:
-            live.update(self._load(v)["tables"].values())
+        fs = self.fs
+        complete = [m for v in _versions(fs, self.logdir) if (m := self._load(v))]
+        live = {rel for m in (complete[-keep:] if keep else []) for rel in m["tables"].values()}
+        partly_live = {rel.split("/", 1)[0] for rel in live}
+        candidates = [
+            f"_txlog/{name}" for name in fs.listdir(self.logdir) if not _is_manifest(name)
+        ]
+        for name in fs.listdir(self.base):
+            if name.startswith("_") or name in live or "__v" not in name:
+                continue  # not ours: the snapshot-dir naming convention
+            if name not in partly_live:
+                candidates.append(name)
+                continue
+            candidates += [
+                f"{name}/{child}"
+                for child in fs.listdir(fs.join(self.base, name))
+                if f"{name}/{child}" not in live and child[:1] not in "_."
+            ]
+        cutoff = time.time_ns() - int(min_age_s * 1e9)
         removed = []
-        now = time.time()
-        # Stale manifest temp files (crash between manifest write and
-        # publish; crash mid-PUT for the object-store fake) — invisible to
-        # readers, reclaimed after the window.
-        for name in os.listdir(self.logdir):
-            if not (name.startswith(".tmp_") or name.endswith(".putting")):
-                continue
-            full = os.path.join(self.logdir, name)
-            try:
-                if now - os.path.getmtime(full) >= min_age_s:
-                    os.unlink(full)
-                    removed.append(os.path.join("_txlog", name))
-            except OSError:
-                continue
-        for name in os.listdir(self.base):
-            if name.startswith("_") or name in live:
-                continue
-            if "__v" not in name:  # not ours (snapshot-dir naming convention)
-                continue
-            full = os.path.join(self.base, name)
-            try:
-                if now - os.path.getmtime(full) < min_age_s:
-                    continue  # possibly an in-flight commit's staging
-            except OSError:
-                continue
-            shutil.rmtree(full, ignore_errors=True)
-            removed.append(name)
+        for rel in candidates:
+            full = fs.join(self.base, rel)
+            if self._mtime_ns(full) <= cutoff:  # else maybe in flight
+                fs.delete_tree(full)
+                removed.append(rel)
         return removed

@@ -7,9 +7,9 @@ lifecycle: index metas and pointer flips (``_index_meta.json``), staging
 reclamation, WARC archive objects, directory listings and tree stats —
 all raw ``os.*`` / ``open()`` calls that silently assumed one shared POSIX
 filesystem (fine on ``local[32]``, broken the day an executor and the
-driver stop sharing a disk).  This module is the single seam, mirroring
-the claim-primitive pattern ``feedstate/txlog.py`` already uses for its
-commit point: every artifact path resolves to a backend by URI scheme.
+driver stop sharing a disk).  This module is the single seam — the Delta
+and Iceberg logs and the feed's txlog (``feedstate/txlog.py``) commit
+through it too: every artifact path resolves to a backend by URI scheme.
 
 Two backend SHAPES ship:
 
@@ -78,9 +78,8 @@ def _write_temp(local: str, data: bytes, sync: bool = False) -> str:
 
 def _link_if_absent(local: str, data: bytes) -> bool:
     """Create-if-absent that publishes WHOLE: hard-link a complete,
-    fsynced temp into place (atomic and exclusive on POSIX — the
-    ``feedstate/txlog.py`` ``LinkClaim`` protocol), so no reader and no
-    crash ever sees an empty or partial object at ``local``."""
+    fsynced temp into place (atomic and exclusive on POSIX), so no reader
+    and no crash ever sees an empty or partial object at ``local``."""
     tmp = _write_temp(local, data, sync=True)
     try:
         os.link(tmp, local)
@@ -89,6 +88,17 @@ def _link_if_absent(local: str, data: bytes) -> bool:
     finally:
         os.unlink(tmp)
     return True
+
+
+def _replace_whole(local: str, data: bytes) -> None:
+    """Atomic overwrite from a writer-unique temp: racing writers never
+    take each other's temp, and a failed replace leaves none behind."""
+    tmp = _write_temp(local, data)
+    try:
+        os.replace(tmp, local)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 class FileSystem:
@@ -203,13 +213,7 @@ class LocalFileSystem(FileSystem):
             return f.read(length)
 
     def put_bytes(self, path: str, data: bytes) -> None:
-        local = self._local(path)
-        tmp = _write_temp(local, data)
-        try:
-            os.replace(tmp, local)  # POSIX atomic publish
-        except BaseException:
-            os.unlink(tmp)
-            raise
+        _replace_whole(self._local(path), data)
 
     def put_bytes_if_absent(self, path: str, data: bytes) -> bool:
         return _link_if_absent(self._local(path), data)
@@ -392,12 +396,7 @@ class DirObjectStoreFileSystem(ObjectStoreFileSystem):
             return f.read()
 
     def _put(self, key: str, data: bytes) -> None:
-        local = self._backing(key)
-        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        tmp = local + ".put-tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, local)
+        _replace_whole(self._backing(key), data)
 
     def put_bytes_if_absent(self, path: str, data: bytes) -> bool:
         # the conditional-PUT analogue (If-None-Match: *) the real

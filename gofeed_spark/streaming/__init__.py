@@ -7,7 +7,8 @@
   operator (applyInPandasWithState), the streaming twin of
   watcher.go:147-161, and the only streaming form of it.
 - ``sinks.ParquetUpsertSink``: idempotent keyed MERGE sink for
-  foreachBatch — checkpoint + batch-id manifest gives exactly-once effect
+  foreachBatch — checkpoint + the committed batch ids it records beside
+  its bucket pointers (one atomic PUT) give exactly-once effect
   on restart (the OCC-save replacement, repo.go:125-138); hash-bucketed
   layout, so a micro-batch rewrites only the buckets holding its keys.
 - ``windows``: watermarked tumbling/session window twins of Q31/Q32.

@@ -11,8 +11,10 @@ twin of the reference's Watcher.Start loop (watcher.go:68-212):
         gate by gate exactly like the reference's re-poll loop)
 
 A drain is ONE streaming query triggered back to back until a trigger
-finds no new data.  Exactly-once effect: streaming checkpoint + the
-batch-id manifest; the OCC version column arbitrates any concurrent batch
+finds no new data.  Exactly-once effect: streaming checkpoint + the batch
+id recorded in the same commit as the state it produced (the txlog
+manifest's ``txn`` entry, dbapi's last-id row), so a re-delivered batch
+is skipped; the OCC version column arbitrates any concurrent batch
 writer.
 """
 
@@ -20,9 +22,7 @@ from __future__ import annotations
 
 import collections
 import contextlib
-import json
 import os
-import shutil
 import threading
 import time
 from dataclasses import dataclass, field
@@ -30,10 +30,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gofeed_spark.feedstate.admin import _dir_bytes
 from gofeed_spark.feedstate.engine import feed_step
 from gofeed_spark.feedstate.processors import ProcessorFn
 from gofeed_spark.feedstate.txlog import CommitConflict, TxLog, table_snapshots
+from gofeed_spark.fs import get_filesystem
 from gofeed_spark.sources.feed_cdc import register_feed_cdc
 
 # Sizing.  Module constants rather than constructor arguments: no caller
@@ -135,12 +135,14 @@ def _drain_confs(spark):
 @dataclass
 class _Snapshot:
     """What one state commit read: items (with ``updated_at``) and
-    partitions, the re-queue tick, the dbapi pushed-down decision counts,
-    and the txlog manifest (version + tables) the commit is based on."""
+    partitions, the re-queue tick, the last batch id this runner
+    committed, the dbapi pushed-down decision counts, and the txlog
+    manifest (version + tables) the commit is based on."""
 
     items: DataFrame
     parts: DataFrame
     tick: int
+    last_batch: int
     counts: DataFrame | None = None
     version: int | None = None
     tables: dict | None = None
@@ -192,20 +194,24 @@ class FeedRunner:
     trigger that finds no new data (one query per drain, a new one only
     after a streaming failure); ``run_forever`` triggers it on an interval.
 
-    ``storage``: ``"txlog"`` (default) commits both tables and the dead
-    letters through the manifest log (feedstate/txlog.py) as
-    hash-bucketed snapshots: the touched-bucket planner (``_plan``) and
-    the staging write (``_stage``) feed ONE atomic manifest commit that
-    carries untouched buckets by name.  Multi-writer-safe — a concurrent
-    runner's commit loses the O_EXCL claim, and this runner re-reads the
-    fresh state and recomputes before retrying, the reference's
-    dirty=false path at the storage layer.
+    ``storage``: ``"txlog"`` (default) commits both tables, the dead
+    letters and the batch id through the manifest log
+    (feedstate/txlog.py) as hash-bucketed snapshots: the touched-bucket
+    planner (``_plan``) and the staging write (``_stage``) feed ONE atomic
+    manifest commit that names the staged buckets and carries untouched
+    ones by name.  All of it goes through the store's filesystem
+    (gofeed_spark/fs.py), so a ``scheme://`` base on a registered backend
+    works like a local path.  Multi-writer-safe — a concurrent runner's
+    commit loses the create-if-absent manifest publish, and this runner
+    re-reads the fresh state and recomputes before retrying, the
+    reference's dirty=false path at the storage layer.
     ``"dbapi"`` keeps both tables in a PEP-249 database
     (feedstate/dbstore.py — the reference's literal Gorm-over-SQL
     deployment): the CDC source polls it with a cursor and writes land as
     per-row OCC upserts, so out-of-band INSERTS arriving mid-batch
     survive (a snapshot commit would rewrite the table around them) and a
-    concurrent row update can never be clobbered by a stale runner write.
+    concurrent row update can never be clobbered by a stale runner write;
+    the last committed batch id is one monotone row per runner.
     Sizing (bucket counts, read fan-out, drain parallelism) is set by the
     module constants above.
     """
@@ -226,17 +232,17 @@ class FeedRunner:
         poll_limit: int | None = None,
     ):
         """``runner_id``: distinct per concurrent runner sharing one store
-        — each runner keeps its OWN streaming checkpoint and batch manifest
-        (its private poll offsets, like each reference watcher's
-        in-process cursor) while the shared TxLog (or database) arbitrates
-        the state commits.
+        — each runner keeps its OWN streaming checkpoint (its private poll
+        offsets, like each reference watcher's in-process cursor) and its
+        own last-batch-id entry, keyed by the checkpoint dir's name, while
+        the shared TxLog (or database) arbitrates the state commits.
 
         ``table_prefix``: namespaces this feed's tables (reference
         ``main.go:29`` / README.md:131-135) so several feed instances can
         cohabit ONE store — one database (dbapi) or one manifest log
         (txlog): ``{prefix}items``, ``{prefix}partitions``,
-        ``{prefix}dead_letter``, with the checkpoint/manifest paths
-        namespaced alongside.
+        ``{prefix}dead_letter``, with the checkpoint path namespaced
+        alongside.
 
         ``poll_limit``: caps each CDC poll's backlog (the reference's poll
         LIMIT, repo.go:114-120) so a hot producer can't balloon one
@@ -259,8 +265,13 @@ class FeedRunner:
         suffix = (f"_{table_prefix}" if table_prefix else "") + (
             f"_{runner_id}" if runner_id else ""
         )
-        self.ckpt = os.path.join(base_path, f"_checkpoint{suffix}")
-        self.manifest = os.path.join(base_path, f"_batches{suffix}.json")
+        # foreachBatch ids are scoped to a checkpoint, so the checkpoint
+        # dir's name keys this runner's last committed batch id; Spark and
+        # the CDC poll's Python workers (which cannot see the driver's
+        # filesystem registry) get the store's Spark-addressable paths
+        self.fs = get_filesystem(base_path)
+        self.txn_key = f"_checkpoint{suffix}"
+        self.ckpt = self.fs.spark_path(self.fs.join(base_path, self.txn_key))
         # Per-runner dead-letter partition dir: concurrent Spark jobs must
         # never append into ONE directory (FileOutputCommitter's shared
         # _temporary staging is not concurrency-safe); readers scan the
@@ -365,7 +376,7 @@ class FeedRunner:
         for rel in table_snapshots(tables, table).values():
             b = self._rel_bytes.get(rel)
             if b is None:
-                b = _dir_bytes(os.path.join(self.base, rel))
+                b = self.fs.tree_stats(self.fs.join(self.base, rel))[1]
             fresh[rel] = b
             total += b
         self._rel_bytes = fresh
@@ -384,9 +395,7 @@ class FeedRunner:
         rels = list(table_snapshots(tables, table).values())
         if not rels:
             raise ValueError(f"table {table!r} not in commit: {sorted(tables)}")
-        return self.spark.read.parquet(
-            *[os.path.join(self.base, r) for r in rels]
-        )
+        return self.spark.read.parquet(*[self.log.spark_path(r) for r in rels])
 
     def _read_fanout(self, n_rows: int) -> int:
         """Read partitions for an n_rows read: 1 (plain driver SELECT) up
@@ -410,20 +419,6 @@ class FeedRunner:
             return self._txlog_read(self.t_parts).drop("b")
         return self.db.read_partitions(self.spark)
 
-    def _committed(self) -> list[int]:
-        if not os.path.exists(self.manifest):
-            return []
-        with open(self.manifest) as f:
-            return json.load(f)
-
-    def _commit(self, batch_id: int) -> None:
-        ids = self._committed()
-        ids.append(batch_id)
-        tmp = self.manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ids, f)
-        os.replace(tmp, self.manifest)
-
     # -- the state commit: read → decide → publish -------------------------
     def _step(self, changed, batch_id: int) -> None:
         drain = self._drain
@@ -434,28 +429,25 @@ class FeedRunner:
                 drain.exhausted = True
                 raise RuntimeError(f"drain budget of {drain.max_rounds} rounds spent")
             drain.rounds += 1
-        # a batch already in the manifest was re-delivered after a crash:
-        # idempotent skip
-        if batch_id not in self._committed():
-            try:
-                empty = changed.isEmpty()
-            except Exception:
-                # Transient task loss (local mode fails a job on FIRST task
-                # failure; concurrent Python-data-source queries occasionally
-                # hit a JVM deserialization hiccup) — one retry re-runs the job.
-                empty = changed.isEmpty()
-            if not empty:
-                self._run(self._decide, batch_id)
-                self._commit(batch_id)
+        try:
+            empty = changed.isEmpty()
+        except Exception:
+            # Transient task loss (local mode fails a job on FIRST task
+            # failure; concurrent Python-data-source queries occasionally
+            # hit a JVM deserialization hiccup) — one retry re-runs the job.
+            empty = changed.isEmpty()
+        if not empty:
+            self._run(self._decide, batch_id)
         if drain is not None:
             drain.beat = time.monotonic()
 
     def _run(self, decide, batch_id: int | None = None, full: bool = False) -> None:
         """One state commit: ``_read`` a snapshot, ``decide(snapshot,
-        ckpt)`` the new rows, ``_publish`` them.  On txlog a concurrent
-        runner may win the commit claim; the loop re-reads the fresh
-        snapshot and decides again (at-least-once, like every retry path
-        here — the batch-id manifest still dedups whole batches).  Every
+        ckpt)`` the new rows, ``_publish`` them with ``batch_id``.  A
+        micro-batch whose id the snapshot already records (re-delivered
+        after a crash that followed its commit) is skipped.  On txlog a
+        concurrent runner may win the commit claim; the loop re-reads the
+        fresh snapshot and decides again.  Every
         localCheckpoint an attempt creates is released on the way out
         (success, conflict, or raise): once the storage commit has the data
         — or the attempt is abandoned — the blocks are dead weight, and a
@@ -472,6 +464,8 @@ class FeedRunner:
 
             try:
                 snap = self._read(full)
+                if batch_id is not None and batch_id <= snap.last_batch:
+                    return
                 change = decide(snap, ckpt)
                 if change is None or self._publish(snap, *change, batch_id):
                     return
@@ -491,15 +485,16 @@ class FeedRunner:
         twin), so only the rows processing can touch — Available items in
         non-Complete partitions — ever cross the driver; terminal Failed
         rows are counted in the database, never fetched, and the tick is
-        one index-only MAX.  txlog reads every table from ONE manifest, the
-        version its commit expects."""
+        one index-only MAX.  txlog reads every table and the last batch id
+        from ONE manifest, the version its commit expects."""
         from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE
 
         if self.storage == "dbapi":
+            last = self.db.last_batch(self.txn_key)
             if full:
                 return _Snapshot(
                     self._items_with_ts(), self.partitions(),
-                    self.db.max_updated_at() + 1,
+                    self.db.max_updated_at() + 1, last,
                 )
             counts = self.db.read_decision_counts(self.spark)
             avail = self.db.count_items(statuses=(AVAILABLE,))
@@ -509,12 +504,16 @@ class FeedRunner:
                 num_partitions=self._read_fanout(avail),
             )
             parts = self.db.read_partitions(self.spark, exclude_statuses=(COMPLETE,))
-            return _Snapshot(items, parts, self.db.max_updated_at() + 1, counts=counts)
-        version, tables = self.log.latest()
+            return _Snapshot(
+                items, parts, self.db.max_updated_at() + 1, last, counts=counts
+            )
+        version, m = self.log.head()
+        tables = m["tables"]
+        last = m.get("txn", {}).get(self.txn_key, -1)
         items = self._txlog_read(self.t_items, tables).drop("b")
         parts = self._txlog_read(self.t_parts, tables).drop("b")
         tick = (items.agg(F.max("updated_at")).collect()[0][0] or 0) + 1
-        return _Snapshot(items, parts, tick, version=version, tables=tables)
+        return _Snapshot(items, parts, tick, last, version=version, tables=tables)
 
     def _decide(self, snap: _Snapshot, ckpt):
         """decide: one feed_step and the rows every store commits — items
@@ -618,22 +617,26 @@ class FeedRunner:
         return rows.drop("__dead"), parts, dead
 
     def _publish(self, snap, items, parts, dead, batch_id) -> bool:
-        """publish: commit the decided rows; False when a concurrent txlog
-        commit won (the caller re-reads and decides again).
+        """publish: commit the decided rows and ``batch_id``; False when a
+        concurrent txlog commit won (the caller re-reads and decides
+        again).
 
-        dbapi appends the dead letters, then upserts ONLY the changed rows
-        with per-row CAS: untouched rows are not in the statement — no
-        table rewrite, so concurrent out-of-band inserts survive, and the
-        loser of a two-writer race is dropped row-by-row in the database.
-        A crash between the two can only DUPLICATE a dead letter on batch
-        replay (at-least-once, the reference's posture), never lose one.
-        txlog plans the touched buckets, stages them and commits them in
-        one manifest (``_publish_txlog``)."""
+        dbapi appends the dead letters, upserts ONLY the changed rows with
+        per-row CAS — untouched rows are not in the statement: no table
+        rewrite, so concurrent out-of-band inserts survive, and the loser
+        of a two-writer race is dropped row-by-row in the database — then
+        records the batch id.  A crash in between can only DUPLICATE a
+        dead letter or re-decide the batch on replay (at-least-once, the
+        reference's posture), never lose one.  txlog plans the touched
+        buckets, stages them and commits them with the batch id in one
+        manifest (``_publish_txlog``)."""
         if self.storage == "dbapi":
             if dead is not None and not dead.isEmpty():
                 dead.write.mode("append").parquet(self.dead_dir)
             self.db.upsert_items(items.filter("__changed").drop("__changed"))
             self.db.upsert_partitions(parts.filter("__changed").drop("__changed"))
+            if batch_id is not None:
+                self.db.record_batch(self.txn_key, batch_id)
             return True
         # The LAYOUT owns the modulus: adopt the snapshot's (a concurrent
         # runner may have converted the table since our __init__, and
@@ -651,7 +654,7 @@ class FeedRunner:
             plan = self._plan(df, convert)
             if plan is not None:
                 plans[table] = plan
-        done = self._publish_txlog(snap, plans, dead, n)
+        done = self._publish_txlog(snap, plans, dead, n, batch_id)
         if done is None:
             return False
         stats, items_bytes = done
@@ -696,25 +699,26 @@ class FeedRunner:
         the files, footer overhead dominating small deltas); a KNOWN-small
         delta (``rows`` ≤ ``SMALL_DELTA_ROWS``) skips that shuffle, since
         ``coalesce(1)`` writes the identical layout from one task over the
-        checkpointed in-memory blocks.  Returns the bytes staged."""
-        shutil.rmtree(staging, ignore_errors=True)  # stale from a crashed run
+        checkpointed in-memory blocks.  Returns the parquet bytes staged."""
         if rows is not None and rows <= SMALL_DELTA_ROWS:
             df = df.coalesce(1)
         else:
             df = df.repartition(F.col("b"))
-        df.write.partitionBy("b").mode("overwrite").parquet(staging)
-        return _dir_bytes(staging)
+        df.write.partitionBy("b").mode("overwrite").parquet(self.log.spark_path(staging))
+        return self.fs.tree_stats(self.fs.join(self.base, staging))[1]
 
-    def _publish_txlog(self, snap, plans, dead, n):
-        """The txlog commit: each staged bucket dir becomes a top-level snapshot
-        (``{table}@m{n}bNNNN__v_<token>``, vacuum's __v convention) and
-        every other manifest entry — untouched buckets, prior dead-letter
-        deltas, other feeds' tables — rides into the new manifest by NAME,
-        zero bytes written; a converting table drops its old entries.  Dead
+    def _publish_txlog(self, snap, plans, dead, n, batch_id):
+        """The txlog commit: the manifest names each staged bucket dir in
+        place (``{table}__vstage_<token>/b=bNNNN`` under key
+        ``{table}@m{n}bNNNN``; vacuum's __v convention) and every other
+        manifest entry — untouched buckets, prior dead-letter deltas,
+        other feeds' tables — rides into the new manifest by NAME, zero
+        bytes written; a converting table drops its old entries.  Dead
         letters land as a PER-BATCH delta snapshot (``dead_letter@d_<token>``)
-        in the SAME atomic commit as the state: a crash can never separate
-        a Failed transition from its dead-letter row, and a conflict retry
-        recomputes both together."""
+        and the batch id as this runner's ``txn`` entry, in the SAME atomic
+        commit as the state: a crash can never separate a Failed transition
+        from its dead-letter row or a batch from its id, and a conflict
+        retry recomputes them together."""
         import uuid
 
         token = uuid.uuid4().hex[:8]
@@ -725,30 +729,23 @@ class FeedRunner:
             for k in table_snapshots(snap.tables, t)
         }
         writes = {k: v for k, v in snap.tables.items() if k not in dropped}
-        fresh: list[str] = []
         stats = {}
-        for table, (df, rows) in plans.items():
-            staging = os.path.join(self.base, f"{table}__vstage_{token}")
+        stagings = [f"{table}__vstage_{token}" for table in plans]
+        for staging, (table, (df, rows)) in zip(stagings, plans.items()):
             stats[table] = self._stage(df, rows, staging)
-            for entry in os.listdir(staging):
+            for entry in self.fs.listdir(self.fs.join(self.base, staging)):
                 if entry.startswith("b="):
-                    key = f"{table}@m{n}{entry[2:]}"
-                    writes[key] = f"{key}__v_{token}"
-                    fresh.append(writes[key])
-                    os.replace(
-                        os.path.join(staging, entry),
-                        os.path.join(self.base, writes[key]),
-                    )
-            shutil.rmtree(staging, ignore_errors=True)
+                    writes[f"{table}@m{n}{entry[2:]}"] = f"{staging}/{entry}"
         if dead is not None and not dead.isEmpty():
             writes[f"{self.t_dead}@d_{token}"] = dead
+        txn = None if batch_id is None else {self.txn_key: batch_id}
         try:
-            self.log.commit(writes, expected_version=snap.version)
+            self.log.commit(writes, expected_version=snap.version, txn=txn)
         except CommitConflict:
-            # losers clean their own pre-staged bucket snapshots (the same
-            # courtesy commit() extends to DataFrame stagings)
-            for rel in fresh:
-                shutil.rmtree(os.path.join(self.base, rel), ignore_errors=True)
+            # losers clean their own staging dirs (the same courtesy
+            # commit() extends to DataFrame stagings)
+            for staging in stagings:
+                self.fs.delete_tree(self.fs.join(self.base, staging))
             return None
         return stats, self._txlog_table_bytes(writes, self.t_items)
 
@@ -766,9 +763,7 @@ class FeedRunner:
             rels = list(table_snapshots(tables, self.t_dead).values())
             if not rels:
                 return None
-            return self.spark.read.parquet(
-                *[os.path.join(self.base, r) for r in rels]
-            )
+            return self.spark.read.parquet(*[self.log.spark_path(r) for r in rels])
         root = os.path.join(self.base, self.t_dead)
         if not os.path.exists(root):
             return None
@@ -862,10 +857,9 @@ class FeedRunner:
                     keep=vacuum_keep, min_age_s=vacuum_min_age_s
                 )
             }
-        from gofeed_spark.fs import get_filesystem
         from gofeed_spark.sources.io import compact
 
-        fs = get_filesystem(self.base)
+        fs = self.fs
         compacted: dict[str, int] = {}
         root = fs.join(self.base, self.t_dead)
         for entry in fs.listdir(root):
@@ -884,7 +878,10 @@ class FeedRunner:
         never diverge in source options or sink."""
         reader = (
             self.spark.readStream.format("feed_cdc")
-            .option("path", self.base if self.storage == "txlog" else self.db_path)
+            .option(
+                "path",
+                self.fs.spark_path(self.base) if self.storage == "txlog" else self.db_path,
+            )
             .option("backend", self.storage)
             .option("table", self.t_items)
         )
@@ -927,8 +924,8 @@ class FeedRunner:
         after the last committed batch — ``processAllAvailable``'s
         contract.  A new query starts only after a streaming failure (a
         failed batch is safe to retry wholesale: the checkpoint re-delivers
-        it and the batch-id manifest + OCC storage commit make
-        re-processing idempotent), after a per-runner jittered pause.
+        it, and the batch id recorded in the state commit skips it once
+        that commit landed), after a per-runner jittered pause.
 
         ``max_rounds`` bounds micro-batches plus restarts; ``timeout_s``
         bounds how long the drain may go without committing a batch.

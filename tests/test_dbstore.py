@@ -552,7 +552,7 @@ def test_merge_dialect_ddl_probe_creates_then_noops(fake_mssql):
     store.ensure_schema()
     stmts = [s for s, _ in fake_mssql.statements]
     creates = [s for s in stmts if s.startswith("CREATE TABLE")]
-    assert {"items", "partitions"} == {s.split()[2] for s in creates}
+    assert {"items", "partitions", "txn"} == {s.split()[2] for s in creates}
     assert all("IF NOT EXISTS" not in s for s in creates)
     assert any("VARCHAR(255) PRIMARY KEY" in s for s in creates)
     # second call: probes succeed, nothing new is created

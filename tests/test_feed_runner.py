@@ -23,8 +23,26 @@ from gofeed_spark.feedstate.model import (
 )
 from gofeed_spark.feedstate.processors import json_times_processor
 from gofeed_spark.feedstate.txlog import TxLog
+from gofeed_spark.fs import (
+    DirObjectStoreFileSystem,
+    register_filesystem,
+    unregister_filesystem,
+)
 from gofeed_spark.streaming import feed_runner
 from gofeed_spark.streaming.feed_runner import FeedRunner
+
+
+@pytest.fixture(params=["local", "fakefs"])
+def feed_base(request, tmp_path):
+    """A feed store base on each backend: a local path, and a
+    ``fakefs://`` path on the object-store fake, whose logical paths do
+    not exist locally (Spark and the CDC poll get ``spark_path``)."""
+    if request.param == "local":
+        yield str(tmp_path / "feed")
+        return
+    register_filesystem("fakefs", DirObjectStoreFileSystem("fakefs", str(tmp_path / "backing")))
+    yield "fakefs://bucket/feed"
+    unregister_filesystem("fakefs")
 
 
 def _seed(spark, base):
@@ -40,25 +58,11 @@ def _seed(spark, base):
     return log
 
 
-def test_streaming_feed_reaches_reference_goldens(spark, tmp_path):
-    """The reference goldens on the streaming path, with state committed
-    through the multi-writer TxLog: every micro-batch lands as one atomic
-    two-table manifest commit, and the CDC source polls through the
-    manifest (backend='txlog')."""
-    from gofeed_spark.feedstate.txlog import CommitConflict
-
-    base = str(tmp_path / "feed")
-    log = _seed(spark, base)
-    runner = FeedRunner(
-        spark, base, json_times_processor, max_retries=3, auto_close=True
-    )
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        runner.run_available()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
+def _assert_goldens(runner):
+    """The reference's golden outcomes (watcher_test.go:268-349) over the
+    fixture ``_seed`` commits: item and partition states, and the
+    dead-letter log holding exactly the items that transitioned to Failed,
+    once each."""
     items = {r.id: r for r in runner.items().collect()}
     assert items["s1_ready"].status == COMPLETE
     assert items["s2_fail"].status == FAILED
@@ -70,12 +74,40 @@ def test_streaming_feed_reaches_reference_goldens(spark, tmp_path):
     assert parts["p1_gate"] == (COMPLETE, 1)
     assert parts["p2_gate"] == (FAILED, 0)
     assert all(s == COMPLETE for p, (s, g) in parts.items() if p.startswith("p1"))
+    dl = sorted(r.id for r in runner.dead_letters().collect())
+    assert dl == ["s10_ready_should_fail", "s13_gate_fail", "s6_owned_should_fail"]
+
+
+def test_streaming_feed_reaches_reference_goldens(spark, feed_base):
+    """The reference goldens on the streaming path, with state committed
+    through the multi-writer TxLog: every micro-batch lands as one atomic
+    two-table manifest commit, and the CDC source polls through the
+    manifest (backend='txlog') — on a local store and on the object-store
+    fake."""
+    from gofeed_spark.feedstate.txlog import CommitConflict
+
+    base = feed_base
+    log = _seed(spark, base)
+    runner = FeedRunner(
+        spark, base, json_times_processor, max_retries=3, auto_close=True
+    )
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        runner.run_available()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+
+    _assert_goldens(runner)
 
     # one manifest version per committed micro-batch, atop the seed commit
     # (the legacy→bucketed layout conversion folds into the first batch
-    # commit — it costs no extra version)
-    version, tables = log.latest()
-    assert version == 1 + len(runner._committed())
+    # commit — it costs no extra version); the newest records the last
+    # batch id under the runner's checkpoint name
+    version, m = log.head()
+    tables = m["tables"]
+    assert [h["batch_id"] for h in runner.write_history] == list(range(version - 1))
+    assert m["txn"] == {"_checkpoint": version - 2}
     # dead letters ride in the SAME atomic commit as the state tables; the
     # state tables themselves are committed as hash-bucketed snapshots
     # (plain entries dropped by the conversion)
@@ -86,38 +118,36 @@ def test_streaming_feed_reaches_reference_goldens(spark, tmp_path):
     assert any(k.startswith("items@m16b") for k in tables)
     assert any(k.startswith("partitions@m16b") for k in tables)
 
-    # dead-letter log: exactly the items that transitioned to Failed, once
+    # dead-letter log rows carry the final attempt's trail
     dead = runner.dead_letters()
-    dl = sorted(r.id for r in dead.collect())
-    assert dl == ["s10_ready_should_fail", "s13_gate_fail", "s6_owned_should_fail"]
     assert all(r.retry_count == 4 for r in dead.collect())  # MaxRetries=3 + 1
     assert all("moving to failed item" in r.error_messages for r in dead.collect())
 
     # crash-idempotency: re-delivering an already-committed batch is a no-op
     before = {tuple(r) for r in runner.items().collect()}
     poison = spark.createDataFrame([(1,)], "x int")
-    runner._step(poison, runner._committed()[-1])
+    runner._step(poison, m["txn"][runner.txn_key])
     after = {tuple(r) for r in runner.items().collect()}
     assert after == before
+    assert log.latest()[0] == version
 
     # a stale-expected commit from "another writer" conflicts cleanly
     with pytest.raises(CommitConflict):
         log.commit({"items": runner._items_with_ts()}, expected_version=0)
 
 
-def test_two_feed_runners_race_on_shared_txlog(spark, tmp_path):
+def test_two_feed_runners_race_on_shared_txlog(spark, feed_base):
     """The reference's flagship scenario end-to-end: TWO full feed runners
     (each with its own poll cursor, like two watcher processes) racing on
-    ONE shared state store.  The TxLog O_EXCL claim arbitrates every
-    micro-batch commit; a losing runner recomputes against the fresh
-    snapshot.  Final items, partitions, AND dead letters must be identical
-    to the single-runner goldens — no lost updates, no double transitions
-    (watcher_test.go:233-266,381-390)."""
+    ONE shared state store.  The TxLog create-if-absent manifest publish
+    arbitrates every micro-batch commit; a losing runner recomputes
+    against the fresh snapshot.  Final items, partitions, AND dead letters
+    must be identical to the single-runner goldens — no lost updates, no
+    double transitions (watcher_test.go:233-266,381-390) — on a local
+    store and on the object-store fake."""
     import threading
 
-    from gofeed_spark.feedstate.txlog import TxLog
-
-    base = str(tmp_path / "feed_race")
+    base = feed_base
     parts, items = seed_dataframes(spark)
     log = TxLog(base)
     log.commit(
@@ -165,21 +195,12 @@ def test_two_feed_runners_race_on_shared_txlog(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
-    items_out = {r.id: r for r in runners[0].items().collect()}
-    assert items_out["s1_ready"].status == COMPLETE
-    assert items_out["s2_fail"].status == FAILED
-    assert items_out["s6_owned_should_fail"].status == FAILED
-    assert items_out["s8_disabled"].status == AVAILABLE
-    assert items_out["s12_gate"].status == AVAILABLE and items_out["s12_gate"].gate == 1
-    assert items_out["s14_gate"].status == COMPLETE
-    parts_out = {r.id: (r.status, r.gate) for r in runners[0].partitions().collect()}
-    assert parts_out["p1_gate"] == (COMPLETE, 1)
-    assert parts_out["p2_gate"] == (FAILED, 0)
-    assert all(s == COMPLETE for p, (s, g) in parts_out.items() if p.startswith("p1"))
-    # dead letters: the SAME set as the single-runner run, each exactly once
-    dead = runners[0].dead_letters()
-    dl = sorted(r.id for r in dead.collect())
-    assert dl == ["s10_ready_should_fail", "s13_gate_fail", "s6_owned_should_fail"]
+    # items, partitions and dead letters: the SAME as the single-runner
+    # run, each dead letter exactly once; each runner's last batch id sits
+    # under its own checkpoint name
+    _assert_goldens(runners[0])
+    txn = TxLog(base).head()[1]["txn"]
+    assert set(txn) == {"_checkpoint_r1", "_checkpoint_r2"}
 
 
 def _two_phase_fixture(spark, n_done=1900, n_work=10):
@@ -651,8 +672,6 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path):
     """A requeue publishes like a micro-batch: it rewrites only the
     buckets its rows touch and keeps the layout's modulus record — the
     txlog manifest keeps only ``@m16b`` keys."""
-    from gofeed_spark.feedstate.admin import _dir_bytes
-
     settled = [
         (f"d{i}", 1, 0, f"q{i % 8}", 0, COMPLETE, "", '{"times":1}')
         for i in range(400)
@@ -672,7 +691,7 @@ def test_requeue_keeps_bucketed_layout(spark, tmp_path):
     def items_bytes():
         _, tables = runner.log.latest()
         return sum(
-            _dir_bytes(os.path.join(base, v))
+            runner.fs.tree_stats(os.path.join(base, v))[1]
             for k, v in tables.items()
             if k.startswith("items@")
         )
@@ -720,4 +739,76 @@ def test_run_available_raises_when_feed_never_quiesces(spark, tmp_path):
     with pytest.raises(RuntimeError, match="did not quiesce"):
         runner.run_available(max_rounds=3)
     assert spark.streams.active == []
-    assert len(runner._committed()) == 3
+    assert runner.log.head()[1]["txn"] == {runner.txn_key: 2}
+
+
+def _counting_processor(calls_path):
+    """``json_times_processor`` that appends one line per call (the item
+    id) to ``calls_path`` — the processor's side effects, counted."""
+
+    def proc(item_id, data):
+        with open(calls_path, "a") as f:
+            f.write(item_id + "\n")
+        return json_times_processor(item_id, data)
+
+    return proc
+
+
+def _drain_fixture(spark, base, storage, calls_path, crash):
+    """Drain the golden fixture on ``storage``; with ``crash``, the first
+    delivery of every micro-batch raises right after its state commit
+    landed, so the streaming query fails and Spark re-delivers the batch
+    under the same id.  Returns (runner, batch ids of landed commits,
+    processor calls per item)."""
+    from collections import Counter
+
+    runner = _store(
+        spark, base, storage, ITEM_FIXTURE, PARTITION_FIXTURE,
+        processor=_counting_processor(calls_path), max_retries=3, auto_close=True,
+    )
+    landed = []
+    publish = runner._publish
+
+    def crash_after_commit(snap, items, parts, dead, batch_id):
+        done = publish(snap, items, parts, dead, batch_id)
+        if done:
+            landed.append(batch_id)
+            if crash and landed.count(batch_id) == 1:
+                raise RuntimeError(f"crash after committing batch {batch_id}")
+        return done
+
+    runner._publish = crash_after_commit
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        runner.run_available(timeout_s=300, max_rounds=64)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    with open(calls_path) as f:
+        calls = Counter(f.read().split())
+    return runner, landed, calls
+
+
+@pytest.mark.parametrize("storage", ["txlog", "dbapi"])
+def test_crash_after_state_commit_replays_nothing(spark, tmp_path, storage):
+    """A micro-batch whose state commit landed but whose delivery then
+    failed is re-delivered by Spark under the same batch id; the id
+    recorded in the state commit (the txlog manifest's ``txn`` entry,
+    dbapi's last-id row) must make the replay a no-op: one commit per
+    distinct batch id, processor calls per item equal to a run with no
+    crash, and the goldens still hold."""
+    _, _, clean_calls = _drain_fixture(
+        spark, str(tmp_path / "clean"), storage, str(tmp_path / "clean.calls"), False
+    )
+    runner, landed, calls = _drain_fixture(
+        spark, str(tmp_path / "crash"), storage, str(tmp_path / "crash.calls"), True
+    )
+    assert landed and len(landed) == len(set(landed)), landed
+    assert calls == clean_calls
+    _assert_goldens(runner)
+    if storage == "txlog":
+        version, m = runner.log.head()
+        assert version == 1 + len(landed)  # atop the seed commit
+        assert m["txn"] == {runner.txn_key: max(landed)}
+    else:
+        assert runner.db.last_batch(runner.txn_key) == max(landed)

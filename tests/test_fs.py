@@ -118,25 +118,26 @@ def test_put_if_absent_publishes_whole(fakefs, tmp_path, monkeypatch):
         assert I._list_meta_versions(fs, md) == [(1, I._meta_name(1))]
 
 
-def test_local_put_bytes_racing_writers(tmp_path, monkeypatch):
+def test_local_put_bytes_racing_writers(tmp_path, monkeypatch, fakefs):
     """Two writers replacing the same object (``version-hint.text``)
     each publish from their own temp: the slower one's replace must not
-    find its temp taken by the faster one."""
-    fs = LocalFileSystem()
-    hint = str(tmp_path / "version-hint.text")
+    find its temp taken by the faster one — on the POSIX backend and on
+    the object-store fake, whose PUTs land through a local replace."""
     real_replace = os.replace
-    raced = []
+    for fs, root in ((LocalFileSystem(), str(tmp_path / "tbl")), (fakefs, "fakefs://tbl")):
+        hint = fs.join(root, "version-hint.text")
+        raced = []
 
-    def replace(src, dst):
-        if not raced:
-            raced.append(src)
-            fs.put_bytes(hint, b"2")  # a racing writer lands in between
-        real_replace(src, dst)
+        def replace(src, dst, fs=fs, hint=hint, raced=raced):
+            if not raced:
+                raced.append(src)
+                fs.put_bytes(hint, b"2")  # a racing writer lands in between
+            real_replace(src, dst)
 
-    monkeypatch.setattr(os, "replace", replace)
-    fs.put_bytes(hint, b"1")
-    assert fs.read_bytes(hint) == b"1"
-    assert os.listdir(tmp_path) == ["version-hint.text"]
+        monkeypatch.setattr(os, "replace", replace)
+        fs.put_bytes(hint, b"1")
+        assert fs.read_bytes(hint) == b"1"
+        assert fs.listdir(root) == ["version-hint.text"]
 
 
 def test_scheme_resolution(fakefs):

@@ -20,13 +20,16 @@ that table size.  Sweeping N across 1x/10x with a fixed --target-bytes
 (sets feed_runner.BUCKET_TARGET_BYTES) is the evidence that size-tiered bucket
 growth keeps delta writes ~flat as the table grows.
 
+Spark runs on ``local[$SPARK_GRAFT_CPUS]`` (or ``$SPARK_GRAFT_MASTER``).
 Prints ONE JSON line:
     {"metric": "feed_throughput", "n_items": N, "n_parts": P,
      "items_per_sec": {store: rate}, "wall_sec": {store: s},
-     "write_bytes_per_batch": {store: [b0, b1, ...]}}
+     "write_bytes_per_batch": {store: [b0, b1, ...]},
+     "load": [1/5/15-min load before, then after], "cpus": C,
+     "master": M}
 
 ``write_bytes_per_batch`` (txlog only) is the bucketed state store's
-staged bytes per committed micro-batch: the first batch converts +
+staged parquet bytes per committed micro-batch: the first batch converts +
 writes the full state, later batches write only buckets containing touched
 rows — the per-batch trail is the evidence that write volume tracks work
 done, not table size.
@@ -151,8 +154,8 @@ def main():
     n_items = int(args[0]) if len(args) > 0 else 200_000
     n_parts = int(args[1]) if len(args) > 1 else 1_000
     stores = args[2:] or ["txlog", "dbapi"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("feed-bench", master=f"local[{cpus}]")
+    spark = get_spark("feed-bench")
+    load_start = os.getloadavg()
     walls, rates, write_bytes, buckets = {}, {}, {}, {}
     for store in stores:
         wall, per_batch, n_buckets = bench_store(
@@ -170,6 +173,10 @@ def main():
         "items_per_sec": rates,
         "wall_sec": walls,
         "write_bytes_per_batch": write_bytes,
+        # the box the numbers were taken on
+        "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     if n_settled:
         out["n_settled"] = n_settled

@@ -11,7 +11,9 @@ the WARM slot only, per the bench-store rule).  Legs:
 - ``packed``: all columns, byte-packed partitions (32 MB default)
 - ``pruned``: packed + ``columns`` pruning to the 2-column projection
 
-Prints ONE JSON line.  Usage:
+Spark runs on ``local[$SPARK_GRAFT_CPUS]`` (or ``$SPARK_GRAFT_MASTER``).
+Prints ONE JSON line, with the load averages before and after and the
+``cpus``/``master`` it ran on.  Usage:
 
     python tools/bench_stream_src.py [n_rows] [n_commits]
 """
@@ -46,7 +48,8 @@ def drain(stream_df, out, ck):
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
     n_commits = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    spark = get_spark("bench-stream-src", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("bench-stream-src")
+    load_start = os.getloadavg()
     work = tempfile.mkdtemp(prefix="bench_stream_src_")
     from gofeed_spark.sources import delta as D
     from gofeed_spark.sources import iceberg as I
@@ -94,6 +97,9 @@ def main():
                 "n_commits": n_commits,
                 "files_per_commit": 8,
                 "legs": legs,
+                "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
             }
         )
     )
