@@ -97,19 +97,15 @@ def _newest(fs: FileSystem, logdir: str, versions: list[int]) -> tuple[int, dict
     return 0, {"tables": {}}
 
 
-def _head(base: str) -> tuple[int, dict]:
+def head(base: str) -> tuple[int, dict]:
+    """(version, manifest) of the newest complete manifest under
+    ``base/_txlog`` — its ``tables`` and, once a writer recorded one, its
+    ``txn`` map — skipping burned versions; (0, {"tables": {}}) when there
+    is none.  Pure JSON, and it never creates ``_txlog/`` — a CDC poll of
+    a store nobody has committed to must leave it absent."""
     fs = get_filesystem(base)
     logdir = fs.join(base, "_txlog")
     return _newest(fs, logdir, _versions(fs, logdir))
-
-
-def latest_manifest(base: str) -> tuple[int, dict[str, str]]:
-    """(version, {table: snapshot dir}) of the newest complete manifest
-    under ``base/_txlog``, skipping burned versions; (0, {}) when there is
-    none.  Pure JSON, and it never creates ``_txlog/`` — a CDC poll of a
-    store nobody has committed to must leave it absent."""
-    version, m = _head(base)
-    return version, dict(m["tables"])
 
 
 def table_snapshots(tables: dict[str, str], table: str) -> dict[str, str]:
@@ -141,16 +137,11 @@ class TxLog:
     def _load(self, version: int) -> dict | None:
         return _load(self.fs, self.logdir, version)
 
-    def head(self) -> tuple[int, dict]:
-        """(version, manifest) of the newest complete commit — its
-        ``tables`` and, once a writer recorded one, its ``txn`` map."""
-        return _head(self.base)
-
     def latest(self) -> tuple[int, dict[str, str]]:
         """(version, {table: snapshot dir}) of the newest complete commit;
         (0, {}) for an empty log."""
-        version, m = self.head()
-        return version, dict(m["tables"])
+        version, m = head(self.base)
+        return version, m["tables"]
 
     def spark_path(self, rel: str) -> str:
         """Where Spark reads or writes the snapshot dir ``rel``."""
@@ -260,20 +251,6 @@ class TxLog:
         raise CommitConflict(f"no commit after {max_attempts} attempts")
 
     # -- maintenance -----------------------------------------------------
-    def _mtime_ns(self, path: str) -> int:
-        """A dir's (or object's) mtime; an object store's virtual dir takes
-        its newest object's."""
-        st = self.fs.stat(path)
-        if st is not None:
-            return st[1]
-        return max(
-            (
-                (self.fs.stat(self.fs.join(path, rel)) or (0, 0))[1]
-                for rel, _size in self.fs.walk_files(path)
-            ),
-            default=0,
-        )
-
     def vacuum(self, keep: int = 2, min_age_s: float = 3600.0) -> list[str]:
         """Remove snapshot dirs not referenced by the last ``keep`` complete
         commits (and orphans from crashed/conflicted commits); of a dir
@@ -309,7 +286,7 @@ class TxLog:
         removed = []
         for rel in candidates:
             full = fs.join(self.base, rel)
-            if self._mtime_ns(full) <= cutoff:  # else maybe in flight
+            if (fs.stat(full) or (0, 0))[1] <= cutoff:  # else maybe in flight
                 fs.delete_tree(full)
                 removed.append(rel)
         return removed

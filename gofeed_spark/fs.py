@@ -176,7 +176,9 @@ class FileSystem:
         return False
 
     def stat(self, path: str) -> tuple[int, int] | None:
-        """(size_bytes, mtime_ns) of an object, or None if absent."""
+        """(size_bytes, mtime_ns) of an object, or None if absent.  A
+        directory has its own mtime on POSIX; an object store's virtual
+        dir reports its objects' total size and newest mtime."""
         raise NotImplementedError
 
     def tree_stats(self, path: str, suffix: str = ".parquet") -> tuple[int, int]:
@@ -348,10 +350,13 @@ class ObjectStoreFileSystem(FileSystem):
 
     def stat(self, path: str) -> tuple[int, int] | None:
         key = self._key(path)
+        total, newest = 0, None
         for k, size, mt in self._list(key):
             if k == key:
                 return size, mt
-        return None
+            if k.startswith(key + "/"):  # under a virtual dir
+                total, newest = total + size, max(mt, newest or 0)
+        return None if newest is None else (total, newest)
 
     def tree_stats(self, path: str, suffix: str = ".parquet") -> tuple[int, int]:
         prefix = self._key(path) + "/"

@@ -38,7 +38,7 @@ import os
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from gofeed_spark.feedstate.txlog import latest_manifest, table_snapshots
+from gofeed_spark.feedstate.txlog import head, table_snapshots
 
 CDC_SCHEMA = (
     "id string, version int, retry_count int, partition_id string, "
@@ -205,8 +205,7 @@ def _scan_txlog(
     boundary cap applies to the merged rows.  Snapshots are immutable, so
     this poll is consistent even while a writer is staging the next
     commit."""
-    _, tables = latest_manifest(path)
-    rels = list(table_snapshots(tables, table).values())
+    rels = list(table_snapshots(head(path)[1]["tables"], table).values())
     if not rels:
         return []
     return _scan_parquet([os.path.join(path, rel) for rel in rels], after, table, limit)

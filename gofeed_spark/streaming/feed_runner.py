@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import collections
 import contextlib
+import json
 import os
 import threading
 import time
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 
 from gofeed_spark.feedstate.engine import feed_step
 from gofeed_spark.feedstate.processors import ProcessorFn
-from gofeed_spark.feedstate.txlog import CommitConflict, TxLog, table_snapshots
+from gofeed_spark.feedstate.txlog import CommitConflict, TxLog, head, table_snapshots
 from gofeed_spark.fs import get_filesystem
 from gofeed_spark.sources.feed_cdc import register_feed_cdc
 
@@ -234,7 +235,7 @@ class FeedRunner:
         """``runner_id``: distinct per concurrent runner sharing one store
         — each runner keeps its OWN streaming checkpoint (its private poll
         offsets, like each reference watcher's in-process cursor) and its
-        own last-batch-id entry, keyed by the checkpoint dir's name, while
+        own last-batch-id entry, keyed by its streaming query's id, while
         the shared TxLog (or database) arbitrates the state commits.
 
         ``table_prefix``: namespaces this feed's tables (reference
@@ -265,13 +266,20 @@ class FeedRunner:
         suffix = (f"_{table_prefix}" if table_prefix else "") + (
             f"_{runner_id}" if runner_id else ""
         )
-        # foreachBatch ids are scoped to a checkpoint, so the checkpoint
-        # dir's name keys this runner's last committed batch id; Spark and
-        # the CDC poll's Python workers (which cannot see the driver's
-        # filesystem registry) get the store's Spark-addressable paths
+        # Spark and the CDC poll's Python workers (which cannot see the
+        # driver's filesystem registry) get the store's Spark-addressable
+        # paths
         self.fs = get_filesystem(base_path)
-        self.txn_key = f"_checkpoint{suffix}"
-        self.ckpt = self.fs.spark_path(self.fs.join(base_path, self.txn_key))
+        ckpt = self.fs.join(base_path, f"_checkpoint{suffix}")
+        self.ckpt = self.fs.spark_path(ckpt)
+        # foreachBatch ids are scoped to the streaming query, so the query
+        # id keys this runner's last committed batch id.  Spark keeps it in
+        # the checkpoint's ``metadata``: the same across restarts, new for
+        # a fresh checkpoint, and distinct for runners on different base
+        # paths that share one database.  Read at the first batch, once
+        # the query has written it.
+        self._query_meta = self.fs.join(ckpt, "metadata")
+        self.txn_key: str | None = None
         # Per-runner dead-letter partition dir: concurrent Spark jobs must
         # never append into ONE directory (FileOutputCommitter's shared
         # _temporary staging is not concurrency-safe); readers scan the
@@ -421,6 +429,8 @@ class FeedRunner:
 
     # -- the state commit: read → decide → publish -------------------------
     def _step(self, changed, batch_id: int) -> None:
+        if self.txn_key is None:
+            self.txn_key = json.loads(self.fs.read_bytes(self._query_meta))["id"]
         drain = self._drain
         if drain is not None:
             if drain.rounds >= drain.max_rounds:
@@ -490,7 +500,7 @@ class FeedRunner:
         from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE
 
         if self.storage == "dbapi":
-            last = self.db.last_batch(self.txn_key)
+            last = -1 if self.txn_key is None else self.db.last_batch(self.txn_key)
             if full:
                 return _Snapshot(
                     self._items_with_ts(), self.partitions(),
@@ -507,7 +517,7 @@ class FeedRunner:
             return _Snapshot(
                 items, parts, self.db.max_updated_at() + 1, last, counts=counts
             )
-        version, m = self.log.head()
+        version, m = head(self.base)
         tables = m["tables"]
         last = m.get("txn", {}).get(self.txn_key, -1)
         items = self._txlog_read(self.t_items, tables).drop("b")

@@ -22,7 +22,7 @@ from gofeed_spark.feedstate.model import (
     seed_dataframes,
 )
 from gofeed_spark.feedstate.processors import json_times_processor
-from gofeed_spark.feedstate.txlog import TxLog
+from gofeed_spark.feedstate.txlog import TxLog, head
 from gofeed_spark.fs import (
     DirObjectStoreFileSystem,
     register_filesystem,
@@ -103,11 +103,11 @@ def test_streaming_feed_reaches_reference_goldens(spark, feed_base):
     # one manifest version per committed micro-batch, atop the seed commit
     # (the legacy→bucketed layout conversion folds into the first batch
     # commit — it costs no extra version); the newest records the last
-    # batch id under the runner's checkpoint name
-    version, m = log.head()
+    # batch id under the runner's streaming query id
+    version, m = head(base)
     tables = m["tables"]
     assert [h["batch_id"] for h in runner.write_history] == list(range(version - 1))
-    assert m["txn"] == {"_checkpoint": version - 2}
+    assert m["txn"] == {runner.txn_key: version - 2}
     # dead letters ride in the SAME atomic commit as the state tables; the
     # state tables themselves are committed as hash-bucketed snapshots
     # (plain entries dropped by the conversion)
@@ -197,10 +197,10 @@ def test_two_feed_runners_race_on_shared_txlog(spark, feed_base):
 
     # items, partitions and dead letters: the SAME as the single-runner
     # run, each dead letter exactly once; each runner's last batch id sits
-    # under its own checkpoint name
+    # under its own streaming query id
     _assert_goldens(runners[0])
-    txn = TxLog(base).head()[1]["txn"]
-    assert set(txn) == {"_checkpoint_r1", "_checkpoint_r2"}
+    keys = {r.txn_key for r in runners}
+    assert len(keys) == 2 and set(head(base)[1]["txn"]) == keys
 
 
 def _two_phase_fixture(spark, n_done=1900, n_work=10):
@@ -739,7 +739,7 @@ def test_run_available_raises_when_feed_never_quiesces(spark, tmp_path):
     with pytest.raises(RuntimeError, match="did not quiesce"):
         runner.run_available(max_rounds=3)
     assert spark.streams.active == []
-    assert runner.log.head()[1]["txn"] == {runner.txn_key: 2}
+    assert head(runner.base)[1]["txn"] == {runner.txn_key: 2}
 
 
 def _counting_processor(calls_path):
@@ -807,8 +807,62 @@ def test_crash_after_state_commit_replays_nothing(spark, tmp_path, storage):
     assert calls == clean_calls
     _assert_goldens(runner)
     if storage == "txlog":
-        version, m = runner.log.head()
+        version, m = head(runner.base)
         assert version == 1 + len(landed)  # atop the seed commit
         assert m["txn"] == {runner.txn_key: max(landed)}
     else:
         assert runner.db.last_batch(runner.txn_key) == max(landed)
+
+
+def test_dbapi_runners_on_separate_bases_share_one_database(spark, tmp_path):
+    """Two services on their own base paths (own checkpoints, own dead
+    letters) sharing ONE database, the reference's multi-watcher
+    deployment with the CLI's default runner id.  Each runner keys its
+    last batch id by its own streaming query, so a runner never takes the
+    other's batch ids, or those of a deleted checkpoint, for replays:
+    after A drains, the store is reset to the fixture (new work arriving
+    while A is down) and B, whose batch ids restart at 0, must reach the
+    goldens; then A, restarted on a fresh checkpoint, must too."""
+    import shutil
+    import sqlite3
+
+    db = str(tmp_path / "shared.db")
+
+    def reset():
+        con = sqlite3.connect(db)
+        try:
+            con.execute("DELETE FROM items")
+            con.execute("DELETE FROM partitions")
+            con.commit()
+        finally:
+            con.close()
+        store.db.seed(
+            items_rows=[r + (1,) for r in ITEM_FIXTURE], parts_rows=PARTITION_FIXTURE
+        )
+
+    def drain(base):
+        runner = FeedRunner(
+            spark, base, json_times_processor, max_retries=3, auto_close=True,
+            storage="dbapi", db_path=db,
+        )
+        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            runner.run_available()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        _assert_goldens(runner)
+        return runner
+
+    base_a, base_b = str(tmp_path / "host_a"), str(tmp_path / "host_b")
+    store = FeedRunner(spark, base_a, json_times_processor, storage="dbapi", db_path=db)
+    reset()
+    a = drain(base_a)
+    reset()
+    b = drain(base_b)
+    assert a.txn_key != b.txn_key
+    assert a.db.last_batch(a.txn_key) >= 0 and b.db.last_batch(b.txn_key) >= 0
+    shutil.rmtree(os.path.join(base_a, "_checkpoint"))
+    shutil.rmtree(os.path.join(base_a, "dead_letter"))
+    reset()
+    assert drain(base_a).txn_key not in (a.txn_key, b.txn_key)

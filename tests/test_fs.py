@@ -73,6 +73,10 @@ def test_object_store_semantics(fakefs):
     )
     n, nbytes = fs.tree_stats("fakefs://bucket/idx")
     assert (n, nbytes) == (2, 300)
+    # a virtual dir: its objects' total size and newest mtime, one listing
+    parts = [fs.stat(f"fakefs://bucket/idx/sigs/part-{i}.parquet") for i in (0, 1)]
+    assert fs.stat("fakefs://bucket/idx/sigs") == (300, max(mt for _, mt in parts))
+    assert fs.stat("fakefs://bucket/idx/si") is None  # a key prefix is no dir
     # rename is a hard error — the pointer-flip publish exists because of this
     with pytest.raises(FsUnsupported):
         fs.rename("fakefs://bucket/idx/sigs", "fakefs://bucket/idx/sigs2")

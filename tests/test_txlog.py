@@ -16,7 +16,7 @@ import pytest
 from gofeed_spark.feedstate.txlog import (
     CommitConflict,
     TxLog,
-    latest_manifest,
+    head,
     table_snapshots,
 )
 from gofeed_spark.fs import (
@@ -164,7 +164,7 @@ def test_commit_carries_txn_map(spark, bases):
         log.commit({"t": df(spark, (2, "x"))}, expected_version=1, txn={"_checkpoint_b": 4})
         log.commit({"t": df(spark, (3, "x"))}, txn={"_checkpoint_a": 1})
         log.commit_retry(lambda version, tables: tables)
-        version, m = log.head()
+        version, m = head(base)
         assert version == 4
         assert m["txn"] == {"_checkpoint_a": 1, "_checkpoint_b": 4}
         assert m["tables"] == log.latest()[1]
@@ -354,7 +354,7 @@ def test_manifest_rules_name_each_tables_snapshots(spark, tmp_path):
 
     empty = tmp_path / "empty"
     empty.mkdir()
-    assert latest_manifest(str(empty)) == (0, {})
+    assert head(str(empty)) == (0, {"tables": {}})
     assert _scan_txlog(str(empty), -1) == []
     assert not (empty / "_txlog").exists()
 
@@ -362,4 +362,4 @@ def test_manifest_rules_name_each_tables_snapshots(spark, tmp_path):
     log = TxLog(base)
     log.commit({"t": df(spark, (1, "x"))})
     _put_log_entry(log, "00000002.json")  # burned
-    assert latest_manifest(base) == log.latest() and log.latest()[0] == 1
+    assert head(base)[1]["tables"] == log.latest()[1] and log.latest()[0] == 1
