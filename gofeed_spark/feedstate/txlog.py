@@ -21,8 +21,8 @@ Layout::
     base/items__v00000001_ab12cd34/     immutable parquet snapshot dirs
     base/partitions__v00000001_ab12cd34/  (writer-unique suffix: racing
                                          committers never share a dir)
-    base/items__vstage_ab12cd34/b=b0003/  a manifest may name a dir's
-                                         child (FeedRunner's buckets)
+    base/items__v00000002_ab12cd34/pbkt=b0003/  a manifest may name a
+                                         dir's child (keyed.py buckets)
 
 Commit protocol (optimistic):
 

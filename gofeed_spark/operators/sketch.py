@@ -199,7 +199,8 @@ class HeavyHittersAccumulator:
         # checkpoint commit) arrives with an id <= this watermark; folding
         # it twice would inflate L above the true counts and the exactness
         # certificate could then pass with a falsely-narrow candidate set
-        # (same hazard ParquetUpsertSink dedupes via its manifest).
+        # (same hazard ParquetUpsertSink skips through its manifest's
+        # txn entry).
         self.max_batch_id: int | None = None
 
     def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:

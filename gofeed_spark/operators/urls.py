@@ -154,10 +154,12 @@ class StreamingFrontierScheduler:
     O(batch + touched buckets), the standing schedule never reshuffles.
     The host→worker assignment is FROZEN by construction (md5-prefix of
     the host, the engine's bucket convention): a host keeps its worker
-    across every batch with zero coordination.  Both the emitted schedule
-    and the slot bases live in :class:`ParquetUpsertSink` tables, so
-    re-delivered batch ids are skipped exactly once each — a crash
-    between the two commits replays into two idempotent skips.
+    across every batch with zero coordination.  The emitted schedule
+    (``sched``, keyed on the url) and the slot bases (``bases``, keyed on
+    the host) are two keyed tables of ONE TxLog at ``path``
+    (feedstate/keyed.py), committed together with the batch id: a
+    re-delivered batch id is skipped whole, and a crash leaves either
+    both tables or neither.
 
     Streaming == batch contract: worker assignments always match the
     batch scheduler's; slots match when per-host arrival order equals
@@ -174,72 +176,71 @@ class StreamingFrontierScheduler:
         n_workers: int = 16,
         url_col: str = "url",
         priority_col: str = "priority",
-        n_buckets: int = 16,
     ):
-        from gofeed_spark.streaming.sinks import ParquetUpsertSink
+        from gofeed_spark.feedstate.keyed import KeyedTable
+        from gofeed_spark.feedstate.txlog import TxLog
 
         self.delay_ms = delay_ms
         self.n_workers = n_workers
         self.url_col = url_col
         self.priority_col = priority_col
-        self.rows = ParquetUpsertSink(
-            f"{path.rstrip('/')}/sched", key=url_col, n_buckets=n_buckets
-        )
-        self.bases = ParquetUpsertSink(
-            f"{path.rstrip('/')}/bases", key="host", n_buckets=n_buckets
-        )
-
-    def _read_bases(self, spark):
-        prev = self.bases.read(spark)
-        if prev is None:
-            return spark.createDataFrame([], "host string, base long")
-        return prev.select("host", "base")
+        self.log = TxLog(path)
+        self.sched = KeyedTable(self.log, "sched", url_col)
+        self.bases = KeyedTable(self.log, "bases", "host")
 
     def __call__(self, batch_df, batch_id: int) -> None:
         from pyspark.sql import Window as W
 
+        from gofeed_spark.feedstate.keyed import run_batch
+
         spark = batch_df.sparkSession
         host = F.regexp_extract(F.col(self.url_col), r"^https?://([^/]+)", 1)
-        # one materialization feeds the schedule AND the base fold
-        b = batch_df.withColumn("host", host).localCheckpoint()
-        prev = self._read_bases(spark)
         w = W.partitionBy("host").orderBy(self.priority_col, self.url_col)
-        sched = (
-            b.withColumn("__rn", F.row_number().over(w))
-            .join(prev, "host", "left")
-            .withColumn(
-                "slot",
-                (F.coalesce(F.col("base"), F.lit(0)) + F.col("__rn")).cast(
-                    "int"
-                ),
+
+        def build(c):
+            # one materialization feeds the schedule AND the base fold
+            b = batch_df.withColumn("host", host).localCheckpoint()
+            prev = self.bases.read(spark, c.tables)
+            if prev is None:
+                prev = spark.createDataFrame([], "host string, base long")
+            sched = (
+                b.withColumn("__rn", F.row_number().over(w))
+                .join(prev, "host", "left")
+                .withColumn(
+                    "slot",
+                    (F.coalesce(F.col("base"), F.lit(0)) + F.col("__rn")).cast(
+                        "int"
+                    ),
+                )
+                .withColumn(
+                    "fetch_at_ms",
+                    ((F.col("slot") - 1) * self.delay_ms).cast("long"),
+                )
+                .withColumn(
+                    "worker",
+                    F.pmod(
+                        F.conv(
+                            F.substring(F.md5(F.col("host").cast("binary")), 1, 8),
+                            16,
+                            10,
+                        ).cast("long"),
+                        F.lit(self.n_workers),
+                    ).cast("int"),
+                )
+                .drop("__rn", "base")
             )
-            .withColumn(
-                "fetch_at_ms",
-                ((F.col("slot") - 1) * self.delay_ms).cast("long"),
+            counts = b.groupBy("host").agg(F.count(F.lit(1)).alias("__cnt"))
+            new_bases = counts.join(prev, "host", "left").select(
+                "host",
+                (F.coalesce(F.col("base"), F.lit(0)) + F.col("__cnt"))
+                .cast("long")
+                .alias("base"),
             )
-            .withColumn(
-                "worker",
-                F.pmod(
-                    F.conv(
-                        F.substring(F.md5(F.col("host").cast("binary")), 1, 8),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(self.n_workers),
-                ).cast("int"),
-            )
-            .drop("__rn", "base")
-        )
-        self.rows(sched, batch_id)
-        counts = b.groupBy("host").agg(F.count(F.lit(1)).alias("__cnt"))
-        new_bases = counts.join(prev, "host", "left").select(
-            "host",
-            (F.coalesce(F.col("base"), F.lit(0)) + F.col("__cnt"))
-            .cast("long")
-            .alias("base"),
-        )
-        self.bases(new_bases, batch_id)
+            self.sched.upsert(c, sched, 16)
+            self.bases.upsert(c, new_bases, 16)
+
+        run_batch(self.log, batch_df, batch_id, build)
 
     def read(self, spark):
         """The accumulated schedule (None before the first commit)."""
-        return self.rows.read(spark)
+        return self.sched.read(spark, self.log.latest()[1])

@@ -7,10 +7,12 @@
   operator (applyInPandasWithState), the streaming twin of
   watcher.go:147-161, and the only streaming form of it.
 - ``sinks.ParquetUpsertSink``: idempotent keyed MERGE sink for
-  foreachBatch — checkpoint + the committed batch ids it records beside
-  its bucket pointers (one atomic PUT) give exactly-once effect
-  on restart (the OCC-save replacement, repo.go:125-138); hash-bucketed
-  layout, so a micro-batch rewrites only the buckets holding its keys.
+  foreachBatch — a keyed table over TxLog (feedstate/keyed.py): each
+  batch's buckets and its id, keyed by the streaming query id, land in
+  one manifest commit, so checkpoint + that id give exactly-once effect
+  on restart and concurrent writers arbitrate optimistically (the OCC
+  save, repo.go:125-138); a micro-batch rewrites only the buckets
+  holding its keys.
 - ``windows``: watermarked tumbling/session window twins of Q31/Q32.
 """
 

@@ -22,16 +22,24 @@ from __future__ import annotations
 
 import collections
 import contextlib
-import json
 import os
 import threading
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofeed_spark.feedstate.engine import feed_step
+from gofeed_spark.feedstate.keyed import (
+    COMMIT_ATTEMPTS,
+    DIRECT_TXN_KEY,
+    Commit,
+    KeyedTable,
+    grown,
+    stream_id,
+)
 from gofeed_spark.feedstate.processors import ProcessorFn
 from gofeed_spark.feedstate.txlog import CommitConflict, TxLog, head, table_snapshots
 from gofeed_spark.fs import get_filesystem
@@ -51,25 +59,19 @@ FANOUT_ROWS = 200_000
 # replaces AQE's runtime coalescing and measures FASTER than AQE ever did
 # at the 200k-item profile.
 DRAIN_SHUFFLE_PARTITIONS = 8
-# txlog: the items/partitions tables are laid out hash-bucketed (bucket =
-# pmod(xxhash64(id), n); key values ``b0007``-style) and each commit
-# rewrites ONLY buckets containing changed rows — write volume scales with
-# work done, the snapshot-store twin of dbapi's per-row upserts.  A fresh
-# or legacy (unbucketed) table is laid out under STATE_BUCKETS inside its
-# first commit; a layout that records its modulus keeps it (see __init__).
+# txlog: the items/partitions tables are keyed tables on ``id``
+# (feedstate/keyed.py), so each commit rewrites ONLY buckets containing
+# changed rows — write volume scales with work done, the snapshot-store
+# twin of dbapi's per-row upserts.  A fresh or legacy (unbucketed) table is
+# laid out under STATE_BUCKETS inside its first commit; a layout that
+# records its modulus keeps it (see __init__).
 STATE_BUCKETS = 16
-# Size-tiered growth: when the items table's mean bucket size exceeds the
-# target, the next commit re-buckets the state to the next power-of-two
-# count that brings it back under — per-batch write volume stays
-# ~O(touched rows x BUCKET_TARGET_BYTES) as the table grows, the reference
-# contract of one row per save (repo.go:125-138) with a bounded constant.
-# Growth stops at MAX_STATE_BUCKETS (bucket names have 4 digits).
+# Size-tiered growth (keyed.grown): when the items table's mean bucket
+# size exceeds the target, the next commit re-buckets the state to the
+# next power-of-two count that brings it back under, up to
+# MAX_STATE_BUCKETS (bucket names have 4 digits).
 BUCKET_TARGET_BYTES = 16 * 1024 * 1024
 MAX_STATE_BUCKETS = 4096
-# Staging writes at or below this row count skip the ``repartition(b)``
-# shuffle (see _stage) — ~10-14% of feed throughput at the 200k-item
-# profile for few-KB deltas.
-SMALL_DELTA_ROWS = 8192
 
 # AQE-off guard for streaming runs.  Streaming does not support AQE — every
 # query start then DISABLES it on a conf clone (ResolveWriteToStream), and
@@ -197,10 +199,10 @@ class FeedRunner:
 
     ``storage``: ``"txlog"`` (default) commits both tables, the dead
     letters and the batch id through the manifest log
-    (feedstate/txlog.py) as hash-bucketed snapshots: the touched-bucket
-    planner (``_plan``) and the staging write (``_stage``) feed ONE atomic
-    manifest commit that names the staged buckets and carries untouched
-    ones by name.  All of it goes through the store's filesystem
+    (feedstate/txlog.py) as keyed tables (feedstate/keyed.py): the
+    touched-bucket plan and the staging write feed ONE atomic manifest
+    commit that names the staged buckets and carries untouched ones by
+    name.  All of it goes through the store's filesystem
     (gofeed_spark/fs.py), so a ``scheme://`` base on a registered backend
     works like a local path.  Multi-writer-safe — a concurrent runner's
     commit loses the create-if-absent manifest publish, and this runner
@@ -270,16 +272,13 @@ class FeedRunner:
         # driver's filesystem registry) get the store's Spark-addressable
         # paths
         self.fs = get_filesystem(base_path)
-        ckpt = self.fs.join(base_path, f"_checkpoint{suffix}")
-        self.ckpt = self.fs.spark_path(ckpt)
+        self.ckpt = self.fs.spark_path(self.fs.join(base_path, f"_checkpoint{suffix}"))
         # foreachBatch ids are scoped to the streaming query, so the query
-        # id keys this runner's last committed batch id.  Spark keeps it in
-        # the checkpoint's ``metadata``: the same across restarts, new for
-        # a fresh checkpoint, and distinct for runners on different base
-        # paths that share one database.  Read at the first batch, once
-        # the query has written it.
-        self._query_meta = self.fs.join(ckpt, "metadata")
-        self.txn_key: str | None = None
+        # id (keyed.stream_id: the same across restarts, new for a fresh
+        # checkpoint, distinct for runners on different base paths that
+        # share one database) keys this runner's last committed batch id.
+        # Kept from the last batch, for direct ``_step`` calls.
+        self.txn_key = DIRECT_TXN_KEY
         # Per-runner dead-letter partition dir: concurrent Spark jobs must
         # never append into ONE directory (FileOutputCommitter's shared
         # _temporary staging is not concurrency-safe); readers scan the
@@ -299,11 +298,12 @@ class FeedRunner:
         self.poll_limit = poll_limit
         self.state_buckets = STATE_BUCKETS
         self._grow_to: int | None = None
-        self._rel_bytes: dict[str, int] = {}
         layout_n = None
         if storage == "txlog":
             self.log = TxLog(base_path)
-            layout_n = self._layout_modulus(self.log.latest()[1], self.t_items)
+            self.k_items = KeyedTable(self.log, self.t_items, "id")
+            self.k_parts = KeyedTable(self.log, self.t_parts, "id")
+            layout_n = self.k_items.modulus(self.log.latest()[1])
         else:
             from gofeed_spark.feedstate.dbstore import DbApiStore
 
@@ -325,85 +325,18 @@ class FeedRunner:
         register_feed_cdc(self.spark)
 
     # -- state-table accessors -------------------------------------------
-    def _bucket_col(self, n_buckets: int | None = None):
-        """Deterministic bucket value for an id: 'b' + zero-padded
-        pmod(xxhash64(id), n_buckets).  The prefix keeps the partition
-        directory value non-numeric by construction (a numeric-looking
-        string would re-infer as INT on read and silently break isin
-        probes on values with leading zeros)."""
-        n = self.state_buckets if n_buckets is None else n_buckets
-        return F.concat(
-            F.lit("b"),
-            F.lpad(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(n)).cast(
-                    "string"
-                ),
-                4,
-                "0",
-            ),
-        )
-
-    @staticmethod
-    def _layout_modulus(tables: dict, table: str) -> int | None:
-        """Bucket modulus recorded in a manifest's ``{table}@m{n}bNNNN``
-        keys — committed atomically with the data, so concurrent runners
-        derive the SAME modulus as the snapshot they read (a racing
-        conversion makes their commit conflict and recompute).  None when
-        the layout cannot tell: no state yet, a plain legacy entry, or
-        pre-stamp ``@b`` keys (the next commit converts them under
-        ``state_buckets``)."""
-        if table in tables:
-            return None
-        prefix = table + "@m"
-        for k in tables:
-            if k.startswith(prefix):
-                return int(k[len(prefix):].split("b", 1)[0])
-        return None
-
-    def _maybe_schedule_growth(self, items_table_bytes: int) -> None:
-        """Size-tiered buckets: when mean bucket size exceeds the target,
-        schedule the next power-of-two count that brings it back under.
-        The NEXT batch commit performs the conversion (full restage under
-        the new modulus, same in-commit mechanism as the legacy
-        conversion), keeping per-batch write volume ~O(touched rows ×
-        BUCKET_TARGET_BYTES) as state grows."""
-        n = self.state_buckets
-        while items_table_bytes / n > BUCKET_TARGET_BYTES and n < MAX_STATE_BUCKETS:
-            n *= 2
-        if n != self.state_buckets:
-            self._grow_to = min(n, MAX_STATE_BUCKETS)
-
-    def _txlog_table_bytes(self, tables: dict, table: str) -> int:
-        """Total on-disk bytes of a txlog table across its manifest rels.
-        Rel snapshots are immutable, so per-rel sizes cache forever (the
-        cache is pruned to the manifest's live set each call — bounded by
-        rel count); an object-store deployment would read sizes straight
-        off the manifest instead of listing."""
-        total = 0
-        fresh: dict[str, int] = {}
-        for rel in table_snapshots(tables, table).values():
-            b = self._rel_bytes.get(rel)
-            if b is None:
-                b = self.fs.tree_stats(self.fs.join(self.base, rel))[1]
-            fresh[rel] = b
-            total += b
-        self._rel_bytes = fresh
-        return total
-
-    def _txlog_read(self, table: str, tables: dict | None = None):
-        """Read a possibly-bucketed txlog table: the union of the plain
-        entry (legacy / pre-conversion) and every bucket snapshot named by
-        the manifest ``tables`` (default: the latest).  A state commit
-        passes the manifest it read its version from: re-reading
-        ``latest()`` would race a concurrent commit, building writes from a
-        newer snapshot than the OCC expected_version — a guaranteed
-        conflict that burns retry attempts."""
+    def _txlog_read(self, table: KeyedTable, tables: dict | None = None):
+        """A txlog state table in manifest ``tables`` (default: the
+        latest).  A state commit passes the manifest it read its version
+        from: re-reading ``latest()`` would race a concurrent commit,
+        building writes from a newer snapshot than the OCC
+        expected_version — a guaranteed conflict that burns retries."""
         if tables is None:
             _, tables = self.log.latest()
-        rels = list(table_snapshots(tables, table).values())
-        if not rels:
-            raise ValueError(f"table {table!r} not in commit: {sorted(tables)}")
-        return self.spark.read.parquet(*[self.log.spark_path(r) for r in rels])
+        df = table.read(self.spark, tables)
+        if df is None:
+            raise ValueError(f"table {table.name!r} not in commit: {sorted(tables)}")
+        return df
 
     def _read_fanout(self, n_rows: int) -> int:
         """Read partitions for an n_rows read: 1 (plain driver SELECT) up
@@ -412,7 +345,7 @@ class FeedRunner:
 
     def _items_with_ts(self):
         if self.storage == "txlog":
-            return self._txlog_read(self.t_items).drop("b")
+            return self._txlog_read(self.k_items)
         # full-table accessor: size the read from a pushed-down COUNT so
         # even user-facing reads never funnel big state through the driver
         return self.db.read_items(
@@ -424,13 +357,12 @@ class FeedRunner:
 
     def partitions(self):
         if self.storage == "txlog":
-            return self._txlog_read(self.t_parts).drop("b")
+            return self._txlog_read(self.k_parts)
         return self.db.read_partitions(self.spark)
 
     # -- the state commit: read → decide → publish -------------------------
     def _step(self, changed, batch_id: int) -> None:
-        if self.txn_key is None:
-            self.txn_key = json.loads(self.fs.read_bytes(self._query_meta))["id"]
+        self.txn_key = stream_id(changed) or self.txn_key
         drain = self._drain
         if drain is not None:
             if drain.rounds >= drain.max_rounds:
@@ -465,7 +397,7 @@ class FeedRunner:
         micro-batch until driver GC notices."""
         from gofeed_spark.functions.lineage import release_local_checkpoint
 
-        for _ in range(8 if self.storage == "txlog" else 1):
+        for _ in range(COMMIT_ATTEMPTS if self.storage == "txlog" else 1):
             ckpts: list = []
 
             def ckpt(df):
@@ -500,7 +432,7 @@ class FeedRunner:
         from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE
 
         if self.storage == "dbapi":
-            last = -1 if self.txn_key is None else self.db.last_batch(self.txn_key)
+            last = self.db.last_batch(self.txn_key)
             if full:
                 return _Snapshot(
                     self._items_with_ts(), self.partitions(),
@@ -520,8 +452,8 @@ class FeedRunner:
         version, m = head(self.base)
         tables = m["tables"]
         last = m.get("txn", {}).get(self.txn_key, -1)
-        items = self._txlog_read(self.t_items, tables).drop("b")
-        parts = self._txlog_read(self.t_parts, tables).drop("b")
+        items = self._txlog_read(self.k_items, tables)
+        parts = self._txlog_read(self.k_parts, tables)
         tick = (items.agg(F.max("updated_at")).collect()[0][0] or 0) + 1
         return _Snapshot(items, parts, tick, last, version=version, tables=tables)
 
@@ -638,8 +570,9 @@ class FeedRunner:
         records the batch id.  A crash in between can only DUPLICATE a
         dead letter or re-decide the batch on replay (at-least-once, the
         reference's posture), never lose one.  txlog plans the touched
-        buckets, stages them and commits them with the batch id in one
-        manifest (``_publish_txlog``)."""
+        buckets, stages them and commits them, the dead letters and the
+        batch id in one manifest; a converting table drops its old
+        entries."""
         if self.storage == "dbapi":
             if dead is not None and not dead.isEmpty():
                 dead.write.mode("append").parquet(self.dead_dir)
@@ -652,112 +585,37 @@ class FeedRunner:
         # runner may have converted the table since our __init__, and
         # planning touched buckets under another modulus than the layout's
         # would commit deltas against wrongly-shaped buckets).
-        m = self._layout_modulus(snap.tables, self.t_items)
+        m = self.k_items.modulus(snap.tables)
         if m is not None and m != self.state_buckets:
             self.state_buckets, self._grow_to = m, None
         grow = self._grow_to
         n = grow or self.state_buckets
-        plans = {}
-        for table, rows in ((self.t_items, items), (self.t_parts, parts)):
-            df = rows.withColumn("b", self._bucket_col(n))
-            convert = grow is not None or self._layout_modulus(snap.tables, table) != n
-            plan = self._plan(df, convert)
-            if plan is not None:
-                plans[table] = plan
-        done = self._publish_txlog(snap, plans, dead, n, batch_id)
-        if done is None:
+        c = Commit(self.log, snap.version, snap.tables)
+        stats = {}
+        for table, rows in ((self.k_items, items), (self.k_parts, parts)):
+            # a new modulus (scheduled growth, a legacy or unstamped
+            # layout) lays the whole table out; otherwise only the
+            # touched buckets are restaged
+            if grow is not None or table.modulus(snap.tables) != n:
+                stats[table.name] = table.write(c, rows.drop("__changed"), n, whole=True)[0]
+            elif (plan := table.plan(rows, n)) is not None:
+                stats[table.name] = table.write(c, plan.df, n, plan.rows)[0]
+        # dead letters land as a per-batch delta snapshot in the same
+        # commit: a crash never separates a Failed transition from its row
+        if dead is not None and not dead.isEmpty():
+            c.tables[f"{self.t_dead}@d_{uuid.uuid4().hex[:8]}"] = dead
+        if not c.publish(None if batch_id is None else {self.txn_key: batch_id}):
             return False
-        stats, items_bytes = done
         if grow is not None:
             self.state_buckets, self._grow_to = grow, None
         self._record_write(batch_id, stats)
-        self._maybe_schedule_growth(items_bytes)
+        target = grown(
+            self.state_buckets, self.k_items.nbytes(c.tables),
+            BUCKET_TARGET_BYTES, MAX_STATE_BUCKETS,
+        )
+        if target != self.state_buckets:
+            self._grow_to = target
         return True
-
-    @staticmethod
-    def _plan(df, convert: bool):
-        """The touched-bucket planner: ``(rows to stage, row count)``.
-
-        ``convert`` (legacy layout, a modulus the layout does not record or
-        disagrees with, scheduled growth) stages the whole table, count
-        None.  Otherwise ONE collect over ``df`` yields the touched buckets
-        AND their full row counts — each touched bucket is rewritten whole,
-        untouched ones are not written at all (the common case for a
-        mostly-settled feed); None when no row changed."""
-        if convert:
-            return df.drop("__changed"), None
-        rows = (
-            df.groupBy("b")
-            .agg(
-                F.count("*").alias("c"),
-                F.max(F.col("__changed").cast("int")).alias("t"),
-            )
-            .collect()
-        )
-        touched = [r for r in rows if r.t == 1]
-        if not touched:
-            return None
-        return (
-            df.filter(F.col("b").isin([r.b for r in touched])).drop("__changed"),
-            sum(r.c for r in touched),
-        )
-
-    def _stage(self, df, rows: int | None, staging: str) -> int:
-        """The one staging write: ONE partitionBy job, one file per bucket.
-        ``repartition(b)`` puts each bucket's rows wholly in one task
-        (partitionBy alone writes files-per-task-per-bucket — measured 8×
-        the files, footer overhead dominating small deltas); a KNOWN-small
-        delta (``rows`` ≤ ``SMALL_DELTA_ROWS``) skips that shuffle, since
-        ``coalesce(1)`` writes the identical layout from one task over the
-        checkpointed in-memory blocks.  Returns the parquet bytes staged."""
-        if rows is not None and rows <= SMALL_DELTA_ROWS:
-            df = df.coalesce(1)
-        else:
-            df = df.repartition(F.col("b"))
-        df.write.partitionBy("b").mode("overwrite").parquet(self.log.spark_path(staging))
-        return self.fs.tree_stats(self.fs.join(self.base, staging))[1]
-
-    def _publish_txlog(self, snap, plans, dead, n, batch_id):
-        """The txlog commit: the manifest names each staged bucket dir in
-        place (``{table}__vstage_<token>/b=bNNNN`` under key
-        ``{table}@m{n}bNNNN``; vacuum's __v convention) and every other
-        manifest entry — untouched buckets, prior dead-letter deltas,
-        other feeds' tables — rides into the new manifest by NAME, zero
-        bytes written; a converting table drops its old entries.  Dead
-        letters land as a PER-BATCH delta snapshot (``dead_letter@d_<token>``)
-        and the batch id as this runner's ``txn`` entry, in the SAME atomic
-        commit as the state: a crash can never separate a Failed transition
-        from its dead-letter row or a batch from its id, and a conflict
-        retry recomputes them together."""
-        import uuid
-
-        token = uuid.uuid4().hex[:8]
-        dropped = {
-            k
-            for t, (_, rows) in plans.items()
-            if rows is None
-            for k in table_snapshots(snap.tables, t)
-        }
-        writes = {k: v for k, v in snap.tables.items() if k not in dropped}
-        stats = {}
-        stagings = [f"{table}__vstage_{token}" for table in plans]
-        for staging, (table, (df, rows)) in zip(stagings, plans.items()):
-            stats[table] = self._stage(df, rows, staging)
-            for entry in self.fs.listdir(self.fs.join(self.base, staging)):
-                if entry.startswith("b="):
-                    writes[f"{table}@m{n}{entry[2:]}"] = f"{staging}/{entry}"
-        if dead is not None and not dead.isEmpty():
-            writes[f"{self.t_dead}@d_{token}"] = dead
-        txn = None if batch_id is None else {self.txn_key: batch_id}
-        try:
-            self.log.commit(writes, expected_version=snap.version, txn=txn)
-        except CommitConflict:
-            # losers clean their own staging dirs (the same courtesy
-            # commit() extends to DataFrame stagings)
-            for staging in stagings:
-                self.fs.delete_tree(self.fs.join(self.base, staging))
-            return None
-        return stats, self._txlog_table_bytes(writes, self.t_items)
 
     def _record_write(self, batch_id, stats: dict[str, int]) -> None:
         self.last_write_bytes = stats

@@ -433,14 +433,13 @@ def test_compact_partitioned_layout_preserved_on_object_store(spark, fakefs):
 
 
 def test_upsert_sink_on_object_store_with_crash_windows(spark, fakefs):
-    """ParquetUpsertSink publishes by ONE atomic manifest PUT (batch ids +
-    the bucket pointer table together) — so the streaming sink lands on a
-    rename-less backend, re-delivered batches skip idempotently, a crash
-    between the data write and the PUT leaves only unreferenced versioned
-    subdirs (reclaimed by the next commit's sweep), and untouched buckets
-    carry by NAME across commits (no rewrite)."""
-    import json as _json
-
+    """ParquetUpsertSink publishes through ONE TxLog manifest commit (the
+    bucket entries and the batch id together) — so the streaming sink
+    lands on a rename-less backend, re-delivered batches skip
+    idempotently, a crash between the data write and the manifest leaves
+    only an unreferenced staging dir (reclaimed by ``TxLog.vacuum``), and
+    untouched buckets carry by NAME across commits (no rewrite)."""
+    from gofeed_spark.feedstate.txlog import head
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
     fs = fakefs
@@ -452,25 +451,29 @@ def test_upsert_sink_on_object_store_with_crash_windows(spark, fakefs):
     sink(b1, 1)
     got = {(r.k, r.v) for r in sink.read(spark).collect()}
     assert got == {("a", 1), ("b", 20), ("c", 3)}
-    assert sink.committed() == [0, 1]
+    assert head(path)[1]["txn"] == {"direct": 1}
     # idempotent re-delivery: same batch id, different rows -> skipped
     sink(spark.createDataFrame([("a", 999)], "k string, v int"), 1)
     assert {(r.k, r.v) for r in sink.read(spark).collect()} == got
-    # crash window: versioned dir written but manifest PUT lost -> the
-    # next commit reclaims it and the table stays consistent
-    fs.put_bytes(f"{path}/data_v000007/part-0.parquet", b"garbage")
+    # crash window: staging dir written but manifest never published ->
+    # invisible to readers, and vacuum reclaims it
+    fs.put_bytes(f"{path}/data__v00000009_deadbeef/pbkt=b0001/part-0.parquet", b"garbage")
     sink(spark.createDataFrame([("d", 4)], "k string, v int"), 2)
-    assert not fs.isdir(f"{path}/data_v000007")
     assert {(r.k, r.v) for r in sink.read(spark).collect()} == got | {("d", 4)}
-    # every manifest-referenced bucket dir exists, and nothing else lives
-    # under the table (untouched buckets legitimately point at OLD
-    # versioned dirs — the manifest-by-name carry)
-    state = _json.loads(fs.read_bytes(f"{path}/_committed_batches.json"))
-    assert state["n_buckets"] == 32 and state["batches"] == [0, 1, 2]
-    live = set(state["buckets"].values())
+    removed = sink.log.vacuum(keep=1, min_age_s=0)
+    assert "data__v00000009_deadbeef" in removed
+    assert not fs.isdir(f"{path}/data__v00000009_deadbeef")
+    assert {(r.k, r.v) for r in sink.read(spark).collect()} == got | {("d", 4)}
+    # every manifest-referenced bucket dir exists, and nothing else
+    # survives vacuum under the table (untouched buckets legitimately
+    # point at OLD staging dirs — the manifest-by-name carry)
+    version, m = head(path)
+    assert version == 3 and m["txn"] == {"direct": 2}
+    live = set(m["tables"].values())
+    assert all(k.startswith("data@m32b") for k in m["tables"])
     assert all(fs.isdir(f"{path}/{rel}") for rel in live)
     for top in fs.listdir(path):
-        if not top.startswith("data_v"):
+        if not top.startswith("data__v"):
             continue
         for sub in fs.listdir(f"{path}/{top}"):
             if sub.startswith("pbkt="):
@@ -502,55 +505,94 @@ def test_upsert_sink_touched_buckets_write_volume(spark, tmp_path):
     assert got["key00001"] == -1 and got["key00002"] == -2 and got["key00003"] == 3
 
 
-def test_upsert_sink_reads_round11_pointer_layout(spark, tmp_path):
-    """A round-11/12 single-pointer sink table ({"batches","data"} manifest)
-    stays readable and converts to the bucketed layout on its first new
-    commit, with the old versioned dir reclaimed."""
-    import json as _json
-    import os as _os
-
+def test_upsert_sink_refuses_old_layout(spark, tmp_path):
+    """A sink path holding the manifest of the older layout
+    (``_committed_batches.json``) is refused by name instead of being
+    read as an empty table."""
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
-    base = str(tmp_path / "pointer_sink")
-    _os.makedirs(base)
-    spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int").write.parquet(
-        _os.path.join(base, "data_v000003")
-    )
-    with open(_os.path.join(base, "_committed_batches.json"), "w") as f:
-        _json.dump({"batches": [0, 3], "data": "data_v000003"}, f)
-    sink = ParquetUpsertSink(base, key="k")
-    assert sink.committed() == [0, 3]
-    assert {(r.k, r.v) for r in sink.read(spark).collect()} == {("a", 1), ("b", 2)}
-    sink(spark.createDataFrame([("b", 20)], "k string, v int"), 4)
-    assert {(r.k, r.v) for r in sink.read(spark).collect()} == {("a", 1), ("b", 20)}
-    state = _json.loads(open(_os.path.join(base, "_committed_batches.json")).read())
-    assert state["buckets"]  # converted
-    # the pre-conversion pointer dir held no live bucket -> swept; its
-    # replacement (data_v000004) holds every bucket
-    assert not any(v.startswith("data_v000003/") for v in state["buckets"].values())
+    base = tmp_path / "old_sink"
+    base.mkdir()
+    (base / "_committed_batches.json").write_text('{"batches": [0], "data": "data_v000000"}')
+    with pytest.raises(ValueError, match="_committed_batches.json"):
+        ParquetUpsertSink(str(base), key="k")
+    assert not (base / "_txlog").exists()
 
 
-def test_upsert_sink_reads_legacy_layout(spark, tmp_path):
-    """A pre-pointer sink table (bare-list manifest + fixed data/ dir)
-    stays readable and upgrades on its first new commit."""
-    import json as _json
-    import os as _os
+def test_upsert_sink_two_writers_both_land(spark, tmp_path):
+    """Two writers (two streaming queries) on ONE sink table commit the
+    same batch id concurrently: the create-if-absent manifest arbitrates,
+    the loser re-reads and rebuilds, and both writers' rows and batch ids
+    land."""
+    import threading
 
+    from gofeed_spark.feedstate.txlog import head
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
-    base = str(tmp_path / "legacy_sink")
-    _os.makedirs(base)
-    spark.createDataFrame([("a", 1)], "k string, v int").write.parquet(
-        _os.path.join(base, "data")
-    )
-    with open(_os.path.join(base, "_committed_batches.json"), "w") as f:
-        _json.dump([0], f)
-    sink = ParquetUpsertSink(base, key="k")
-    assert sink.committed() == [0]
-    assert {(r.k, r.v) for r in sink.read(spark).collect()} == {("a", 1)}
-    sink(spark.createDataFrame([("b", 2)], "k string, v int"), 1)
-    assert {(r.k, r.v) for r in sink.read(spark).collect()} == {("a", 1), ("b", 2)}
-    assert not _os.path.exists(_os.path.join(base, "data"))  # upgraded
+    base = str(tmp_path / "two_writers")
+    barrier = threading.Barrier(2)
+    errors: list[Exception] = []
+
+    def write(qid, rows):
+        try:
+            spark.sparkContext.setLocalProperty("sql.streaming.queryId", qid)
+            sink = ParquetUpsertSink(base, key="k", n_buckets=4)
+            batch = spark.createDataFrame(rows, "k string, v int")
+            barrier.wait(timeout=60)
+            sink(batch, 0)
+        except Exception as e:  # pragma: no cover — surfaced below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=write, args=("q-a", [("a1", 1), ("a2", 2)])),
+        threading.Thread(target=write, args=("q-b", [("b1", 3), ("a2", 4)])),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    got = {(r.k, r.v) for r in ParquetUpsertSink(base, key="k").read(spark).collect()}
+    assert {k for k, _ in got} == {"a1", "a2", "b1"} and len(got) == 3
+    assert ("a1", 1) in got and ("b1", 3) in got
+    version, m = head(base)
+    assert version == 2 and m["txn"] == {"q-a": 0, "q-b": 0}
+
+
+def test_upsert_sink_fresh_checkpoint_lands_batch_zero(spark, tmp_path):
+    """A second stream on a FRESH checkpoint (batch ids restarting at 0)
+    pointed at an existing sink table lands its batches: batch ids are
+    keyed by each stream's query id, so the first stream's ids never
+    shadow the second's."""
+    from gofeed_spark.feedstate.txlog import head
+    from gofeed_spark.streaming.sinks import ParquetUpsertSink
+
+    base = str(tmp_path / "fresh_ckpt")
+
+    def stream(name, batches):
+        stage = str(tmp_path / f"{name}_stage")
+        for rows in batches:  # one file, so one micro-batch, each
+            spark.createDataFrame(rows, "k string, v int").coalesce(1).write.mode(
+                "append"
+            ).parquet(stage)
+        q = (
+            spark.readStream.schema("k string, v int")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .trigger(availableNow=True)
+            .foreachBatch(ParquetUpsertSink(base, key="k"))
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+        return str(q.id)
+
+    first = stream("first", [[("a", 1)], [("b", 2)]])
+    second = stream("second", [[("b", 20), ("c", 3)]])
+    got = {(r.k, r.v) for r in ParquetUpsertSink(base, key="k").read(spark).collect()}
+    assert got == {("a", 1), ("b", 20), ("c", 3)}
+    assert head(base)[1]["txn"] == {first: 1, second: 0}
 
 
 # --- ANN index + WARC export on the fake remote ------------------------------
@@ -609,31 +651,31 @@ def test_upsert_sink_rejects_reserved_bucket_column(spark, tmp_path):
 
 
 def test_upsert_sink_bounds_committed_id_retention(spark, tmp_path):
-    """The manifest must stay O(n_buckets + retain_batches) on an
-    arbitrarily long stream: old committed ids collapse into a FLOOR
-    (monotone single-writer ids ⇒ anything at or below it is committed),
-    and idempotent skip still holds for ancient, recent, and fresh ids."""
-    import json as _json
-
+    """The manifest stays O(n_buckets + writers) on an arbitrarily long
+    stream: a writer's committed ids are ONE ``txn`` entry, its last id
+    (a writer's ids are monotone, so anything at or below it is
+    committed), and idempotent skip holds for ancient, recent, and fresh
+    ids."""
+    from gofeed_spark.feedstate.txlog import head
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
     base = str(tmp_path / "long_stream")
     sink = ParquetUpsertSink(base, key="k", n_buckets=4)
-    sink.retain_batches = 5
     for b in range(12):
         sink(spark.createDataFrame([(f"k{b}", b)], "k string, v int"), b)
-    state = _json.loads(open(f"{base}/_committed_batches.json").read())
-    assert len(state["batches"]) < 12 and state["floor"] >= 0
-    assert max(state["batches"]) == 11
+    _, m = head(base)
+    assert m["txn"] == {"direct": 11}
+    assert len(m["tables"]) <= 4
     rows_before = {(r.k, r.v) for r in sink.read(spark).collect()}
     assert len(rows_before) == 12
-    # ancient id (below floor), recent id (in tail): both skip
+    # ancient id, newest id: both skip
     sink(spark.createDataFrame([("poison", 999)], "k string, v int"), 0)
     sink(spark.createDataFrame([("poison", 999)], "k string, v int"), 11)
     assert {(r.k, r.v) for r in sink.read(spark).collect()} == rows_before
     # a fresh id still commits
     sink(spark.createDataFrame([("k12", 12)], "k string, v int"), 12)
     assert len({(r.k, r.v) for r in sink.read(spark).collect()}) == 13
+    assert head(base)[1]["txn"] == {"direct": 12}
 
 
 def test_upsert_sink_seq_col_pins_within_batch_winner(spark, tmp_path):
@@ -668,55 +710,18 @@ def test_upsert_sink_seq_col_pins_within_batch_winner(spark, tmp_path):
         strict(dup, 0)
 
 
-def test_upsert_sink_detects_fresh_checkpoint_restart(spark, tmp_path):
-    """A NEW stream (fresh checkpoint, batch ids restarted at 0) pointed
-    at an EXISTING table must fail loudly — its batches would otherwise
-    be silently discarded as re-deliveries (ADVICE r13).  A legitimate
-    restart (new sink instance re-delivering the NEWEST committed id)
-    still skips idempotently."""
-    import pytest as _pytest
-
-    from gofeed_spark.streaming.sinks import ParquetUpsertSink
-
-    base = str(tmp_path / "fresh_ckpt")
-    sink = ParquetUpsertSink(base, key="k")
-    for b in range(3):
-        sink(spark.createDataFrame([(f"k{b}", b)], "k string, v int"), b)
-    # legitimate restart: a NEW instance re-delivers the newest batch (2)
-    resumed = ParquetUpsertSink(base, key="k")
-    resumed(spark.createDataFrame([("k2", 99)], "k string, v int"), 2)
-    assert {(r.k, r.v) for r in resumed.read(spark).collect()} == {
-        ("k0", 0), ("k1", 1), ("k2", 2)}
-    # and continues committing fresh ids afterwards
-    resumed(spark.createDataFrame([("k3", 3)], "k string, v int"), 3)
-    # fresh checkpoint: a NEW instance starts over at batch 0 -> refuse
-    repointed = ParquetUpsertSink(base, key="k")
-    with _pytest.raises(ValueError, match="fresh checkpoint"):
-        repointed(spark.createDataFrame([("new", 1)], "k string, v int"), 0)
-    # the floor case too: ancient id below the retention floor
-    deep = ParquetUpsertSink(str(tmp_path / "deep"), key="k")
-    deep.retain_batches = 2
-    for b in range(6):
-        deep(spark.createDataFrame([(f"k{b}", b)], "k string, v int"), b)
-    repointed2 = ParquetUpsertSink(str(tmp_path / "deep"), key="k")
-    repointed2.retain_batches = 2
-    with _pytest.raises(ValueError, match="fresh checkpoint"):
-        repointed2(spark.createDataFrame([("new", 1)], "k string, v int"), 1)
-
-
-def test_upsert_sink_lsm_mode_delta_appends(spark, tmp_path):
+def test_upsert_sink_lsm_mode_delta_appends(spark, tmp_path, monkeypatch):
     """LSM mode (VERDICT r13 item 2): each trigger appends only its
     per-bucket DELTA — write bytes track the BATCH even when the batch's
     keys spread across every bucket (the q120 profile where merge mode
     rewrites ~O(total state) per trigger); reads merge last-writer-wins;
     compaction bounds every bucket's pointer-list depth."""
-    import json as _json
-
+    from gofeed_spark.feedstate import keyed
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
+    monkeypatch.setattr(keyed, "COMPACT_THRESHOLD", 3)
     base = str(tmp_path / "lsm_sink")
-    sink = ParquetUpsertSink(base, key="k", n_buckets=8, mode="lsm",
-                             compact_threshold=3)
+    sink = ParquetUpsertSink(base, key="k", n_buckets=8, mode="lsm")
     n = 40000
     settle = spark.range(n).selectExpr(
         "concat('key', lpad(cast(id as string), 5, '0')) as k",
@@ -741,21 +746,23 @@ def test_upsert_sink_lsm_mode_delta_appends(spark, tmp_path):
     # threshold -> compaction folds those buckets back to ONE relation
     sink(spark.createDataFrame([("key00100", 77, "z")],
                                "k string, v int, payload string"), 3)
-    state = _json.loads(open(f"{base}/_committed_batches.json").read())
-    assert state["mode"] == "lsm"
-    assert all(len(lst) <= 3 for lst in state["buckets"].values())
-    assert any(rel.startswith("compact_v") for lst in state["buckets"].values()
-               for rel in lst)
+    assert sink.last_compact_bytes is not None
+    tables = sink.log.latest()[1]
+    lists = sink.table.lists(tables)
+    assert sink.table.is_lsm(tables) and len(lists) == 8
+    assert all(len(lst) <= 3 for lst in lists.values())
+    assert sorted(len(lst) for lst in lists.values())[0] == 1  # compacted
     got = {r.k: r.v for r in sink.read(spark).collect()}
     assert len(got) == 40000 and got["key00100"] == 77 and got["key00200"] == -2
-    # nothing unreferenced survives the sweep
-    live = {r for lst in state["buckets"].values() for r in lst}
-    import os as _os
-    for top in _os.listdir(base):
-        if top.startswith(("data_v", "compact_v")):
-            for sub in _os.listdir(f"{base}/{top}"):
+    # nothing unreferenced survives vacuum
+    sink.log.vacuum(keep=1, min_age_s=0)
+    live = {r for lst in lists.values() for r in lst}
+    for top in os.listdir(base):
+        if top.startswith("data__v"):
+            for sub in os.listdir(f"{base}/{top}"):
                 if sub.startswith("pbkt="):
                     assert f"{top}/{sub}" in live
+    assert {r.k: r.v for r in sink.read(spark).collect()} == got
 
 
 def test_upsert_sink_lsm_settled_read_is_plain_scan(spark, tmp_path):
@@ -774,8 +781,6 @@ def test_upsert_sink_lsm_converts_merge_table_and_refuses_reverse(spark, tmp_pat
     """A merge-layout table opened in lsm mode converts transparently
     (pointers become one-element lists); opening an lsm table in merge
     mode refuses loudly."""
-    import json as _json
-
     import pytest as _pytest
 
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
@@ -785,9 +790,9 @@ def test_upsert_sink_lsm_converts_merge_table_and_refuses_reverse(spark, tmp_pat
     m(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), 0)
     lsm = ParquetUpsertSink(base, key="k", mode="lsm")
     lsm(spark.createDataFrame([("b", 20), ("c", 3)], "k string, v int"), 1)
-    state = _json.loads(open(f"{base}/_committed_batches.json").read())
-    assert state["mode"] == "lsm"
-    assert all(isinstance(lst, list) for lst in state["buckets"].values())
+    tables = lsm.log.latest()[1]
+    assert lsm.table.is_lsm(tables)
+    assert max(len(lst) for lst in lsm.table.lists(tables).values()) >= 2
     got = {(r.k, r.v) for r in lsm.read(spark).collect()}
     assert got == {("a", 1), ("b", 20), ("c", 3)}
     back = ParquetUpsertSink(base, key="k", mode="merge")

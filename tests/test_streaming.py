@@ -15,6 +15,7 @@ pytestmark = pytest.mark.slow  # r18: excluded from the default driver tier (see
 
 from gofeed_spark.catalog import load_table
 from gofeed_spark.feedstate.model import AVAILABLE, COMPLETE, FAILED
+from gofeed_spark.feedstate.txlog import head
 from gofeed_spark.queries import QUERIES
 from gofeed_spark.streaming.feed_stream import (
     ITEM_EVENT_DDL,
@@ -76,8 +77,9 @@ def test_gate_stream_restart_exactly_once(spark, dirs):
     _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: (r.status, r.gate) for r in sink.read(spark).collect()}
     assert state["p1"] == (AVAILABLE, 0)
-    committed_after_1 = sink.committed()
-    assert len(committed_after_1) >= 1
+    # the batch id is committed with the state under the stream's query id
+    (qid, last_1), = head(dirs["sink"])[1]["txn"].items()
+    assert last_1 >= 0
 
     # --- phase 2 (restart from checkpoint): i1 completes, i2 fails
     _stage(
@@ -88,10 +90,10 @@ def test_gate_stream_restart_exactly_once(spark, dirs):
     _run_stream(spark, dirs["stage"], dirs["ckpt"], sink)
     state = {r.partition_id: (r.status, r.gate) for r in sink.read(spark).collect()}
     assert state["p1"] == (FAILED, 0)  # failed item fails the partition
-    # restart consumed ONLY the new slice: batch ids strictly extend, no reuse
-    committed_after_2 = sink.committed()
-    assert committed_after_2[: len(committed_after_1)] == committed_after_1
-    assert len(set(committed_after_2)) == len(committed_after_2)
+    # restart (same checkpoint, same query id) consumed ONLY the new slice:
+    # its batch ids extend the first run's
+    (qid_2, last_2), = head(dirs["sink"])[1]["txn"].items()
+    assert qid_2 == qid and last_2 > last_1
 
     # --- idempotency: re-delivering an already-committed batch is a no-op
     before = {tuple(r) for r in sink.read(spark).collect()}
@@ -99,7 +101,12 @@ def test_gate_stream_restart_exactly_once(spark, dirs):
         [("p1", 9, AVAILABLE, 9, 9, 9)],
         "partition_id string, gate int, status int, n_items int, failed_n int, avail_n int",
     )
-    sink(poison, committed_after_2[-1])  # duplicate batch id -> skipped
+    # a duplicate batch id of the stream's query -> skipped
+    spark.sparkContext.setLocalProperty("sql.streaming.queryId", qid)
+    try:
+        sink(poison, last_2)
+    finally:
+        spark.sparkContext.setLocalProperty("sql.streaming.queryId", None)
     after = {tuple(r) for r in sink.read(spark).collect()}
     assert after == before
 

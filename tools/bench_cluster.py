@@ -28,7 +28,8 @@ from gofeed_spark.session import get_spark
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_commits = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    spark = get_spark("bench-cluster", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("bench-cluster", shuffle_partitions=32)
+    load_start = os.getloadavg()
     from gofeed_spark.sources import delta as D
     from gofeed_spark.sources import iceberg as I
 
@@ -87,6 +88,10 @@ def main() -> None:
                 "n_commits": n_commits,
                 "rewrite_sec": {"delta": d_rw, "iceberg": i_rw},
                 "lookups": out,
+                # the box the numbers were taken on
+                "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
             }
         )
     )

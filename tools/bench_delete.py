@@ -36,7 +36,8 @@ def tree_bytes(root: str) -> int:
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    spark = get_spark("bench-delete", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("bench-delete", shuffle_partitions=32)
+    load_start = os.getloadavg()
     from gofeed_spark.sources import delta as D
     from gofeed_spark.sources import iceberg as I
     from gofeed_spark.sources import tablecore
@@ -121,6 +122,10 @@ def main():
                 "n_files": n_files,
                 "deleted_pct": 1,
                 "legs": legs,
+                # the box the numbers were taken on
+                "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
             }
         )
     )

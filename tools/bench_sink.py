@@ -7,7 +7,10 @@ measurement (full-snapshot 1.47 MB -> 25 KB touched-bucket).  Prints ONE
 JSON line; pipe it into BENCH_SCALE.md verbatim (hand transcription
 introduces digit errors).
 
-Usage: python tools/bench_sink.py [n_settled=50000] [batch_keys=16]
+Runs on ``get_spark`` (``local[$SPARK_GRAFT_CPUS]``) and records the
+load averages before and after and the ``cpus``/``master`` it ran on.
+
+Usage: python tools/bench_sink.py [n_settled=50000] [batch_keys=16] [--spread]
 """
 
 from __future__ import annotations
@@ -29,17 +32,17 @@ def main() -> None:
     # bucket — the q120 pattern) in both modes, the merge-vs-lsm evidence
     spread = len(sys.argv) > 3 and sys.argv[3] == "--spread"
 
-    from pyspark.sql import SparkSession
-
+    from gofeed_spark.session import get_spark
     from gofeed_spark.streaming.sinks import ParquetUpsertSink
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("bench_sink")
-        .getOrCreate()
-    )
+    spark = get_spark("bench-sink", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    load_start = os.getloadavg()
+    # the box the numbers were taken on
+    host = {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+    }
     base = tempfile.mkdtemp(prefix="gofeed_bench_sink_")
     try:
         sink = ParquetUpsertSink(f"{base}/state", key="k", n_buckets=64)
@@ -82,6 +85,8 @@ def main() -> None:
                         per_batch[-1]["bytes"] / settled_bytes, 5
                     ),
                     "final_rows": total_rows,
+                    "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+                    **host,
                 }
             )
         )
@@ -133,6 +138,8 @@ def main() -> None:
                         ),
                         "rows_equal": out["merge"]["final_rows"]
                         == out["lsm"]["final_rows"],
+                        "load": [round(x, 2) for x in (*load_start, *os.getloadavg())],
+                        **host,
                     }
                 )
             )
